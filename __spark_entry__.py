@@ -480,7 +480,10 @@ def q_nav_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (LSH approximate -> rows-only).
+    """Embedding-cosine near-dup pairs, hash-certified end-to-end
+    (graduated from rows-only in round 5): the LSH candidate set is
+    approximate, but its closed-form oracle twin recomputes the same
+    bucket keys and cosines, so the rows hash-compare exactly.
 
     The synthetic embeddings are near-orthogonal (max pairwise cosine
     ~0.51), so near-dups are planted: vec_id < 20 get a slightly
@@ -2254,7 +2257,9 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN (bucketed; approximate by design -> rows-only)."""
+    """Approximate ANN (bucketed), hash-certified end-to-end
+    (graduated from rows-only in round 5): the closed-form oracle twin
+    inlines the same hyperplanes, bucket keys and cosine ranking."""
     emb = _read(spark, sf_dir, "embeddings")
     q = _read_pushdown(spark, sf_dir, "embeddings").where("vec_id < 5")
     return similarity.lsh_topk(emb, q, k=5)

@@ -24,6 +24,7 @@ after the last commit and flipped next_round under the default rule).
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import re
@@ -60,10 +61,13 @@ def green(rec: dict, rows_only: bool = False) -> bool:
 
 
 def main(argv: list[str] | None = None) -> int:
-    argv = list(sys.argv[1:] if argv is None else argv)
-    as_of: int | None = None
-    if argv and argv[0] == "--as-of":
-        as_of = int(argv[1])
+    parser = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    parser.add_argument(
+        "--as-of", type=int, default=None, metavar="N",
+        help="evaluate the registry as the plan for round N, using only "
+             "the artifacts of rounds < N",
+    )
+    as_of = parser.parse_args(argv or []).as_of
     rounds: dict[int, dict] = {}
     for path in glob.glob("CORRECTNESS_r*.json"):
         m = re.search(r"r(\d+)\.json$", path)
@@ -128,4 +132,4 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

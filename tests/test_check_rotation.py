@@ -10,6 +10,8 @@ Two rules, both enforced by scripts/check_rotation.py:
 
 import sys
 
+import pytest
+
 sys.path.insert(0, ".")
 sys.path.insert(0, "scripts")
 
@@ -26,6 +28,18 @@ def test_current_registry_passes():
     assert check_rotation.main(
         ["--as-of", str(entrymod.PLANNED_ROUND)]
     ) == 0
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [["--as-of"], ["--asof", "5"], ["5", "--as-of", "5"], ["--as-of", "r5"]],
+)
+def test_malformed_as_of_fails_loudly(argv):
+    """A value-less, misspelled or misplaced --as-of must exit non-zero,
+    never fall back silently to the default max(seen)+1 rule."""
+    with pytest.raises(SystemExit) as exc:
+        check_rotation.main(argv)
+    assert exc.value.code != 0
 
 
 def test_future_artifact_does_not_redden_committed_plan(

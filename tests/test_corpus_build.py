@@ -28,8 +28,9 @@ def test_corpus_build_end_to_end(spark, tmp_path, capsys):
     out = str(tmp_path / "corpus")
     _write_docs(spark, src)
     rc = main([
-        "--corpus-input", src,
-        "--corpus-output", out,
+        "corpus",
+        "--input", src,
+        "--output", out,
         "--chunk-size", "64",
         "--chunk-overlap", "16",
         "--shards", "4",
@@ -63,7 +64,7 @@ def test_corpus_build_end_to_end(spark, tmp_path, capsys):
     # determinism: a rerun selects and packs identically
     out2 = str(tmp_path / "corpus2")
     rc = main([
-        "--corpus-input", src, "--corpus-output", out2,
+        "corpus", "--input", src, "--output", out2,
         "--chunk-size", "64", "--chunk-overlap", "16",
         "--shards", "4", "--pack-budget", "128",
     ])
@@ -74,9 +75,9 @@ def test_corpus_build_end_to_end(spark, tmp_path, capsys):
 
 
 def test_corpus_flags_must_pair(spark, capsys):
-    rc = main(["--corpus-input", "/nope"])
+    rc = main(["corpus", "--input", "/nope"])
     assert rc == 2
-    assert "corpus-output" in capsys.readouterr().out
+    assert "--output" in capsys.readouterr().err
 
 
 def test_compact_cli_mode(spark, tmp_path, capsys):
@@ -86,8 +87,8 @@ def test_compact_cli_mode(spark, tmp_path, capsys):
         F.sha2(F.col("id").cast("string"), 256).alias("text"),
     ).repartition(32).write.mode("overwrite").parquet(src)
     dst = str(tmp_path / "compacted")
-    rc = main(["--compact", src, "--compact-output", dst,
-               "--compact-target-mb", "1024"])
+    rc = main(["compact", "--input", src, "--output", dst,
+               "--target-mb", "1024"])
     assert rc == 0
     st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     c = st["compaction"]
@@ -96,9 +97,9 @@ def test_compact_cli_mode(spark, tmp_path, capsys):
 
 
 def test_compact_flags_must_pair(spark, capsys):
-    rc = main(["--compact", "/nope"])
+    rc = main(["compact", "--input", "/nope"])
     assert rc == 2
-    assert "compact-output" in capsys.readouterr().out
+    assert "--output" in capsys.readouterr().err
 
 
 def test_corpus_build_empty_selection_still_readable(spark, tmp_path, capsys):
@@ -108,7 +109,7 @@ def test_corpus_build_empty_selection_still_readable(spark, tmp_path, capsys):
         [(i, "{ }") for i in range(10)], "doc_id long, text string"
     ).write.mode("overwrite").parquet(src)
     out = str(tmp_path / "empty_corpus")
-    rc = main(["--corpus-input", src, "--corpus-output", out])
+    rc = main(["corpus", "--input", src, "--output", out])
     assert rc == 0
     st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert st["corpus"]["docs_selected"] == 0
@@ -133,7 +134,7 @@ def test_corpus_build_with_mixture_rates(spark, tmp_path, capsys):
     ).write.mode("overwrite").parquet(rates_p)
     out = str(tmp_path / "mix_corpus")
     rc = main([
-        "--corpus-input", src, "--corpus-output", out,
+        "corpus", "--input", src, "--output", out,
         "--mixture-rates", rates_p,
     ])
     assert rc == 0
@@ -150,8 +151,9 @@ def test_corpus_build_with_bpe_training(spark, tmp_path, capsys):
     out = str(tmp_path / "corpus")
     _write_docs(spark, src, n=12)
     rc = main([
-        "--corpus-input", src,
-        "--corpus-output", out,
+        "corpus",
+        "--input", src,
+        "--output", out,
         "--chunk-size", "64",
         "--shards", "2",
         "--train-bpe", "15",
@@ -172,7 +174,7 @@ def test_corpus_build_with_bpe_training(spark, tmp_path, capsys):
 
 
 def test_ann_job_end_to_end(spark, tmp_path, capsys):
-    """--ann-*: index + search straight from parquet to parquet."""
+    """ann: index + search straight from parquet to parquet."""
     from tests.conftest import SF_DIR
 
     corpus = f"{SF_DIR}/embeddings.parquet"
@@ -182,11 +184,12 @@ def test_ann_job_end_to_end(spark, tmp_path, capsys):
         "overwrite"
     ).parquet(queries)
     rc = main([
-        "--ann-corpus", corpus,
-        "--ann-queries", queries,
-        "--ann-output", out,
-        "--ann-method", "ivfpq",
-        "--ann-k", "3",
+        "ann",
+        "--corpus", corpus,
+        "--queries", queries,
+        "--output", out,
+        "--method", "ivfpq",
+        "--k", "3",
     ])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -200,10 +203,9 @@ def test_ann_job_end_to_end(spark, tmp_path, capsys):
 
 
 def test_ann_job_flag_validation(capsys):
-    rc = main(["--ann-corpus", "/nope"])
+    rc = main(["ann", "--corpus", "/nope"])
     assert rc == 2
-    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "--ann-queries" in err["error"]
+    assert "--queries" in capsys.readouterr().err
 
 
 def test_corpus_build_domain_curation_and_dirty_gate(spark, tmp_path, capsys):
@@ -252,8 +254,9 @@ def test_corpus_build_domain_curation_and_dirty_gate(spark, tmp_path, capsys):
     ).write.mode("overwrite").parquet(snips)
 
     rc = main([
-        "--corpus-input", src,
-        "--corpus-output", out,
+        "corpus",
+        "--input", src,
+        "--output", out,
         "--benchmark-snippets", snips,
         "--curate-domains",
         "--domain-min-docs", "5",
@@ -285,8 +288,9 @@ def test_dirty_gate_requires_snippets(spark, tmp_path, capsys):
     out = str(tmp_path / "corpus")
     _write_docs(spark, src, n=10)
     rc = main([
-        "--corpus-input", src,
-        "--corpus-output", out,
+        "corpus",
+        "--input", src,
+        "--output", out,
         "--dirty-tau", "0.01",
         "--chunk-size", "64",
         "--shards", "2",
@@ -310,8 +314,9 @@ def test_dirty_gate_rejects_empty_snippet_table(spark, tmp_path, capsys):
         [], "snippet_id long, snippet string"
     ).write.mode("overwrite").parquet(snips)
     rc = main([
-        "--corpus-input", src,
-        "--corpus-output", out,
+        "corpus",
+        "--input", src,
+        "--output", out,
         "--benchmark-snippets", snips,
         "--dirty-tau", "0.01",
         "--chunk-size", "64",

@@ -204,24 +204,29 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 def test_jobs_cli_end_to_end(spark, tmp_path):
-    """python -m web_content_extractor_spark.jobs over fixture docs."""
+    """python -m web_content_extractor_spark.jobs extract over fixture docs."""
     from web_content_extractor_spark.datagen import fixture_docs
     from web_content_extractor_spark.jobs import main
 
     inp, outp, met, cont = (str(tmp_path / d) for d in
                             ("in", "out", "metrics", "content"))
     fixture_docs(spark).write.parquet(inp)
-    rc = main(["--input", inp, "--output", outp, "--metrics", met,
+    rc = main(["extract", "--input", inp, "--output", outp, "--metrics", met,
                "--content-output", cont, "--resume"])
     assert rc == 0
     out = spark.read.parquet(outp)
     assert out.count() == fixture_docs(spark).count()
     assert spark.read.parquet(met).count() > 0
-    assert set(spark.read.parquet(cont).columns) == {"doc_id", "spans"}
-    # resumable: a second run is a no-op, nothing double-appended
-    rc = main(["--input", inp, "--output", outp, "--metrics", met, "--resume"])
+    content = spark.read.parquet(cont)
+    assert set(content.columns) == {"doc_id", "spans"}
+    n_content = content.count()
+    # resumable: a second run is a no-op, nothing double-appended —
+    # content rows included, they follow the lineage manifest too
+    rc = main(["extract", "--input", inp, "--output", outp, "--metrics", met,
+               "--content-output", cont, "--resume"])
     assert rc == 0
     assert spark.read.parquet(outp).count() == out.count()
+    assert spark.read.parquet(cont).count() == n_content
 
 
 def test_perf_category_thresholds(spark):

@@ -32,10 +32,11 @@ def test_crawl_plan_end_to_end(spark, tmp_path, capsys):
     out = str(tmp_path / "plan")
     _write_inputs(spark, fdir, rdir)
     rc = main([
-        "--plan-frontier", fdir,
-        "--plan-robots", rdir,
-        "--plan-output", out,
-        "--plan-default-delay", "0.5",
+        "plan",
+        "--frontier", fdir,
+        "--robots", rdir,
+        "--output", out,
+        "--default-delay", "0.5",
     ])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -52,10 +53,10 @@ def test_crawl_plan_end_to_end(spark, tmp_path, capsys):
 
 
 def test_plan_flag_validation(spark, capsys):
-    assert main(["--plan-frontier", "/nope"]) == 2
-    assert "--plan-output" in capsys.readouterr().out
-    assert main(["--plan-robots", "/nope"]) == 2
-    assert "crawl-plan mode" in capsys.readouterr().out
+    assert main(["plan", "--frontier", "/nope"]) == 2
+    assert "--output" in capsys.readouterr().err
+    assert main(["plan", "--robots", "/nope"]) == 2
+    assert "--frontier" in capsys.readouterr().err
 
 
 def _dup_docs(spark, path):
@@ -75,8 +76,8 @@ def test_dedup_mode_simhash(spark, tmp_path, capsys):
     src, out = str(tmp_path / "docs"), str(tmp_path / "manifest")
     _dup_docs(spark, src)
     rc = main([
-        "--dedup-input", src, "--dedup-output", out,
-        "--dedup-method", "simhash", "--dedup-hamming", "10",
+        "dedup", "--input", src, "--output", out,
+        "--method", "simhash", "--hamming", "10",
     ])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -93,8 +94,8 @@ def test_dedup_mode_exact(spark, tmp_path, capsys):
     src, out = str(tmp_path / "docs"), str(tmp_path / "manifest")
     _dup_docs(spark, src)
     rc = main([
-        "--dedup-input", src, "--dedup-output", out,
-        "--dedup-method", "exact",
+        "dedup", "--input", src, "--output", out,
+        "--method", "exact",
     ])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -104,8 +105,8 @@ def test_dedup_mode_exact(spark, tmp_path, capsys):
 
 
 def test_dedup_flag_validation(spark, capsys):
-    assert main(["--dedup-input", "/nope"]) == 2
-    assert "--dedup-output" in capsys.readouterr().out
+    assert main(["dedup", "--input", "/nope"]) == 2
+    assert "--output" in capsys.readouterr().err
 
 
 def test_plan_honors_allow_reopened_subtree(spark, tmp_path, capsys):
@@ -120,8 +121,8 @@ def test_plan_honors_allow_reopened_subtree(spark, tmp_path, capsys):
         [("a.com", "User-agent: *\nDisallow: /a\nAllow: /a/b\n")],
         "host string, robots string",
     ).write.mode("overwrite").parquet(rdir)
-    rc = main(["--plan-frontier", fdir, "--plan-robots", rdir,
-               "--plan-output", out])
+    rc = main(["plan", "--frontier", fdir, "--robots", rdir,
+               "--output", out])
     assert rc == 0
     urls = {r.url for r in spark.read.parquet(out).collect()}
     # RFC 9309: Allow /a/b re-opens the subtree the Disallow-only
@@ -135,8 +136,8 @@ def test_dedup_exact_keeps_null_text_docs(spark, tmp_path, capsys):
         [(1, "same words"), (2, "same words"), (3, None)],
         "doc_id long, text string",
     ).write.mode("overwrite").parquet(src)
-    rc = main(["--dedup-input", src, "--dedup-output", out,
-               "--dedup-method", "exact"])
+    rc = main(["dedup", "--input", src, "--output", out,
+               "--method", "exact"])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["dedup"]["docs"] == 3   # NULL-text doc not lost
@@ -150,8 +151,8 @@ def test_dedup_empty_input_zero_summary(spark, tmp_path, capsys):
     spark.createDataFrame([], "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(src)
-    rc = main(["--dedup-input", src, "--dedup-output", out,
-               "--dedup-method", "exact"])
+    rc = main(["dedup", "--input", src, "--output", out,
+               "--method", "exact"])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["dedup"] == {

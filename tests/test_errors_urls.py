@@ -152,31 +152,38 @@ def test_jobs_cli_urls_end_to_end(spark, tmp_path):
     from web_content_extractor_spark.datagen import fixture_docs
     from web_content_extractor_spark.jobs import main
 
-    inp, outp, errp = (str(tmp_path / d) for d in ("in", "out", "errs"))
+    inp, outp, errp, cont = (str(tmp_path / d) for d in
+                             ("in", "out", "errs", "content"))
     fixture_docs(spark).write.parquet(inp)
     urls = tmp_path / "urls.json"
     urls.write_text(json.dumps([
         "https://test-page.example.org/index.html",
         {"url": "https://base.com"},
     ]))
-    rc = main(["--input", inp, "--output", outp, "--errors", errp,
-               "--urls", str(urls)])
+    rc = main(["extract", "--input", inp, "--output", outp, "--errors", errp,
+               "--content-output", cont, "--urls", str(urls)])
     assert rc == 0
-    out = spark.read.parquet(outp)
-    assert set(r.doc_id for r in out.select("doc_id").collect()) == {
+
+    def ids(path):
+        return sorted(r.doc_id for r in
+                      spark.read.parquet(path).select("doc_id").collect())
+
+    assert set(ids(outp)) == {
         "https://test-page.example.org/index.html",
         "https://base.com",
     }
+    # the URL list narrows the content branch exactly as it narrows spans
+    assert ids(cont) == ids(outp)
 
     # empty URL list -> error-object semantics, nonzero exit, no output
     bad = tmp_path / "bad.json"
     bad.write_text("[]")
-    rc = main(["--input", inp, "--output", str(tmp_path / "out2"),
+    rc = main(["extract", "--input", inp, "--output", str(tmp_path / "out2"),
                "--urls", str(bad)])
     assert rc == 1
 
     # --urls + --resume is a contradiction, refused up front
-    rc = main(["--input", inp, "--output", str(tmp_path / "out3"),
+    rc = main(["extract", "--input", inp, "--output", str(tmp_path / "out3"),
                "--urls", str(urls), "--resume"])
     assert rc == 2
 
@@ -205,7 +212,7 @@ def test_jobs_cli_curate_end_to_end(spark, tmp_path):
         [(99, "lorem ipsum")], "snippet_id: bigint, snippet: string"
     ).write.parquet(snp)
 
-    rc = main(["--curate-input", inp, "--curate-output", outp,
+    rc = main(["curate", "--input", inp, "--output", outp,
                "--benchmark-snippets", snp])
     assert rc == 0
     got = {r.doc_id: r for r in spark.read.parquet(outp).collect()}
@@ -215,10 +222,9 @@ def test_jobs_cli_curate_end_to_end(spark, tmp_path):
     assert not got[2].keep_quality and not got[2].selected
     assert got[3].is_contaminated and not got[3].selected
 
-    # arg validation: half a pair and empty invocation both refuse
-    assert main(["--curate-input", inp]) == 2
-    assert main([]) == 2
-    assert main(["--input", inp]) == 2
+    # arg validation: a missing required path refuses
+    assert main(["curate", "--input", inp]) == 2
+    assert main(["extract", "--input", inp]) == 2
 
 
 def test_jobs_cli_rejects_cross_mode_orphan_flags(spark, tmp_path):
@@ -230,9 +236,24 @@ def test_jobs_cli_rejects_cross_mode_orphan_flags(spark, tmp_path):
         [(0, good)], "doc_id: bigint, text: string"
     ).write.parquet(inp)
     # extraction-only flags without extraction mode
-    assert main(["--curate-input", inp, "--curate-output",
+    assert main(["curate", "--input", inp, "--output",
                  str(tmp_path / "m"), "--content-output",
                  str(tmp_path / "c")]) == 2
     # snippets without curation mode
-    assert main(["--input", inp, "--output", str(tmp_path / "o"),
+    assert main(["extract", "--input", inp, "--output", str(tmp_path / "o"),
                  "--benchmark-snippets", inp]) == 2
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [[]] + [[mode, "--help"] for mode in
+            ("extract", "curate", "corpus", "dedup", "ann", "plan", "compact")],
+)
+def test_jobs_cli_usage_exit_codes(argv, capsys):
+    """No subcommand is a usage error (2); every subcommand's --help
+    prints its own flags and exits 0."""
+    from web_content_extractor_spark.jobs import main
+
+    assert main(argv) == (0 if argv else 2)
+    if argv:
+        assert "--output" in capsys.readouterr().out

@@ -92,6 +92,7 @@ def test_jobs_rejects_iceberg_resume(tmp_path, capsys):
 
     rc = main(
         [
+            "extract",
             "--input", "db.docs",
             "--input-format", "iceberg",
             "--resume",

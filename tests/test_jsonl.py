@@ -143,7 +143,8 @@ def test_jobs_extract_from_jsonl(spark, tmp_path):
     p = str(tmp_path / "docs.jsonl")
     _write_lines(p, [json.dumps(doc), '{"doc_id": "torn'])
     out = str(tmp_path / "spans")
-    rc = main(["--input", p, "--input-format", "jsonl", "--output", out])
+    rc = main(["extract", "--input", p, "--input-format", "jsonl",
+               "--output", out])
     assert rc == 0
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
@@ -156,6 +157,7 @@ def test_jobs_jsonl_resume_rejected(tmp_path):
     from web_content_extractor_spark.jobs import main
 
     rc = main([
+        "extract",
         "--input", str(tmp_path / "x.jsonl"),
         "--input-format", "jsonl",
         "--output", str(tmp_path / "o"),
@@ -165,7 +167,7 @@ def test_jobs_jsonl_resume_rejected(tmp_path):
 
 
 def test_jobs_corpus_build_from_jsonl(spark, tmp_path, capsys):
-    """--corpus-input-format jsonl: the corpus pipeline builds from
+    """corpus --input-format jsonl: the corpus pipeline builds from
     JSONL shards, torn lines dropped."""
     from web_content_extractor_spark.jobs import main
 
@@ -183,9 +185,10 @@ def test_jobs_corpus_build_from_jsonl(spark, tmp_path, capsys):
     _write_lines(p, lines)
     out = str(tmp_path / "corpus")
     rc = main([
-        "--corpus-input", p,
-        "--corpus-input-format", "jsonl",
-        "--corpus-output", out,
+        "corpus",
+        "--input", p,
+        "--input-format", "jsonl",
+        "--output", out,
         "--chunk-size", "64",
         "--chunk-overlap", "16",
         "--shards", "2",

@@ -47,6 +47,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
             "--master", "local[4]",
             "--py-files", str(zpath),
             os.path.join(REPO, "scripts", "submit_job.py"),
+            "extract",
             "--input", docs,
             "--output", spans,
             "--metrics", str(tmp_path / "metrics"),

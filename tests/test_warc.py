@@ -139,6 +139,7 @@ class TestWarcExtractionJob:
         out = str(tmp_path / "spans")
         rc = main(
             [
+                "extract",
                 "--input", str(tmp_path / "crawl.warc"),
                 "--input-format", "warc",
                 "--output", out,
@@ -158,6 +159,7 @@ class TestWarcExtractionJob:
 
         rc = main(
             [
+                "extract",
                 "--input", str(tmp_path),
                 "--input-format", "warc",
                 "--output", str(tmp_path / "o"),
@@ -385,6 +387,7 @@ def test_jobs_cdx_output(spark, tmp_path):
     out, cdx = str(tmp_path / "spans"), str(tmp_path / "cdx")
     rc = main(
         [
+            "extract",
             "--input", str(tmp_path / "c.warc"),
             "--input-format", "warc",
             "--output", out,
@@ -402,7 +405,7 @@ def test_cdx_requires_warc_format(tmp_path):
     from web_content_extractor_spark.jobs import main
 
     rc = main(
-        ["--input", str(tmp_path), "--output", str(tmp_path / "o"),
+        ["extract", "--input", str(tmp_path), "--output", str(tmp_path / "o"),
          "--cdx-output", str(tmp_path / "c")]
     )
     assert rc == 2

@@ -360,15 +360,3 @@ def scale_corpus_rows(
         doc_id = f"https://host{h:03d}.example.org/doc{i}"
         rows.append((doc_id, [_html_span(body)]))
     return rows
-
-
-def write_scale_corpus(
-    spark: SparkSession,
-    path: str,
-    n_docs: int,
-    seed: int = 42,
-    partitions: int = 64,
-) -> None:
-    rows = scale_corpus_rows(n_docs, seed=seed)
-    df = spark.createDataFrame(rows, schema=DOCS).repartition(partitions)
-    df.write.mode("overwrite").parquet(path)

@@ -112,11 +112,6 @@ def normalize(url: str) -> str | None:
     return out
 
 
-def resolve_and_normalize(base_url: str, href: str) -> str | None:
-    """Join + canonicalize; None when the result is not a valid http URL."""
-    return normalize(resolve(base_url, href))
-
-
 # --- native Column-algebra canonicalization (corpus-scale URL dedup) ---
 #
 # The pure-Python helpers above run INSIDE the Arrow tokenizer kernel;

@@ -136,8 +136,9 @@ def minhash_signatures(
         a = np.array([p[0] for p in perms], dtype=np.int64)[:, None]
         b = np.array([p[1] for p in perms], dtype=np.int64)[:, None]
         # polynomial gram hash over per-token md5-8 values folded into
-        # [0, 2^31-1); coefficients are odd constants < 2^20 so the
-        # accumulator stays exact in int64
+        # [0, p), p = 2^31-1; coefficients are 1000003^k mod p.  Exact in
+        # int64 because the mod runs after every step: acc < p and
+        # coef*th < 2^62, so acc + coef*th never overflows
         coef = np.array(
             [1000003**k % _MERSENNE for k in range(ngram)], dtype=np.int64
         )

@@ -4,7 +4,7 @@ The composed keep/drop manifest a training-data pipeline ships — each
 leg is an independently oracle-verified operator (quality filter
 battery, exact dedup, benchmark decontamination), composed as plain
 DataFrame joins.  Shared by the driver query (``__spark_entry__``)
-and the spark-submit job (``jobs.py --curate-input/--curate-output``).
+and the spark-submit job (``jobs.py curate --input/--output``).
 
 Scale shape: the quality leg is per-row Column algebra on the main
 scan; exact dedup is one balanced shuffle on the content hash; the

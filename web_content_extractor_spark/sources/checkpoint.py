@@ -25,6 +25,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from web_content_extractor_spark.operators.content import extract_content
+from web_content_extractor_spark.operators.errors import doc_errors, write_errors
 from web_content_extractor_spark.operators.metrics import partition_metrics
 from web_content_extractor_spark.plans.pipeline import extract
 from web_content_extractor_spark.schemas import DOCS
@@ -55,30 +57,20 @@ def record_run(output_path: str, run_id: str, files: list[str], stats: dict[str,
     os.replace(tmp, os.path.join(d, f"{run_id}.json"))  # atomic commit
 
 
-def run_resumable_extract(
-    spark: SparkSession,
-    input_path: str,
+def write_extract(
+    docs: DataFrame,
     output_path: str,
+    run_id: str,
     metrics_path: str | None = None,
     errors_path: str | None = None,
+    content_path: str | None = None,
     variant: str = "context",
     balance: bool = False,
-) -> dict[str, Any]:
-    """One resumable pass: extract every not-yet-processed input file.
-
-    Returns {"run_id", "files_processed", "docs"}; a no-op (everything
-    already processed) returns files_processed == 0 and writes nothing.
-    ``errors_path`` additionally appends the per-doc errors table for
-    the processed files (operators/errors.py) under the same run_id,
-    so a resumed run's error rows are attributable to its manifest.
-    """
-    run_id = uuid.uuid4().hex[:12]
-    all_files = spark.read.schema(DOCS).parquet(input_path).inputFiles()
-    todo = sorted(set(all_files) - processed_files(output_path))
-    if not todo:
-        return {"run_id": run_id, "files_processed": 0, "docs": 0}
-
-    docs = spark.read.schema(DOCS).parquet(*todo)
+) -> int:
+    """Extract ``docs`` once and append one run's tables: spans to
+    ``output_path``, plus the optional metrics and errors tables (keyed
+    by ``run_id``) and the boilerpipe content branch.  Every table is
+    computed from the same ``docs`` frame.  Returns the docs count."""
     extracted = extract(
         docs,
         variant=variant,
@@ -94,14 +86,49 @@ def run_resumable_extract(
                 metrics_path
             )
         if errors_path:
-            from web_content_extractor_spark.operators.errors import (
-                doc_errors,
-                write_errors,
-            )
-
             write_errors(doc_errors(extracted, run_id=run_id), errors_path)
         n_docs = extracted.count()
     finally:
         extracted.unpersist()
+    if content_path:
+        extract_content(docs).write.mode("append").parquet(content_path)
+    return n_docs
+
+
+def run_resumable_extract(
+    spark: SparkSession,
+    input_path: str,
+    output_path: str,
+    metrics_path: str | None = None,
+    errors_path: str | None = None,
+    variant: str = "context",
+    balance: bool = False,
+    content_path: str | None = None,
+) -> dict[str, Any]:
+    """One resumable pass: extract every not-yet-processed input file.
+
+    Returns {"run_id", "files_processed", "docs"}; a no-op (everything
+    already processed) returns files_processed == 0 and writes nothing.
+    ``errors_path`` additionally appends the per-doc errors table for
+    the processed files (operators/errors.py) under the same run_id,
+    so a resumed run's error rows are attributable to its manifest;
+    ``content_path`` appends the content rows of those files only.
+    """
+    run_id = uuid.uuid4().hex[:12]
+    all_files = spark.read.schema(DOCS).parquet(input_path).inputFiles()
+    todo = sorted(set(all_files) - processed_files(output_path))
+    if not todo:
+        return {"run_id": run_id, "files_processed": 0, "docs": 0}
+
+    n_docs = write_extract(
+        spark.read.schema(DOCS).parquet(*todo),
+        output_path,
+        run_id,
+        metrics_path=metrics_path,
+        errors_path=errors_path,
+        content_path=content_path,
+        variant=variant,
+        balance=balance,
+    )
     record_run(output_path, run_id, todo, {"docs": n_docs})
     return {"run_id": run_id, "files_processed": len(todo), "docs": n_docs}

@@ -162,13 +162,6 @@ def _inflate_with_members(blob: bytes):
     return bytes(out), members
 
 
-def _maybe_gunzip(blob: bytes) -> bytes:
-    """Inflate a gzip stream (any member layout); pass plain bytes
-    through.  See :func:`_inflate_with_members` for the salvage
-    semantics."""
-    return _inflate_with_members(blob)[0]
-
-
 def _walk_records(
     blob: bytes,
 ) -> Iterator[tuple[str | None, bytes, str | None, int, int] | None]:
