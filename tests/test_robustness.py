@@ -187,7 +187,12 @@ def test_normalize_keeps_bare_delimiters_in_both_branches():
     for fast, forced_full in (("https://h.org/a?", "https://H.org/a?"),
                               ("https://h.org/a#", "https://H.org/a#"),
                               ("https://h.org/a?#", "https://H.org/a?#"),
-                              ("https://h.org/?x#", "https://H.org/?x#")):
+                              ("https://h.org/?x#", "https://H.org/?x#"),
+                              # a trailing '\n' must fail the fast path's
+                              # end anchor ('$' matches before it);
+                              # urlsplit strips it in the full branch
+                              ("http://h.org/", "http://h.org\n"),
+                              ("https://h.org/a", "https://h.org/a\n")):
         assert urlnorm.normalize(fast) == fast
         assert urlnorm.normalize(forced_full) == fast
 

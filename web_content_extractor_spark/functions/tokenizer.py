@@ -87,17 +87,52 @@ _INTERESTING_TAGS = frozenset(
 # (or hits '<'), and those all stop the scan above — a quote anywhere
 # else is inert text or part of a tag NAME, neither of which can
 # extend an extent past a later '<'.
-_IDLE_JUMP = re.compile(
-    r"""<(?:"""
+# (The leading '<' is factored out into _IDLE_STOP below.)
+_IDLE_JUMP = (
     r"""[!?]"""
     r"""|/(?![a-zA-Z][-.a-zA-Z0-9:_]*\s*>)"""
     r"""|(?:a|iframe|object|embed|title|script|style)"""
     r"""(?=[\t\n\r\f />]|$)"""
     r"""|[a-zA-Z][^\t\n\r\f />\x00]*(?=[\t\n\r\f /\x00])"""
     r"""|[a-zA-Z][^<\t\n\r\f />\x00]*(?=<)"""
-    r""")""",
-    re.IGNORECASE,
 )
+# One-match anchor fast path: a whole plain anchor
+#   <a href="v">text</a>
+# consumed by one match while idle and turned straight into the
+# (href, None, text) tuple that HTMLParser's starttag / data / endtag
+# triple produces for it.  Exact because the sub-grammar sits strictly
+# inside what the stdlib parses to that triple:
+#   - `<a`/`<A`, ASCII whitespace [ \t\n\r\f]+, the name href in any
+#     case, '=' with optional ASCII whitespace on both sides, and a
+#     "..." or '...' value with no '<'/'>': tagfind ends the tag name
+#     "a" at that whitespace, attrfind reads exactly this name and
+#     quoted value (its name run stops at whitespace or '=', its
+#     quoted alternatives end at the closing quote), the name is
+#     lower-cased, and html.unescape changes the value only if it
+#     holds '&';
+#   - then optional ASCII whitespace and '>', so locatestarttagend
+#     ends right there and the tag is a plain start tag (not '/>')
+#     with no download attribute;
+#   - the body has no '<', so goahead emits it as ONE data chunk
+#     (unescaped iff it holds '&') that _close_anchor strips;
+#   - a literal </a> or </A> is a well-formed end tag for "a".
+# Everything else -- any attribute besides a lone href, Unicode
+# whitespace such as \x0b, an unquoted value, '==', nested markup,
+# `</a >` -- fails to match and takes the general path from the same
+# position.  Every start position of this regex is also an _IDLE_JUMP
+# stop (`<a` then whitespace), so the two fold into one search with
+# the anchor alternative first: the leftmost stop is unchanged, and at
+# it the anchor is tried before the general path.  Groups: 1 = the
+# quoted href value, 2 = the body; an _IDLE_JUMP stop leaves both
+# unset (lastindex None).  The shared leading '<' stays outside the
+# alternation so the search keeps sre's literal-prefix scan (with a
+# '<' in each branch it ran ~2x slower).
+_WS = r"[ \t\n\r\f]"
+_PLAIN_ANCHOR = (
+    rf"""[aA]{_WS}+[hH][rR][eE][fF]{_WS}*={_WS}*("[^"<>]*"|'[^'<>]*')"""
+    rf"""{_WS}*>([^<]*)</[aA]>"""
+)
+_IDLE_STOP = re.compile(rf"<(?:{_PLAIN_ANCHOR}|(?i:{_IDLE_JUMP}))")
 
 
 class _LinkTokenizer(HTMLParser):
@@ -184,6 +219,12 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
     well-formed AND common-malformed input (differential-tested
     against HTMLParser in tests/test_tokenizer.py; any internal
     surprise raises and the caller re-parses with HTMLParser).
+
+    While idle, a plain anchor (``_PLAIN_ANCHOR``: a lone quoted
+    ``href`` after ASCII whitespace, a '<'-free body, a literal
+    ``</a>``) is consumed by the same search that finds the next stop and
+    appended to ``tok.anchors`` directly; anything else at that stop
+    runs the general path below from the same position.
     """
     import html as _htmlmod
     import html.parser as _hp
@@ -194,6 +235,9 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
     locatestart = _hp.locatestarttagend_tolerant
     endtagfind = _hp.endtagfind
     commentclose = _hp.commentclose
+
+    idle_stop = _IDLE_STOP.search
+    anchors = tok.anchors
 
     n = len(rawdata)
     i = 0
@@ -252,16 +296,28 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
 
         # "idle" = no open anchor, not inside <title>: data events are
         # dropped by the consumer and non-interesting tags produce no
-        # observable event.  One _IDLE_JUMP search (see its contract
-        # above) replaces per-tag iteration over text runs, '<'-free
-        # attributeless tags, and well-formed end tags; every stop
-        # position is parsed exactly with the stdlib regexes, so
-        # quoted '>'/'<' inside attributes can never derail the scan.
+        # observable event.  One _IDLE_STOP search (see the _IDLE_JUMP
+        # and _PLAIN_ANCHOR contracts above) replaces per-tag iteration
+        # over text runs, '<'-free attributeless tags, and well-formed
+        # end tags, and consumes a whole plain anchor in the same
+        # match; every other stop position is parsed exactly with the
+        # stdlib regexes, so quoted '>'/'<' inside attributes can never
+        # derail the scan.
         idle = tok._open_anchor is None and not tok._in_title
         if idle:
-            jm = _IDLE_JUMP.search(rawdata, i)
+            jm = idle_stop(rawdata, i)
             if jm is None:
                 break  # only text/boring extents remain; idle drops them
+            if jm.lastindex:
+                href, body = jm.group(1, 2)
+                href = href[1:-1]
+                if "&" in href:
+                    href = unescape(href)
+                if "&" in body:
+                    body = unescape(body)
+                anchors.append((href, None, body.strip()))
+                i = jm.end()
+                continue
             i = jm.start()
         else:
             lt = rawdata.find("<", i)
@@ -384,12 +440,6 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
     tok.close()
 
 
-def _anchor_text(href: str, download: str | None, inner: str, url: str) -> str:
-    """Reference text-selection priority (html_parser.py:125-148)."""
-    raw = download or inner or href or url
-    return _PDF_SUFFIX_RUN.sub(".pdf", raw).strip()
-
-
 def _iframe_text(url: str, title: str | None) -> str:
     """Golden iframe text rule (html_parser.py:150-166, test-pinned)."""
     low = url.lower()
@@ -430,7 +480,8 @@ def tokenize_html(
     errors: list[tuple[str, str, str]] = []
     bp = urlnorm.base_prefix(base_url)
 
-    def push(raw_target: str, tag: str, text_fn: Any) -> None:
+    def target_url(raw_target: str) -> str | None:
+        """Resolved, HttpUrl-normalized target, or None (recorded)."""
         # fast paths for the two dominant href shapes.  Absolute http(s)
         # targets are returned verbatim by urljoin (urllib keeps their
         # dot segments).  Root-relative targets get dot segments
@@ -469,28 +520,40 @@ def tokenize_html(
         normalized = urlnorm.normalize(resolved)
         if normalized is None:
             errors.append(("url_validation", "invalid_url", resolved))
-            return
-        text = text_fn(normalized)
+        return normalized
+
+    def push(url: str, text: str, tag: str) -> None:
         if not text:
-            errors.append(("text_selection", "empty_text", normalized))
+            errors.append(("text_selection", "empty_text", url))
             return
         # golden-classifier rank computed here (~1 us) so the native
         # assembly sorts on a precomputed int instead of re-running
         # the interpreted rlike chain inside its transform() HOF
-        out.append((normalized, text, tag, rank_context_py(normalized, text)))
+        out.append((url, text, tag, rank_context_py(url, text)))
 
     for href, download, inner in tok.anchors:
         if not href or href.startswith(urlnorm.SKIP_PREFIXES):
             continue
-        push(
-            href, "a", lambda u, h=href, d=download, i=inner: _anchor_text(h, d, i, u)
-        )
+        url = target_url(href)
+        if url is None:
+            continue
+        # reference text-selection priority (html_parser.py:125-148):
+        # non-empty download, stripped inner text, raw href (never
+        # empty here), then a trailing (\.pdf)+ run collapses to one
+        text = _PDF_SUFFIX_RUN.sub(".pdf", download or inner or href)
+        push(url, text.strip(), "a")
     for src, title in tok.iframes:
-        push(src, "iframe", lambda u, t=title: _iframe_text(u, t))
+        url = target_url(src)
+        if url is not None:
+            push(url, _iframe_text(url, title), "iframe")
     for data, title in tok.objects:
-        push(data, "object", lambda u, t=title: (t or "Embedded Object"))
+        url = target_url(data)
+        if url is not None:
+            push(url, title or "Embedded Object", "object")
     for src, title in tok.embeds:
-        push(src, "embed", lambda u, t=title: (t or "Embedded Content"))
+        url = target_url(src)
+        if url is not None:
+            push(url, title or "Embedded Content", "embed")
     return out, tok.title, errors
 
 

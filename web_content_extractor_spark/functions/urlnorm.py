@@ -33,8 +33,10 @@ SKIP_PREFIXES = ("javascript:", "#", "mailto:", "tel:")
 # parser), optional path.  Such a URL is its own HttpUrl form except
 # for the bare-authority trailing slash.  ~95% of real candidate URLs
 # hit this, skipping the urlsplit/urlunsplit round-trip that dominated
-# the tokenizer profile.
-_CANON_RE = re.compile(r"^https?://[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?(/.*)?$")
+# the tokenizer profile.  Anchored with \Z, not $: '$' also matches
+# before a final '\n', which let "http://h.org\n" pass as canonical
+# (and gain a '/' after the newline) while the full branch strips it.
+_CANON_RE = re.compile(r"^https?://[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?(/.*)?\Z")
 
 
 def base_prefix(base_url: str) -> str | None:
