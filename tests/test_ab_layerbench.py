@@ -1,0 +1,48 @@
+"""The claim rule of scripts/ab_layerbench.py, on hand-made run records."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+
+from ab_layerbench import summarize  # noqa: E402
+
+METRICS = [
+    {"name": "docs_per_s", "better": "higher", "bound": 0.25},
+    {"name": "cpu_s_per_kdoc", "better": "lower", "bound": 0.25},
+]
+
+
+def rec(docs, cpu, ok=True):
+    return {"ok": ok, "metrics": {"docs_per_s": docs, "cpu_s_per_kdoc": cpu}}
+
+
+def test_claim_rule_counts_lost_pairs_and_needs_nine_tenths():
+    pairs = [(rec(100 + i, 1.0), rec(150 + i, 0.8)) for i in range(10)]
+    docs, cpu = summarize(pairs, METRICS)
+    assert (docs["wins"], docs["holds"], docs["within_bound"]) == (10, True, True)
+    assert (cpu["wins"], cpu["holds"]) == (10, True)
+
+    # a bad change run loses its pair on every metric: 9/10 still holds
+    pairs[0] = (rec(100, 1.0), rec(500, 0.1, ok=False))
+    docs, cpu = summarize(pairs, METRICS)
+    assert (docs["wins"], docs["holds"], cpu["wins"]) == (9, True, 9)
+
+    # a second lost pair (a bad parent run counts too): 8/10 fails
+    pairs[1] = (rec(10, 9.0, ok=False), rec(151, 0.8))
+    assert [r["holds"] for r in summarize(pairs, METRICS)] == [False, False]
+
+
+def test_claim_rule_needs_a_gain_above_the_parent_iqr():
+    # the change wins every pair by 1 while the parent spreads over 40
+    pairs = [(rec(100 + 10 * (i % 5), 1.0), rec(101 + 10 * (i % 5), 1.0)) for i in range(10)]
+    docs, cpu = summarize(pairs, METRICS)
+    assert docs["wins"] == 10 and not docs["holds"]
+    assert docs["gain"] == 1 and docs["parent_iqr"] == 20
+    assert cpu["wins"] == 0 and cpu["within_bound"]  # ties win nothing
+
+    # 30% slower on the median is outside a 0.25 bound
+    pairs = [(rec(100, 1.0), rec(70, 1.0)) for _ in range(10)]
+    assert not summarize(pairs, METRICS)[0]["within_bound"]

@@ -4,11 +4,15 @@ on the tokenizer/normalizer invariants."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
+from web_content_extractor_spark import session
 from web_content_extractor_spark.functions import urlnorm
 from web_content_extractor_spark.functions.blocks import segment_blocks
 from web_content_extractor_spark.functions.tokenizer import (
@@ -297,3 +301,42 @@ def test_malformed_escape_urls_never_crash_the_job(spark):
     assert doc_metrics(extract(docs, with_stats=True)).collect()
     nav = navigation_links(tokenize(docs)).collect()   # host-equality path
     assert all(r.nav_url for r in nav)
+
+
+@pytest.mark.parametrize(
+    "master, partitions",
+    [
+        ("local", 6),
+        ("local[4]", 4),
+        ("local[*]", 6),
+        ("local[4,2]", 4),
+        ("local[*,3]", 6),
+        ("local-cluster[2,1,1024]", 6),
+        ("yarn", 6),
+    ],
+)
+def test_get_spark_accepts_every_master_form(monkeypatch, master, partitions):
+    """Shuffle partitions come from a local master's thread field (`*`
+    = cpus) and are cpus for any other master; no master form raises."""
+    conf = {}
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            conf["master"] = m
+            return self
+
+        def config(self, k, v):
+            conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return conf
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    assert session.get_spark(master=master) is conf
+    assert conf["master"] == master
+    assert conf["spark.sql.shuffle.partitions"] == str(partitions)

@@ -17,4 +17,17 @@ parallel: throughput scales linearly with executors.
 
 __version__ = "0.1.0"
 
+import sys
+
 from web_content_extractor_spark.session import get_spark  # noqa: F401
+
+# Inside a Spark Python worker (a task is running while the first engine
+# UDF unpickles), skip the per-task re-parse of every zip on sys.path.
+# CPython 3.13 already made zipimporter invalidation lazy.
+if sys.version_info < (3, 13):
+    from pyspark import TaskContext
+
+    if TaskContext.get() is not None:
+        from web_content_extractor_spark import pyworker
+
+        pyworker.install()

@@ -29,9 +29,10 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        # local[N] -> N; local[*]/cluster -> cpus
-        inner = master.split("[")[-1].rstrip("]") if "[" in master else str(cpus)
-        shuffle_partitions = cpus if inner == "*" else int(inner)
+        # local[N] and local[N,F] -> N; local[*], local and every other
+        # master (local-cluster[...], yarn, spark://...) -> cpus
+        threads = master[6:-1].split(",")[0] if master.startswith("local[") else "*"
+        shuffle_partitions = cpus if threads.strip() == "*" else int(threads)
 
     builder = (
         SparkSession.builder.appName(app_name)
