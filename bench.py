@@ -3,7 +3,7 @@
 
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints
-exactly ONE JSON line::
+two JSON lines: every query's time, then a short totals-only line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": 0.1, ...}
@@ -12,10 +12,6 @@ The flagship number is end-to-end extraction throughput (docs/sec) over
 a replicated interleaved-docs corpus synthesized deterministically from
 the ``documents`` table (no external data).  Each query is forced with
 a ``noop``-format write so the full plan executes without sink cost.
-
-Scaling evidence (north rule: efficiency >= 0.8 from N to 4N cores) is
-produced by ``scripts/bench_scaling.py`` which calls :func:`flagship`
-in fresh JVMs at two parallelism levels.
 """
 
 from __future__ import annotations
@@ -123,26 +119,6 @@ def _force(df: DataFrame) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def timed_best(build, passes: int = 2) -> float:
-    """Best-of-N FULL passes over ``build()`` (a thunk returning the
-    DataFrame).  Each pass REBUILDS the frame so Catalyst planning,
-    any eager driver work at construction time (e.g. the byte-
-    rebalance boundary sample), and the shuffle map stages are all
-    paid INSIDE the timed region — reusing one DataFrame object lets
-    Spark skip already-materialized shuffle stages and a pre-built
-    frame hides construction-time jobs, both of which flatter the
-    measurement.  One untimed pass first warms page cache + codegen.
-    Shared by the skew/rebalance probes; same basis as the headline
-    protocol."""
-    _force(build())
-    best = float("inf")
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        _force(build())
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
 def replicated_docs(
     spark: SparkSession, sf_dir: str, replication: int, blocks: int = 12
 ) -> DataFrame:
@@ -244,7 +220,7 @@ def materialize_corpus(
 
 
 def flagship(
-    spark: SparkSession, sf_dir: str, replication: int, passes: int = 1
+    spark: SparkSession, sf_dir: str, replication: int
 ) -> tuple[int, float]:
     """Time the extraction job over the materialized corpus.
 
@@ -266,39 +242,22 @@ def flagship(
     spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
     docs = spark.read.parquet(path)
     n_docs = docs.count()
-    # one untimed pass warms page cache + plan codegen; then best-of-N
+    # one untimed pass warms page cache + plan codegen; then best-of-3
     # timed passes — the sandbox host hypervisor-throttles under load
     # (CPU steal 5-22% correlated with our own usage) and shows 2x
     # wall-clock swings, so the minimum is the least-interfered
     # steady-state measurement (standard practice on shared hosts).
-    # Steal fraction is sampled per pass so reports can show raw AND
-    # steal-adjusted numbers.
     # plan once, execute repeatedly: a fresh DataFrame per pass would
     # re-run Catalyst analysis/optimization/codegen on the driver each
     # time (~1-2 s), which is job-submit overhead, not engine throughput
     out_df = extract(docs)  # canonical nested output table (EXTRACTED shape)
     _force(out_df)
-    best, steal_at_best = float("inf"), 0.0
-    for _ in range(passes):
-        s0 = _cpu_stat()
+    best = float("inf")
+    for _ in range(3):
         t0 = time.perf_counter()
         _force(out_df)
-        dt = time.perf_counter() - t0
-        steal = _steal_fraction(s0, _cpu_stat())
-        if dt < best:
-            best, steal_at_best = dt, steal
-    return n_docs, best, steal_at_best
-
-
-def _cpu_stat() -> list[int]:
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:]))
-
-
-def _steal_fraction(a: list[int], b: list[int]) -> float:
-    d = [y - x for x, y in zip(a, b)]
-    tot = sum(d)
-    return round(d[7] / tot, 4) if tot else 0.0
+        best = min(best, time.perf_counter() - t0)
+    return n_docs, best
 
 
 def main() -> None:
@@ -320,13 +279,12 @@ def main() -> None:
 
     # flagship first: measured on a fresh JVM (heap/GC state after 39
     # headline queries depressed it ~30% when it ran last; standalone
-    # is the representative number and matches the scaling protocol)
-    n_docs, fl_sec, _steal = flagship(spark, sf_dir, replication, passes=3)
+    # is the representative number)
+    n_docs, fl_sec = flagship(spark, sf_dir, replication)
 
     for name in HEADLINE:
         # one untimed WARM pass, then best-of-2 timed FULL passes —
-        # the same warm+min protocol the flagship and timed_best have
-        # used since round 1, now applied per query.  The warm pass
+        # the same warm+min protocol as the flagship.  The warm pass
         # pays whole-stage codegen, Python-worker module imports, and
         # first-touch page cache once, so the timed passes measure
         # steady state (BENCH.md's round-4 warm-up analysis: lsh_topk

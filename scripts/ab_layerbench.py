@@ -15,9 +15,10 @@ Prints one row per pair as it completes (each end-to-end metric of
 ``BENCHMARK.json``, the digests, the runs' median steal), then per
 metric each side's median [q1, q3], the change's win count, whether
 the claim rule holds (the change wins at least 9 of every 10 pairs and
-its median beats the parent's by more than the parent's own q3 - q1)
-and whether the change's median is within the metric's regression
-bound of the parent's.
+its median beats the parent's by more than the parent's own q3 - q1),
+whether the change's median is within the metric's regression bound of
+the parent's, and whether the metric is unresolved (the parent's q3 - q1
+exceeds that bound and not every change run beats every parent run).
 A run that crashes, has ``correct`` false or ``failed > 0`` loses its
 pair for every metric.  ``--out FILE`` keeps every run's record as JSON
 lines.  Exit 0 = every pair had equal digests and no lost run.
@@ -84,17 +85,21 @@ def summarize(pairs: list[tuple[dict, dict]], metrics: list[dict]) -> list[dict]
         ok = [(p, c) for p, c in pairs if p["ok"] and c["ok"]]
         if not ok:
             rows.append({"metric": name, "pairs": len(pairs), "wins": 0, "holds": False,
-                         "within_bound": False})
+                         "within_bound": False, "unresolved": True})
             continue
-        pq = quartiles([p["metrics"][name] for p, _ in ok])
-        cq = quartiles([c["metrics"][name] for _, c in ok])
+        pv = [p["metrics"][name] for p, _ in ok]
+        cv = [c["metrics"][name] for _, c in ok]
+        pq, cq = quartiles(pv), quartiles(cv)
         n_win = sum(wins(p, c, name, higher) for p, c in pairs)
         gain = (cq[1] - pq[1]) if higher else (pq[1] - cq[1])
+        separated = min(cv) > max(pv) if higher else max(cv) < min(pv)
         rows.append({
             "metric": name, "pairs": len(pairs), "wins": n_win,
             "parent": pq, "change": cq, "gain": gain, "parent_iqr": pq[2] - pq[0],
             "holds": n_win >= 0.9 * len(pairs) and gain > pq[2] - pq[0],
             "within_bound": gain >= -spec["bound"] * abs(pq[1]),
+            "unresolved": (pq[2] - pq[0] > spec["bound"] * abs(pq[1])
+                           and not separated),
         })
     return rows
 
@@ -149,7 +154,8 @@ def main(argv: list[str] | None = None) -> int:
               f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  "
               f"wins {r['wins']}/{r['pairs']}  median gain {r['gain']:.4g} vs "
               f"parent IQR {r['parent_iqr']:.4g}  claim rule holds: {r['holds']}  "
-              f"within regression bound: {r['within_bound']}")
+              f"within regression bound: {r['within_bound']}  "
+              f"unresolved: {r['unresolved']}")
     equal = all(p["digest"] is not None and p["digest"] == c["digest"] for p, c in pairs)
     clean = all(p["ok"] and c["ok"] for p, c in pairs)
     print(f"digests equal in every pair: {equal}  every run ok: {clean}")

@@ -46,3 +46,16 @@ def test_claim_rule_needs_a_gain_above_the_parent_iqr():
     # 30% slower on the median is outside a 0.25 bound
     pairs = [(rec(100, 1.0), rec(70, 1.0)) for _ in range(10)]
     assert not summarize(pairs, METRICS)[0]["within_bound"]
+
+
+def test_wide_parent_spread_is_unresolved_unless_the_runs_separate():
+    # parent IQR 55 on a median of 105 exceeds the 0.25 bound
+    parent = [100, 50, 150, 60, 140, 70, 130, 80, 120, 110]
+    pairs = [(rec(p, 1.0), rec(p - 1, 1.0)) for p in parent]
+    docs, cpu = summarize(pairs, METRICS)
+    assert docs["within_bound"] and docs["unresolved"]
+    assert not cpu["unresolved"]  # no spread at all
+
+    # every change run above every parent run settles it
+    pairs = [(rec(p, 1.0), rec(200 + p, 1.0)) for p in parent]
+    assert not summarize(pairs, METRICS)[0]["unresolved"]

@@ -151,8 +151,10 @@ def test_randomized_invariants(spark):
         assert placed == 0, f"trial {trial}: key split across partitions"
 
 
-def test_pipeline_balance_bytes_output_equal(spark):
-    """extract() output is independent of the balance mode."""
+@pytest.mark.parametrize("balance", [True, "rows", "bytes"])
+def test_pipeline_balance_bytes_output_equal(spark, balance):
+    """extract() output is independent of the balance mode, and a
+    misspelt mode raises instead of silently row-balancing."""
     from web_content_extractor_spark.datagen import fixture_docs
     from web_content_extractor_spark.plans.pipeline import extract
 
@@ -165,8 +167,10 @@ def test_pipeline_balance_bytes_output_equal(spark):
         )
 
     base = canon(extract(docs).collect())
-    balanced = canon(extract(docs, balance="bytes").collect())
+    balanced = canon(extract(docs, balance=balance).collect())
     assert base == balanced
+    with pytest.raises(ValueError, match="balance must be"):
+        extract(docs, balance="row")
 
 
 def test_murmur3_parity_with_spark_hash(spark):

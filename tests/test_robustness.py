@@ -303,6 +303,35 @@ def test_malformed_escape_urls_never_crash_the_job(spark):
     assert all(r.nav_url for r in nav)
 
 
+def test_null_doc_id_is_an_error_row_not_a_failed_job(spark):
+    """A null doc_id used to reach the JVM as a non-nullable field and
+    kill the stage with a NullPointerException; it must instead end as
+    one attributable ``null_doc_id`` error row while the job completes."""
+    from web_content_extractor_spark.operators.errors import doc_errors
+    from web_content_extractor_spark.plans.pipeline import tokenize
+
+    html = '<a href="https://abs.org/a">abs</a><a href="/rel">rel</a>'
+    docs = spark.createDataFrame(
+        [
+            (None, [{"kind": "html", "text": html, "media_ref": None,
+                     "offset": 0}]),
+            ("https://ok.org", [{"kind": "html", "text": html,
+                                 "media_ref": None, "offset": 0}]),
+        ],
+        "doc_id string, spans array<struct"
+        "<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    out = {r.doc_id: [s.media_ref for s in r.spans]
+           for r in extract(docs).collect()}
+    assert out[None] == ["https://abs.org/a"]     # relative link dropped
+    assert out["https://ok.org"] == ["https://abs.org/a", "https://ok.org/rel"]
+    errs = {(r.doc_id, r.stage, r.reason, r.target)
+            for r in doc_errors(tokenize(docs)).collect()}
+    assert (None, "input", "null_doc_id", "") in errs
+    assert (None, "url_validation", "invalid_url", "/rel") in errs
+    assert not any(e[0] == "https://ok.org" for e in errs)
+
+
 @pytest.mark.parametrize(
     "master, partitions",
     [

@@ -5,11 +5,15 @@ github:david3xu/web-content-extractor (reference snapshot at
 /root/reference) as a distributed, declarative Spark pipeline:
 
     scan(docs: doc_id, spans[])  --   parquet / Iceberg
-      -> mapInPandas(tokenize)   --   Arrow-batched stdlib-HTML tokenizer
-      -> native classify         --   when/rlike Column chain (Catalyst)
+      -> mapInPandas(tokenize)   --   Arrow-batched HTML tokenizer; also
+                                      ranks each candidate
+                                      (rank_context_py) for the default
+                                      variant
       -> native assemble         --   sort_array + transform (no shuffle)
       -> write spans + metrics
 
+The when/rlike Column classifier chain (Catalyst) ranks candidates
+only for ``--variant regex`` and callers without tokenizer ranks.
 Everything downstream of the tokenizer is pure Column algebra so the
 whole per-document pipeline is shuffle-free and embarrassingly
 parallel: throughput scales linearly with executors.

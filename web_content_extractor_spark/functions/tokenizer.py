@@ -558,7 +558,7 @@ def tokenize_html(
 
 
 def tokenize_doc(
-    doc_id: str, spans: Iterable[dict[str, Any]] | None
+    doc_id: str | None, spans: Iterable[dict[str, Any]] | None
 ) -> dict[str, Any]:
     """Tokenize one interleaved document row -> TOKENIZED-shaped dict.
 
@@ -580,6 +580,12 @@ def tokenize_doc(
     err_stages: list[str] = []
     err_reasons: list[str] = []
     err_targets: list[str] = []
+    if doc_id is None:
+        # no base URL: absolute links still extract, relative ones drop
+        # as invalid_url below
+        err_stages.append("input")
+        err_reasons.append("null_doc_id")
+        err_targets.append("")
     title: str | None = None
     span_list = list(spans) if spans is not None else []
     for span in sorted(span_list, key=lambda s: s["offset"] or 0):
@@ -610,7 +616,6 @@ def tokenize_doc(
             ranks.append(2)  # media is always kind='other' (F14)
     return {
         "doc_id": doc_id,
-        "base_url": base_url,
         "page_title": title,
         "cand_urls": urls,
         "cand_texts": texts,
@@ -626,7 +631,6 @@ def tokenize_doc(
 
 _COLS = (
     "doc_id",
-    "base_url",
     "page_title",
     "cand_urls",
     "cand_texts",

@@ -54,7 +54,8 @@ def navigation_links(tokenized: DataFrame) -> DataFrame:
     """(doc_id, nav_url): same-host anchor targets, downloads excluded."""
     cand = tokenized.select(
         "doc_id",
-        F.try_parse_url(F.col("base_url"), F.lit("HOST")).alias("base_host"),
+        # doc_id is the document's base URL (tokenizer convention)
+        F.try_parse_url(F.col("doc_id"), F.lit("HOST")).alias("base_host"),
         F.posexplode(
             F.arrays_zip(
                 F.col("cand_urls").alias("url"), F.col("cand_tags").alias("tag")

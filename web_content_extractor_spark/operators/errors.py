@@ -11,9 +11,11 @@ failure, and this module explodes them into an errors table
     (doc_id, stage, reason, target, run_id, correlation_id)
 
 so "why did 0.3% of docs lose links" is one filter away on a 100-TB
-run.  Stages: ``parse`` (HTML tokenizer exception — reason carries the
-exception class), ``url_validation`` (invalid resolved URL),
-``text_selection`` (empty link text after the selection priority).
+run.  Stages: ``input`` (``null_doc_id``: the row has no doc_id, so no
+base URL; its absolute links still extract), ``parse`` (HTML tokenizer
+exception — reason carries the exception class), ``url_validation``
+(invalid resolved URL), ``text_selection`` (empty link text after the
+selection priority).
 
 Scale shape: a narrow projection + explode of the already-computed
 tokenizer output — no extra Python stage, no shuffle; the error arrays

@@ -53,8 +53,8 @@ DOCS = T.StructType(
 # still shuffle-free.
 TOKENIZED = T.StructType(
     [
-        T.StructField("doc_id", T.StringType(), nullable=False),
-        T.StructField("base_url", T.StringType()),
+        # nullable: a null doc_id becomes a null_doc_id error row
+        T.StructField("doc_id", T.StringType()),
         T.StructField("page_title", T.StringType()),
         T.StructField("cand_urls", T.ArrayType(T.StringType())),
         T.StructField("cand_texts", T.ArrayType(T.StringType())),
