@@ -2,13 +2,14 @@
 """Seeded differential fuzz: the engine's HTML scanner vs HTMLParser.
 
 Each case is a random composition of pathological HTML fragments (the
-alphabet below).  The engine path -- ``_fast_feed`` with the stdlib
-``HTMLParser`` fallback that ``tokenize_html`` applies -- must END in
+alphabet below).  The engine's one scanner, ``_fast_feed``, must END in
 the same state as ``HTMLParser`` itself: the same anchors, iframes,
 objects, embeds and title, or the same exception type (which
-``tokenize_doc`` turns into a parse_error record).  The same seed and
-budget always draw the same cases, so a mismatch is reproducible from
-the printed report.
+``tokenize_doc`` turns into a parse_error record).  There is no
+fallback: a scanner exception counts as a mismatch unless HTMLParser
+raises the same type on that input.  The same seed and budget always
+draw the same cases, so a mismatch is reproducible from the printed
+report.
 
 The alphabet also pins the scanner's dependence on the private
 ``html.parser`` regexes it reuses: a Python upgrade that changes them
@@ -75,6 +76,14 @@ ALPHABET = list("<>/=\"'!?-abct &;#xX09") + [
     '<A HREF="/up">Up</A>', '<a href="/gt">x > y</a>',
     ' download="R&amp;D.pdf"', '<a hre="/n">', ' hrefs="/m"',
     ' data-href="/d"',
+    # declarations, marked sections, PIs, junk end tags and CDATA
+    # open/close variants: every construct the scanner hands to the
+    # stdlib's own parse methods, including the raising ones
+    "<!DOCTYPE html>", '<!doctype x [<!ENTITY e "v">]>', "<!DOCTYPE",
+    "<![if !IE]>", "<![endif]>", "<![ignore[", "]]>", "<![foo[", "<!x>",
+    "<!ELEMENT", '<?xml version="1.0"?>', "</>", "</ x>", '</a junk=">">',
+    "<!--[if IE]>", "<![endif]-->", "<script x>", "</script >",
+    "</script x>", "<style>", "</style>",
 ]
 
 
@@ -101,13 +110,13 @@ class _CountingTokenizer(_LinkTokenizer):
 
 
 def _run_engine(s: str):
-    """(end state, fast-path anchor count); the count is 0 when the
-    scanner raised and the stdlib parser produced the state."""
+    """(end state, fast-path anchor count); a raising scanner ends in
+    ``("exc", type name)``, which is what ``tokenize_doc`` records."""
     t = _CountingTokenizer()
     try:
         _fast_feed(t, s)
-    except Exception:
-        return _run_ref(s), 0
+    except Exception as e:
+        return ("exc", type(e).__name__), 0
     state = ("ok", t.anchors, t.iframes, t.objects, t.embeds, t.title)
     return state, len(t.anchors) - t.general_anchors
 

@@ -83,6 +83,23 @@ def test_parse_error_stage(spark):
     assert d["err_reasons"] == ["parse_error:RuntimeError"]
     assert d["cand_urls"] == ["https://ok.org/a"]
 
+    # unpatched: a real bad marked section raises AssertionError inside
+    # the scanner (as it does in HTMLParser); the span becomes one
+    # attributable row, its anchor is absent, the clean span survives
+    d = tk.tokenize_doc(
+        "https://x.org/",
+        [
+            {"kind": "html", "text": '<![foo[x]]><a href="https://bad.org/">B</a>',
+             "media_ref": None, "offset": 0},
+            {"kind": "html", "text": '<a href="https://ok.org/a">A</a>',
+             "media_ref": None, "offset": 1},
+        ],
+    )
+    assert d["err_stages"] == ["parse"]
+    assert d["err_reasons"] == ["parse_error:AssertionError"]
+    assert d["err_targets"] == ["https://x.org/"]
+    assert d["cand_urls"] == ["https://ok.org/a"]
+
 
 def test_resumable_extract_writes_errors(spark, broken_docs, tmp_path):
     from web_content_extractor_spark.sources.checkpoint import (

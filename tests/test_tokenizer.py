@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -150,6 +151,11 @@ def _assert_same(html):
 
 def test_fast_scanner_differential_pinned():
     # behaviors pinned from HTMLParser(convert_charrefs=True) itself
+    from web_content_extractor_spark.functions.tokenizer import (
+        _fast_feed,
+        _LinkTokenizer,
+    )
+
     cases = [
         '<a href="x&amp;y">A&amp;B</a>',
         "<a href='x' DOWNLOAD>t</a>",
@@ -194,9 +200,24 @@ def test_fast_scanner_differential_pinned():
         '<a href="/dl" download="R&amp;D.pdf">charref download</a>',
         '<a hre="/n">near-miss name</a><a hrefs="/m">m</a>',
         '<a data-href="/d">d</a><a href="/e" xhref="/f">e</a>',
+        # <! constructs go to parse_html_declaration; each is followed
+        # by an anchor so a wrong extent shows
+        "<!DOCTYPE html><a href=/dt>plain doctype</a>",
+        '<!doctype x [<!ENTITY e "v">]><a href=/sub>internal subset</a>',
+        "<![CDATA[<a href=/in>x</a>]]><a href=/cd>cdata</a>",
+        "<![if !IE]><a href=/ie>ie</a><![endif]><a href=/ms>ms</a>",
+        "<!bogus <a href=/bc>><a href=/after>bogus comment</a>",
+        "<a href=/eof>x</a><!x",
+        # CDATA content ends only at the exact close tag; a junk
+        # `</script x>` inside an open anchor stays one raw data chunk
+        "<a href=/s>a <script>x </script x> y</script></a>",
     ]
     for html in cases:
         _assert_same(html)
+    # a bad marked section raises the same type from both
+    for parse in (_LinkTokenizer().feed, lambda h: _fast_feed(_LinkTokenizer(), h)):
+        with pytest.raises(AssertionError):
+            parse("<![foo[x]]>")
 
 
 def test_fast_scanner_idle_jump_hazards():
@@ -310,9 +331,9 @@ def test_fast_scanner_differential_generated(parts):
 def test_fast_scanner_adversarial_alphabet():
     # seeded random compositions of pathological HTML fragments
     # (scripts/fuzz_differential.py at its tier-1 seed and budget); the
-    # engine path (fast scanner w/ stdlib fallback) must END-BEHAVE
-    # identically to HTMLParser, including its raising cases (which
-    # tokenize_doc converts to parse_error records)
+    # engine's one scanner must END-BEHAVE identically to HTMLParser,
+    # including its raising cases (which tokenize_doc converts to
+    # parse_error records)
     report = fuzz_differential.run(seed=20260817, budget=4000)
     assert report["mismatches"] == 0, report["first_mismatch"]
     assert report["fast_path_cases"] > 0

@@ -172,7 +172,7 @@ class TestWarcExtractionJob:
 class TestWarcStreaming:
     def test_stream_extract_warc_incremental(self, spark, tmp_path):
         from web_content_extractor_spark.streaming.incremental import (
-            stream_extract_warc,
+            stream_extract,
         )
 
         land = tmp_path / "landing"
@@ -190,7 +190,7 @@ class TestWarcStreaming:
             )
 
         (land / "a.warc").write_bytes(page(1) + page(2))
-        q = stream_extract_warc(spark, str(land), out, ckpt)
+        q = stream_extract(spark, str(land), out, ckpt, fmt="warc")
         q.awaitTermination(120)
         assert {r.doc_id for r in spark.read.parquet(out).collect()} == {
             "https://example.com/p1", "https://example.com/p2"
@@ -198,7 +198,7 @@ class TestWarcStreaming:
 
         # a newly landed archive is picked up exactly once on resume
         (land / "b.warc").write_bytes(page(3))
-        q = stream_extract_warc(spark, str(land), out, ckpt)
+        q = stream_extract(spark, str(land), out, ckpt, fmt="warc")
         q.awaitTermination(120)
         rows = spark.read.parquet(out).collect()
         assert len(rows) == 3  # no reprocessing of a.warc

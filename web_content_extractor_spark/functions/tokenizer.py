@@ -47,10 +47,6 @@ from web_content_extractor_spark.functions.classify import rank_context_py
 
 _PDF_SUFFIX_RUN = re.compile(r"(\.pdf)+$", re.IGNORECASE)
 _VIDEO_HINTS = ("youtube", "youtu.be", "embed", "iframe.ly")
-_CDATA_CLOSE = {
-    e: re.compile(rf"</\s*{e}", re.IGNORECASE) for e in ("script", "style")
-}
-_PLAIN_DOCTYPE = re.compile(r"<!doctype[^>\[]*>", re.IGNORECASE)
 # tags whose events the consumer observes (plus cdata-mode switches)
 _INTERESTING_TAGS = frozenset(
     ("a", "iframe", "object", "embed", "title", "script", "style")
@@ -70,10 +66,11 @@ _INTERESTING_TAGS = frozenset(
 #   <name(ws|/|NUL) any start tag with whitespace/attrs — its attr
 #              values (quoted OR unquoted) and tolerant attr NAMES may
 #              contain '<', so its extent must be parsed exactly.  NUL
-#              is included because attrfind's name lookbehind ['"\s/]
-#              lets an attribute start right after a quote-terminated
-#              NAME run (`<d"\x00<a href=x>` is ONE tag named `d"`
-#              with attrs `\x00<a` and `href` — fuzz-found);
+#              is included because the stdlib attribute regex's name
+#              lookbehind ['"\s/] lets an attribute start right after
+#              a quote-terminated NAME run (`<d"\x00<a href=x>` is ONE
+#              tag named `d"` with attrs `\x00<a` and `href` —
+#              fuzz-found);
 #   <name<     a start tag whose name run hits another '<' ('<' is a
 #              legal tagfind name char, so `<x<title>` is ONE boring
 #              tag named "x<title" — jumping to the inner `<title`
@@ -105,10 +102,10 @@ _IDLE_JUMP = (
 #   - `<a`/`<A`, ASCII whitespace [ \t\n\r\f]+, the name href in any
 #     case, '=' with optional ASCII whitespace on both sides, and a
 #     "..." or '...' value with no '<'/'>': tagfind ends the tag name
-#     "a" at that whitespace, attrfind reads exactly this name and
-#     quoted value (its name run stops at whitespace or '=', its
-#     quoted alternatives end at the closing quote), the name is
-#     lower-cased, and html.unescape changes the value only if it
+#     "a" at that whitespace, the stdlib attribute regex reads exactly
+#     this name and quoted value (its name run stops at whitespace or
+#     '=', its quoted alternatives end at the closing quote), the name
+#     is lower-cased, and html.unescape changes the value only if it
 #     holds '&';
 #   - then optional ASCII whitespace and '>', so locatestarttagend
 #     ends right there and the tag is a plain start tag (not '/>')
@@ -202,23 +199,23 @@ class _LinkTokenizer(HTMLParser):
             self._open_anchor = None
 
 
-class _FastScanError(Exception):
-    """Internal: fast scanner bailed; caller falls back to HTMLParser."""
-
-
 def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
     """Single-pass scanner emitting the same event stream as
-    ``HTMLParser(convert_charrefs=True)`` into ``tok``.
+    ``HTMLParser(convert_charrefs=True)`` (``feed`` then ``close``) into
+    ``tok``.
 
-    The stdlib parser's incremental-feed state machine (goahead /
-    updatepos bookkeeping) is ~85% of tokenizer CPU; this one-shot
-    scanner reuses the stdlib's OWN tolerant regexes
-    (tagfind/attrfind/locatestarttagend/endtagfind), its attr
-    unescaping, its CDATA (script/style) rules, its stray-'<' and
-    unterminated-tag fallbacks — so the event stream matches on
-    well-formed AND common-malformed input (differential-tested
-    against HTMLParser in tests/test_tokenizer.py; any internal
-    surprise raises and the caller re-parses with HTMLParser).
+    The stdlib parser's incremental-feed loop (goahead / updatepos
+    bookkeeping) is most of the tokenizer CPU.  This one-shot loop keeps
+    goahead's own rules for text, stray '<', CDATA (script/style)
+    content and end of input, and hands every markup construct to the
+    stdlib method goahead itself calls on it, run on ``tok`` over the
+    same ``rawdata``: ``parse_starttag`` (or ``check_for_whole_start_tag``
+    to skip an idle, non-interesting start tag over its extent),
+    ``parse_endtag``, ``parse_comment``, ``parse_pi`` and
+    ``parse_html_declaration``.  An exception from one of them (an
+    ``AssertionError`` on a bad marked section) propagates exactly as
+    from ``HTMLParser.feed``.  Differential-tested against HTMLParser in
+    tests/test_tokenizer.py and scripts/fuzz_differential.py.
 
     While idle, a plain anchor (``_PLAIN_ANCHOR``: a lone quoted
     ``href`` after ASCII whitespace, a '<'-free body, a literal
@@ -231,24 +228,17 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
 
     unescape = _htmlmod.unescape
     tagfind = _hp.tagfind_tolerant
-    attrfind = _hp.attrfind_tolerant
-    locatestart = _hp.locatestarttagend_tolerant
-    endtagfind = _hp.endtagfind
-    commentclose = _hp.commentclose
-
     idle_stop = _IDLE_STOP.search
+    startswith = rawdata.startswith
     anchors = tok.anchors
+    tok.rawdata = rawdata  # the parse_* methods read self.rawdata
 
     n = len(rawdata)
     i = 0
-    cdata_elem: str | None = None
 
-    def data(chunk: str, in_cdata: bool = False) -> None:
-        if not chunk:
-            return
-        if not in_cdata and "&" in chunk:
-            chunk = unescape(chunk)
-        tok.handle_data(chunk)
+    def data(chunk: str) -> None:
+        if chunk:
+            tok.handle_data(unescape(chunk) if "&" in chunk else chunk)
 
     def incomplete(at: int) -> int:
         # html.parser goahead(end=1) EOF rule for an incomplete
@@ -265,33 +255,18 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
         return k
 
     while i < n:
-        if cdata_elem is not None:
-            # content is raw until a matching close tag (html.parser
-            # set_cdata_mode semantics); unterminated CDATA content is
+        if tok.cdata_elem is not None:
+            # content is raw until the close tag set_cdata_mode compiled
+            # into tok.interesting; unterminated CDATA content is
             # DISCARDED at EOF, exactly like goahead's cdata break
-            m = _CDATA_CLOSE[cdata_elem].search(rawdata, i)
+            m = tok.interesting.search(rawdata, i)
             if not m:
                 break
-            j = m.start()
-            data(rawdata[i:j], in_cdata=True)
-            em = endtagfind.match(rawdata, j)
-            if em and em.group(1).lower() == cdata_elem:
-                tok.handle_endtag(cdata_elem)
-                cdata_elem = None
-                i = em.end()
-            else:
-                gt = rawdata.find(">", j + 1)
-                if gt < 0:
-                    # incomplete-at-EOF rule, raw (no unescape), still
-                    # in cdata: chunk to next '<' else one char
-                    k = rawdata.find("<", j + 1)
-                    if k < 0:
-                        k = j + 1
-                    data(rawdata[j:k], in_cdata=True)
-                    i = k
-                else:
-                    data(rawdata[j:gt], in_cdata=True)
-                    i = gt
+            if m.start() > i:
+                tok.handle_data(rawdata[i : m.start()])
+            tok.handle_endtag(tok.cdata_elem)
+            tok.clear_cdata_mode()
+            i = m.end()
             continue
 
         # "idle" = no open anchor, not inside <title>: data events are
@@ -300,9 +275,8 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
         # and _PLAIN_ANCHOR contracts above) replaces per-tag iteration
         # over text runs, '<'-free attributeless tags, and well-formed
         # end tags, and consumes a whole plain anchor in the same
-        # match; every other stop position is parsed exactly with the
-        # stdlib regexes, so quoted '>'/'<' inside attributes can never
-        # derail the scan.
+        # match; every other stop position is parsed by the stdlib, so
+        # quoted '>'/'<' inside attributes can never derail the scan.
         idle = tok._open_anchor is None and not tok._in_title
         if idle:
             jm = idle_stop(rawdata, i)
@@ -327,116 +301,32 @@ def _fast_feed(tok: _LinkTokenizer, rawdata: str) -> None:
             data(rawdata[i:lt])
             i = lt
         nxt = rawdata[i + 1 : i + 2]
-        if nxt and nxt.isascii() and nxt.isalpha():
-            # start tag; mirror parse_starttag + check_for_whole_start_tag
-            tm = tagfind.match(rawdata, i + 1)
-            tag = tm.group(1).lower()
-            lm = locatestart.match(rawdata, i)
-            if not lm:
-                i = incomplete(i)
-                continue
-            j = lm.end()
-            after = rawdata[j : j + 1]
-            if after == ">":
-                endpos = j + 1
-            elif after == "/":
-                if rawdata.startswith("/>", j):
-                    endpos = j + 2
-                else:
-                    i = incomplete(i)
-                    continue
-            elif after == "" or after in "abcdefghijklmnopqrstuvwxyz=/":
-                i = incomplete(i)  # end of input in/before attr value
-                continue
-            elif j > i:
-                endpos = j  # junk characters in start tag (lenient)
+        if nxt.isascii() and nxt.isalpha():
+            # an idle, non-interesting start tag has no observable
+            # event: skip its extent without building its attributes
+            skip = idle and (
+                tagfind.match(rawdata, i + 1).group(1).lower()
+                not in _INTERESTING_TAGS
+            )
+            if skip:
+                k = tok.check_for_whole_start_tag(i)
             else:
-                i = incomplete(i)
-                continue
-            if idle and tag not in _INTERESTING_TAGS:
-                i = endpos  # extent consumed; no observable event
-                continue
-            k = tm.end()
-            attrs: list[tuple[str, str | None]] = []
-            while k < endpos:
-                am = attrfind.match(rawdata, k)
-                if not am:
-                    break
-                attrname, rest, attrvalue = am.group(1, 2, 3)
-                if not rest:
-                    attrvalue = None
-                elif (
-                    attrvalue[:1] == "'" == attrvalue[-1:]
-                    or attrvalue[:1] == '"' == attrvalue[-1:]
-                ):
-                    attrvalue = attrvalue[1:-1]
-                if attrvalue and "&" in attrvalue:
-                    attrvalue = unescape(attrvalue)
-                attrs.append((attrname.lower(), attrvalue))
-                k = am.end()
-            end = rawdata[k:endpos].strip()
-            if end not in (">", "/>"):
-                # stdlib parse_starttag's junk path emits this chunk
-                # RAW (no charref unescape), unlike goahead text
-                tok.handle_data(rawdata[i:endpos])
-                i = endpos
-                continue
-            if end.endswith("/>"):
-                tok.handle_startendtag(tag, attrs)
-            else:
-                tok.handle_starttag(tag, attrs)
-                if tag in ("script", "style"):
-                    cdata_elem = tag
-            i = endpos
-        elif rawdata.startswith("</", i):
-            gtpos = rawdata.find(">", i + 1)
-            if gtpos < 0:
-                i = incomplete(i)
-                continue
-            em = endtagfind.match(rawdata, i)
-            if em:
-                tok.handle_endtag(em.group(1).lower())
-                i = em.end()
-                continue
-            nm = tagfind.match(rawdata, i + 2)
-            if nm:  # lenient end tag w/ junk before '>'
-                tok.handle_endtag(nm.group(1).lower())
-                gt2 = rawdata.find(">", nm.end())
-                if gt2 < 0:
-                    break
-                i = gt2 + 1
-                continue
-            if rawdata[i : i + 3] == "</>":
-                i += 3
-                continue
-            i = gtpos + 1  # bogus comment: skip to '>'
-        elif rawdata.startswith("<!--", i):
-            cm = commentclose.search(rawdata, i + 4)
-            if not cm:
-                i = incomplete(i)
-                continue
-            i = cm.end()
-        elif rawdata.startswith("<?", i):
-            gt = rawdata.find(">", i + 2)
-            if gt < 0:
-                i = incomplete(i)
-                continue
-            i = gt + 1
-        elif rawdata.startswith("<!", i):
-            # plain doctype (no internal subset) is skipped inline; any
-            # other declaration / marked section goes to the stdlib
-            # parser, whose lenient-vs-raising behavior (AssertionError
-            # on bad marked sections -> doc-level parse_error) is the
-            # engine's pinned semantics
-            dm = _PLAIN_DOCTYPE.match(rawdata, i)
-            if dm:
-                i = dm.end()
-            else:
-                raise _FastScanError
+                k = tok.parse_starttag(i)
+        elif startswith("</", i):
+            k = tok.parse_endtag(i)
+        elif startswith("<!--", i):
+            k = tok.parse_comment(i)
+        elif startswith("<?", i):
+            k = tok.parse_pi(i)
+        elif startswith("<!", i):
+            k = tok.parse_html_declaration(i)
         else:
             data("<")
             i += 1
+            continue
+        i = incomplete(i) if k < 0 else k
 
+    tok.rawdata = ""  # or close() would re-parse the whole document
     tok.close()
 
 
@@ -465,16 +355,14 @@ def tokenize_html(
     service.py:126-140) — drop-not-fail semantics preserved, but every
     drop is attributable.
 
-    The returned URLs are HttpUrl-normalized absolute URLs.
+    The returned URLs are HttpUrl-normalized absolute URLs.  The HTML
+    is scanned once by :func:`_fast_feed`; an exception from the
+    stdlib's parse methods (an ``AssertionError`` on a bad marked
+    section, exactly as ``HTMLParser`` raises) propagates, and
+    :func:`tokenize_doc` records it as one ``parse_error:<Type>`` row.
     """
     tok = _LinkTokenizer()
-    try:
-        _fast_feed(tok, html)
-    except Exception:
-        # any surprise in the fast scanner -> authoritative stdlib parse
-        tok = _LinkTokenizer()
-        tok.feed(html)
-        tok.close()
+    _fast_feed(tok, html)
 
     out: list[tuple[str, str, str, int]] = []
     errors: list[tuple[str, str, str]] = []

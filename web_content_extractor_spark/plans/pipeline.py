@@ -33,18 +33,14 @@ from web_content_extractor_spark.operators.assemble import assemble_spans
 from web_content_extractor_spark.schemas import TOKENIZED
 
 
-def span_bytes(spans=None):
+def span_bytes():
     """Per-doc payload size: total text+media_ref chars in ``spans``.
 
-    The default weight for ``balance="bytes"``; one interpreted HOF
-    fold per doc (~1us) — noise next to the ~300us/doc parse it
-    load-balances.
+    The weight for ``balance="bytes"``; one interpreted HOF fold per
+    doc (~1us) — noise next to the ~300us/doc parse it load-balances.
     """
-    col = F.coalesce(
-        spans if spans is not None else F.col("spans"), F.array()
-    )
     return F.aggregate(
-        col,
+        F.coalesce(F.col("spans"), F.array()),
         F.lit(0).cast("long"),
         lambda acc, s: acc
         + F.coalesce(F.length(s["text"]), F.lit(0))
@@ -56,7 +52,6 @@ def tokenize(
     docs: DataFrame,
     balance: bool | str = False,
     partitions: int | None = None,
-    weight=None,
 ) -> DataFrame:
     """DOCS -> TOKENIZED (the engine's single Python/Arrow stage).
 
@@ -66,13 +61,8 @@ def tokenize(
     per partition (heavy-tailed interleaved corpora).  Anything else
     raises — a typo silently falling back to row-balancing would
     reintroduce the exact straggler skew "bytes" exists to remove.
-
-    ``weight`` (bytes mode only): per-doc cost Column for the boundary
-    sample.  Default :func:`span_bytes` computes it from the payload —
-    which makes the sampling job READ the payload column; when the
-    input table carries a size/metadata column (most curated corpora
-    do), pass it here so the boundary sample scans only (doc_id,
-    n_bytes) and never touches the payload.
+    The "bytes" weight is :func:`span_bytes`, so its boundary-sampling
+    job reads the payload column.
     """
     df = docs.select("doc_id", "spans")
     if balance == "bytes":
@@ -81,11 +71,9 @@ def tokenize(
         )
 
         df = byte_balanced(
-            docs.select("doc_id", "spans")
-            if weight is None
-            else docs,
+            df,
             "doc_id",
-            span_bytes() if weight is None else weight,
+            span_bytes(),
             partitions or df.sparkSession.sparkContext.defaultParallelism,
         ).select("doc_id", "spans")
     elif balance is True or balance == "rows":
@@ -109,17 +97,14 @@ def extract(
     partitions: int | None = None,
     with_stats: bool = False,
     with_errors: bool = False,
-    weight=None,
 ) -> DataFrame:
     """Full extraction: docs -> (doc_id, spans[, stats columns]).
 
     Output spans satisfy the per-row invariant: sequence equality of
     (kind, text, media_ref, order) against the reference extractor.
-    ``balance``/``weight`` pass through to :func:`tokenize`.
+    ``balance``/``partitions`` pass through to :func:`tokenize`.
     """
-    tok = tokenize(
-        docs, balance=balance, partitions=partitions, weight=weight
-    )
+    tok = tokenize(docs, balance=balance, partitions=partitions)
     cols = [
         F.col("doc_id"),
         assemble_spans(

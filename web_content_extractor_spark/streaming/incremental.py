@@ -37,12 +37,20 @@ def read_docs_stream(
 ) -> DataFrame:
     """File-source stream over a landing directory of docs shards.
 
-    ``fmt``: "parquet" (default) or "jsonl" — JSONL landing dirs are
-    what upstream producers most often drop; the stream picks each
-    shard up exactly once (file-source semantics) and torn lines
+    ``fmt``: "parquet" (default), "jsonl" or "warc" — JSONL landing
+    dirs are what upstream producers most often drop; the stream picks
+    each shard up exactly once (file-source semantics) and torn lines
     inside a shard drop, never kill the query (PERMISSIVE + corrupt
     column, same contract as sources/jsonl.read_jsonl — Spark's
-    streaming JSON source accepts the same options)."""
+    streaming JSON source accepts the same options).  "warc" reads
+    landed WARC archives (:func:`read_warc_stream`) as DOCS rows, the
+    streaming twin of the batch CLI's ``--input-format warc``."""
+    if fmt == "warc":
+        from web_content_extractor_spark.sources.warc import warc_docs
+
+        return warc_docs(
+            read_warc_stream(spark, input_path, max_files_per_trigger)
+        )
     if fmt == "jsonl":
         from pyspark.sql import types as T
 
@@ -85,7 +93,7 @@ def stream_extract(
 
     ``available_now=True`` processes the current backlog and stops
     (resumable batch); ``False`` runs continuously on new files.
-    ``fmt``: "parquet" or "jsonl" landing shards.
+    ``fmt``: "parquet", "jsonl" or "warc" landing files.
     """
     docs = read_docs_stream(spark, input_path, fmt=fmt)
     ex = extract(docs, variant=variant)
@@ -337,32 +345,6 @@ def read_warc_stream(
         F.xxhash64("path").alias("blob_id"), F.col("content").alias("blob")
     )
     return parse_warc_records(blobs)
-
-
-def stream_extract_warc(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    variant: str = "context",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Incremental extraction straight off landed WARC archives;
-    exactly-once parquet sink, resumable from the stream checkpoint
-    (the WARC sibling of ``stream_extract``)."""
-    from web_content_extractor_spark.sources.warc import warc_docs
-
-    docs = warc_docs(read_warc_stream(spark, input_path))
-    ex = extract(docs, variant=variant)
-    writer = (
-        ex.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_stream_within_watermark(
