@@ -33,10 +33,15 @@ class _Recorder:
 class _FakeSpark:
     def __init__(self):
         self.log: list = []
+        self.stream_log: list = []
 
     @property
     def read(self):
         return _Recorder(self.log)
+
+    @property
+    def readStream(self):
+        return _Recorder(self.stream_log)
 
 
 class _FakeDF:
@@ -58,7 +63,9 @@ def test_iceberg_not_available_in_sandbox(spark):
     assert docs_io.iceberg_available(spark) is False
 
 
-def test_read_docs_dispatch():
+def test_read_docs_dispatch(spark):
+    # the JSONL and WARC branches build real Columns on the recorded
+    # frames, which needs a live session; the reader itself is faked
     s = _FakeSpark()
     docs_io.read_docs(s, "db.docs")  # no slash -> table identifier
     assert ("format", ("iceberg",)) in s.log and ("load", ("db.docs",)) in s.log
@@ -72,6 +79,28 @@ def test_read_docs_dispatch():
     s = _FakeSpark()
     docs_io.read_docs(s, "/data/docs", fmt="iceberg")  # explicit override
     assert ("format", ("iceberg",)) in s.log
+
+    s = _FakeSpark()
+    docs_io.read_docs(s, "/data/docs", fmt="jsonl")
+    assert ("text", ("/data/docs",)) in s.log
+
+    s = _FakeSpark()
+    docs_io.read_docs(s, "/data/warc", fmt="warc")
+    assert ("format", ("binaryFile",)) in s.log
+    assert ("option", ("pathGlobFilter", "*.warc*")) in s.log
+    assert ("load", ("/data/warc",)) in s.log
+
+    # stream=True: every format reads through spark.readStream only
+    for fmt, call in [
+        ("parquet", ("parquet", ("/data/docs",))),
+        ("iceberg", ("format", ("iceberg",))),
+        ("jsonl", ("text", ("/data/docs",))),
+        ("warc", ("format", ("binaryFile",))),
+    ]:
+        s = _FakeSpark()
+        docs_io.read_docs(s, "/data/docs", fmt=fmt, stream=True)
+        assert call in s.stream_log, fmt
+        assert s.log == [], fmt
 
 
 def test_write_docs_dispatch():

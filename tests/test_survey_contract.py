@@ -1,10 +1,12 @@
-"""Doc drift guards: SURVEY.md <-> driver contract, docs <-> scripts/.
+"""Doc drift guards: SURVEY.md <-> driver contract, docs <-> scripts/
+and docs <-> code symbols.
 
 The implementation map in SURVEY.md cites driver queries by name with
 a verification marker (⊕ oracled / ○ rows-only).  The judge reads
 those rows line by line, so a renamed or removed query must fail CI
 here, not in the grading run.  Likewise every script must be used by
-a test or the verify skill, and every script the docs cite must exist.
+a test or the verify skill, every script the docs cite must exist, and
+every ``path.py::symbol`` the docs cite must still be defined.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import __spark_entry__ as contract
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SURVEY = os.path.join(ROOT, "SURVEY.md")
+README = os.path.join(ROOT, "README.md")
 SKILL = os.path.join(ROOT, ".claude", "skills", "verify", "SKILL.md")
 # SURVEY §2 cites the reference repository's own script, not one of ours
 REFERENCE_SCRIPTS = {"fetch_youtube_transcripts.py"}
@@ -57,7 +60,29 @@ def test_every_script_is_used_and_every_cited_script_exists():
     unused = sorted(n for n in scripts if n not in users)
     assert not unused, f"scripts no test or the verify skill uses: {unused}"
     cited = set()
-    for doc in (os.path.join(ROOT, "README.md"), SURVEY, SKILL):
+    for doc in (README, SURVEY, SKILL):
         cited |= set(re.findall(r"scripts/(\w+\.py)", _read(doc)))
     missing = sorted(cited - scripts - REFERENCE_SCRIPTS)
     assert not missing, f"docs cite scripts that do not exist: {missing}"
+
+
+def test_every_cited_symbol_is_defined():
+    # `path.py::a/b(args)`: the file is found by path suffix; each
+    # /-separated symbol, call suffix stripped, must be a def, a class
+    # or an assignment in it
+    files = glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True)
+    cited = re.findall(r"`([\w./-]+\.py)::([^`]+)`", _read(SURVEY) + _read(README))
+    assert cited, "no path.py::symbol citations found"
+    broken = []
+    for path, symbols in cited:
+        hits = [f for f in files if f.endswith(os.sep + path)]
+        if len(hits) != 1:
+            broken.append((path, f"{len(hits)} files match"))
+            continue
+        src = _read(hits[0])
+        for sym in symbols.split("/"):
+            name = re.match(r"\w+", sym)[0]
+            defined = rf"^\s*(def {name}\b|class {name}\b|{name}\s*(:[^=\n]*)?=)"
+            if not re.search(defined, src, re.M):
+                broken.append((path, sym))
+    assert not broken, f"docs cite symbols that are not defined: {broken}"

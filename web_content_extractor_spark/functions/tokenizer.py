@@ -44,6 +44,7 @@ import pandas as pd
 
 from web_content_extractor_spark.functions import urlnorm
 from web_content_extractor_spark.functions.classify import rank_context_py
+from web_content_extractor_spark.schemas import TOKENIZED
 
 _PDF_SUFFIX_RUN = re.compile(r"(\.pdf)+$", re.IGNORECASE)
 _VIDEO_HINTS = ("youtube", "youtu.be", "embed", "iframe.ly")
@@ -517,19 +518,7 @@ def tokenize_doc(
     }
 
 
-_COLS = (
-    "doc_id",
-    "page_title",
-    "cand_urls",
-    "cand_texts",
-    "cand_tags",
-    "cand_ranks",
-    "parse_failures",
-    "err_stages",
-    "err_reasons",
-    "err_targets",
-    "proc_us",
-)
+_COLS = tuple(TOKENIZED.fieldNames())
 
 
 def tokenize_batches(

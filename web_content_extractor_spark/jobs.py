@@ -69,34 +69,6 @@ def _check_extract(args) -> None:
         )
 
 
-def _load_docs(spark, args):
-    if args.input_format == "warc":
-        from web_content_extractor_spark.sources.warc import (
-            read_warc,
-            warc_cdx,
-            warc_docs,
-        )
-
-        parsed = read_warc(spark, args.input)
-        if args.cdx_output:
-            # urlkey range clustering: a domain's records land in
-            # contiguous sorted files, the layout CDX range scans want
-            (
-                warc_cdx(parsed)
-                .repartitionByRange("urlkey")
-                .sortWithinPartitions("urlkey")
-                .write.mode("append")
-                .parquet(args.cdx_output)
-            )
-        return warc_docs(parsed)
-    if args.input_format == "jsonl":
-        from web_content_extractor_spark.schemas import DOCS
-        from web_content_extractor_spark.sources.jsonl import read_jsonl
-
-        return read_jsonl(spark, args.input, DOCS)
-    return read_docs(spark, args.input, fmt=args.input_format)
-
-
 def run_extract(spark, args) -> dict:
     opts = dict(
         metrics_path=args.metrics,
@@ -108,7 +80,22 @@ def run_extract(spark, args) -> dict:
     if args.resume:
         result = run_resumable_extract(spark, args.input, args.output, **opts)
     else:
-        docs = _load_docs(spark, args)
+        if args.cdx_output:
+            from web_content_extractor_spark.sources.warc import (
+                read_warc,
+                warc_cdx,
+            )
+
+            # urlkey range clustering: a domain's records land in
+            # contiguous sorted files, the layout CDX range scans want
+            (
+                warc_cdx(read_warc(spark, args.input))
+                .repartitionByRange("urlkey")
+                .sortWithinPartitions("urlkey")
+                .write.mode("append")
+                .parquet(args.cdx_output)
+            )
+        docs = read_docs(spark, args.input, fmt=args.input_format)
         if args.urls:
             docs = url_batch(docs, read_url_list(spark, args.urls))
         run_id = uuid.uuid4().hex[:12]

@@ -25,8 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from web_content_extractor_spark.operators.assemble import assemble_spans
-from web_content_extractor_spark.plans.pipeline import tokenize
+from web_content_extractor_spark.operators.metrics import kind_count
+from web_content_extractor_spark.plans.pipeline import tokenize, tokenized_spans
 
 # same-host nav exclusion list (html_parser.py:207-209)
 _NAV_EXCLUDE_RE = r"\.(pdf|zip|tar\.gz|docx|xlsx|pptx)$"
@@ -87,7 +87,6 @@ def crawl(
     docs: DataFrame,
     start_url: str,
     max_pages: int = 5,
-    variant: str = "context",
     cache_corpus: bool = False,
 ) -> DataFrame:
     """BFS crawl over the corpus; returns the merged ExtractionResult
@@ -142,13 +141,7 @@ def crawl(
             tok.select(
                 "doc_id",
                 rank_map[F.col("doc_id")].alias("crawl_rank"),
-                assemble_spans(
-                    F.col("cand_urls"),
-                    F.col("cand_texts"),
-                    F.col("cand_tags"),
-                    variant,
-                    ranks=F.col("cand_ranks"),
-                ).alias("spans"),
+                tokenized_spans(),
                 "parse_failures",
                 "proc_us",
             ).localCheckpoint(eager=True)
@@ -227,15 +220,9 @@ def crawl(
     )
     return merged.groupBy("source_url").agg(
         F.sum(F.size("spans")).alias("total_links"),
-        F.sum(
-            F.size(F.filter("spans", lambda s: s["kind"] == F.lit("pdf")))
-        ).alias("pdf_count"),
-        F.sum(
-            F.size(F.filter("spans", lambda s: s["kind"] == F.lit("youtube")))
-        ).alias("youtube_count"),
-        F.sum(
-            F.size(F.filter("spans", lambda s: s["kind"] == F.lit("other")))
-        ).alias("other_count"),
+        F.sum(kind_count("pdf")).alias("pdf_count"),
+        F.sum(kind_count("youtube")).alias("youtube_count"),
+        F.sum(kind_count("other")).alias("other_count"),
         (F.sum("proc_us") / 1000.0).alias("processing_ms"),
         F.flatten(
             F.transform(

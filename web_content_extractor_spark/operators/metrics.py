@@ -21,16 +21,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _kind_count(kind: str):
+def kind_count(kind: str):
+    """Number of ``kind`` spans in the row's ``spans`` array."""
     return F.size(F.filter("spans", lambda s: s["kind"] == F.lit(kind)))
 
 
 def doc_metrics(extracted: DataFrame) -> DataFrame:
     """Per-document metric columns from an extracted (with_stats) frame."""
     total = F.size("spans")
-    pdf = _kind_count("pdf")
-    yt = _kind_count("youtube")
-    other = _kind_count("other")
+    pdf = kind_count("pdf")
+    yt = kind_count("youtube")
+    other = kind_count("other")
     secs = F.col("proc_us") / 1e6
     return extracted.select(
         "doc_id",
@@ -113,9 +114,9 @@ def partition_metrics(extracted: DataFrame, run_id: str | None = None) -> DataFr
     per_doc = extracted.select(
         F.spark_partition_id().alias("partition_id"),
         F.size("spans").alias("total"),
-        _kind_count("pdf").alias("pdf"),
-        _kind_count("youtube").alias("yt"),
-        _kind_count("other").alias("oth"),
+        kind_count("pdf").alias("pdf"),
+        kind_count("youtube").alias("yt"),
+        kind_count("other").alias("oth"),
         F.col("parse_failures").alias("pf"),
         F.col("proc_us"),
     )

@@ -90,6 +90,18 @@ def tokenize(
     return df.mapInPandas(tokenize_batches, schema=TOKENIZED)
 
 
+def tokenized_spans(variant: str = "context"):
+    """The ``spans`` column of a TOKENIZED frame: its candidates
+    classified and ordered by the native assembly."""
+    return assemble_spans(
+        F.col("cand_urls"),
+        F.col("cand_texts"),
+        F.col("cand_tags"),
+        variant,
+        ranks=F.col("cand_ranks"),
+    ).alias("spans")
+
+
 def extract(
     docs: DataFrame,
     variant: str = "context",
@@ -105,16 +117,7 @@ def extract(
     ``balance``/``partitions`` pass through to :func:`tokenize`.
     """
     tok = tokenize(docs, balance=balance, partitions=partitions)
-    cols = [
-        F.col("doc_id"),
-        assemble_spans(
-            F.col("cand_urls"),
-            F.col("cand_texts"),
-            F.col("cand_tags"),
-            variant,
-            ranks=F.col("cand_ranks"),
-        ).alias("spans"),
-    ]
+    cols = [F.col("doc_id"), tokenized_spans(variant)]
     if with_stats:
         cols += [
             F.col("page_title"),

@@ -1,4 +1,4 @@
-"""Docs-table IO: Iceberg when available, parquet otherwise.
+"""Docs-table IO: the one reader of every DOCS input format.
 
 The engine's contract is an Iceberg table of interleaved documents
 (BASELINE.json input_hint).  The sandbox image carries no
@@ -6,6 +6,10 @@ iceberg-spark-runtime jar, so reads/writes fall back to plain parquet
 with the identical schema — the pipeline code is format-agnostic
 (schemas.DOCS either way).  On a real cluster, pass
 ``format="iceberg"`` and a table identifier instead of a path.
+
+:func:`read_docs` also turns JSONL shards and WARC archives into DOCS
+rows, as a batch read or (``stream=True``) as a file-source stream,
+so the batch CLI and the streaming job share one dispatch.
 """
 
 from __future__ import annotations
@@ -25,11 +29,39 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_docs(spark: SparkSession, location: str, fmt: str | None = None) -> DataFrame:
+def read_docs(
+    spark: SparkSession,
+    location: str,
+    fmt: str | None = None,
+    stream: bool = False,
+) -> DataFrame:
+    """DOCS rows from ``location`` in ``fmt``: "parquet", "iceberg",
+    "jsonl" or "warc".  The default is Iceberg for a table id (no
+    ``/``) and parquet for a path.
+
+    - jsonl: one JSON object per line, schema-enforced; torn lines,
+      blank lines and bare scalars drop, never fail
+      (:func:`~web_content_extractor_spark.sources.jsonl.parse_jsonl_lines`).
+    - warc: one doc per response record of the ``*.warc*`` archives
+      (:func:`~web_content_extractor_spark.sources.warc.read_warc`,
+      :func:`~web_content_extractor_spark.sources.warc.warc_docs`).
+
+    ``stream=True`` returns the same rows as a file-source stream
+    (``spark.readStream``): each landed file is read exactly once.
+    """
     fmt = fmt or ("iceberg" if location.count("/") == 0 else "parquet")
+    reader = spark.readStream if stream else spark.read
     if fmt == "iceberg":
-        return spark.read.format("iceberg").load(location)
-    return spark.read.schema(DOCS).parquet(location)
+        return reader.format("iceberg").load(location)
+    if fmt == "jsonl":
+        from web_content_extractor_spark.sources.jsonl import parse_jsonl_lines
+
+        return parse_jsonl_lines(reader.text(location), "value", DOCS)
+    if fmt == "warc":
+        from web_content_extractor_spark.sources.warc import read_warc, warc_docs
+
+        return warc_docs(read_warc(spark, location, stream=stream))
+    return reader.schema(DOCS).parquet(location)
 
 
 def write_docs(

@@ -332,21 +332,30 @@ def warc_docs(parsed: DataFrame) -> DataFrame:
     )
 
 
-def read_warc(
-    spark, path: str, glob: str = "*.warc*"
-) -> DataFrame:
+def read_warc(spark, path: str, stream: bool = False) -> DataFrame:
     """Distributed WARC file read: binaryFile listing (one task per
-    file) -> record parse.  Returns (blob_id, rec_no, target_uri,
-    payload, warc_type) with blob_id = a stable hash of the file path.
+    file) -> record parse.  Returns :data:`PARSED_SCHEMA` rows with
+    blob_id = a stable hash of the file path.
 
-    ``glob`` keeps half-written sidecars out of the listing (crawlers
-    write ``.tmp`` then rename; markers like ``_SUCCESS`` land in the
-    same dir) — pass ``None`` to read everything.
+    ``stream=True`` reads the directory as a file-source stream (the
+    continuous-crawl landing shape: each archive is picked up exactly
+    once through the checkpointed file log) with the same record
+    walker.  The binaryFile schema is stated either way: a stream
+    cannot infer it, and a batch read accepts it.  Only ``*.warc*``
+    files are listed, so half-written ``.tmp`` sidecars and markers
+    like ``_SUCCESS`` never enter the read (a stream that ingested a
+    partial file would never re-read the finished rename).
     """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    files = reader.load(path)
+    reader = spark.readStream if stream else spark.read
+    files = (
+        reader.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, "
+            "length long, content binary"
+        )
+        .option("pathGlobFilter", "*.warc*")
+        .load(path)
+    )
     blobs = files.select(
         F.xxhash64("path").alias("blob_id"), F.col("content").alias("blob")
     )

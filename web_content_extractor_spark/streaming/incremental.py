@@ -9,14 +9,15 @@ engine offers two distributed analogs:
   manifest (Iceberg-snapshot-shaped bookkeeping).
 - this module                 — the same pipeline as a Structured
   Streaming job: the file source's own checkpoint gives exactly-once
-  incremental processing of newly-landed corpus files; with
-  ``availableNow`` it drains the backlog and stops, so a cron'd
-  re-run is a resumable batch job with zero custom bookkeeping.
+  incremental processing of newly-landed corpus files.
+  :func:`stream_extract` runs with the ``availableNow`` trigger: it
+  drains the backlog and stops, so a cron'd re-run is a resumable
+  batch job with zero custom bookkeeping.
 
-The extraction plan is IDENTICAL to the batch path (same
-``extract()`` call — mapInPandas and column algebra are both
-streaming-compatible, stateless transforms), so span parity carries
-over unchanged.
+The docs source and the extraction plan are IDENTICAL to the batch
+path (the same ``read_docs()`` and ``extract()`` calls — the file
+sources, mapInPandas and column algebra are all streaming-compatible,
+stateless transforms), so span parity carries over unchanged.
 """
 
 from __future__ import annotations
@@ -26,58 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from web_content_extractor_spark.plans.pipeline import extract
-from web_content_extractor_spark.schemas import DOCS
-
-
-def read_docs_stream(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: int | None = None,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """File-source stream over a landing directory of docs shards.
-
-    ``fmt``: "parquet" (default), "jsonl" or "warc" — JSONL landing
-    dirs are what upstream producers most often drop; the stream picks
-    each shard up exactly once (file-source semantics) and torn lines
-    inside a shard drop, never kill the query (PERMISSIVE + corrupt
-    column, same contract as sources/jsonl.read_jsonl — Spark's
-    streaming JSON source accepts the same options).  "warc" reads
-    landed WARC archives (:func:`read_warc_stream`) as DOCS rows, the
-    streaming twin of the batch CLI's ``--input-format warc``."""
-    if fmt == "warc":
-        from web_content_extractor_spark.sources.warc import warc_docs
-
-        return warc_docs(
-            read_warc_stream(spark, input_path, max_files_per_trigger)
-        )
-    if fmt == "jsonl":
-        from pyspark.sql import types as T
-
-        from web_content_extractor_spark.sources.jsonl import CORRUPT_COL
-
-        with_corrupt = T.StructType(
-            list(DOCS.fields)
-            + [T.StructField(CORRUPT_COL, T.StringType())]
-        )
-        reader = (
-            spark.readStream.schema(with_corrupt)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        )
-        if max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", max_files_per_trigger
-            )
-        return (
-            reader.json(input_path)
-            .where(F.col(CORRUPT_COL).isNull())
-            .drop(CORRUPT_COL)
-        )
-    reader = spark.readStream.schema(DOCS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_path)
+from web_content_extractor_spark.sources.docs import read_docs
 
 
 def stream_extract(
@@ -85,31 +35,74 @@ def stream_extract(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    variant: str = "context",
-    available_now: bool = True,
     fmt: str = "parquet",
 ) -> StreamingQuery:
     """Incrementally extract newly-landed doc files; exactly-once sink.
 
-    ``available_now=True`` processes the current backlog and stops
-    (resumable batch); ``False`` runs continuously on new files.
-    ``fmt``: "parquet", "jsonl" or "warc" landing files.
+    Processes the current backlog and stops (``availableNow``: a
+    resumable batch).  ``fmt``: "parquet", "jsonl" or "warc" landing
+    files, read by :func:`~web_content_extractor_spark.sources.docs.read_docs`
+    exactly as the batch CLI reads them.
     """
-    docs = read_docs_stream(spark, input_path, fmt=fmt)
-    ex = extract(docs, variant=variant)
-    writer = (
-        ex.writeStream.format("parquet")
+    docs = read_docs(spark, input_path, fmt=fmt, stream=True)
+    return (
+        extract(docs)
+        .writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 FIRST_SEEN_OUTPUT = "url string, first_doc_id string, n_first_batch bigint"
-FIRST_SEEN_STATE = "n_seen bigint"
+CURATED_OUTPUT = "fp string, doc_id bigint, n_first_batch long"
+
+
+def _first_seen(keyed: DataFrame, key: str, id_out: str, output: str) -> DataFrame:
+    """Keyed first-seen state over ``keyed`` (``key``, ``doc_id``): a
+    key's first micro-batch emits one row (key, min doc_id as
+    ``id_out``, that batch's row count as ``n_first_batch``); later
+    batches only add their count to the key's state.
+
+    Built on ``applyInPandasWithState`` (Arrow-batched, state scoped
+    per key group, persisted in the streaming checkpoint — a restart
+    resumes with the seen set intact).  State per key is one int64:
+    at 10^12 keys this shards across executors by the groupBy hash,
+    the same partitioning the update shuffle already pays.
+    """
+    import pandas as pd  # local: executors import lazily
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def fn(key_tuple, pdfs, state):
+        total = 0
+        first = None
+        for pdf in pdfs:
+            if len(pdf):
+                total += len(pdf)
+                lo = pdf["doc_id"].min()
+                first = lo if first is None else min(first, lo)
+        if state.exists:
+            (n_seen,) = state.get
+            state.update((n_seen + total,))
+            return iter(())  # already emitted: dedup
+        state.update((total,))
+        return iter(
+            [
+                pd.DataFrame(
+                    {
+                        key: [key_tuple[0]],
+                        id_out: [first],
+                        "n_first_batch": [total],
+                    }
+                )
+            ]
+        )
+
+    return keyed.groupBy(key).applyInPandasWithState(
+        fn, output, "n_seen bigint", "append", GroupStateTimeout.NoTimeout
+    )
 
 
 def stateful_first_seen(spans_stream: DataFrame, key: str = "media_ref") -> DataFrame:
@@ -121,51 +114,10 @@ def stateful_first_seen(spans_stream: DataFrame, key: str = "media_ref") -> Data
     stream has ever seen; a key's rows are emitted exactly once — on
     first encounter — with the (deterministic) min doc_id and that
     batch's occurrence count.  Later occurrences only bump the state
-    counter.
-
-    Built on ``applyInPandasWithState`` (Arrow-batched, state scoped
-    per key group, persisted in the streaming checkpoint — a restart
-    resumes with the visited set intact).  State per key is one int64:
-    at 10^12 URLs this shards across executors by the groupBy hash,
-    the same partitioning the update shuffle already pays.
+    counter (:func:`_first_seen`).
     """
-    import pandas as pd  # local: executors import lazily
-
-    def fn(key_tuple, pdfs, state):
-        total = 0
-        first_doc: str | None = None
-        for pdf in pdfs:
-            if len(pdf):
-                total += len(pdf)
-                lo = pdf["doc_id"].min()
-                first_doc = lo if first_doc is None else min(first_doc, lo)
-        if state.exists:
-            (n_seen,) = state.get
-            state.update((n_seen + total,))
-            return iter(())  # already emitted: dedup
-        state.update((total,))
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "url": [key_tuple[0]],
-                        "first_doc_id": [first_doc],
-                        "n_first_batch": [total],
-                    }
-                )
-            ]
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = spans_stream.withColumn("url", F.col(key))
-    return keyed.groupBy("url").applyInPandasWithState(
-        fn,
-        FIRST_SEEN_OUTPUT,
-        FIRST_SEEN_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    keyed = spans_stream.select(F.col(key).alias("url"), "doc_id")
+    return _first_seen(keyed, "url", "first_doc_id", FIRST_SEEN_OUTPUT)
 
 
 def windowed_span_counts(
@@ -210,10 +162,6 @@ def enrich_stream(
     return stream.join(F.broadcast(dim), on, how)
 
 
-CURATED_OUTPUT = "fp string, doc_id bigint, n_first_batch long"
-CURATED_STATE = "n long"
-
-
 def curate_stream(
     docs_stream: DataFrame,
     snippets: DataFrame | None = None,
@@ -233,8 +181,6 @@ def curate_stream(
       in the streaming checkpoint, so a re-submitted job continues
       curating against everything it has ever accepted.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from web_content_extractor_spark.functions import text_quality as tq
 
     from web_content_extractor_spark.operators.decontam import _norm
@@ -249,41 +195,7 @@ def curate_stream(
     keyed = passed.select(
         tq.fingerprint(F.col("text")).alias("fp"), "doc_id"
     )
-
-    import pandas as pd
-
-    def fn(key_tuple, pdfs, state):
-        total = 0
-        first: int | None = None
-        for pdf in pdfs:
-            if len(pdf):
-                total += len(pdf)
-                lo = int(pdf["doc_id"].min())
-                first = lo if first is None else min(first, lo)
-        if state.exists:
-            (n_seen,) = state.get
-            state.update((n_seen + total,))
-            return iter(())
-        state.update((total,))
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "fp": [key_tuple[0]],
-                        "doc_id": [first],
-                        "n_first_batch": [total],
-                    }
-                )
-            ]
-        )
-
-    return keyed.groupBy("fp").applyInPandasWithState(
-        fn,
-        CURATED_OUTPUT,
-        CURATED_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _first_seen(keyed, "fp", "doc_id", CURATED_OUTPUT)
 
 
 def sessionized_counts(
@@ -311,40 +223,6 @@ def sessionized_counts(
             "n_events",
         )
     )
-
-
-def read_warc_stream(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: int | None = None,
-    glob: str = "*.warc*",
-) -> DataFrame:
-    """File-source stream over a landing directory of WARC archives —
-    the continuous-crawl ingestion shape: the crawler drops
-    .warc/.warc.gz files, the stream picks up each file exactly once
-    (checkpointed file log), and the same record walker and extraction
-    plan run per micro-batch.  ``glob`` keeps half-written ``.tmp``
-    sidecars out of the exactly-once file log (a stream that ingests
-    a partial file never re-reads the finished rename)."""
-    from pyspark.sql import functions as F
-
-    from web_content_extractor_spark.sources.warc import parse_warc_records
-
-    # the binaryFile source's fixed schema must be stated explicitly
-    # for streaming (no inference on a stream)
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, "
-        "length long, content binary"
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(input_path)
-    blobs = files.select(
-        F.xxhash64("path").alias("blob_id"), F.col("content").alias("blob")
-    )
-    return parse_warc_records(blobs)
 
 
 def dedup_stream_within_watermark(
