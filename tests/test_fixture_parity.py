@@ -77,3 +77,21 @@ def test_interleaved_media_passthrough(extracted_rows):
         ("youtube", "clip", "https://youtu.be/abcdefghijk"),
         ("other", "s3://bucket/img1.png", "s3://bucket/img1.png"),
     ]
+
+
+@pytest.mark.parametrize("name, regex_kind", [("F07", "pdf"), ("F08", "other")])
+def test_regex_variant_diverges_only_in_kind(spark, name, regex_kind):
+    # `jobs extract --variant regex` runs the RegexLinkClassifier rule
+    # set, which parts from the golden one on exactly these two docs
+    # (FIXTURES.md §2 and §F07).  Both share doc_id https://example.com,
+    # so each is extracted on its own
+    from web_content_extractor_spark.schemas import DOCS
+
+    fx = next(f for f in datagen.FIXTURES if f["name"] == name)
+    docs = spark.createDataFrame([(fx["doc_id"], fx["spans"])], schema=DOCS)
+    (golden,) = extract(docs).collect()
+    (regex,) = extract(docs, variant="regex").collect()
+    assert [s.kind for s in regex.spans] == [regex_kind]
+    assert [(s.text, s.media_ref) for s in regex.spans] == [
+        (s.text, s.media_ref) for s in golden.spans
+    ]

@@ -102,6 +102,13 @@ def test_read_docs_dispatch(spark):
         assert call in s.stream_log, fmt
         assert s.log == [], fmt
 
+    # an unknown format raises and names the accepted ones, never
+    # falling back to a parquet read
+    s = _FakeSpark()
+    with pytest.raises(ValueError, match="parquet, iceberg, jsonl, warc"):
+        docs_io.read_docs(s, "/data/docs", fmt="jsnol")
+    assert s.log == [] and s.stream_log == []
+
 
 def test_write_docs_dispatch():
     df = _FakeDF()
@@ -114,6 +121,11 @@ def test_write_docs_dispatch():
     assert ("mode", ("overwrite",)) in df.log
     assert ("parquet", ("/data/out",)) in df.log
     assert all(c[0] != "writeTo" for c in df.log)
+
+    df = _FakeDF()
+    with pytest.raises(ValueError, match="parquet, iceberg"):
+        docs_io.write_docs(df, "/x", fmt="parq")
+    assert df.log == []
 
 
 def test_jobs_rejects_iceberg_resume(tmp_path, capsys):

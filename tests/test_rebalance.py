@@ -151,10 +151,11 @@ def test_randomized_invariants(spark):
         assert placed == 0, f"trial {trial}: key split across partitions"
 
 
-@pytest.mark.parametrize("balance", [True, "rows", "bytes"])
+@pytest.mark.parametrize("balance", ["rows", "bytes"])
 def test_pipeline_balance_bytes_output_equal(spark, balance):
     """extract() output is independent of the balance mode, and a
-    misspelt mode raises instead of silently row-balancing."""
+    misspelt mode (or True, which has no mode to name) raises instead
+    of silently row-balancing."""
     from web_content_extractor_spark.datagen import fixture_docs
     from web_content_extractor_spark.plans.pipeline import extract
 
@@ -169,8 +170,9 @@ def test_pipeline_balance_bytes_output_equal(spark, balance):
     base = canon(extract(docs).collect())
     balanced = canon(extract(docs, balance=balance).collect())
     assert base == balanced
-    with pytest.raises(ValueError, match="balance must be"):
-        extract(docs, balance="row")
+    for bad in ("row", True):
+        with pytest.raises(ValueError, match="balance must be"):
+            extract(docs, balance=bad)
 
 
 def test_murmur3_parity_with_spark_hash(spark):

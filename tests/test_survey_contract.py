@@ -11,6 +11,7 @@ every ``path.py::symbol`` the docs cite must still be defined.
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 import re
@@ -86,3 +87,77 @@ def test_every_cited_symbol_is_defined():
             if not re.search(defined, src, re.M):
                 broken.append((path, sym))
     assert not broken, f"docs cite symbols that are not defined: {broken}"
+
+
+# where a run reads, writes and sizes its session: deployment settings
+# that stay configurable even while every caller passes the default
+DEPLOYMENT_OPTIONS = {
+    "get_spark": {"app_name", "master", "shuffle_partitions", "extra_conf"},
+    "read_docs": {"fmt", "stream"},
+    "write_docs": {"fmt", "mode"},
+}
+CALLERS = (
+    "web_content_extractor_spark/**/*.py",
+    "__spark_entry__.py",
+    "bench.py",
+    "layerbench/**/*.py",
+    "scripts/**/*.py",
+    "tests/**/*.py",
+)
+
+
+def test_every_option_is_set_by_some_caller():
+    # every defaulted parameter of a public module-level package function
+    # must be passed, by keyword or by position, by at least one call in
+    # CALLERS; one value in use is a constant, not an option.  Calls
+    # match by function name, following `import f as g` aliases; a call
+    # with *args or **kwargs passes every option; a function no call
+    # reaches is out of scope here
+    defs = {}
+    for path in glob.glob(os.path.join(ROOT, CALLERS[0]), recursive=True):
+        for node in ast.parse(_read(path)).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                a = node.args
+                pos = [p.arg for p in a.posonlyargs + a.args]
+                opts = pos[len(pos) - len(a.defaults):] + [
+                    p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                ]
+                defs.setdefault(node.name, []).append(
+                    (os.path.relpath(path, ROOT), pos, opts)
+                )
+    passed = {}
+    for pattern in CALLERS:
+        for path in glob.glob(os.path.join(ROOT, pattern), recursive=True):
+            tree = ast.parse(_read(path))
+            alias = {
+                n.asname: n.name
+                for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom)
+                for n in node.names
+                if n.asname
+            }
+            for call in ast.walk(tree):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                name = alias.get(name, name)
+                if name not in defs:
+                    continue
+                got = passed.setdefault(name, set())
+                if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                    k.arg is None for k in call.keywords
+                ):
+                    got.add("*")
+                for _, pos, _ in defs[name]:
+                    got.update(pos[: len(call.args)])
+                got.update(k.arg for k in call.keywords)
+    unset = [
+        f"{path}::{name}({opt})"
+        for name, got in passed.items()
+        if "*" not in got
+        for path, _, opts in defs[name]
+        for opt in opts
+        if opt not in got and opt not in DEPLOYMENT_OPTIONS.get(name, ())
+    ]
+    assert not unset, f"{len(unset)} options no caller sets: {unset}"

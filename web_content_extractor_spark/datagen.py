@@ -337,26 +337,25 @@ def scale_corpus_rows(
     n_docs: int,
     seed: int = 42,
     n_hosts: int = 64,
-    zipf_s: float = 1.2,
     pad_fraction: float = 0.10,
-    pad_blocks: int = 120,
 ) -> list[tuple[str, list[dict[str, Any]]]]:
     """Deterministic corpus: fixture bodies under Zipf-skewed hosts.
 
-    ~10% of docs get ~100 KB of filler markup to stress Arrow batch
-    sizing; host index is Zipf-distributed to create realistic key
-    skew for the salting / repartition paths.
+    ``pad_fraction`` of the docs (10% by default) get ~100 KB of filler
+    markup to stress Arrow batch sizing; host index is Zipf-distributed
+    (s=1.2) to create realistic key skew for the salting / repartition
+    paths.
     """
     rng = random.Random(seed)
     bodies = [f["spans"][0]["text"] for f in FIXTURES if f["name"] not in ("F14",)]
     # Zipf pmf over hosts
-    weights = [1.0 / ((h + 1) ** zipf_s) for h in range(n_hosts)]
+    weights = [1.0 / ((h + 1) ** 1.2) for h in range(n_hosts)]
     rows = []
     for i in range(n_docs):
         h = rng.choices(range(n_hosts), weights=weights)[0]
         body = bodies[i % len(bodies)]
         if rng.random() < pad_fraction:
-            body = body + _FILLER * pad_blocks
+            body = body + _FILLER * 120
         doc_id = f"https://host{h:03d}.example.org/doc{i}"
         rows.append((doc_id, [_html_span(body)]))
     return rows

@@ -8,8 +8,8 @@ event tokenizer segmenting HTML into text blocks and emitting, per
 block, the two features those public algorithms rely on — word count
 and anchor-word count (Kohlschütter et al., WSDM 2010: densitometric
 boilerplate detection).  The keep/drop decision and the span assembly
-are native Column algebra in ``operators/content.py`` so thresholds
-stay tunable without touching Python.
+are native Column algebra in ``operators/content.py``, so the
+thresholds run JVM-side and never re-enter a Python worker.
 
 Block model:
 - block-level tags flush the current block (headings, p, li, div, ...);

@@ -42,9 +42,9 @@ def subword_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(_WORD_RE), F.lit(0)))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
+def stopword_ratio(text: Column) -> Column:
     toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS[lang])))
+    hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS["en"])))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(0.0)
 
 
@@ -54,8 +54,9 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n > 0, punct / n).otherwise(0.0)
 
 
-def quality_score(text: Column, lang: str = "en") -> Column:
-    """0-100 heuristic: length band + stopword presence - punct noise.
+def quality_score(text: Column) -> Column:
+    """0-100 heuristic: length band + English stopword presence - punct
+    noise.
 
     Engine-defined (the reference's quality score, models.py:187-199,
     scores link inventories, not prose; this is its text-corpus
@@ -65,7 +66,7 @@ def quality_score(text: Column, lang: str = "en") -> Column:
     safe = F.coalesce(text, F.lit(""))  # NULL text scores 0, not NULL
     n_tok = token_count(safe).cast("double")
     length_term = F.least(n_tok / 100.0, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(safe, lang) * 4.0, F.lit(1.0))
+    stop_term = F.least(stopword_ratio(safe) * 4.0, F.lit(1.0))
     noise = F.least(punct_ratio(safe) * 2.0, F.lit(1.0))
     return F.round(
         F.greatest(
@@ -145,10 +146,9 @@ WINNOW_M = 2147483647  # 2^31 - 1
 _POS_BITS = 20  # pos packed below the hash for deterministic arg-min
 
 
-def winnow_fingerprints(
-    docs: DataFrame, text_col: str = "text", k: int = 5, window: int = 4
-) -> DataFrame:
-    """Winnowing fingerprints: (doc_id, fp_pos, fp_hash), distinct.
+def winnow_fingerprints(docs: DataFrame, k: int = 5, window: int = 4) -> DataFrame:
+    """Winnowing fingerprints of ``docs.text``: (doc_id, fp_pos,
+    fp_hash), distinct.
 
     The standard local document fingerprinting scheme: hash every char
     k-gram with a polynomial hash, then from every ``window``
@@ -201,7 +201,7 @@ def winnow_fingerprints(
         return pd.Series(out, dtype=object)
 
     return (
-        docs.select("doc_id", F.explode(_winnow(F.col(text_col))).alias("fp"))
+        docs.select("doc_id", F.explode(_winnow(F.col("text"))).alias("fp"))
         .select(
             "doc_id",
             F.col("fp").bitwiseAND(F.lit((1 << _POS_BITS) - 1)).alias("fp_pos"),
@@ -241,23 +241,23 @@ def quality_signals(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_filter(
-    text: Column,
-    min_words: int = 50,
-    max_words: int = 100000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-) -> Column:
-    """Gopher-rule keep/drop verdict: word-count band, mean-word-length
-    band (3-10 chars), symbol-ratio cap, no boilerplate markers."""
+# Gopher keep bounds (Rae et al. 2021)
+MIN_WORDS, MAX_WORDS = 50, 100000
+MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN = 3.0, 10.0
+MAX_SYMBOL_RATIO = 0.1
+
+
+def quality_filter(text: Column) -> Column:
+    """Gopher-rule keep/drop verdict: word-count band (50-100000),
+    mean-word-length band (3-10 chars), symbol-ratio cap (0.1), no
+    boilerplate markers."""
     s = quality_signals(text)
     return (
-        (s["n_words"] >= min_words)
-        & (s["n_words"] <= max_words)
-        & (s["mean_word_len"] >= min_mean_word_len)
-        & (s["mean_word_len"] <= max_mean_word_len)
-        & (s["symbol_word_ratio"] <= max_symbol_ratio)
+        (s["n_words"] >= MIN_WORDS)
+        & (s["n_words"] <= MAX_WORDS)
+        & (s["mean_word_len"] >= MIN_MEAN_WORD_LEN)
+        & (s["mean_word_len"] <= MAX_MEAN_WORD_LEN)
+        & (s["symbol_word_ratio"] <= MAX_SYMBOL_RATIO)
         & ~s["has_lorem"]
         & ~s["has_brace"]
     )

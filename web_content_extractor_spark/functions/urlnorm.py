@@ -128,7 +128,7 @@ TRACKING_PARAM_ALTS = (
 )
 
 
-def canonical_url(url, drop_params: tuple[str, ...] = TRACKING_PARAM_ALTS):
+def canonical_url(url):
     """Canonical form of an http(s) URL as a native Column expression:
     scheme/host lowercased, userinfo dropped, default port stripped
     (non-default ports kept), empty path -> "/", fragment dropped,
@@ -161,7 +161,7 @@ def canonical_url(url, drop_params: tuple[str, ...] = TRACKING_PARAM_ALTS):
     path = F.coalesce(F.try_parse_url(url, F.lit("PATH")), F.lit(""))
     path = F.when(path == "", F.lit("/")).otherwise(path)
     query = F.coalesce(F.try_parse_url(url, F.lit("QUERY")), F.lit(""))
-    pattern = "(?i)^(" + "|".join(drop_params) + ")="
+    pattern = "(?i)^(" + "|".join(TRACKING_PARAM_ALTS) + ")="
     params = F.filter(
         F.split(query, "&"),
         lambda p: (p != F.lit("")) & ~p.rlike(pattern),

@@ -41,7 +41,7 @@ from web_content_extractor_spark.sources.checkpoint import (
     run_resumable_extract,
     write_extract,
 )
-from web_content_extractor_spark.sources.docs import read_docs
+from web_content_extractor_spark.sources.docs import READ_FORMATS, read_docs
 from web_content_extractor_spark.sources.urls import (
     UrlListError,
     read_url_list,
@@ -455,7 +455,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="docs path (parquet dir) or Iceberg table id")
     x.add_argument("--output", required=True, help="spans output path")
     x.add_argument("--input-format", default=None,
-                   choices=("parquet", "iceberg", "warc", "jsonl"),
+                   choices=READ_FORMATS,
                    help="input format (default: auto — Iceberg for "
                         "table ids, parquet for paths); 'jsonl' reads "
                         "one-JSON-object-per-line docs (schema-"
@@ -480,7 +480,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="classifier rule set (CLI vs API parity)")
     x.add_argument("--resume", action="store_true",
                    help="file-lineage resumable mode (skip processed files)")
-    x.add_argument("--balance", action="store_true",
+    x.add_argument("--balance", action="store_const", const="rows",
+                   default=False,
                    help="repartitionByRange(doc_id) before the tokenizer "
                         "(skewed input layouts)")
 

@@ -21,10 +21,10 @@ partition, so for pathological keys pre-bucket by time range and
 carry the last right row per bucket boundary forward (the same trick
 ``operators/skew.py`` uses for salted aggregation).
 
-Right rows are first reduced to one per (key, ts) — arg-min by
-``tie_col`` (default: the first of ``right_cols``) wins —
-so the match is deterministic even when a key has equal-timestamp
-right rows; DuckDB's native ASOF JOIN replays it as the oracle.
+Right rows are first reduced to one per (key, ts) — arg-min by the
+first of ``right_cols`` wins — so the match is deterministic even when
+a key has equal-timestamp right rows; DuckDB's native ASOF JOIN
+replays it as the oracle.
 
 Engine-added (the reference is a single-page extractor; correlating
 extraction events against checkpoint/lineage streams is the engine's
@@ -37,14 +37,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# the events table's payload carried onto each matched left row
+RIGHT_COLS = ("event_id", "value")
+
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str = "user_id",
     ts: str = "ts",
-    right_cols: tuple[str, ...] = ("event_id", "value"),
-    tie_col: str | None = None,
+    right_cols: tuple[str, ...] = RIGHT_COLS,
 ) -> DataFrame:
     """For each left row, the most recent right row with
     ``right.ts <= left.ts`` on the same key (left join: unmatched
@@ -56,10 +58,9 @@ def asof_join(
     between engines).
     """
     # deterministic tie handling: one right row per (key, ts)
-    tie = tie_col or right_cols[0]
     r = (
         right.groupBy(on, ts)
-        .agg(*[F.min_by(c, tie).alias(c) for c in right_cols])
+        .agg(*[F.min_by(c, right_cols[0]).alias(c) for c in right_cols])
         .select(
             F.col(on),
             F.col(ts).alias("_r_ts"),
@@ -112,17 +113,12 @@ def asof_join(
 
 
 def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "user_id",
-    ts: str = "ts",
-    right_cols: tuple[str, ...] = ("event_id", "value"),
-    bucket: str = "hour",
-    tie_col: str | None = None,
+    left: DataFrame, right: DataFrame, bucket: str = "hour"
 ) -> DataFrame:
-    """As-of join for HOT keys: identical semantics to ``asof_join``,
-    but the per-key sort is split across time buckets so one key with
-    millions of events parallelizes.
+    """As-of join for HOT keys: identical semantics to ``asof_join`` on
+    ``user_id``/``ts`` carrying :data:`RIGHT_COLS`, but the per-key sort
+    is split across time buckets so one key with millions of events
+    parallelizes.
 
     AQE skew-join cannot split a window partition, so a monster key
     serializes the plain formulation.  Here the window partitions on
@@ -137,10 +133,10 @@ def asof_join_bucketed(
     Equivalence with ``asof_join`` is pinned in tests on corpora whose
     matches cross empty and occupied buckets.
     """
-    tie = tie_col or right_cols[0]
+    on, ts, right_cols = "user_id", "ts", RIGHT_COLS
     r = (
         right.groupBy(on, ts)
-        .agg(*[F.min_by(c, tie).alias(c) for c in right_cols])
+        .agg(*[F.min_by(c, right_cols[0]).alias(c) for c in right_cols])
         .select(
             F.col(on),
             F.col(ts).alias("_r_ts"),
@@ -220,13 +216,12 @@ def interval_join(
     events: DataFrame,
     intervals: DataFrame,
     ts_col: str = "ts",
-    start_col: str = "w_start",
-    end_col: str = "w_end",
     bin_seconds: int = 3600,
     max_bins_per_interval: int = 100_000,
 ) -> DataFrame:
     """Range (interval) join: each event row paired with every interval
-    containing its timestamp (inclusive bounds — BETWEEN semantics).
+    ``[w_start, w_end]`` containing its timestamp (inclusive bounds —
+    BETWEEN semantics).
 
     Spark plans a raw ``ts BETWEEN start AND end`` predicate as a
     broadcast-nested-loop / cartesian theta-join — O(|events| x
@@ -253,10 +248,10 @@ def interval_join(
         F.unix_timestamp(F.col(ts_col).cast("timestamp")) / bin_seconds
     ).cast("bigint")
     s_bin = F.floor(
-        F.unix_timestamp(F.col(start_col).cast("timestamp")) / bin_seconds
+        F.unix_timestamp(F.col("w_start").cast("timestamp")) / bin_seconds
     ).cast("bigint")
     e_bin = F.floor(
-        F.unix_timestamp(F.col(end_col).cast("timestamp")) / bin_seconds
+        F.unix_timestamp(F.col("w_end").cast("timestamp")) / bin_seconds
     ).cast("bigint")
     n_bins = e_bin - s_bin + 1
     guarded = F.when(
@@ -268,9 +263,9 @@ def interval_join(
                     f"{max_bins_per_interval} bins of {bin_seconds}s "
                     "(start="
                 ),
-                F.col(start_col).cast("string"),
+                F.col("w_start").cast("string"),
                 F.lit(", end="),
-                F.col(end_col).cast("string"),
+                F.col("w_end").cast("string"),
                 F.lit("); raise bin_seconds"),
             )
         ).cast("bigint"),
@@ -287,8 +282,8 @@ def interval_join(
     return (
         ev.join(iv, "__bin")
         .where(
-            (F.col(ts_col) >= F.col(start_col))
-            & (F.col(ts_col) <= F.col(end_col))
+            (F.col(ts_col) >= F.col("w_start"))
+            & (F.col(ts_col) <= F.col("w_end"))
         )
         .drop("__bin")
     )

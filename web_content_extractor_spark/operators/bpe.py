@@ -9,8 +9,8 @@ extends the text battery the same way vocab_topk/unigram_nll do):
   word-frequency table, then repeatedly merge the most frequent
   adjacent symbol pair.  **Scale split**: the corpus-sized work (one
   word groupBy with map-side partials) is distributed; the merge loop
-  runs driver-side over the *vocabulary* (capped at ``max_vocab``
-  rows, pruned by ``min_count``) — the standard trainer structure,
+  runs driver-side over the *vocabulary* (capped at ``MAX_VOCAB``
+  rows) — the standard trainer structure,
   since pair statistics are fully determined by the word-freq dict
   and every real BPE trainer (subword-nmt, SentencePiece,
   HuggingFace) trains from exactly that dict.  At 100 TB the vocab
@@ -45,29 +45,25 @@ from web_content_extractor_spark.functions.text_quality import tokens
 # end-of-word sentinel (subword-nmt convention); a printable marker
 # keeps oracle/test material readable
 EOW = "</w>"
+# most frequent words the trainer collects to the driver
+MAX_VOCAB = 100_000
 
 
-def word_vocab(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = 1,
-    max_vocab: int = 100_000,
-) -> DataFrame:
-    """(w, cnt) word-frequency table — the only corpus-sized stage.
+def word_vocab(docs: DataFrame) -> DataFrame:
+    """(w, cnt) word-frequency table of ``docs.text`` — the only
+    corpus-sized stage.
 
     Same token cleaning as ``bpe_pair_counts`` (lowercase ``[a-z0-9]+``,
-    length >= 2) so the two stay cross-checkable.  ``min_count`` prunes
-    the long tail *before* the driver cut; ``max_vocab`` bounds what the
-    trainer collects (cnt-desc, word-asc — deterministic).
+    length >= 2) so the two stay cross-checkable.  ``MAX_VOCAB`` bounds
+    what the trainer collects (cnt-desc, word-asc — deterministic).
     """
-    words = docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     wc = (
         words.filter(F.col("w").rlike("^[a-z0-9]+$") & (F.length("w") >= 2))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
     )
-    return wc.orderBy(F.desc("cnt"), F.asc("w")).limit(max_vocab)
+    return wc.orderBy(F.desc("cnt"), F.asc("w")).limit(MAX_VOCAB)
 
 
 def _pair_stats(vocab: dict[tuple[str, ...], int]) -> Counter:
@@ -99,18 +95,13 @@ def _merge_vocab(
     return out
 
 
-def train_bpe(
-    docs: DataFrame,
-    n_merges: int = 50,
-    text_col: str = "text",
-    min_count: int = 1,
-    max_vocab: int = 100_000,
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` merges; returns [(left, right, count), ...]
-    in learned order.  Stops early when no pair occurs twice (merging
-    singletons memorizes the corpus, standard trainer cutoff).
+def train_bpe(docs: DataFrame, n_merges: int = 50) -> list[tuple[str, str, int]]:
+    """Learn ``n_merges`` merges from ``docs.text``; returns [(left,
+    right, count), ...] in learned order.  Stops early when no pair
+    occurs twice (merging singletons memorizes the corpus, standard
+    trainer cutoff).
     """
-    rows = word_vocab(docs, text_col, min_count, max_vocab).collect()
+    rows = word_vocab(docs).collect()
     # symbol sequences start as characters + end-of-word sentinel
     vocab: dict[tuple[str, ...], int] = {}
     for r in rows:
@@ -154,12 +145,10 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> tuple[str, ...
 
 
 def encode_with_merges(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    docs: DataFrame, merges: list[tuple[str, str, int]]
 ) -> DataFrame:
-    """(doc_id, n_words, n_subwords, compression) per document.
+    """(doc_id, n_words, n_subwords, compression) per document of
+    ``docs`` (doc_id, text).
 
     Distributed application of the learned merges: the merge-rank dict
     rides into each executor via the mapInPandas closure (KBs); a
@@ -173,7 +162,7 @@ def encode_with_merges(
     ranks = {(a, b): i for i, (a, b, _) in enumerate(merges)}
     clean = _re.compile(r"^[a-z0-9]+$")
     split = _re.compile(r"[ \t\n\x0b\f\r]+")
-    id_field = docs.schema[id_col].dataType.simpleString()
+    id_field = docs.schema["doc_id"].dataType.simpleString()
 
     # cache bound: web text has effectively unbounded distinct-word
     # cardinality per partition, so an uncapped cross-batch cache is an
@@ -189,7 +178,7 @@ def encode_with_merges(
             ids: list = []
             n_words: list[int] = []
             n_sub: list[int] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 words = [
                     w
                     for w in split.split((text or "").strip())
@@ -209,13 +198,13 @@ def encode_with_merges(
                 n_words.append(len(words))
                 n_sub.append(total)
             yield pd.DataFrame(
-                {id_col: ids, "n_words": n_words, "n_subwords": n_sub}
+                {"doc_id": ids, "n_words": n_words, "n_subwords": n_sub}
             )
 
-    out_schema = f"{id_col} {id_field}, n_words int, n_subwords int"
-    enc = docs.select(id_col, text_col).mapInPandas(run, out_schema)
+    out_schema = f"doc_id {id_field}, n_words int, n_subwords int"
+    enc = docs.select("doc_id", "text").mapInPandas(run, out_schema)
     return enc.select(
-        id_col,
+        "doc_id",
         "n_words",
         "n_subwords",
         F.when(

@@ -25,6 +25,10 @@ from web_content_extractor_spark.schemas import DOCS  # noqa: F401  (shape doc)
 from web_content_extractor_spark.functions.blocks import segment_batches
 
 _HEADINGS = ("h1", "h2", "h3", "h4", "h5", "h6")
+# keep rules: a prose block needs MIN_WORDS words and at most
+# MAX_LINK_DENSITY anchor words per word; headings get relaxed bounds
+MIN_WORDS, MAX_LINK_DENSITY = 10, 0.33
+HEADING_MIN_WORDS, HEADING_MAX_LINK_DENSITY = 1, 0.5
 
 BLOCK_FEATURES = (
     "doc_id string, block_tags array<string>, block_texts array<string>, "
@@ -44,10 +48,6 @@ def assemble_content(
     texts: Column,
     words: Column,
     anchor_words: Column,
-    min_words: int = 10,
-    max_link_density: float = 0.33,
-    heading_min_words: int = 1,
-    heading_max_link_density: float = 0.5,
 ) -> Column:
     """Block features -> ordered content spans (native, shuffle-free)."""
     zipped = F.arrays_zip(
@@ -59,10 +59,10 @@ def assemble_content(
         zipped,
         lambda b: F.when(
             is_heading(b["t"]),
-            (b["w"] >= heading_min_words)
-            & (density(b) <= heading_max_link_density),
+            (b["w"] >= HEADING_MIN_WORDS)
+            & (density(b) <= HEADING_MAX_LINK_DENSITY),
         ).otherwise(
-            (b["w"] >= min_words) & (density(b) <= max_link_density)
+            (b["w"] >= MIN_WORDS) & (density(b) <= MAX_LINK_DENSITY)
         ),
     )
     return F.transform(
@@ -78,11 +78,7 @@ def assemble_content(
     )
 
 
-def extract_content(
-    docs: DataFrame,
-    min_words: int = 10,
-    max_link_density: float = 0.33,
-) -> DataFrame:
+def extract_content(docs: DataFrame) -> DataFrame:
     """docs -> (doc_id, spans) of heading/paragraph content spans.
 
     Same plan shape as the link pipeline: scan -> one mapInPandas ->
@@ -96,13 +92,11 @@ def extract_content(
             F.col("block_texts"),
             F.col("block_words"),
             F.col("block_anchor_words"),
-            min_words=min_words,
-            max_link_density=max_link_density,
         ).alias("spans"),
     )
 
 
-def content_stats(docs: DataFrame, **kwargs) -> DataFrame:
+def content_stats(docs: DataFrame) -> DataFrame:
     """Per-doc blocks_kept / blocks_dropped extraction metrics."""
     seg = segment(docs)
     kept = F.size(
@@ -111,7 +105,6 @@ def content_stats(docs: DataFrame, **kwargs) -> DataFrame:
             F.col("block_texts"),
             F.col("block_words"),
             F.col("block_anchor_words"),
-            **kwargs,
         )
     )
     total = F.size("block_tags")

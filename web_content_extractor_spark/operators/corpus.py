@@ -23,8 +23,7 @@ Scale notes (10^12 docs):
   scale, write with ``repartition(n_shards, shard)`` +
   ``sortWithinPartitions(h)`` and let the file order carry the training
   order instead of materializing ``shard_pos`` (the window per shard is
-  a single sorted partition — fine up to ~10^8 rows/shard, beyond that
-  drop with_pos).
+  a single sorted partition — fine up to ~10^8 rows/shard).
 - ``mixture_sample``: rates live in a tiny per-source table broadcast
   onto the corpus — no corpus shuffle at all; the filter is a codegen
   integer compare.
@@ -76,12 +75,7 @@ def id_hash31(docs: DataFrame, id_col: str, seed: int = 0) -> Column:
     return F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(M31))
 
 
-def shard_corpus(
-    docs: DataFrame,
-    n_shards: int = 16,
-    seed: int = 0,
-    with_pos: bool = True,
-) -> DataFrame:
+def shard_corpus(docs: DataFrame, n_shards: int = 16, seed: int = 0) -> DataFrame:
     """Deterministic global shuffle into ``n_shards`` training shards.
 
     Returns (doc_id, shard, shard_pos): ``shard`` is uniform by the
@@ -93,22 +87,15 @@ def shard_corpus(
     """
     h = id_hash31(docs, "doc_id", seed)
     out = docs.select("doc_id", (h % n_shards).alias("shard"), h.alias("h"))
-    if with_pos:
-        w = Window.partitionBy("shard").orderBy("h", "doc_id")
-        out = out.withColumn("shard_pos", F.row_number().over(w) - 1)
-        return out.select("doc_id", "shard", "shard_pos")
-    return out.select("doc_id", "shard")
+    w = Window.partitionBy("shard").orderBy("h", "doc_id")
+    out = out.withColumn("shard_pos", F.row_number().over(w) - 1)
+    return out.select("doc_id", "shard", "shard_pos")
 
 
-def mixture_sample(
-    docs: DataFrame,
-    rates: DataFrame,
-    seed: int = 1,
-    key_col: str = "source",
-) -> DataFrame:
+def mixture_sample(docs: DataFrame, rates: DataFrame, seed: int = 1) -> DataFrame:
     """Deterministic Bernoulli down-sampling to a target source mixture.
 
-    ``rates`` is a tiny (key, rate) table — rate in [0, 1] is the keep
+    ``rates`` is a tiny (source, rate) table — rate in [0, 1] is the keep
     probability for that source.  A doc is kept iff
     ``portable_hash(doc_id, seed) % 1e6 < rate * 1e6``: the decision is
     a pure function of (doc_id, seed), so reruns keep the identical
@@ -122,7 +109,7 @@ def mixture_sample(
     """
     u = id_hash31(docs, "doc_id", seed) % F.lit(1_000_000)
     return (
-        docs.join(F.broadcast(rates), key_col, "inner")
+        docs.join(F.broadcast(rates), "source", "inner")
         .where(u < (F.col("rate") * F.lit(1_000_000)).cast("bigint"))
         .drop("rate")
     )
@@ -133,10 +120,10 @@ def pack_token_stream(
     budget: int = 1024,
     group_col: str = "shard",
     order_cols: tuple[str, ...] = ("doc_id", "chunk_id"),
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
     """GPT-style token-stream packing: concatenate all chunks of a
-    shard in training order and cut every ``budget`` tokens.
+    shard in training order and cut every ``budget`` tokens, counting
+    each chunk's ``n_tokens``.
 
     Each chunk is assigned the pack its *first* token lands in
     (``pack_id = floor(tokens_before / budget)``) plus its offset
@@ -154,7 +141,7 @@ def pack_token_stream(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    before = F.sum(tokens_col).over(w) - F.col(tokens_col)
+    before = F.sum("n_tokens").over(w) - F.col("n_tokens")
     return chunks.withColumn(
         "pack_id", F.floor(before / budget).cast("bigint")
     ).withColumn("pack_offset", (before % budget).cast("bigint"))
@@ -164,15 +151,13 @@ def pack_interleaved(
     spans: DataFrame,
     budget: int = 2048,
     media_tokens: int = 64,
-    group_col: str = "shard",
     order_cols: tuple[str, ...] = ("doc_id", "span_idx"),
-    kind_col: str = "kind",
-    text_col: str = "text",
 ) -> DataFrame:
     """Interleaved multimodal sequence packing: the modern
     vision-language pretraining step where a document is an ordered
     mix of text and media spans and every training sequence is cut to
-    a fixed token capacity.
+    a fixed token capacity.  ``spans`` carries ``shard``, ``kind``
+    ('media' or text) and ``text``.
 
     Text spans cost their whitespace token count; media spans cost a
     fixed ``media_tokens`` budget (the patch-token count the image
@@ -190,20 +175,17 @@ def pack_interleaved(
     shards); the cost model is pure Column algebra, and media payloads
     contribute a constant, so no byte column ever rides the shuffle.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     n_text = F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
         F.size(F.split(F.trim(text), r"\s+"))
     )
     cost = (
-        F.when(F.col(kind_col) == "media", F.lit(media_tokens))
+        F.when(F.col("kind") == "media", F.lit(media_tokens))
         .otherwise(n_text)
         .cast("bigint")
     )
     return pack_token_stream(
-        spans.withColumn("n_tokens", cost),
-        budget=budget,
-        group_col=group_col,
-        order_cols=order_cols,
+        spans.withColumn("n_tokens", cost), budget=budget, order_cols=order_cols
     )
 
 
@@ -211,8 +193,6 @@ def token_budget_sample(
     docs: DataFrame,
     budgets: DataFrame,
     seed: int = 2,
-    key_col: str = "source",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
     """Per-source token-budget sampling: keep documents, in
     reproducible hash order, until each source's token budget is hit.
@@ -220,8 +200,8 @@ def token_budget_sample(
     The quota-based complement to ``mixture_sample``'s rate-based
     Bernoulli: LLM data recipes are usually stated as "X billion
     tokens of web, Y of code" — absolute token budgets per source, not
-    keep-probabilities.  ``budgets`` is a tiny (key, token_budget)
-    table.
+    keep-probabilities.  ``budgets`` is a tiny (source, token_budget)
+    table; each doc costs its ``n_tokens``.
 
     A doc is kept iff the running token total of the docs *before* it
     (in portable-hash order, doc_id tie-break) is under the budget —
@@ -240,14 +220,14 @@ def token_budget_sample(
     """
     h = id_hash31(docs, "doc_id", seed)
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("source")
         .orderBy("__h", "doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
-        docs.join(F.broadcast(budgets), key_col, "inner")
+        docs.join(F.broadcast(budgets), "source", "inner")
         .withColumn("__h", h)
-        .withColumn("__before", F.coalesce(F.sum(tokens_col).over(w), F.lit(0)))
+        .withColumn("__before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
         .where(F.col("__before") < F.col("token_budget"))
         .drop("__h", "__before", "token_budget")
     )
@@ -258,9 +238,8 @@ def train_val_test_split(
     val_pct: int = 1,
     test_pct: int = 1,
     seed: int = 7,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Deterministic held-out split: (id, bucket, split) with split in
+    """Deterministic held-out split: (doc_id, bucket, split) with split in
     {'train','val','test'}.
 
     The standard corpus-prep step before training: assign each document
@@ -271,8 +250,8 @@ def train_val_test_split(
     rest -> train.  Pure codegen integer algebra, zero shuffle — at
     100 TB this is a free column on the curation scan, never a join.
     """
-    bucket = (id_hash31(docs, id_col, seed) % 100).alias("bucket")
-    out = docs.select(id_col, bucket)
+    bucket = (id_hash31(docs, "doc_id", seed) % 100).alias("bucket")
+    out = docs.select("doc_id", bucket)
     return out.withColumn(
         "split",
         F.when(F.col("bucket") < val_pct, F.lit("val"))
@@ -285,7 +264,6 @@ def temperature_mixture_rates(
     docs: DataFrame,
     alpha: float = 0.3,
     total: int = 1000,
-    key_col: str = "source",
 ) -> DataFrame:
     """Temperature-scaled source mixture (the mT5/XLM-R alpha-sampling
     rule): target mixture q_s ∝ p_s^alpha flattens the source
@@ -293,7 +271,7 @@ def temperature_mixture_rates(
     uniform over sources), realized as per-source keep-RATES for a
     ``total``-doc budget: rate_s = min(1, total * q_s / n_s).
 
-    Returns (key, rate) — feed straight into ``mixture_sample`` for
+    Returns (source, rate) — feed straight into ``mixture_sample`` for
     the deterministic Bernoulli draw; expected kept docs ≈ total
     (exactly total·q_s per source, saturating at n_s when a rare
     source can't fill its boosted share).
@@ -303,14 +281,14 @@ def temperature_mixture_rates(
     runs on the source-cardinality table — KBs — via broadcast
     cross-joins of its two scalar totals.
     """
-    counts = docs.groupBy(key_col).agg(F.count("*").alias("n"))
+    counts = docs.groupBy("source").agg(F.count("*").alias("n"))
     tot = counts.agg(F.sum("n").alias("n_total"))
     w = counts.crossJoin(F.broadcast(tot)).withColumn(
         "w", F.pow(F.col("n") / F.col("n_total"), F.lit(alpha))
     )
     z = w.agg(F.sum("w").alias("Z"))
     return w.crossJoin(F.broadcast(z)).select(
-        key_col,
+        "source",
         F.least(
             F.lit(1.0),
             F.col("w") / F.col("Z") * F.lit(float(total)) / F.col("n"),
@@ -322,14 +300,11 @@ def corpus_health(
     docs: DataFrame,
     approx: bool = False,
     rsd: float = 0.02,
-    text_col: str = "text",
-    chars_col: str = "n_chars",
-    source_col: str = "source",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """One-row corpus health report: doc/token volume, exact-dup rate
     (fingerprint distinct), source/lang cardinality, mean length — the
-    summary a curation run prints before and after each stage.
+    summary a curation run prints before and after each stage, over
+    ``docs`` (text, n_chars, source, lang).
 
     ``approx=False`` (default) uses exact ``countDistinct`` — the
     oracle-checkable mode, fine up to ~10^9 docs.  ``approx=True``
@@ -344,7 +319,7 @@ def corpus_health(
     """
     from web_content_extractor_spark.functions import text_quality as tq
 
-    fp = tq.fingerprint(F.col(text_col))
+    fp = tq.fingerprint(F.col("text"))
 
     def distinct(col):
         return (
@@ -355,7 +330,7 @@ def corpus_health(
 
     return docs.agg(
         F.count("*").alias("n_docs"),
-        F.sum(tq.token_count(F.col(text_col))).alias("total_tokens"),
+        F.sum(tq.token_count(F.col("text"))).alias("total_tokens"),
         # HLL can overshoot count(*) on a fully-unique corpus; clamp
         # n_unique at n_docs (a no-op in exact mode) so the report
         # never prints n_unique > n_docs or a negative dup count, and
@@ -365,7 +340,7 @@ def corpus_health(
             F.lit(0).cast("long"),
             F.count("*") - F.least(F.count("*"), distinct(fp)),
         ).alias("n_exact_dups"),
-        F.round(F.avg(chars_col), 6).alias("mean_chars"),
-        distinct(F.col(source_col)).alias("n_sources"),
-        distinct(F.col(lang_col)).alias("n_langs"),
+        F.round(F.avg("n_chars"), 6).alias("mean_chars"),
+        distinct(F.col("source")).alias("n_sources"),
+        distinct(F.col("lang")).alias("n_langs"),
     )

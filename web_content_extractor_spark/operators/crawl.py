@@ -241,10 +241,9 @@ def crawl(
 def blocklist_filter(
     links: DataFrame,
     blocklist: DataFrame,
-    url_col: str = "url",
 ) -> DataFrame:
-    """Drop links matching a (host, path_prefix) blocklist — the
-    UT1-style domain/path exclusion every production crawl curation
+    """Drop links whose ``url`` matches a (host, path_prefix) blocklist
+    — the UT1-style domain/path exclusion every production crawl curation
     runs before extraction (spam/adult/malware host lists).
 
     A link is dropped when its www-stripped lowercase host equals a
@@ -258,10 +257,8 @@ def blocklist_filter(
     hash join keyed on host with the prefix test as residual
     condition; the corpus never shuffles.
     """
-    host = _host_key(F.try_parse_url(F.col(url_col), F.lit("HOST")))
-    path = F.coalesce(
-        F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("")
-    )
+    host = _host_key(F.try_parse_url(F.col("url"), F.lit("HOST")))
+    path = F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit(""))
     tagged = links.withColumn("__host", host).withColumn("__path", path)
     b = blocklist.select(
         # same normalization as the link side: lists ship host rows
@@ -278,15 +275,11 @@ def blocklist_filter(
     return kept.drop("__host", "__path")
 
 
-def robots_rules(
-    robots: DataFrame,
-    user_agent: str = "*",
-    host_col: str = "host",
-    body_col: str = "robots",
-) -> DataFrame:
-    """Parse robots.txt bodies into (host, path_prefix) disallow rules
-    for ``user_agent`` — the other half of crawl curation next to the
-    manual blocklist: `blocklist_filter(links, robots_rules(robots))`.
+def robots_rules(robots: DataFrame, user_agent: str = "*") -> DataFrame:
+    """Parse (host, robots) robots.txt bodies into (host, path_prefix)
+    disallow rules for ``user_agent`` — the other half of crawl
+    curation next to the manual blocklist:
+    `blocklist_filter(links, robots_rules(robots))`.
 
     Spec-shaped group semantics, computed entirely with native
     windows (no Python): consecutive ``User-agent:`` lines form ONE
@@ -308,26 +301,22 @@ def robots_rules(
     shuffle of KB-sized groups; the rule table out is exactly what
     ``blocklist_filter`` broadcasts.
     """
-    grouped, applies = _robots_groups(robots, user_agent, host_col, body_col)
+    grouped, applies = _robots_groups(robots, user_agent)
     rules = grouped.where(
         (F.col("field") == "disallow") & (F.length("value") > 0)
     )
     return (
-        rules.join(applies, [host_col, "group_id"])
-        .select(F.col(host_col).alias("host"),
-                F.col("value").alias("path_prefix"))
+        rules.join(applies, ["host", "group_id"])
+        .select("host", F.col("value").alias("path_prefix"))
         .distinct()
     )
 
 
 def _robots_groups(
-    robots: DataFrame,
-    user_agent: str = "*",
-    host_col: str = "host",
-    body_col: str = "robots",
+    robots: DataFrame, user_agent: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared robots.txt group machinery: parse bodies into tagged
-    (host, group_id, field, value) lines plus the (host, group_id) set
+    """Shared robots.txt group machinery: parse (host, robots) bodies
+    into tagged (host, group_id, field, value) lines plus the (host, group_id) set
     applicable to ``user_agent`` under the spec's group-tier rule
     (specific groups win, '*' groups are the fallback).  Used by
     :func:`robots_rules` (Disallow) and :func:`crawl_delays`
@@ -335,25 +324,25 @@ def _robots_groups(
     from pyspark.sql import Window
 
     lines = robots.select(
-        host_col,
-        F.posexplode(F.split(F.col(body_col), r"\r?\n")).alias(
+        "host",
+        F.posexplode(F.split(F.col("robots"), r"\r?\n")).alias(
             "line_no", "line"
         ),
     ).select(
-        host_col,
+        "host",
         "line_no",
         F.trim(F.regexp_replace("line", r"#.*$", "")).alias("line"),
     )
     field = F.lower(F.regexp_extract("line", r"^([A-Za-z-]+)\s*:", 1))
     value = F.trim(F.regexp_extract("line", r"^[A-Za-z-]+\s*:\s*(.*)$", 1))
     tagged = lines.select(
-        host_col,
+        "host",
         "line_no",
         field.alias("field"),
         value.alias("value"),
     ).where(F.col("field") != "")
 
-    w = Window.partitionBy(host_col).orderBy("line_no")
+    w = Window.partitionBy("host").orderBy("line_no")
     is_agent = (F.col("field") == "user-agent").cast("int")
     grouped = tagged.withColumn("is_agent", is_agent).withColumn(
         "group_start",
@@ -371,7 +360,7 @@ def _robots_groups(
         spec = (token != "*") & (F.instr(F.lit(ua), token) > 0)
     groups = (
         grouped.where(F.col("is_agent") == 1)
-        .groupBy(host_col, "group_id")
+        .groupBy("host", "group_id")
         .agg(
             F.max(spec.cast("int")).alias("spec_match"),
             F.max((F.lower("value") == "*").cast("int")).alias(
@@ -380,16 +369,16 @@ def _robots_groups(
         )
     )
     # per-host tier: specific groups win; '*' groups are the fallback
-    host_tier = groups.groupBy(host_col).agg(
+    host_tier = groups.groupBy("host").agg(
         F.max("spec_match").alias("any_spec")
     )
     applies = (
-        groups.join(host_tier, host_col)
+        groups.join(host_tier, "host")
         .where(
             ((F.col("any_spec") == 1) & (F.col("spec_match") == 1))
             | ((F.col("any_spec") == 0) & (F.col("star_match") == 1))
         )
-        .select(host_col, "group_id")
+        .select("host", "group_id")
     )
     return grouped, applies
 
@@ -398,9 +387,6 @@ def robots_decisions(
     robots: DataFrame,
     urls: DataFrame,
     user_agent: str = "*",
-    host_col: str = "host",
-    body_col: str = "robots",
-    url_col: str = "url",
 ) -> DataFrame:
     """Full REP allow/disallow decisions with longest-match-wins:
     the semantics :func:`robots_rules` (Disallow-only prefix list)
@@ -429,7 +415,8 @@ def robots_decisions(
     collapse to one rule array per normalized host (union of rules),
     never duplicate decision rows.
 
-    Returns ``urls``' columns + (allowed boolean, matched_prefix —
+    Returns ``urls``' columns (``host`` and ``url`` required) +
+    (allowed boolean, matched_prefix —
     the raw winning pattern, null when no rule matched).
 
     Scale shape: applicable allow/disallow rules collapse to ONE tiny
@@ -447,7 +434,7 @@ def robots_decisions(
     regexp (recompiled per (row, rule) pair — acceptable as the
     minority path, ruinous as the only one at 10^12 URLs).
     """
-    grouped, applies = _robots_groups(robots, user_agent, host_col, body_col)
+    grouped, applies = _robots_groups(robots, user_agent)
     # translate each REP pattern ONCE, on the tiny rule table: strip a
     # trailing '$' (the only anchoring position), and build a Java
     # regex (metachars escaped EXCEPT '*', then '*' -> '.*') ONLY for
@@ -490,9 +477,9 @@ def robots_decisions(
             F.col("field").isin("allow", "disallow")
             & (F.length("value") > 0)
         )
-        .join(applies, [host_col, "group_id"])
+        .join(applies, ["host", "group_id"])
         .select(
-            _hkey(F.col(host_col)).alias("__hkey"),
+            _hkey(F.col("host")).alias("__hkey"),
             F.col("value").alias("prefix"),
             body.alias("body"),
             rx.alias("rx"),
@@ -511,13 +498,9 @@ def robots_decisions(
     # the dominant real use of wildcards is query-targeting rules like
     # 'Disallow: /*?sessionid=' — and evaluates an empty path as "/"
     # (without this even "Disallow: /" would fail to block the root)
-    raw_path = F.coalesce(
-        F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("")
-    )
+    raw_path = F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit(""))
     path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
-    query = F.coalesce(
-        F.try_parse_url(F.col(url_col), F.lit("QUERY")), F.lit("")
-    )
+    query = F.coalesce(F.try_parse_url(F.col("url"), F.lit("QUERY")), F.lit(""))
     target = F.when(query == "", path).otherwise(
         F.concat(path, F.lit("?"), query)
     )
@@ -548,7 +531,7 @@ def robots_decisions(
     # AQE size-decide, exactly as domain_curate does.  At bench scale
     # it picks BHJ at runtime; at 10^8 hosts it degrades to a shuffle
     # join instead of OOMing the driver
-    joined = urls.withColumn("__ukey", _hkey(F.col(host_col))).join(
+    joined = urls.withColumn("__ukey", _hkey(F.col("host"))).join(
         rules,
         F.col("__ukey") == rules["__hkey"],
         "left",
@@ -565,13 +548,9 @@ def robots_decisions(
     )
 
 
-def crawl_delays(
-    robots: DataFrame,
-    user_agent: str = "*",
-    host_col: str = "host",
-    body_col: str = "robots",
-) -> DataFrame:
-    """Per-host ``Crawl-delay`` (seconds, double) for ``user_agent``,
+def crawl_delays(robots: DataFrame, user_agent: str = "*") -> DataFrame:
+    """Per-host ``Crawl-delay`` (seconds, double) of (host, robots)
+    bodies for ``user_agent``,
     using the same applicable-group semantics as :func:`robots_rules`.
     Hosts whose applicable groups carry no parsable Crawl-delay emit
     no row (callers coalesce to their default); multiple applicable
@@ -581,15 +560,15 @@ def crawl_delays(
     :func:`robots_decisions` joins on — so a robots table keyed
     'www.Foo.com' governs frontier host 'foo.com' consistently for
     both its rules and its delay."""
-    grouped, applies = _robots_groups(robots, user_agent, host_col, body_col)
+    grouped, applies = _robots_groups(robots, user_agent)
     delays = grouped.where(F.col("field") == "crawl-delay").select(
-        host_col,
+        "host",
         "group_id",
         # try_cast: malformed delays drop, not fail (ANSI-safe)
         F.col("value").try_cast("double").alias("delay_s"),
     )
     return (
-        delays.join(applies, [host_col, "group_id"])
+        delays.join(applies, ["host", "group_id"])
         # drop unusable values, not just unparsable ones: try_cast
         # turns 'NaN'/'Infinity' into real doubles (NaN would win the
         # max and poison the host's schedule) and negative delays
@@ -600,7 +579,7 @@ def crawl_delays(
             & (F.col("delay_s") >= 0)
             & (F.col("delay_s") < F.lit(float("inf")))
         )
-        .groupBy(_host_key(F.col(host_col)).alias("host"))
+        .groupBy(_host_key(F.col("host")).alias("host"))
         .agg(F.max("delay_s").alias("delay_s"))
     )
 
@@ -609,8 +588,6 @@ def politeness_schedule(
     frontier: DataFrame,
     delays: DataFrame | None = None,
     default_delay_s: float = 1.0,
-    host_col: str = "host",
-    url_col: str = "url",
     priority_col: str | None = None,
     delays_canonical: bool = False,
 ) -> DataFrame:
@@ -627,7 +604,7 @@ def politeness_schedule(
     host forms ('www.Foo.com' + 'foo.com').
 
     Per host, URLs are ordered by ``priority_col`` descending (when
-    given; ties and the no-priority case fall back to ``url_col``
+    given; ties and the no-priority case fall back to ``url``
     ascending, so the schedule is deterministic), numbered into slots
     0,1,2,..., and scheduled at ``slot * delay_s`` seconds where
     ``delay_s`` comes from ``delays`` (e.g. :func:`crawl_delays`)
@@ -648,11 +625,11 @@ def politeness_schedule(
     from pyspark.sql import Window
 
     order = (
-        [F.col(priority_col).desc(), F.col(url_col).asc()]
+        [F.col(priority_col).desc(), F.col("url").asc()]
         if priority_col
-        else [F.col(url_col).asc()]
+        else [F.col("url").asc()]
     )
-    w = Window.partitionBy(host_col).orderBy(*order)
+    w = Window.partitionBy("host").orderBy(*order)
     # the delays table + default are authoritative: a pre-existing
     # delay_s on the frontier (e.g. re-scheduling this function's own
     # output) would make the coalesce ambiguous — drop it
@@ -674,7 +651,7 @@ def politeness_schedule(
             ).agg(F.max("delay_s").alias("delay_s"))
         )
         out = (
-            out.withColumn("__dkey", _host_key(F.col(host_col)))
+            out.withColumn("__dkey", _host_key(F.col("host")))
             .join(d, "__dkey", "left")
             .drop("__dkey")
         )
@@ -682,23 +659,19 @@ def politeness_schedule(
         out = out.withColumn("delay_s", F.lit(None).cast("double"))
     delay = F.coalesce(F.col("delay_s"), F.lit(float(default_delay_s)))
     return out.select(
-        F.col(host_col).alias("host"),
-        F.col(url_col).alias("url"),
+        "host",
+        "url",
         F.col("slot").cast("int").alias("slot"),
         delay.alias("delay_s"),
         F.round(F.col("slot") * delay, 6).alias("fetch_at_s"),
     )
 
 
-def sitemap_urls(
-    sitemaps: DataFrame,
-    host_col: str = "host",
-    body_col: str = "sitemap",
-) -> DataFrame:
-    """Extract the URL inventory from sitemap.xml bodies — the crawl
-    SEED source next to robots_rules' exclusion rules: a production
-    crawl starts from sitemap <loc> entries, filters them through
-    robots/blocklist, and feeds the remainder to the frontier
+def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
+    """Extract the URL inventory from (host, sitemap) sitemap.xml bodies
+    — the crawl SEED source next to robots_rules' exclusion rules: a
+    production crawl starts from sitemap <loc> entries, filters them
+    through robots/blocklist, and feeds the remainder to the frontier
     (sources/urls.py url_batch shape).
 
     Handles both plain urlsets and sitemapindex files by taking every
@@ -718,9 +691,7 @@ def sitemap_urls(
     codegen: regexp_replace chains + one regexp_extract_all + explode
     per body, no Python, no shuffle beyond the input's own layout.
     """
-    stripped = F.regexp_replace(
-        F.col(body_col), r"(?s)<!--.*?-->", ""
-    )
+    stripped = F.regexp_replace(F.col("sitemap"), r"(?s)<!--.*?-->", "")
     locs = F.regexp_extract_all(
         stripped, F.lit(r"<loc>\s*(.*?)\s*</loc>"), F.lit(1)
     )
@@ -741,7 +712,7 @@ def sitemap_urls(
         return F.when(u.startswith("<![CDATA["), cdata).otherwise(decoded)
 
     return sitemaps.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.explode(F.transform(locs, _clean)).alias("url"),
         stripped.rlike("<sitemapindex").alias("is_index"),
     ).where(F.length("url") > 0).distinct()

@@ -43,16 +43,15 @@ def _norm(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
-def benchmark_snippets(
-    docs: DataFrame,
-    every: int = 97,
-    offset: int = 3,
-    start_tok: int = 5,
-    n_tok: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
-    """Deterministic synthetic benchmark set: an ``n_tok``-gram lifted
-    from every ``every``-th document (the sandbox stand-in for a real
+# the synthetic benchmark: SNIPPET_TOKENS tokens from token
+# SNIPPET_START (1-based) of each doc with doc_id % 97 == 3
+SNIPPET_EVERY, SNIPPET_OFFSET = 97, 3
+SNIPPET_START, SNIPPET_TOKENS = 5, 8
+
+
+def benchmark_snippets(docs: DataFrame) -> DataFrame:
+    """Deterministic synthetic benchmark set: an 8-gram lifted from
+    every 97th document's text (the sandbox stand-in for a real
     benchmark table; at 100 TB this is `spark.read` of the eval sets).
 
     Returns (snippet_id, snippet) — normalized word n-grams, so every
@@ -60,16 +59,17 @@ def benchmark_snippets(
     document repeating the same n-gram is flagged too.
     """
     toks = F.filter(
-        F.split(_norm(F.col(text_col)), " "), lambda t: F.length(t) > 0
+        F.split(_norm(F.col("text")), " "), lambda t: F.length(t) > 0
     )
+    snippet = F.slice(toks, SNIPPET_START, SNIPPET_TOKENS)
     return (
-        docs.where((F.col("doc_id") % every) == offset)
+        docs.where((F.col("doc_id") % SNIPPET_EVERY) == SNIPPET_OFFSET)
         .select(
             F.col("doc_id").alias("snippet_id"),
-            F.concat_ws(" ", F.slice(toks, start_tok, n_tok)).alias("snippet"),
+            F.concat_ws(" ", snippet).alias("snippet"),
             F.size(toks).alias("_n"),
         )
-        .where(F.col("_n") >= start_tok + n_tok - 1)
+        .where(F.col("_n") >= SNIPPET_START + SNIPPET_TOKENS - 1)
         .drop("_n")
     )
 
@@ -195,11 +195,10 @@ def contamination_scores(
     snippets: DataFrame,
     n: int = 8,
     tau: float = 0.01,
-    text_col: str = "text",
 ) -> DataFrame:
     """GPT-3-style quantitative contamination: the fraction of a
-    document's DISTINCT word ``n``-grams colliding with any benchmark
-    ``n``-gram (GPT-3 appx. C measures gram collisions to split dirty
+    document's (``docs.text``) DISTINCT word ``n``-grams colliding with
+    any benchmark ``n``-gram (GPT-3 appx. C measures gram collisions to split dirty
     vs clean eval docs; applied corpus-side here, the quantitative
     complement of the boolean ``contaminated_pairs`` sweep).
 
@@ -229,7 +228,7 @@ def contamination_scores(
         .withColumn("hit", F.lit(1))
     )
     g = docs.select(
-        "doc_id", F.explode_outer(_word_ngrams(F.col(text_col), n)).alias("g")
+        "doc_id", F.explode_outer(_word_ngrams(F.col("text"), n)).alias("g")
     )
     agg = (
         g.join(F.broadcast(bench), "g", "left")

@@ -51,16 +51,19 @@ def _ascii_tokens(t: str) -> list[str]:
 
 # 2^31 - 1 (Mersenne prime): keeps a*h+b inside signed-64 range
 _MERSENNE = 2147483647
+# MinHash-LSH shape: 64 permutations in 16 bands of 4 rows, over word
+# 3-grams (also the exact n-gram Jaccard shingle)
+NUM_PERM, BANDS, NGRAM = 64, 16, 3
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact dedup on normalized content hash.
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """Exact dedup on the normalized content hash of ``docs.text``.
 
     Returns (doc_id, canonical_id, is_duplicate): canonical = min doc_id
     per hash group (first-wins analog of the reference's PDF dedup,
     cli.py:381-387).
     """
-    h = fingerprint(F.col(text_col)).alias("fp")
+    h = fingerprint(F.col("text")).alias("fp")
     by_fp = docs.select(F.col("doc_id"), h)
     canon = by_fp.groupBy("fp").agg(F.min("doc_id").alias("canonical_id"))
     return (
@@ -99,16 +102,15 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_perm: int = 64, ngram: int = 3
-) -> DataFrame:
-    """(doc_id, signature array<bigint>).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, signature array<bigint>) of ``docs.text``: NUM_PERM
+    minhashes over word NGRAM-grams.
 
     The whole shingle->hash->permute-min kernel runs in ONE Arrow
     batch UDF: tokenization (identical to ``_word_ngrams``'s
     lower/\\s+/non-empty rule), per-token md5-8 (first 8 digest bytes
     big-endian, folded mod 2^31-1), vectorized polynomial n-gram
-    hashing, per-doc distinct, then the (num_perm x n_shingles)
+    hashing, per-doc distinct, then the (NUM_PERM x n_shingles)
     permute-min via segment-reduce.  The previous JVM-side shingle
     pipeline (transform/slice/concat_ws/xxhash64 higher-order columns)
     is interpreted per element by Catalyst (HOFs don't codegen) and
@@ -121,7 +123,7 @@ def minhash_signatures(
     cost of the swap is within noise (0.88 s -> 0.9 s warm at sf0.1).
     Minhash quality is hash-agnostic and the recall tests pin it.
     """
-    perms = _perm_params(num_perm)
+    perms = _perm_params(NUM_PERM)
 
     @F.pandas_udf("array<bigint>")
     def _sig(texts: pd.Series) -> pd.Series:
@@ -140,7 +142,7 @@ def minhash_signatures(
         # int64 because the mod runs after every step: acc < p and
         # coef*th < 2^62, so acc + coef*th never overflows
         coef = np.array(
-            [1000003**k % _MERSENNE for k in range(ngram)], dtype=np.int64
+            [1000003**k % _MERSENNE for k in range(NGRAM)], dtype=np.int64
         )
         doc_grams: list = []
         lens = np.zeros(n_rows, dtype=np.int64)
@@ -148,7 +150,7 @@ def minhash_signatures(
             if not t:
                 continue
             toks = _ascii_tokens(t)
-            if len(toks) < ngram:
+            if len(toks) < NGRAM:
                 continue
             th = np.fromiter(
                 (
@@ -165,9 +167,9 @@ def minhash_signatures(
             )
             # fold to [0, 2^31-1) so coef*th + acc stays exact in int64
             th = (th % np.uint64(_MERSENNE)).astype(np.int64)
-            g = np.zeros(len(toks) - ngram + 1, dtype=np.int64)
-            for k in range(ngram):
-                g += coef[k] * th[k : len(toks) - ngram + 1 + k]
+            g = np.zeros(len(toks) - NGRAM + 1, dtype=np.int64)
+            for k in range(NGRAM):
+                g += coef[k] * th[k : len(toks) - NGRAM + 1 + k]
                 g %= _MERSENNE
             g = np.unique(g)  # distinct shingles, as array_distinct did
             doc_grams.append((idx, g))
@@ -176,10 +178,10 @@ def minhash_signatures(
             return pd.Series(res, dtype=object)
         nz = np.array([i for i, _ in doc_grams], dtype=np.int64)
         flat = np.concatenate([g for _, g in doc_grams])
-        m = (a * flat[None, :] + b) % _MERSENNE  # (num_perm, total)
+        m = (a * flat[None, :] + b) % _MERSENNE  # (NUM_PERM, total)
         offsets = np.zeros(len(nz), dtype=np.int64)
         np.cumsum(lens[nz][:-1], out=offsets[1:])
-        mins = np.minimum.reduceat(m, offsets, axis=1)  # (num_perm, |nz|)
+        mins = np.minimum.reduceat(m, offsets, axis=1)  # (NUM_PERM, |nz|)
         cols = mins.T
         for k, i in enumerate(nz):
             res[i] = cols[k]
@@ -189,22 +191,15 @@ def minhash_signatures(
     # over a column expression would collapse into the same Project
     # and re-evaluate it per row
     return (
-        docs.select("doc_id", _sig(F.col(text_col)).alias("signature"))
+        docs.select("doc_id", _sig(F.col("text")).alias("signature"))
         .where(F.size("signature") > 0)
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    ngram: int = 3,
-    min_jaccard: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
     """Near-duplicate pairs via banded MinHash LSH.
 
-    signature -> `bands` band-hashes -> explode -> equi-self-join on
+    signature -> BANDS band-hashes -> explode -> equi-self-join on
     (band, band_hash) -> estimated jaccard = matching minhash fraction,
     filtered at ``min_jaccard``.  Returns (doc_a, doc_b, est_jaccard).
 
@@ -221,13 +216,13 @@ def minhash_lsh_pairs(
     turns the re-attach joins into broadcasts when the candidate set is
     small.
     """
-    rows_per_band = num_perm // bands
+    rows_per_band = NUM_PERM // BANDS
     # signatures are referenced three times (banding + two re-attach
     # joins): persist so the shingle+permute UDF runs once.  Spark's
     # CacheManager keys on the logical plan, so repeated calls over the
     # same input reuse one entry; at real corpus scale the signatures
     # would be materialized to their own table instead.
-    sigs = minhash_signatures(docs, text_col, num_perm, ngram).persist()
+    sigs = minhash_signatures(docs).persist()
     # materialize the cache BEFORE the joins reference it three times:
     # within a single job, concurrent scans of a lazy cached plan each
     # recompute the UDF until the cache fills (benched ~3x signature
@@ -238,7 +233,7 @@ def minhash_lsh_pairs(
         "doc_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda b: F.xxhash64(
                     F.concat_ws(
                         ",",
@@ -289,13 +284,10 @@ def minhash_lsh_pairs(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    ngram: int = 3,
-    min_jaccard: float = 0.8,
-    max_df: int = 1000,
+    docs: DataFrame, min_jaccard: float = 0.8, max_df: int = 1000
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (SQL-expressible oracle op).
+    """Exact word NGRAM-gram Jaccard near-dup pairs of ``docs.text``
+    (SQL-expressible oracle op).
 
     Skew guard: shingles appearing in more than ``max_df`` documents are
     dropped before the self-join (they would otherwise produce df^2
@@ -309,7 +301,7 @@ def ngram_jaccard_pairs(
     # document-frequency cap, and both self-join sides): persist +
     # materialize so the interpreted n-gram expression runs once
     grams = docs.select(
-        "doc_id", F.explode(_word_ngrams(F.col(text_col), ngram)).alias("g")
+        "doc_id", F.explode(_word_ngrams(F.col("text"), NGRAM)).alias("g")
     ).persist()
     grams.count()
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
@@ -346,8 +338,8 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash in one Arrow batch kernel.
+def simhash(docs: DataFrame) -> DataFrame:
+    """64-bit SimHash of ``docs.text`` in one Arrow batch kernel.
 
     Tokenization (the same lower/\\s+/non-empty rule as the minhash
     kernel) and 64-bit token hashing (md5 first 8 bytes big-endian,
@@ -418,12 +410,12 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
         out[nz] = packed.view(np.int64)
         return pd.Series(out)
 
-    return docs.select("doc_id", _simhash(F.col(text_col)).alias("simhash"))
+    return docs.select("doc_id", _simhash(F.col("text")).alias("simhash"))
 
 
-def simhash_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_duplicates(docs: DataFrame) -> DataFrame:
     """Hamming-0 SimHash buckets -> (doc_id, canonical_id, is_duplicate)."""
-    sh = simhash(docs, text_col)
+    sh = simhash(docs)
     canon = sh.groupBy("simhash").agg(F.min("doc_id").alias("canonical_id"))
     return sh.join(canon, "simhash").select(
         "doc_id",
@@ -522,13 +514,11 @@ def hamming_near_duplicates(
     )
 
 
-def simhash_near_duplicates(
-    docs: DataFrame, text_col: str = "text", max_distance: int = 3
-) -> DataFrame:
+def simhash_near_duplicates(docs: DataFrame, max_distance: int = 3) -> DataFrame:
     """SimHash near-dup pairs: the Arrow simhash kernel feeding the
     Manku pigeonhole band join.  (doc_id_a, doc_id_b, hamming) with
     hamming <= max_distance."""
-    sh = simhash(docs, text_col)
+    sh = simhash(docs)
     return hamming_near_duplicates(
         sh, id_col="doc_id", hash_col="simhash", max_distance=max_distance
     ).select(
@@ -615,15 +605,11 @@ def duplicate_clusters(
     return (labels, rounds) if with_rounds else labels
 
 
-def dedup_against_corpus(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Ingest-time dedup: keep only the batch documents whose content
-    is new — not in the existing corpus AND first-of-its-content within
-    the batch (min-id wins, like ``exact_duplicates``).
+def dedup_against_corpus(batch: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Ingest-time dedup: keep only the batch documents (doc_id, text)
+    whose content is new — not in the existing corpus AND
+    first-of-its-content within the batch (min-id wins, like
+    ``exact_duplicates``).
 
     The incremental complement of the batch dedup family: a crawl
     refresh re-fetches mostly unchanged pages, so the daily ingest job
@@ -643,10 +629,10 @@ def dedup_against_corpus(
     Returns the surviving batch rows + their ``fp`` fingerprint column
     (callers append these fps to the corpus fingerprint table).
     """
-    fp = fingerprint(F.col(text_col))
+    fp = fingerprint(F.col("text"))
     b = batch.withColumn("fp", fp)
     seen = corpus.select(fp.alias("fp")).distinct()
-    w = Window.partitionBy("fp").orderBy(id_col)
+    w = Window.partitionBy("fp").orderBy("doc_id")
     first = (
         b.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -655,22 +641,17 @@ def dedup_against_corpus(
     return first.join(seen, "fp", "left_anti")
 
 
-def resolve_clusters(
-    docs: DataFrame,
-    clusters: DataFrame,
-    quality_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def resolve_clusters(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Canonical-document selection: per duplicate cluster keep the
-    highest-quality member (tie-break min id), marking the rest for
-    drop.
+    longest member (max ``n_chars``, tie-break min doc_id), marking the
+    rest for drop.
 
     The resolution step between ``duplicate_clusters`` and the write:
     pair lists say *what* is duplicated, clusters say *together*, this
     says *which one survives* — real pipelines keep the longest /
     highest-scoring copy (RefinedWeb, CCNet), not the arbitrary min-id.
 
-    Output: (id, cluster_id, cluster_size, is_canonical).
+    Output: (doc_id, cluster_id, cluster_size, is_canonical).
 
     Scale shape: ONE shuffle keyed by cluster_id; near-dup clusters
     are near-cliques (a handful of docs), so partitions stay balanced
@@ -678,16 +659,16 @@ def resolve_clusters(
     and it is exactly what the heavy-hitter screen in operators/skew.py
     flags before this runs.
     """
-    j = clusters.join(docs.select(id_col, quality_col), id_col)
+    j = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(quality_col).desc(), F.col(id_col)
+        F.col("n_chars").desc(), F.col("doc_id")
     )
     cnt = Window.partitionBy("cluster_id")
     return (
         j.withColumn("__rn", F.row_number().over(w))
         .withColumn("cluster_size", F.count("*").over(cnt))
         .select(
-            id_col,
+            "doc_id",
             "cluster_id",
             "cluster_size",
             (F.col("__rn") == 1).alias("is_canonical"),

@@ -22,19 +22,17 @@ from pyspark.sql import functions as F
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     fingerprint: Column | None = None,
 ) -> DataFrame:
     """(doc_id, status) over the union of both snapshots' ids, with
     status in {added, removed, changed, unchanged}.
 
-    ``fingerprint`` defaults to md5 of the text column; pass a custom
+    ``fingerprint`` defaults to md5 of the ``text`` column; pass a custom
     Column expression (e.g. over several columns) to widen the change
     detection.  NULL text fingerprints as the empty string so a
     NULL -> 'x' edit counts as changed, not added.
 
-    PRECONDITION: ``id_col`` is a key on both sides (the docs-table
+    PRECONDITION: ``doc_id`` is a key on both sides (the docs-table
     contract).  Duplicate ids would cross-pair in the join and report
     spurious 'changed' rows — if your snapshot can hold duplicates,
     reduce each side to one fingerprint per id first (e.g. md5 of the
@@ -45,11 +43,9 @@ def snapshot_diff(
         fp = (
             fingerprint
             if fingerprint is not None
-            else F.md5(F.encode(F.coalesce(F.col(text_col), F.lit("")), "UTF-8"))
+            else F.md5(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
         )
-        return df.select(
-            F.col(id_col).alias("id"), fp.alias(f"fp_{tag}")
-        )
+        return df.select(F.col("doc_id").alias("id"), fp.alias(f"fp_{tag}"))
 
     j = side(old, "old").join(side(new, "new"), "id", "full_outer")
     status = (
@@ -58,19 +54,17 @@ def snapshot_diff(
         .when(F.col("fp_old") != F.col("fp_new"), "changed")
         .otherwise("unchanged")
     )
-    return j.select(F.col("id").alias(id_col), status.alias("status"))
+    return j.select(F.col("id").alias("doc_id"), status.alias("status"))
 
 
 def changed_docs(
-    old: DataFrame, new: DataFrame, id_col: str = "doc_id",
-    text_col: str = "text",
-    fingerprint: Column | None = None,
+    old: DataFrame, new: DataFrame, fingerprint: Column | None = None
 ) -> DataFrame:
     """The rows of ``new`` that need (re)processing: added + changed.
 
     Semi-join against the diff, so the output carries the full new-side
     columns while the diff itself only ever shuffled fingerprints.
     """
-    d = snapshot_diff(old, new, id_col, text_col, fingerprint)
-    todo = d.where(F.col("status").isin("added", "changed")).select(id_col)
-    return new.join(todo, id_col, "left_semi")
+    d = snapshot_diff(old, new, fingerprint)
+    todo = d.where(F.col("status").isin("added", "changed")).select("doc_id")
+    return new.join(todo, "doc_id", "left_semi")

@@ -129,15 +129,10 @@ def host_pagerank(
     return ranks
 
 
-def anchor_text_index(
-    links: DataFrame,
-    target_col: str = "media_ref",
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    k: int = 5,
-) -> DataFrame:
-    """Inbound anchor-text index: per target URL, in-degree, referring-
-    doc count, and the top-``k`` anchor texts.
+def anchor_text_index(links: DataFrame, k: int = 5) -> DataFrame:
+    """Inbound anchor-text index: per target URL (``media_ref`` of the
+    link spans), in-degree, referring-doc count, and the top-``k``
+    anchor texts.
 
     The classic web-corpus quality/relevance signal (anchor text
     describes the *target*, not the source — the original web-search
@@ -154,10 +149,10 @@ def anchor_text_index(
     and top-k branches then both key on target, so AQE reuses one
     target partitioning for the final join.
     """
-    t = F.col(target_col).alias("target")
+    t = F.col("media_ref").alias("target")
     pairs = (
-        links.where(F.col(target_col).isNotNull())
-        .groupBy(t, F.col(text_col).alias("text"))
+        links.where(F.col("media_ref").isNotNull())
+        .groupBy(t, "text")
         .agg(F.count("*").alias("cnt"))
     )
     w = Window.partitionBy("target").orderBy(
@@ -177,11 +172,11 @@ def anchor_text_index(
         )
     )
     totals = (
-        links.where(F.col(target_col).isNotNull())
+        links.where(F.col("media_ref").isNotNull())
         .groupBy(t)
         .agg(
             F.count("*").alias("n_refs"),
-            F.count_distinct(F.col(doc_col)).alias("n_docs"),
+            F.count_distinct("doc_id").alias("n_docs"),
         )
     )
     return totals.join(top, "target").select(

@@ -32,14 +32,15 @@ from pyspark.sql import functions as F
 from web_content_extractor_spark.functions.text_quality import tokens
 
 
-def tfidf_topk(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, term, tf, tfidf, rank) for each document's top-k terms.
+def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
+    """(doc_id, term, tf, tfidf, rank) for each document's top-k terms
+    of ``docs.text``.
 
     idf = ln((N + 1) / (df + 1)) + 1 (smoothed, sklearn-style); rank
     by (tfidf desc, term asc) via row_number, keep rank <= k.
     """
     terms = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -72,8 +73,8 @@ def tfidf_topk(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame
     )
 
 
-def vocab_topk(docs: DataFrame, v: int = 1000, text_col: str = "text") -> DataFrame:
-    """Corpus vocabulary: the top-``v`` tokens by frequency, with rank
+def vocab_topk(docs: DataFrame, v: int = 1000) -> DataFrame:
+    """Corpus vocabulary: the top-``v`` ``docs.text`` tokens by frequency, with rank
     and cumulative coverage of the token stream.
 
     The tokenizer-prep / stopword-discovery op: ``coverage`` at rank r
@@ -88,7 +89,7 @@ def vocab_topk(docs: DataFrame, v: int = 1000, text_col: str = "text") -> DataFr
 
     Rank ties break by token text — deterministic across engines.
     """
-    toks = docs.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
     counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     tot = counts.agg(F.sum("cnt").alias("total"))
     ranked = (
@@ -109,8 +110,8 @@ def vocab_topk(docs: DataFrame, v: int = 1000, text_col: str = "text") -> DataFr
     )
 
 
-def unigram_logprob_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """CCNet-style language-model quality proxy: per-document mean
+def unigram_logprob_scores(docs: DataFrame) -> DataFrame:
+    """CCNet-style language-model quality proxy: per-document (text) mean
     negative log-probability under the corpus' own unigram model.
 
     score(d) = -(1/|d|) * sum ln(c_tok / N) = ln N - mean(ln c_tok) —
@@ -131,7 +132,7 @@ def unigram_logprob_scores(docs: DataFrame, text_col: str = "text") -> DataFrame
     NULL (nothing to average), kept for drop-not-fail visibility.
     """
     toks = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("tok")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     tot = counts.agg(F.sum("cnt").alias("n_total"))
@@ -149,11 +150,9 @@ def unigram_logprob_scores(docs: DataFrame, text_col: str = "text") -> DataFrame
     )
 
 
-def bpe_pair_counts(
-    docs: DataFrame, top: int = 200, text_col: str = "text"
-) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, top: int = 200) -> DataFrame:
     """First BPE-training merge step: corpus-weighted adjacent
-    character-pair counts over the word vocabulary.
+    character-pair counts over the word vocabulary of ``docs.text``.
 
     The op a tokenizer-training pipeline runs before every merge: count
     how often each adjacent symbol pair occurs across the corpus, pick
@@ -174,7 +173,7 @@ def bpe_pair_counts(
     (the DuckDB oracle substrings the same vocabulary identically).
     Rank ties break by pair text — deterministic on both sides.
     """
-    words = docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     wc = (
         words.filter(F.col("w").rlike("^[a-z0-9]+$") & (F.length("w") >= 2))
         .groupBy("w")
@@ -203,8 +202,8 @@ def bpe_pair_counts(
     )
 
 
-def bigram_logprob_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Bigram-LM quality proxy: per-doc mean negative conditional
+def bigram_logprob_scores(docs: DataFrame) -> DataFrame:
+    """Bigram-LM quality proxy: per-doc (text) mean negative conditional
     log-prob under the corpus' own bigram model.
 
     score(d) = -(1/|bigrams|) * sum ln P(w2 | w1), with the MLE
@@ -227,7 +226,7 @@ def bigram_logprob_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
     bi = docs.select(
-        "doc_id", F.explode(word_ngrams_all(F.col(text_col), 2)).alias("bg")
+        "doc_id", F.explode(word_ngrams_all(F.col("text"), 2)).alias("bg")
     )
     c2 = bi.groupBy("bg").agg(F.count("*").alias("c2"))
     c1 = (

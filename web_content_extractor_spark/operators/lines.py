@@ -29,12 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_lines(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_df: int = 2,
-) -> DataFrame:
-    """Strip lines whose normalized form appears in >= ``min_df`` docs.
+def dedup_lines(docs: DataFrame, min_df: int = 2) -> DataFrame:
+    """Strip ``docs.text`` lines whose normalized form appears in >=
+    ``min_df`` docs.
 
     Returns (doc_id, text, n_lines_kept, n_lines_dropped) with the
     surviving lines re-joined by ``\\n`` in original order.  Documents
@@ -47,7 +44,7 @@ def dedup_lines(
     """
     lines = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("line_key", F.lower(F.trim("line")))
 
     boiler = (
@@ -94,9 +91,8 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 64,
     overlap: int = 16,
-    text_col: str = "text",
 ) -> DataFrame:
-    """Split each doc into whitespace-token chunks with overlap.
+    """Split each doc's text into whitespace-token chunks with overlap.
 
     Chunk i covers tokens [i*step, i*step + chunk_size) with
     step = chunk_size - overlap; the final chunk may be short.  Every
@@ -112,7 +108,7 @@ def chunk_documents(
     step = chunk_size - overlap
 
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
         lambda t: F.length(t) > 0,
     )
     d = docs.select("doc_id", toks.alias("w")).withColumn("n", F.size("w"))

@@ -441,10 +441,12 @@ def _fake_features(payload: bytes, n: int = 8) -> list[float]:
     return [b / 255.0 for b in digest[:n]]
 
 
+# thumbnail bound (w, h) of extract_image_features
+THUMB = (32, 32)
+
+
 def extract_image_features(
-    media: DataFrame,
-    deterministic_fake: bool = True,
-    thumb: tuple[int, int] = (32, 32),
+    media: DataFrame, deterministic_fake: bool = True
 ) -> DataFrame:
     """Arrow-batched decode + feature stage over binary payloads.
 
@@ -463,7 +465,7 @@ def extract_image_features(
                 pdf["media_id"], pdf["doc_id"], pdf["payload"]
             ):
                 payload = bytes(payload) if payload is not None else b""
-                tw, th = thumb
+                tw, th = THUMB
                 feats = None
                 if not deterministic_fake:
                     try:
@@ -472,7 +474,7 @@ def extract_image_features(
                         decoded = None  # drop-not-fail: fake fallback
                     if decoded is not None:
                         w, h, feats = decoded
-                        tw, th = min(thumb[0], w), min(thumb[1], h)
+                        tw, th = min(THUMB[0], w), min(THUMB[1], h)
                 if feats is None:  # fake backend or undecodable payload
                     feats = _fake_features(payload)
                 out["media_id"].append(media_id)
@@ -607,11 +609,9 @@ def synth_bmp(seed: int, w: int = 16, h: int = 16, flip_pixels: int = 0) -> byte
     return _pack_bmp24(px, w, h)
 
 
-def synth_bmp_affine(
-    seed: int, w: int = 16, h: int = 16, flip_pixels: int = 0
-) -> bytes:
+def synth_bmp_affine(seed: int, flip_pixels: int = 0) -> bytes:
     """Closed-form sibling of ``synth_bmp`` for oracle-checked image
-    dedup: pixel p (row-major in the DECODED orientation) is gray
+    dedup, 16x16 px: pixel p (row-major in the DECODED orientation) is gray
     ``((2*seed+1) * (p+17) * 40503 + 97*seed) % 256`` on all three
     channels, so an external engine can recompute the decoded image —
     and hence the block-mean aHash — in pure integer SQL.  The
@@ -622,13 +622,13 @@ def synth_bmp_affine(
     pixels like ``synth_bmp``.  Still a real BMP: the Spark path
     exercises encode -> ``_decode_bmp`` -> ``_average_hash_bits``
     unchanged."""
-    px = bytearray(w * h * 3)
-    for p in range(w * h):
+    px = bytearray(16 * 16 * 3)
+    for p in range(16 * 16):
         g = ((2 * seed + 1) * (p + 17) * 40503 + 97 * seed) % 256
         if p < flip_pixels:
             g ^= 0xFF
         px[3 * p] = px[3 * p + 1] = px[3 * p + 2] = g
-    return _pack_bmp24(px, w, h)
+    return _pack_bmp24(px, 16, 16)
 
 
 def _pack_bmp24(px: bytearray, w: int, h: int) -> bytes:

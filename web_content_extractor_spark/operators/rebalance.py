@@ -12,12 +12,12 @@ This module rebalances by WEIGHT (bytes, tokens, ...) instead:
 
 1. draw a byte-weighted key sample (Efraimidis–Spirakis A-Res race
    ``-ln(u)/w``, planned as TakeOrderedAndProject — per-partition
-   heaps, ``partitions * bucket_factor * oversample`` rows ever reach
+   heaps, ``partitions * BUCKET_FACTOR * OVERSAMPLE`` rows ever reach
    the driver);
-2. cut the key space into ``K = partitions * bucket_factor`` buckets
+2. cut the key space into ``K = partitions * BUCKET_FACTOR`` buckets
    of ~equal total weight (plain quantiles of the weighted sample);
 3. interleave buckets into ``partitions`` classes (``bucket mod
-   partitions``) — each class owns ``bucket_factor`` byte-equal
+   partitions``) — each class owns ``BUCKET_FACTOR`` byte-equal
    buckets, so classes are byte-equal AND row-count-concentrated
    (mixing byte-heavy/row-light and byte-light/row-heavy key regions);
 4. one hash ``repartition`` exchange on a PERFECT-HASH key: each
@@ -71,9 +71,13 @@ __all__ = [
 # boundaries are embedded as a literal array in the bucket projection;
 # keep the per-row scan cheap
 MAX_BUCKETS = 4096
+# byte-equal buckets per partition class, and sampled rows per bucket
+BUCKET_FACTOR, OVERSAMPLE = 32, 8
+# rand() seed of the weighted boundary sample
+SAMPLE_SEED = 7
 
 
-def murmur3_int32(x: int, seed: int = 42) -> int:
+def murmur3_int32(x: int) -> int:
     """Spark's ``Murmur3Hash`` of a non-null IntegerType value
     (``hashInt``, default seed 42): one 4-byte block mix + the
     x86_32 finalizer with len=4.  Returns the SIGNED int32 Spark
@@ -82,7 +86,7 @@ def murmur3_int32(x: int, seed: int = 42) -> int:
     k = (x & 0xFFFFFFFF) * 0xCC9E2D51 & 0xFFFFFFFF
     k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
     k = k * 0x1B873593 & 0xFFFFFFFF
-    h = (seed ^ k) & 0xFFFFFFFF
+    h = (42 ^ k) & 0xFFFFFFFF
     h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
     h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
     h ^= 4  # finalizer: total byte length of the hashed input
@@ -116,14 +120,12 @@ def weighted_range_boundaries(
     key_col: str,
     weight,
     buckets: int,
-    oversample: int = 8,
-    seed: int = 7,
 ) -> list:
     """``buckets - 1`` key boundaries at equal WEIGHT quantiles.
 
     Weighted sampling via the exponential race (Efraimidis–Spirakis
     A-Res): every row draws race key ``-ln(u)/w`` and the ``buckets *
-    oversample`` smallest keys form the sample.  ``orderBy(race)
+    OVERSAMPLE`` smallest keys form the sample.  ``orderBy(race)
     .limit(n)`` plans as TakeOrderedAndProject: no global sort,
     per-partition top-n heaps + one driver merge.
 
@@ -140,10 +142,10 @@ def weighted_range_boundaries(
     layout this operator exists to replace.
 
     Null/non-positive weights count as weight 1 (a zero-byte row still
-    occupies a row slot downstream).  Deterministic for a fixed seed
-    and input layout.
+    occupies a row slot downstream).  Deterministic for a fixed input
+    layout (``SAMPLE_SEED``).
     """
-    n = buckets * oversample
+    n = buckets * OVERSAMPLE
     w = F.greatest(
         F.coalesce(weight.cast("double"), F.lit(1.0)), F.lit(1.0)
     )
@@ -151,7 +153,7 @@ def weighted_range_boundaries(
     # NULLS FIRST straight into the sample and crash the driver-side
     # max below) — clamp u away from 0; the clamped key is merely
     # "extremely unlucky", not corrupt
-    u = F.greatest(F.rand(seed), F.lit(1e-300))
+    u = F.greatest(F.rand(SAMPLE_SEED), F.lit(1e-300))
     sample = (
         df.select(
             F.col(key_col).alias("__k"),
@@ -191,9 +193,6 @@ def byte_balanced(
     key_col: str,
     weight,
     partitions: int,
-    bucket_factor: int = 32,
-    oversample: int = 8,
-    seed: int = 7,
 ) -> DataFrame:
     """Repartition ``df`` into ``partitions`` partitions of ~equal
     total ``weight`` (not ~equal rows).
@@ -205,7 +204,7 @@ def byte_balanced(
     atomicity — one document heavier than ``total_weight/partitions``
     makes max/mean >= its share no matter the layout (max/mean 2.4 at
     P=128 on a corpus whose giants are each ~1.1e-3 of total weight);
-    (b) interleave averaging — classes aggregate ``bucket_factor``
+    (b) interleave averaging — classes aggregate ``BUCKET_FACTOR``
     byte-equal buckets, and once ``partitions`` approaches
     ``MAX_BUCKETS / 8`` the factor collapses toward 1, class variance
     rises, and duplicate boundary keys leave some classes empty
@@ -229,10 +228,8 @@ def byte_balanced(
         )
     if partitions == 1:
         return df.coalesce(1)
-    buckets = min(partitions * bucket_factor, MAX_BUCKETS)
-    bounds = weighted_range_boundaries(
-        df, key_col, weight, buckets, oversample=oversample, seed=seed
-    )
+    buckets = min(partitions * BUCKET_FACTOR, MAX_BUCKETS)
+    bounds = weighted_range_boundaries(df, key_col, weight, buckets)
     if not bounds:
         return df
     # bucket = #bounds <= key, via numpy binary search in an Arrow

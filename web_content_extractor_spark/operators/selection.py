@@ -61,50 +61,38 @@ from web_content_extractor_spark.operators.corpus import (
 )
 
 
-def _uniform(docs: DataFrame, id_col: str, seed: int) -> Column:
-    """Deterministic uniform in (0, 1]: (h + 1) / 2^31-1 over the id
-    hash (h in [0, M31-1], so u is never 0)."""
-    return (_id_hash31(docs, id_col, seed) + F.lit(1)).cast(
+def _uniform(docs: DataFrame, seed: int) -> Column:
+    """Deterministic uniform in (0, 1]: (h + 1) / 2^31-1 over the
+    doc_id hash (h in [0, M31-1], so u is never 0)."""
+    return (_id_hash31(docs, "doc_id", seed) + F.lit(1)).cast(
         "double"
     ) / F.lit(float(M31))
 
 
-def weighted_sample(
-    docs: DataFrame,
-    k: int = 100,
-    seed: int = 11,
-    weight_col: str = "weight",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def weighted_sample(docs: DataFrame, k: int = 100, seed: int = 11) -> DataFrame:
     """Efraimidis–Spirakis weighted sample of k docs without
     replacement: keep the k smallest ``es_key = -ln(u) / w``.
 
-    ``weight_col`` must be > 0 (callers clamp; a zero weight would be
+    ``weight`` must be > 0 (callers clamp; a zero weight would be
     an infinite key, i.e. never sampled — we keep that semantics by
     clamping to a tiny epsilon instead of erroring).  Ties in the
-    float key are broken by id for a total, engine-independent order.
+    float key are broken by doc_id for a total, engine-independent order.
 
     Plan shape: codegen projection + TakeOrderedAndProject (per-
     partition heap top-k, single bounded merge) — no shuffle, no
     global sort, survives any corpus size with driver memory O(P·k).
     """
-    w = F.greatest(F.col(weight_col).cast("double"), F.lit(1e-12))
-    key = -F.log(_uniform(docs, id_col, seed)) / w
+    w = F.greatest(F.col("weight").cast("double"), F.lit(1e-12))
+    key = -F.log(_uniform(docs, seed)) / w
     return (
         docs.withColumn("es_key", F.round(key, 6))
-        .orderBy("es_key", id_col)
+        .orderBy("es_key", "doc_id")
         .limit(k)
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    k: int = 10,
-    seed: int = 13,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exactly min(k, |stratum|) docs per stratum, chosen in
+def stratified_sample(docs: DataFrame, k: int = 10, seed: int = 13) -> DataFrame:
+    """Exactly min(k, |stratum|) docs per ``source`` stratum, chosen in
     reproducible portable-hash order (a per-stratum simple random
     sample that reruns bit-identically).
 
@@ -112,8 +100,8 @@ def stratified_sample(
     hash order (stable across reruns; useful for taking a prefix of a
     larger pre-drawn sample without resampling).
     """
-    h = _id_hash31(docs, id_col, seed)
-    w = Window.partitionBy(stratum_col).orderBy(h.asc(), F.col(id_col))
+    h = _id_hash31(docs, "doc_id", seed)
+    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id"))
     return (
         docs.withColumn("draw", F.row_number().over(w))
         .where(F.col("draw") <= k)
@@ -125,12 +113,11 @@ def hashed_bigram_features(
     is_target: Column,
     n_buckets: int = 256,
     seed: int = 17,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, __tgt, bucket): one row per bigram occurrence, hashed into
-    ``n_buckets`` buckets via portable vocab ids (the shared feature
-    map of ``dsir_weights`` and ``train_quality_classifier``).
+    """(doc_id, __tgt, bucket): one row per ``text`` bigram occurrence,
+    hashed into ``n_buckets`` buckets via portable vocab ids (the
+    shared feature map of ``dsir_weights`` and
+    ``train_quality_classifier``).
 
     Vocab ids are a dense row_number over the sorted distinct unigrams
     so any SQL engine reproduces the exact integers; the id window
@@ -145,7 +132,7 @@ def hashed_bigram_features(
     base = docs.withColumn("__tgt", is_target)
 
     uni = base.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
     vocab = (
         uni.distinct()
@@ -153,11 +140,11 @@ def hashed_bigram_features(
     )
 
     bi = base.select(
-        id_col,
+        "doc_id",
         "__tgt",
-        F.explode(word_ngrams_all(F.col(text_col), 2)).alias("bg"),
+        F.explode(word_ngrams_all(F.col("text"), 2)).alias("bg"),
     ).select(
-        id_col,
+        "doc_id",
         "__tgt",
         F.substring_index("bg", " ", 1).alias("w1"),
         F.substring_index("bg", " ", -1).alias("w2"),
@@ -179,7 +166,7 @@ def hashed_bigram_features(
             )
             % F.lit(n_buckets),
         )
-        .select(id_col, "__tgt", "bucket")
+        .select("doc_id", "__tgt", "bucket")
     )
 
 
@@ -188,8 +175,6 @@ def dsir_weights(
     is_target: Column,
     n_buckets: int = 256,
     seed: int = 17,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """DSIR hashed-bigram importance log-weights (Xie et al. 2023).
 
@@ -213,12 +198,9 @@ def dsir_weights(
     (drop-not-fail visibility); resampling = ``weighted_sample`` over
     ``exp(dsir_logw)``.
 
-    Output: (id, n_feats, dsir_logw rounded to 6 dp).
+    Output: (doc_id, n_feats, dsir_logw rounded to 6 dp).
     """
-    feats = hashed_bigram_features(
-        docs, is_target, n_buckets=n_buckets, seed=seed,
-        text_col=text_col, id_col=id_col,
-    )
+    feats = hashed_bigram_features(docs, is_target, n_buckets=n_buckets, seed=seed)
 
     counts = feats.groupBy("bucket").agg(
         F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("c_tgt"),
@@ -240,17 +222,17 @@ def dsir_weights(
 
     scored = (
         feats.join(F.broadcast(lr), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_feats"),
             F.round(F.sum("lr"), 6).alias("dsir_logw"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
             "dsir_logw",
         )
@@ -261,11 +243,8 @@ def train_quality_classifier(
     docs: DataFrame,
     is_target: Column,
     n_buckets: int = 256,
-    seed: int = 17,
     iters: int = 10,
     learning_rate: float = 2.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> dict:
     """Model-based quality filter: train a logistic-regression
     classifier on the hashed-bigram features (full-batch gradient
@@ -292,31 +271,28 @@ def train_quality_classifier(
     measured ~3x slower from per-iteration stage latency alone).
 
     The feature table is built ONCE: per-(doc, bucket) counts with the
-    label attached, repartitioned AND sorted by id (complete contiguous
+    label attached, repartitioned AND sorted by doc_id (complete contiguous
     docs per partition — the kernel's group-walk invariant), persisted.
     Returns {"weights", "bias", "losses", "n_docs",
-    "scores": DataFrame(id, p_target, y)}.
+    "scores": DataFrame(doc_id, p_target, is_target)}.
     """
     spark = docs.sparkSession
-    feats = hashed_bigram_features(
-        docs, is_target, n_buckets=n_buckets, seed=seed,
-        text_col=text_col, id_col=id_col,
-    )
+    feats = hashed_bigram_features(docs, is_target, n_buckets=n_buckets)
     # ONE cached feature table: per-(doc, bucket) counts with the label
     # attached, repartitioned AND sorted by id so every partition holds
     # complete, contiguous documents — the invariant the gradient
     # kernel's group walk relies on
     xy = (
-        feats.groupBy(id_col, "bucket")
+        feats.groupBy("doc_id", "bucket")
         .agg(F.count("*").cast("double").alias("cnt"))
         .join(
             feats.select(
-                id_col, F.col("__tgt").cast("double").alias("y")
+                "doc_id", F.col("__tgt").cast("double").alias("y")
             ).distinct(),
-            id_col,
+            "doc_id",
         )
-        .repartition(F.col(id_col))
-        .sortWithinPartitions(id_col)
+        .repartition(F.col("doc_id"))
+        .sortWithinPartitions("doc_id")
         .persist()
     )
     if xy.count() == 0:
@@ -333,7 +309,7 @@ def train_quality_classifier(
     n_docs = 0
     for _ in range(iters):
         partials = xy.mapInPandas(
-            _logit_grad_partials(w, bias, id_col),
+            _logit_grad_partials(w, bias),
             schema="g array<double>, gb double, loss_sum double, n long",
         ).collect()
         G = np.zeros(n_buckets)
@@ -355,13 +331,13 @@ def train_quality_classifier(
     )
     scores = (
         xy.join(F.broadcast(wdf), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(F.col("cnt") * F.col("wgt")).alias("z"),
             F.max("y").alias("y"),
         )
         .select(
-            id_col,
+            "doc_id",
             (F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.col("z") + bias))))
             .alias("p_target"),
             F.col("y").cast("boolean").alias("is_target"),
@@ -376,9 +352,10 @@ def train_quality_classifier(
     }
 
 
-def _logit_grad_partials(w: "object", bias: float, id_col: str):
+def _logit_grad_partials(w: "object", bias: float):
     """Arrow kernel: per-partition full-batch logistic-regression
-    gradient partials over the id-sorted (id, bucket, cnt, y) table.
+    gradient partials over the doc_id-sorted (doc_id, bucket, cnt, y)
+    table.
 
     Each partition walks its contiguous doc groups vectorized
     (reduceat over group boundaries; a group that straddles an Arrow
@@ -423,7 +400,7 @@ def _logit_grad_partials(w: "object", bias: float, id_col: str):
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             bks = pdf["bucket"].to_numpy().astype(np.int64)
             cts = pdf["cnt"].to_numpy().astype(np.float64)
             ys = pdf["y"].to_numpy().astype(np.float64)

@@ -49,7 +49,7 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
+def _collect_queries(queries: DataFrame):
     """Collect the (small by contract) query side into (ids, matrix).
 
     The same pattern as the LSH hyperplanes / IVF centroids: the query
@@ -57,7 +57,7 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
     corpus side streams through ONE scan with no q_vec carried through
     any join or shuffle.
     """
-    rows = queries.select(id_col, vec_col).collect()
+    rows = queries.select("vec_id", "embedding").collect()
     ids = [r[0] for r in rows]
     Q = (
         np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
@@ -67,8 +67,8 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
     return ids, Q
 
 
-def _empty_topk(embeddings: DataFrame, id_col: str) -> DataFrame:
-    id_type = dict(embeddings.dtypes)[id_col]
+def _empty_topk(embeddings: DataFrame) -> DataFrame:
+    id_type = dict(embeddings.dtypes)["vec_id"]
     return embeddings.sparkSession.createDataFrame(
         [],
         f"query_id {id_type}, neighbor_id {id_type}, cos_sim double, rank int",
@@ -135,11 +135,7 @@ def _window_topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, neighbor_id, cos, rank).
 
@@ -150,11 +146,11 @@ def brute_force_topk(
     window resolves the global top-k — the former crossJoin scored each
     pair with an interpreted aggregate(zip_with(...)), ~10-30x slower.
     """
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
+        return _empty_topk(embeddings)
     QN = _norm_rows(Q).T  # (dim, m)
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
     qid_frame = pd.DataFrame({"query_id": q_ids})
 
     def score(batches):
@@ -162,14 +158,14 @@ def brute_force_topk(
             if not len(pdf):
                 continue
             V = _norm_rows(
-                np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             )
             cos = np.round(V @ QN, 6)  # (n, m)
             n, m = cos.shape
             out = pd.DataFrame(
                 {
                     "query_id": np.tile(qid_frame["query_id"].to_numpy(), n),
-                    "neighbor_id": np.repeat(pdf[id_col].to_numpy(), m),
+                    "neighbor_id": np.repeat(pdf["vec_id"].to_numpy(), m),
                     "cos_sim": cos.ravel(),
                 }
             )
@@ -183,18 +179,14 @@ def brute_force_topk(
                 .head(k)
             )
 
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
+    scored = embeddings.select("vec_id", "embedding").mapInPandas(
         score, schema=f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
     )
     return _window_topk(scored, k)
 
 
 def exact_near_duplicates(
-    corpus: DataFrame,
-    batch: DataFrame,
-    min_cos: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, batch: DataFrame, min_cos: float = 0.9
 ) -> DataFrame:
     """Exact embedding near-dups of a (small) candidate batch vs the
     corpus: (batch_id, corpus_id, cos_sim >= min_cos), self excluded.
@@ -211,9 +203,9 @@ def exact_near_duplicates(
     """
     import pandas as pd
 
-    brows = batch.select(id_col, vec_col).collect()
+    brows = batch.select("vec_id", "embedding").collect()
     if not brows:
-        id_type = dict(corpus.dtypes)[id_col]
+        id_type = dict(corpus.dtypes)["vec_id"]
         return corpus.sparkSession.createDataFrame(
             [], f"batch_id {id_type}, corpus_id {id_type}, cos_sim double"
         )
@@ -224,12 +216,12 @@ def exact_near_duplicates(
     def score(batches):
         for pdf in batches:
             V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             ) if len(pdf) else np.zeros((0, Bn.shape[0]))
             if len(pdf):
                 V = _norm_rows(V)
             cos = np.round(V @ Bn, 6)  # (n, m)
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             rows_i, cols_j = np.nonzero(cos >= min_cos)
             out = {
                 "batch_id": [b_ids[j] for j in cols_j],
@@ -239,8 +231,8 @@ def exact_near_duplicates(
             pdf_out = pd.DataFrame(out, columns=["batch_id", "corpus_id", "cos_sim"])
             yield pdf_out[pdf_out["batch_id"] != pdf_out["corpus_id"]]
 
-    id_type = dict(corpus.dtypes)[id_col]
-    return corpus.select(id_col, vec_col).mapInPandas(
+    id_type = dict(corpus.dtypes)["vec_id"]
+    return corpus.select("vec_id", "embedding").mapInPandas(
         score,
         schema=f"batch_id {id_type}, corpus_id {id_type}, cos_sim double",
     )
@@ -300,9 +292,6 @@ def lsh_topk(
     r: int = 4,
     tables: int = 8,
     dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via multi-table hyperplane LSH.
 
@@ -310,11 +299,11 @@ def lsh_topk(
     corpus-side cost is |tables| bucket probes instead of a full scan;
     tests measure recall vs brute force.
     """
-    planes = hyperplanes(dim, r * tables, seed)
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    planes = hyperplanes(dim, r * tables)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
-    id_type = dict(embeddings.dtypes)[id_col]
+        return _empty_topk(embeddings)
+    id_type = dict(embeddings.dtypes)["vec_id"]
     # query buckets computed driver-side with the SAME numpy formula as
     # the corpus-side lsh_buckets kernel (sign rule + bit packing), so
     # no q_vec ever enters the join: the probe table is (query_id,
@@ -332,9 +321,9 @@ def lsh_topk(
         f"query_id {id_type}, table int, bucket bigint",
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.posexplode(lsh_buckets(F.col(vec_col), planes, r, tables)).alias(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.posexplode(lsh_buckets(F.col("embedding"), planes, r, tables)).alias(
             "table", "bucket"
         ),
     )
@@ -373,8 +362,6 @@ def ivf_build(
     embeddings: DataFrame,
     n_centroids: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample: int | None = 4096,
 ) -> list[list[float]]:
     """Deterministic IVF coarse quantizer: spherical k-means.
@@ -404,11 +391,11 @@ def ivf_build(
     if sample is not None:
         rows = (
             embeddings.select(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_centroids))
+                F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_centroids))
                 .cast("int")
                 .alias("cid"),
-                F.col(vec_col).alias("v"),
-                F.xxhash64(F.col(id_col)).alias("h"),
+                F.col("embedding").alias("v"),
+                F.xxhash64(F.col("vec_id")).alias("h"),
             )
             .orderBy("h", "v")
             .limit(sample)
@@ -451,7 +438,9 @@ def ivf_build(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                V = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
+                )
                 cids = pdf["cid"].to_numpy()
                 for c in np.unique(cids):
                     sel = V[cids == c]
@@ -494,15 +483,15 @@ def ivf_build(
         return out
 
     init = embeddings.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_centroids))
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_centroids))
         .cast("int")
         .alias("cid"),
-        F.col(vec_col),
+        F.col("embedding"),
     )
     C = means(init, None)
     for _ in range(iters):
         assigned = embeddings.select(
-            _assign_udf(C)(F.col(vec_col)).alias("cid"), F.col(vec_col)
+            _assign_udf(C)(F.col("embedding")).alias("cid"), F.col("embedding")
         )
         C = means(assigned, C)
     return C
@@ -515,8 +504,6 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample: int | None = 4096,
 ) -> DataFrame:
     """Approximate top-k via IVF: probe the ``nprobe`` nearest inverted
@@ -531,18 +518,18 @@ def ivf_topk(
     """
     # collect the (small) query side FIRST: an empty query set must
     # not pay the corpus-wide k-means index build
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
-    C = ivf_build(embeddings, n_centroids, iters, id_col, vec_col, sample)
+        return _empty_topk(embeddings)
+    C = ivf_build(embeddings, n_centroids, iters, sample)
     assign = _assign_udf(C)
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        assign(F.col(vec_col)).alias("cid"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        assign(F.col("embedding")).alias("cid"),
     )
     Cn = _norm_rows(np.asarray(C, dtype=np.float64)).T
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
     # probe selection driver-side (the query set is collected anyway for
     # the scoring matrix); the probe table joined onto the corpus is
     # (query_id, cid) rows only, never a vector
@@ -583,30 +570,25 @@ def _probe_table(
 
 
 def embedding_near_duplicates(
-    embeddings: DataFrame,
-    min_cos: float = 0.95,
-    r: int = 6,
-    tables: int = 6,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, min_cos: float = 0.95
 ) -> DataFrame:
-    """Near-dup pairs by embedding cosine, multi-table LSH self-join.
+    """Near-dup pairs by embedding cosine, multi-table LSH self-join
+    over the 64-dim ``embedding`` column.
 
     At min_cos 0.95 (angle ~18deg, per-plane agreement ~0.9) the r=6 /
     L=6 configuration catches a true near-dup pair with prob ~0.98
     while keeping bucket sizes ~n/2^6 per table.
     """
-    planes = hyperplanes(dim, r * tables, seed)
+    r = tables = 6
+    planes = hyperplanes(64, r * tables)
     # id-only band self-join (the minhash band-join shape,
     # dedup_docs.py): the (table, bucket) shuffle carries two ids per
     # row, never the vectors — carrying both vectors multiplied shuffle
     # bytes by dim x L tables.  Vectors re-attach by id join after the
     # pair dedup, then one numpy kernel scores each pair row-wise.
     d = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(lsh_buckets(F.col(vec_col), planes, r, tables)).alias(
+        F.col("vec_id").alias("id"),
+        F.posexplode(lsh_buckets(F.col("embedding"), planes, r, tables)).alias(
             "table", "bucket"
         ),
     )
@@ -619,13 +601,13 @@ def embedding_near_duplicates(
         .dropDuplicates(["id_a", "id_b"])
     )
     va = embeddings.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a")
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a")
     )
     vb = embeddings.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b")
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b")
     )
     withv = pairs.join(va, "id_a").join(vb, "id_b")
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
 
     def score(batches):
         for pdf in batches:
@@ -657,10 +639,7 @@ def semantic_duplicates(
     threshold: float = 0.95,
     n_centroids: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cluster_rows: int = 200_000,
-    sample: int | None = 4096,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup via k-means + within-
     cluster cosine pruning.
@@ -686,11 +665,11 @@ def semantic_duplicates(
     degenerate embedding space) instead of silently OOM-ing an
     executor.
     """
-    C = ivf_build(embeddings, n_centroids, iters, id_col, vec_col, sample)
+    C = ivf_build(embeddings, n_centroids, iters)
     assigned = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        _assign_udf(C)(F.col(vec_col)).alias("cid"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        _assign_udf(C)(F.col("embedding")).alias("cid"),
     )
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -733,7 +712,7 @@ def semantic_duplicates(
 
     # derive the id field type from the input (string vec_ids must not
     # silently coerce at the Arrow boundary); dup_of shares it
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
     return assigned.groupBy("cid").applyInPandas(
         prune,
         schema=(
@@ -743,15 +722,12 @@ def semantic_duplicates(
     )
 
 
+# Lloyd rounds and init seed of every PQ codebook
+PQ_ITERS, PQ_SEED = 5, 42
+
+
 def pq_train(
-    embeddings: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    iters: int = 5,
-    sample: int = 4096,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, m: int = 8, n_codes: int = 16, sample: int = 4096
 ) -> "np.ndarray":
     """Train product-quantization codebooks: (m, n_codes, dim/m).
 
@@ -767,8 +743,8 @@ def pq_train(
     """
     rows = (
         embeddings.select(
-            F.col(vec_col).alias("v"),
-            F.xxhash64(F.col(id_col)).alias("h"),
+            F.col("embedding").alias("v"),
+            F.xxhash64(F.col("vec_id")).alias("h"),
         )
         .orderBy("h", "v")
         .limit(sample)
@@ -782,12 +758,12 @@ def pq_train(
         raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
     dsub = dim // m
     k = min(n_codes, len(X))
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(PQ_SEED)
     books = np.zeros((m, n_codes, dsub))
     for s in range(m):
         Xs = X[:, s * dsub : (s + 1) * dsub]
         C = Xs[rng.choice(len(Xs), size=k, replace=False)].copy()
-        for _ in range(iters):
+        for _ in range(PQ_ITERS):
             # squared L2 assignment: ||x||^2 - 2 x.c + ||c||^2
             d2 = (
                 (Xs * Xs).sum(axis=1, keepdims=True)
@@ -805,12 +781,7 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: "np.ndarray",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks: "np.ndarray") -> DataFrame:
     """Encode every vector to its PQ codes + exact norm — ONE narrow
     mapInPandas pass, no shuffle.  Output (id, codes array<int>,
     vnorm): ``codes[s]`` indexes ``codebooks[s]``; ``vnorm`` is kept
@@ -821,14 +792,14 @@ def pq_encode(
     B = np.asarray(codebooks, dtype=np.float64)  # (m, n_codes, dsub)
     m, _, dsub = B.shape
     Bn2 = (B * B).sum(axis=2)  # (m, n_codes)
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
 
     def enc(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             S = V.reshape(len(V), m, dsub)
             # (n, m, n_codes) distances via one einsum per term
@@ -836,13 +807,13 @@ def pq_encode(
             codes = np.argmin(d2, axis=2).astype(np.int32)
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col].to_numpy(),
+                    "id": pdf["vec_id"].to_numpy(),
                     "codes": list(codes),
                     "vnorm": np.linalg.norm(V, axis=1),
                 }
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         enc, schema=f"id {id_type}, codes array<int>, vnorm double"
     )
 
@@ -869,8 +840,6 @@ def _adc_cut_and_rerank(
     Q: "np.ndarray",
     id_type: str,
     k: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Shared ADC tail: global quantized-score cut to ``keep``
     candidates per query, then the exact cosine re-rank.  The
@@ -889,7 +858,7 @@ def _adc_cut_and_rerank(
         .select("query_id", "neighbor_id")
     )
     vecs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     score, schema = _matrix_scorer(q_ids, Q, id_type, topk=k)
     rescored = F.broadcast(cand).join(vecs, "neighbor_id").mapInPandas(
@@ -911,22 +880,11 @@ class ANNIndex:
         self.centroids = centroids  # (kc, dim) for IVF routing, or None
 
 
-def pq_index(
-    embeddings: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    iters: int = 5,
-    sample: int = 4096,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> ANNIndex:
+def pq_index(embeddings: DataFrame, m: int = 8, n_codes: int = 16) -> ANNIndex:
     """Train codebooks + encode the corpus: the flat (no-routing) PQ
     index.  ``codes`` is one narrow pass over the corpus."""
-    books = pq_train(
-        embeddings, m, n_codes, iters, sample, seed, id_col, vec_col
-    )
-    return ANNIndex(books, pq_encode(embeddings, books, id_col, vec_col))
+    books = pq_train(embeddings, m, n_codes)
+    return ANNIndex(books, pq_encode(embeddings, books))
 
 
 def pq_search(
@@ -935,17 +893,13 @@ def pq_search(
     queries: DataFrame,
     k: int = 10,
     refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC scan of a built PQ index + exact re-rank (``embeddings`` is
     read only for the refine*k candidate vectors)."""
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
-    return _pq_search_collected(
-        index, embeddings, q_ids, Q, k, refine, id_col, vec_col
-    )
+        return _empty_topk(embeddings)
+    return _pq_search_collected(index, embeddings, q_ids, Q, k, refine)
 
 
 def _pq_search_collected(
@@ -955,14 +909,12 @@ def _pq_search_collected(
     Q: "np.ndarray",
     k: int,
     refine: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     QN = _norm_rows(Q)
     LUT, offs = _adc_lut(QN, index.books)
     nq = len(q_ids)
     keep = refine * k
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
     q_arr = np.asarray(q_ids, dtype=object)
 
     def adc(batches):
@@ -998,9 +950,7 @@ def _pq_search_collected(
         adc,
         schema=f"query_id {id_type}, neighbor_id {id_type}, adc_cos double",
     )
-    return _adc_cut_and_rerank(
-        scored, keep, embeddings, q_ids, Q, id_type, k, id_col, vec_col
-    )
+    return _adc_cut_and_rerank(scored, keep, embeddings, q_ids, Q, id_type, k)
 
 
 def pq_topk(
@@ -1009,12 +959,7 @@ def pq_topk(
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
-    iters: int = 5,
-    sample: int = 4096,
     refine: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by asymmetric-distance PQ scan + exact
     re-rank (the IVF-PQ refinement stage, minus the IVF routing —
@@ -1035,15 +980,11 @@ def pq_topk(
     candidates from their true vectors.  ``refine`` >= corpus/k
     degenerates to brute force — the correctness anchor in tests.
     """
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
-    index = pq_index(
-        embeddings, m, n_codes, iters, sample, seed, id_col, vec_col
-    )
-    return _pq_search_collected(
-        index, embeddings, q_ids, Q, k, refine, id_col, vec_col
-    )
+        return _empty_topk(embeddings)
+    index = pq_index(embeddings, m, n_codes)
+    return _pq_search_collected(index, embeddings, q_ids, Q, k, refine)
 
 
 def ivfpq_index(
@@ -1052,21 +993,14 @@ def ivfpq_index(
     iters: int = 2,
     m: int = 16,
     n_codes: int = 32,
-    pq_iters: int = 5,
-    sample: int = 4096,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> ANNIndex:
     """IVF+PQ index: coarse centroids + codebooks trained, then ONE
     fused narrow pass encodes every vector to (cid, codes, vnorm).
     ``cid`` is the partition/bucket key to lay the codes table out by
     at real scale (probes become partition-pruned scans)."""
-    C = ivf_build(embeddings, n_centroids, iters, id_col, vec_col, sample)
-    books = pq_train(
-        embeddings, m, n_codes, pq_iters, sample, seed, id_col, vec_col
-    )
-    id_type = dict(embeddings.dtypes)[id_col]
+    C = ivf_build(embeddings, n_centroids, iters)
+    books = pq_train(embeddings, m, n_codes)
+    id_type = dict(embeddings.dtypes)["vec_id"]
     Cn = _norm_rows(np.asarray(C, dtype=np.float64)).T  # (dim, kc)
     B = np.asarray(books, dtype=np.float64)
     mm, _, dsub = B.shape
@@ -1077,7 +1011,7 @@ def ivfpq_index(
             if not len(pdf):
                 continue
             V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             cid = np.argmax(_norm_rows(V) @ Cn, axis=1).astype(np.int32)
             S = V.reshape(len(V), mm, dsub)
@@ -1085,14 +1019,14 @@ def ivfpq_index(
             codes = np.argmin(d2, axis=2).astype(np.int32)
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col].to_numpy(),
+                    "id": pdf["vec_id"].to_numpy(),
                     "cid": cid,
                     "codes": list(codes),
                     "vnorm": np.linalg.norm(V, axis=1),
                 }
             )
 
-    codes = embeddings.select(id_col, vec_col).mapInPandas(
+    codes = embeddings.select("vec_id", "embedding").mapInPandas(
         build_index,
         schema=f"id {id_type}, cid int, codes array<int>, vnorm double",
     )
@@ -1106,18 +1040,14 @@ def ivfpq_search(
     k: int = 10,
     nprobe: int = 4,
     refine: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Search a built IVF+PQ index: broadcast the (query, cid) probe
     table onto the cell-keyed codes, ADC-score only probed rows, exact
     re-rank the refine*k survivors."""
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
-    return _ivfpq_search_collected(
-        index, embeddings, q_ids, Q, k, nprobe, refine, id_col, vec_col
-    )
+        return _empty_topk(embeddings)
+    return _ivfpq_search_collected(index, embeddings, q_ids, Q, k, nprobe, refine)
 
 
 def _ivfpq_search_collected(
@@ -1128,10 +1058,8 @@ def _ivfpq_search_collected(
     k: int,
     nprobe: int,
     refine: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
     n_centroids = len(index.centroids)
     Cn = _norm_rows(index.centroids).T
     QN = _norm_rows(Q)
@@ -1183,9 +1111,7 @@ def _ivfpq_search_collected(
         adc,
         schema=f"query_id {id_type}, neighbor_id {id_type}, adc_cos double",
     )
-    return _adc_cut_and_rerank(
-        scored, keep, embeddings, q_ids, Q, id_type, k, id_col, vec_col
-    )
+    return _adc_cut_and_rerank(scored, keep, embeddings, q_ids, Q, id_type, k)
 
 
 def ivfpq_topk(
@@ -1197,12 +1123,7 @@ def ivfpq_topk(
     iters: int = 2,
     m: int = 16,
     n_codes: int = 32,
-    pq_iters: int = 5,
-    sample: int = 4096,
     refine: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF + PQ composition — the standard billion-scale ANN
     architecture: IVF routing bounds WHICH rows each query touches
@@ -1217,13 +1138,8 @@ def ivfpq_topk(
     :func:`ivfpq_search`; build once / search many for repeated query
     batches (persist ``index.codes``, ideally partitioned by cid).
     """
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     if not q_ids:
-        return _empty_topk(embeddings, id_col)
-    index = ivfpq_index(
-        embeddings, n_centroids, iters, m, n_codes, pq_iters, sample,
-        seed, id_col, vec_col,
-    )
-    return _ivfpq_search_collected(
-        index, embeddings, q_ids, Q, k, nprobe, refine, id_col, vec_col
-    )
+        return _empty_topk(embeddings)
+    index = ivfpq_index(embeddings, n_centroids, iters, m, n_codes)
+    return _ivfpq_search_collected(index, embeddings, q_ids, Q, k, nprobe, refine)

@@ -95,15 +95,17 @@ def per_host_link_stats(
     )
 
 
+# heavy_hitters' count-min sketch (relative error, confidence, seed)
+# and the expected sample hits of a true hitter
+CMS_EPS, CMS_CONFIDENCE, CMS_SEED = 1e-4, 0.99, 42
+HITTER_OVERSAMPLE = 20
+
+
 def heavy_hitters(
     df: DataFrame,
     key: str,
     min_frac: float = 0.01,
     row_id: str | None = None,
-    eps: float = 1e-4,
-    confidence: float = 0.99,
-    seed: int = 42,
-    oversample: int = 20,
 ) -> DataFrame:
     """Hot keys (frequency >= ``min_frac`` of non-null rows) without a
     full per-key shuffle — the detector that feeds ``salted_agg``'s
@@ -116,8 +118,8 @@ def heavy_hitters(
        (KBs), never per-key rows.
     2. Candidate keys from a deterministic row sample —
        ``xxhash64(row_id) % m == 0`` with m sized so a true hitter is
-       expected ``oversample`` times in the sample (miss probability
-       ~e^-oversample; value-hashing rows, not keys, keeps candidate
+       expected ``HITTER_OVERSAMPLE`` (20) times in the sample (miss
+       probability ~e^-20; value-hashing rows, not keys, keeps candidate
        probability proportional to frequency AND the sample identical
        under any partition layout).  Falls back to a seeded Bernoulli
        sample when no ``row_id`` column is available.
@@ -136,7 +138,7 @@ def heavy_hitters(
     total_row = df.agg(
         F.count(key_s).alias("n"),
         F.count_min_sketch(
-            key_s, F.lit(eps), F.lit(confidence), F.lit(seed)
+            key_s, F.lit(CMS_EPS), F.lit(CMS_CONFIDENCE), F.lit(CMS_SEED)
         ).alias("cms"),
     ).first()
     total = total_row["n"]
@@ -150,11 +152,11 @@ def heavy_hitters(
     cut = int(math.ceil(min_frac * total))
 
     if row_id is not None:
-        m = max(1, int(min_frac * total / oversample))
+        m = max(1, int(min_frac * total / HITTER_OVERSAMPLE))
         sampled = df.where(F.pmod(F.xxhash64(F.col(row_id)), F.lit(m)) == 0)
     else:
-        frac = min(1.0, oversample / (min_frac * total))
-        sampled = df.sample(fraction=frac, seed=seed)
+        frac = min(1.0, HITTER_OVERSAMPLE / (min_frac * total))
+        sampled = df.sample(fraction=frac, seed=CMS_SEED)
     candidates = [
         r[0]
         for r in sampled.where(key_s.isNotNull())

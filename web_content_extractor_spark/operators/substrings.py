@@ -40,13 +40,11 @@ def _tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-def kgram_positions(
-    docs: DataFrame, text_col: str = "text", k: int = 8
-) -> DataFrame:
-    """(doc_id, start, gram): every token k-gram with its 0-based
-    start position.  Documents shorter than k tokens emit nothing.
+def kgram_positions(docs: DataFrame, k: int = 8) -> DataFrame:
+    """(doc_id, start, gram): every token k-gram of ``docs.text`` with
+    its 0-based start position.  Documents shorter than k tokens emit nothing.
     Narrow plan — no shuffle, no Python."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     starts = F.when(
         F.size(toks) >= k, F.sequence(F.lit(0), F.size(toks) - k)
     ).otherwise(F.array().cast("array<int>"))
@@ -64,12 +62,11 @@ def kgram_positions(
 
 def duplicate_spans(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
     hash_keys: bool = False,
 ) -> DataFrame:
-    """Maximal duplicated-substring spans per document.
+    """Maximal duplicated-substring spans per document (``docs.text``).
 
     Returns (doc_id, span_start, span_end, span_tokens) with
     ``span_end`` exclusive, in token positions: every k-gram starting
@@ -78,7 +75,7 @@ def duplicate_spans(
     duplicated k-gram windows — two starts s1 < s2 merge iff
     s2 <= s1 + k, i.e. their coverage overlaps or touches).
     """
-    grams = kgram_positions(docs, text_col, k)
+    grams = kgram_positions(docs, k)
     key = F.xxhash64("gram") if hash_keys else F.col("gram")
     pos = grams.select("doc_id", "start", key.alias("gram_key"))
     cnt = F.count("*").over(Window.partitionBy("gram_key"))
@@ -108,7 +105,6 @@ def duplicate_spans(
 
 def remove_duplicate_spans(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
     hash_keys: bool = True,
@@ -129,14 +125,14 @@ def remove_duplicate_spans(
     typically 0-3), so the exists() probe per token is O(tokens *
     spans) with a small constant and never shuffles.
     """
-    spans = duplicate_spans(docs, text_col, k, min_count, hash_keys)
+    spans = duplicate_spans(docs, k, min_count, hash_keys)
     per_doc = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct("span_start", "span_end"))
         ).alias("spans"),
         F.sum("span_tokens").alias("removed_tokens"),
     )
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     spans_or_empty = F.coalesce(
         F.col("spans"),
         F.array().cast("array<struct<span_start:int,span_end:int>>"),
@@ -161,7 +157,6 @@ def remove_duplicate_spans(
 
 def substring_dup_stats(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
     hash_keys: bool = True,
@@ -174,13 +169,13 @@ def substring_dup_stats(
     battery.  ``dup_tokens`` is the union length of the maximal spans
     (spans never overlap after merging, so a plain sum is the union).
     """
-    spans = duplicate_spans(docs, text_col, k, min_count, hash_keys)
+    spans = duplicate_spans(docs, k, min_count, hash_keys)
     per_doc = spans.groupBy("doc_id").agg(
         F.sum("span_tokens").alias("dup_tokens")
     )
     return (
         docs.select(
-            "doc_id", F.size(_tokens(F.col(text_col))).alias("n_tokens")
+            "doc_id", F.size(_tokens(F.col("text"))).alias("n_tokens")
         )
         .join(per_doc, "doc_id", "left")
         .select(

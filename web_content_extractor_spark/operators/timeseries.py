@@ -22,14 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def resample_counts(
-    events: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    unit: str = "hour",
-) -> DataFrame:
-    """(key, bin_ts, n): events per truncated time bin, with EVERY
-    (key, bin) combination between the global min and max bin present
+def resample_counts(events: DataFrame, unit: str = "hour") -> DataFrame:
+    """(event_type, bin_ts, n): events per truncated ``ts`` bin, with
+    EVERY (event_type, bin) combination between the global min and max bin present
     — empty bins zero-filled.
 
     ``unit`` is a date_trunc unit ('minute' | 'hour' | 'day').
@@ -40,12 +35,12 @@ def resample_counts(
     semantics (filter/fix NULL keys upstream if they matter).
     """
     binned = events.where(
-        F.col(key).isNotNull() & F.col(ts).isNotNull()
+        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.col(key),
-        F.date_trunc(unit, F.col(ts).cast("timestamp")).alias("bin_ts"),
+        "event_type",
+        F.date_trunc(unit, F.col("ts").cast("timestamp")).alias("bin_ts"),
     )
-    counts = binned.groupBy(key, "bin_ts").agg(F.count("*").alias("n"))
+    counts = binned.groupBy("event_type", "bin_ts").agg(F.count("*").alias("n"))
     bounds = binned.agg(
         F.min("bin_ts").alias("lo"), F.max("bin_ts").alias("hi")
     )
@@ -54,7 +49,7 @@ def resample_counts(
             F.sequence("lo", "hi", F.expr(f"interval 1 {unit}"))
         ).alias("bin_ts")
     )
-    spine = binned.select(key).distinct().crossJoin(grid)
-    return spine.join(counts, [key, "bin_ts"], "left").select(
-        key, "bin_ts", F.coalesce("n", F.lit(0)).alias("n")
+    spine = binned.select("event_type").distinct().crossJoin(grid)
+    return spine.join(counts, ["event_type", "bin_ts"], "left").select(
+        "event_type", "bin_ts", F.coalesce("n", F.lit(0)).alias("n")
     )

@@ -8,8 +8,8 @@ Scale notes (the plan you'd want on 1000 executors over 100 TB):
 - The only shuffle in the whole pipeline is the *optional*
   ``repartitionByRange(doc_id)`` rebalance; with well-sized input
   files the pipeline is shuffle-free and scales linearly (the
-  north-rule scaling-efficiency criterion).  Turn ``balance="rows"``
-  (alias ``True``) when the input layout is skewed (a few giant
+  north-rule scaling-efficiency criterion).  Set ``balance="rows"``
+  when the input layout is skewed (a few giant
   files / giant hosts): range partitioning splits hot doc_id ranges
   across executors and AQE coalesces the small ones.  Turn
   ``balance="bytes"`` when doc SIZES are heavy-tailed (interleaved
@@ -55,8 +55,8 @@ def tokenize(
 ) -> DataFrame:
     """DOCS -> TOKENIZED (the engine's single Python/Arrow stage).
 
-    ``balance``: False = keep input layout (shuffle-free); "rows"
-    (alias True) = ``repartitionByRange(doc_id)``, ~equal rows per
+    ``balance``: False = keep input layout (shuffle-free); "rows" =
+    ``repartitionByRange(doc_id)``, ~equal rows per
     partition; "bytes" = byte-weighted rebalance, ~equal payload bytes
     per partition (heavy-tailed interleaved corpora).  Anything else
     raises — a typo silently falling back to row-balancing would
@@ -76,7 +76,7 @@ def tokenize(
             span_bytes(),
             partitions or df.sparkSession.sparkContext.defaultParallelism,
         ).select("doc_id", "spans")
-    elif balance is True or balance == "rows":
+    elif balance == "rows":
         df = (
             df.repartitionByRange(partitions, "doc_id")
             if partitions
@@ -84,8 +84,7 @@ def tokenize(
         )
     elif balance:
         raise ValueError(
-            f"balance must be False, True/'rows', or 'bytes'; "
-            f"got {balance!r}"
+            f"balance must be False, 'rows' or 'bytes'; got {balance!r}"
         )
     return df.mapInPandas(tokenize_batches, schema=TOKENIZED)
 

@@ -20,22 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int = 8,
-    key: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (+ sorted within buckets) table.
+def write_bucketed(df: DataFrame, table: str, buckets: int = 8) -> None:
+    """Persist ``df`` as a table bucketed (+ sorted within buckets) by
+    ``doc_id``, replacing any previous one.
 
     Sorting within buckets by the join key lets the sort-merge join
     skip its per-partition sort as well.
     """
     (
-        df.write.mode(mode)
-        .bucketBy(buckets, key)
-        .sortBy(key)
+        df.write.mode("overwrite")
+        .bucketBy(buckets, "doc_id")
+        .sortBy("doc_id")
         .format("parquet")
         .saveAsTable(table)
     )
@@ -45,11 +40,11 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def cojoin(spark: SparkSession, left: str, right: str, key: str = "doc_id") -> DataFrame:
-    """Join two same-bucketed tables on their bucket key.
+def cojoin(spark: SparkSession, left: str, right: str) -> DataFrame:
+    """Join two same-bucketed tables on their bucket key ``doc_id``.
 
     With matching bucket specs the physical plan contains no Exchange:
     each task merges bucket i of both tables locally
     (``tests/test_bucketed.py`` asserts this on the executed plan).
     """
-    return read_table(spark, left).join(read_table(spark, right), key)
+    return read_table(spark, left).join(read_table(spark, right), "doc_id")

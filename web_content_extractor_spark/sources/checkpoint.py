@@ -65,7 +65,7 @@ def write_extract(
     errors_path: str | None = None,
     content_path: str | None = None,
     variant: str = "context",
-    balance: bool = False,
+    balance: bool | str = False,
 ) -> int:
     """Extract ``docs`` once and append one run's tables: spans to
     ``output_path``, plus the optional metrics and errors tables (keyed
@@ -102,7 +102,7 @@ def run_resumable_extract(
     metrics_path: str | None = None,
     errors_path: str | None = None,
     variant: str = "context",
-    balance: bool = False,
+    balance: bool | str = False,
     content_path: str | None = None,
 ) -> dict[str, Any]:
     """One resumable pass: extract every not-yet-processed input file.

@@ -18,6 +18,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 from web_content_extractor_spark.schemas import DOCS
 
+READ_FORMATS = ("parquet", "iceberg", "jsonl", "warc")
+WRITE_FORMATS = ("parquet", "iceberg")
+
+
+def _format(location: str, fmt: str | None, accepted: tuple[str, ...]) -> str:
+    """``fmt``, or the default for ``location``: Iceberg for a table id
+    (no ``/``), parquet for a path.  A name outside ``accepted`` raises
+    rather than falling back to parquet."""
+    fmt = fmt or ("iceberg" if location.count("/") == 0 else "parquet")
+    if fmt not in accepted:
+        raise ValueError(f"fmt must be one of {', '.join(accepted)}; got {fmt!r}")
+    return fmt
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -36,8 +49,9 @@ def read_docs(
     stream: bool = False,
 ) -> DataFrame:
     """DOCS rows from ``location`` in ``fmt``: "parquet", "iceberg",
-    "jsonl" or "warc".  The default is Iceberg for a table id (no
-    ``/``) and parquet for a path.
+    "jsonl" or "warc" (anything else raises ``ValueError``).  The
+    default is Iceberg for a table id (no ``/``) and parquet for a
+    path.
 
     - jsonl: one JSON object per line, schema-enforced; torn lines,
       blank lines and bare scalars drop, never fail
@@ -49,7 +63,7 @@ def read_docs(
     ``stream=True`` returns the same rows as a file-source stream
     (``spark.readStream``): each landed file is read exactly once.
     """
-    fmt = fmt or ("iceberg" if location.count("/") == 0 else "parquet")
+    fmt = _format(location, fmt, READ_FORMATS)
     reader = spark.readStream if stream else spark.read
     if fmt == "iceberg":
         return reader.format("iceberg").load(location)
@@ -67,8 +81,10 @@ def read_docs(
 def write_docs(
     df: DataFrame, location: str, fmt: str | None = None, mode: str = "append"
 ) -> None:
-    fmt = fmt or ("iceberg" if location.count("/") == 0 else "parquet")
-    if fmt == "iceberg":
+    """Write DOCS rows to ``location`` as "parquet" or "iceberg"
+    (anything else raises ``ValueError``), with :func:`read_docs`'s
+    default format."""
+    if _format(location, fmt, WRITE_FORMATS) == "iceberg":
         # hidden partitioning bucket(N, doc_id) is configured on table DDL
         df.writeTo(location).append()
     else:

@@ -95,20 +95,15 @@ def read_jsonl(
     return parse_jsonl_lines(raw, "value", schema)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    compression: str = "gzip",
-    mode: str = "overwrite",
-) -> None:
-    """JSONL sink.  Compressed JSONL shards are not splittable, so the
-    writer's partitioning (many shards) IS the read-side parallelism;
-    repartition before calling if the frame has collapsed to a few
-    partitions.  gzip by default: Hadoop's TEXT codec list in this
-    image is bzip2/deflate/snappy/lz4/gzip — zstd needs libhadoop
-    native, present on real clusters but not here (parquet zstd is
-    unaffected; it ships in parquet-java)."""
-    df.write.mode(mode).option("compression", compression).json(path)
+def write_jsonl(df: DataFrame, path: str, compression: str = "gzip") -> None:
+    """JSONL sink, replacing ``path``.  Compressed JSONL shards are not
+    splittable, so the writer's partitioning (many shards) IS the
+    read-side parallelism; repartition before calling if the frame has
+    collapsed to a few partitions.  gzip by default: Hadoop's TEXT codec
+    list in this image is bzip2/deflate/snappy/lz4/gzip — zstd needs
+    libhadoop native, present on real clusters but not here (parquet
+    zstd is unaffected; it ships in parquet-java)."""
+    df.write.mode("overwrite").option("compression", compression).json(path)
 
 
 def parse_jsonl_lines(

@@ -93,10 +93,9 @@ def warc_blob_per_group(
     uri: Column,
     payload_text: Column,
     group: Column,
-    order_col: str = "doc_id",
 ) -> DataFrame:
     """(blob_id, blob): records of each group concatenated in
-    ``order_col`` order — a distributed WARC writer's in-memory form
+    ``doc_id`` order — a distributed WARC writer's in-memory form
     (dump each row to ``part-<blob_id>.warc`` via foreachPartition).
 
     ONE shuffle keyed by the group id; the in-group concatenation is
@@ -106,7 +105,7 @@ def warc_blob_per_group(
     recs = docs.select(
         group.alias("blob_id"),
         F.struct(
-            F.col(order_col).alias("o"),
+            F.col("doc_id").alias("o"),
             warc_record(uri, payload_text).alias("r"),
         ).alias("s"),
     ).where(F.col("s.r").isNotNull())  # a NULL uri/text record would
@@ -210,12 +209,9 @@ def _walk_records(
         pos = body_start + length
 
 
-def parse_warc_records(
-    blobs: DataFrame,
-    blob_col: str = "blob",
-    id_col: str = "blob_id",
-) -> DataFrame:
-    """Explode WARC blobs into (blob_id, rec_no, target_uri, payload).
+def parse_warc_records(blobs: DataFrame) -> DataFrame:
+    """Explode (blob_id, blob) WARC blobs into (blob_id, rec_no,
+    target_uri, payload).
 
     Arrow-batched ``mapInPandas``: the Python loop advances one
     iteration per RECORD (header parse + payload slice), so per-file
@@ -231,7 +227,7 @@ def parse_warc_records(
         for pdf in batches:
             ids, recnos, uris, payloads = [], [], [], []
             types, offs, lens, modes = [], [], [], []
-            for bid, blob in zip(pdf[id_col], pdf[blob_col]):
+            for bid, blob in zip(pdf["blob_id"], pdf["blob"]):
                 if blob is None:
                     continue
                 inflated, members = _inflate_with_members(bytes(blob))
@@ -287,7 +283,7 @@ def parse_warc_records(
                 }
             )
 
-    return blobs.select(id_col, blob_col).mapInPandas(gen, PARSED_SCHEMA)
+    return blobs.select("blob_id", "blob").mapInPandas(gen, PARSED_SCHEMA)
 
 
 def warc_docs(parsed: DataFrame) -> DataFrame:

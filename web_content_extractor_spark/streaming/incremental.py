@@ -120,20 +120,16 @@ def stateful_first_seen(spans_stream: DataFrame, key: str = "media_ref") -> Data
     return _first_seen(keyed, "url", "first_doc_id", FIRST_SEEN_OUTPUT)
 
 
-def windowed_span_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def windowed_span_counts(stream: DataFrame, window: str = "10 minutes") -> DataFrame:
     """Event-time windowed per-kind span counts with late-data bound.
 
-    Takes an exploded span stream carrying an event-time column;
-    watermarking bounds state so the agg runs indefinitely at scale.
+    Takes an exploded span stream carrying an event-time ``ts`` column;
+    a 30-minute watermark bounds state so the agg runs indefinitely at
+    scale.
     """
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), "kind")
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", window).alias("w"), "kind")
         .agg(F.count("*").alias("n_spans"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -144,12 +140,10 @@ def windowed_span_counts(
     )
 
 
-def enrich_stream(
-    stream: DataFrame, dim: DataFrame, on: str = "host", how: str = "left"
-) -> DataFrame:
+def enrich_stream(stream: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: each micro-batch of the stream is
-    joined against a static dimension table (host priority/category,
-    allow/deny lists, quality tiers).
+    left-joined on ``host`` against a static dimension table (host
+    priority/category, allow/deny lists, quality tiers).
 
     The static side is broadcast — in Structured Streaming a
     stream-static equi-join re-evaluates the static plan per
@@ -159,7 +153,7 @@ def enrich_stream(
     key instead (sources/bucketed.py) — same no-stream-shuffle
     property via storage layout.
     """
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), "host", "left")
 
 
 def curate_stream(
@@ -198,26 +192,21 @@ def curate_stream(
     return _first_seen(keyed, "fp", "doc_id", CURATED_OUTPUT)
 
 
-def sessionized_counts(
-    stream: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming dynamic-gap sessionization: the stateful form of the
-    batch ``session_window`` query (driver key ``session_windows``).
+def sessionized_counts(stream: DataFrame) -> DataFrame:
+    """Streaming sessionization of ``user_id`` events on ``ts`` with a
+    30-minute gap: the stateful form of the batch ``session_window``
+    query (driver key ``session_windows``).
 
-    Watermarking bounds session state — a session closes (and emits,
+    A 1-hour watermark bounds session state — a session closes (and emits,
     in append mode) once the watermark passes its end, so state never
     grows beyond the late-data horizon regardless of stream length.
     """
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key, F.session_window(ts_col, gap).alias("w"))
+        stream.withWatermark("ts", "1 hour")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(
-            key,
+            "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -226,11 +215,7 @@ def sessionized_counts(
 
 
 def dedup_stream_within_watermark(
-    docs_stream: DataFrame,
-    delay: str = "10 minutes",
-    ts_col: str = "fetched_at",
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    docs_stream: DataFrame, delay: str = "10 minutes"
 ) -> DataFrame:
     """Watermark-bounded streaming exact dedup — the production
     complement of :func:`stateful_first_seen`.
@@ -240,9 +225,9 @@ def dedup_stream_within_watermark(
     This variant keeps the batch engine's exact-dedup fingerprint
     (``functions.text_quality.fingerprint``, the same normalization as
     ``dedup_docs.exact_duplicates``) only within the watermark horizon
-    via ``dropDuplicatesWithinWatermark``: duplicates that arrive
-    within ``delay`` of the first copy are dropped, and state for a
-    fingerprint is evicted once the watermark passes it.  At 10^12
+    via ``dropDuplicatesWithinWatermark``: duplicates whose
+    ``fetched_at`` lies within ``delay`` of the first copy are dropped,
+    and state for a fingerprint is evicted once the watermark passes it.  At 10^12
     docs/day this is the only dedup whose state is bounded by the
     duplication *window* rather than the corpus size — the standard
     trade for near-real-time feeds where dup bursts are temporally
@@ -258,10 +243,8 @@ def dedup_stream_within_watermark(
     fp = docs_stream.withColumn(
         "fp",
         F.coalesce(
-            fingerprint(F.col(text_col)),
-            F.concat(
-                F.lit("__null_text__:"), F.col(id_col).cast("string")
-            ),
+            fingerprint(F.col("text")),
+            F.concat(F.lit("__null_text__:"), F.col("doc_id").cast("string")),
         ),
-    ).withWatermark(ts_col, delay)
+    ).withWatermark("fetched_at", delay)
     return fp.dropDuplicatesWithinWatermark(["fp"]).drop("fp")
