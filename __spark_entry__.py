@@ -738,7 +738,7 @@ def q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("event_type").alias("kind"),
     )
-    return windowed_span_counts(e, window="10 minutes").select(
+    return windowed_span_counts(e).select(
         "window_start", "kind", "n_spans"
     )
 
@@ -827,7 +827,7 @@ def q_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         resample_counts,
     )
 
-    return resample_counts(_read(spark, sf_dir, "events"), unit="hour")
+    return resample_counts(_read(spark, sf_dir, "events"))
 
 
 def q_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -840,7 +840,7 @@ def q_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    series = resample_counts(_read(spark, sf_dir, "events"), unit="hour")
+    series = resample_counts(_read(spark, sf_dir, "events"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("bin_ts")
@@ -1091,7 +1091,6 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = pack_token_stream(
         chunks.join(shards, "doc_id"),
         budget=64,
-        group_col="shard",
         order_cols=("shard_pos", "chunk_id"),
     )
     return packed.select(
@@ -1138,10 +1137,7 @@ def q_pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(tail)
         .withColumn("shard", (F.col("doc_id") % 8).cast("int"))
     )
-    return pack_interleaved(
-        spans, budget=256, media_tokens=64,
-        order_cols=("doc_id", "span_idx"),
-    ).select(
+    return pack_interleaved(spans, budget=256).select(
         "doc_id", "span_idx", "kind", "shard",
         "n_tokens", "pack_id", "pack_offset",
     )
@@ -1207,7 +1203,7 @@ def q_dup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _read(spark, sf_dir, "documents")
-    return duplicate_spans(d, k=8, min_count=2, hash_keys=False)
+    return duplicate_spans(d, k=8, hash_keys=False)
 
 
 def q_dup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1221,7 +1217,7 @@ def q_dup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _read(spark, sf_dir, "documents")
-    s = substring_dup_stats(d, k=8, min_count=2, hash_keys=True)
+    s = substring_dup_stats(d)
     return s.select(
         "doc_id", "n_tokens", "dup_tokens",
         F.round("dup_fraction", 6).alias("dup_fraction"),
@@ -1241,7 +1237,7 @@ def q_dup_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _read(spark, sf_dir, "documents")
-    return remove_duplicate_spans(d, k=8, min_count=2, hash_keys=True)
+    return remove_duplicate_spans(d, k=8)
 
 
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1827,7 +1823,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _read(spark, sf_dir, "documents").select("doc_id", "source")
-    return stratified_sample(d, k=20, seed=13).select(
+    return stratified_sample(d, k=20).select(
         "doc_id", "source", "draw"
     )
 
@@ -1845,7 +1841,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt = (
         F.regexp_extract("source", r"(\d+)$", 1).cast("bigint") % 4
     ) == 0
-    return dsir_weights(d, tgt, n_buckets=64, seed=17)
+    return dsir_weights(d, tgt, n_buckets=64)
 
 
 def q_clean_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1975,7 +1971,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dst"),
     )
     ranks = host_pagerank(
-        e1.union(e2), iters=5, damping=0.85, broadcast_ranks=True
+        e1.union(e2), iters=5, broadcast_ranks=True
     )
     return ranks.select("host", F.round("rank", 6).alias("rank"))
 
@@ -1992,7 +1988,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprinting (winnowing, Schleimer et
     al.): k-gram polynomial hash, deterministic window-min selection."""
     d = _read(spark, sf_dir, "documents")
-    return tq.winnow_fingerprints(d, k=5, window=4).select(
+    return tq.winnow_fingerprints(d).select(
         "doc_id",
         F.col("fp_pos").cast("bigint").alias("fp_pos"),
         F.col("fp_hash").cast("bigint").alias("fp_hash"),
@@ -2317,7 +2313,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("w_start"))
         .withColumn("w_end", F.col("w_start") + F.expr("INTERVAL 30 MINUTES"))
     )
-    j = interval_join(e, iv, ts_col="ts", bin_seconds=1800)
+    j = interval_join(e, iv, bin_seconds=1800)
     return j.groupBy("iv_user").agg(F.count("*").alias("n_in_window"))
 
 
@@ -4715,7 +4711,7 @@ def oracle_sql() -> dict[str, str]:
         hyperplanes,
     )
 
-    _P = hyperplanes(64, 32, 42)
+    _P = hyperplanes(64, 32)
     plane_rows = ", ".join(
         "({t}, {w}, [{vals}]::DOUBLE[])".format(
             t=j // 4,
@@ -4767,7 +4763,7 @@ def oracle_sql() -> dict[str, str]:
     # the kernel does.  Planted twins sit at cos ~1 and the corpus
     # max pairwise cosine is ~0.51, so the threshold has no boundary
     # cases.
-    _P6 = hyperplanes(64, 36, 42)
+    _P6 = hyperplanes(64, 36)
     plane_rows6 = ", ".join(
         "({t}, {w}, [{vals}]::DOUBLE[])".format(
             t=j // 6,

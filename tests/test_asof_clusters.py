@@ -104,7 +104,7 @@ def test_resample_gap_fill(spark):
     )
     out = {
         (r.event_type, r.bin_ts.hour): r.n
-        for r in resample_counts(ev, unit="hour").collect()
+        for r in resample_counts(ev).collect()
     }
     # dense grid: 2 keys x 4 hours = 8 rows, gaps zero-filled
     assert len(out) == 8
@@ -122,7 +122,7 @@ def test_resample_and_asof_empty_inputs(spark):
         "event_id: bigint, ts: timestamp, user_id: bigint, "
         "event_type: string, value: double",
     )
-    assert resample_counts(empty, unit="hour").count() == 0
+    assert resample_counts(empty).count() == 0
     # asof with an empty right side: all left rows kept, null matches
     left = _events(spark, [(1, _ts(10), 7, 0.0)])
     rows = asof_join(left, empty.select("event_id", "ts", "user_id", "value")).collect()
@@ -193,7 +193,7 @@ def test_resample_excludes_null_keys_and_ts(spark):
         "event_id: bigint, ts: timestamp, user_id: bigint, "
         "event_type: string, value: double",
     )
-    rows = resample_counts(ev, unit="hour").collect()
+    rows = resample_counts(ev).collect()
     assert [(r.event_type, r.n) for r in rows] == [("a", 1)]
 
 
@@ -204,7 +204,7 @@ def test_asof_custom_right_cols_without_event_id(spark):
     )
     trades = _events(spark, [(1, _ts(10), 7, 0.0)])
     row = asof_join(
-        trades, quotes, on="user_id", ts="ts", right_cols=("bid", "ask")
+        trades, quotes, right_cols=("bid", "ask")
     ).collect()[0]
     assert row.matched_bid == 1.5 and row.matched_ask == 1.6
 

@@ -1,14 +1,22 @@
-"""Crawl rounds (D1-D5, A7) and checkpoint/resume lineage tests."""
+"""Crawl rounds (D1-D5, A7) and checkpoint/resume tests."""
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
+import time
+
+import pytest
+
+from pyspark.sql import functions as F
 
 from web_content_extractor_spark import datagen
 from web_content_extractor_spark.operators.crawl import crawl, navigation_links, prioritize
 from web_content_extractor_spark.plans.pipeline import tokenize
 from web_content_extractor_spark.schemas import DOCS
-from web_content_extractor_spark.sources import checkpoint
+from web_content_extractor_spark.streaming.incremental import stream_extract
 
 
 def _site_docs(spark):
@@ -179,14 +187,14 @@ def test_checkpoint_resume(spark, tmp_path):
     out_path = str(tmp_path / "out")
     datagen.fixture_docs(spark).repartition(4).write.parquet(docs_path)
 
-    r1 = checkpoint.run_resumable_extract(spark, docs_path, out_path)
-    assert r1["files_processed"] > 0 and r1["docs"] == len(datagen.FIXTURES)
+    r1 = stream_extract(spark, docs_path, out_path)
+    assert r1["docs"] == len(datagen.FIXTURES)
     n1 = spark.read.parquet(out_path).count()
     assert n1 == len(datagen.FIXTURES)
 
     # resume: nothing left to do, output unchanged (idempotent append)
-    r2 = checkpoint.run_resumable_extract(spark, docs_path, out_path)
-    assert r2["files_processed"] == 0
+    r2 = stream_extract(spark, docs_path, out_path)
+    assert r2["docs"] == 0 and r2["run_id"] != r1["run_id"]
     assert spark.read.parquet(out_path).count() == n1
 
     # new input file arrives -> only it is processed
@@ -197,10 +205,94 @@ def test_checkpoint_resume(spark, tmp_path):
         schema=DOCS,
     )
     extra.coalesce(1).write.mode("append").parquet(docs_path)
-    r3 = checkpoint.run_resumable_extract(spark, docs_path, out_path)
-    assert r3["files_processed"] == 1 and r3["docs"] == 1
+    r3 = stream_extract(spark, docs_path, out_path)
+    assert r3["docs"] == 1
     assert spark.read.parquet(out_path).count() == n1 + 1
-    assert os.path.isdir(os.path.join(out_path, "_lineage"))
+    assert os.path.isdir(os.path.join(out_path, "_checkpoint"))
+
+
+def _land(spark, fmt, land, name, ids, age_days=0):
+    """Land one ``fmt`` input file of docs ``ids`` in ``land``, each doc
+    with one PDF link and one invalid href, its mtime ``age_days`` back."""
+    docs = [
+        (
+            f"https://e.com/{i}",
+            f"<a href='https://e.com/{i}.pdf'>D{i}</a><a href='http://'>x</a>",
+        )
+        for i in ids
+    ]
+    path = str(land / f"{name}.{fmt}")
+    if fmt == "parquet":
+        tmp = str(land.parent / f"tmp_{name}")
+        spark.createDataFrame(
+            [(d, [("html", html, None, 0)]) for d, html in docs], DOCS
+        ).coalesce(1).write.parquet(tmp)
+        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], path)
+    elif fmt == "jsonl":
+        with open(path, "w") as f:
+            for d, html in docs:
+                span = {"kind": "html", "text": html, "media_ref": None, "offset": 0}
+                f.write(json.dumps({"doc_id": d, "spans": [span]}) + "\n")
+    else:
+        with open(path, "wb") as f:
+            for d, html in docs:
+                f.write(
+                    b"WARC/1.0\r\nWARC-Type: response\r\n"
+                    + f"WARC-Target-URI: {d}\r\n".encode()
+                    + f"Content-Length: {len(html)}\r\n\r\n".encode()
+                    + html.encode()
+                    + b"\r\n\r\n"
+                )
+    t = time.time() - age_days * 86400
+    os.utime(path, (t, t))
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "jsonl", "warc"])
+def test_resume_drains_new_and_aged_files(spark, tmp_path, capsys, fmt):
+    """extract --resume: run 1 extracts every landed doc, run 2 appends
+    to no table, run 3 extracts exactly a new file and one landed with
+    a 30-day-old mtime, their error and metrics rows under the run_id
+    it prints."""
+    from web_content_extractor_spark.jobs import main
+
+    land = tmp_path / "land"
+    land.mkdir()
+    tables = [str(tmp_path / t) for t in ("out", "met", "err", "cont")]
+    argv = ["extract", "--input", str(land), "--input-format", fmt,
+            "--output", tables[0], "--metrics", tables[1],
+            "--errors", tables[2], "--content-output", tables[3], "--resume"]
+
+    def run():
+        assert main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def counts():
+        return [spark.read.parquet(t).count() for t in tables]
+
+    def doc_ids(table, run_id=None):
+        df = spark.read.parquet(table)
+        if run_id:
+            df = df.where(F.col("run_id") == run_id)
+        return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+    _land(spark, fmt, land, "a", [0, 1])
+    _land(spark, fmt, land, "b", [2])
+    assert run()["docs"] == 3
+    n1 = counts()
+    assert n1[0] == n1[2] == n1[3] == 3 and n1[1] > 0
+
+    assert run()["docs"] == 0
+    assert counts() == n1
+
+    _land(spark, fmt, land, "c", [3])
+    _land(spark, fmt, land, "d", [4], age_days=30)
+    r3 = run()
+    assert r3["docs"] == 2
+    assert doc_ids(tables[0]) == [f"https://e.com/{i}" for i in range(5)]
+    assert doc_ids(tables[2], r3["run_id"]) == ["https://e.com/3", "https://e.com/4"]
+    met = spark.read.parquet(tables[1])
+    assert met.where(F.col("run_id") == r3["run_id"]).count() > 0
+    assert counts()[3] == 5
 
 
 def test_jobs_cli_end_to_end(spark, tmp_path):
@@ -221,7 +313,7 @@ def test_jobs_cli_end_to_end(spark, tmp_path):
     assert set(content.columns) == {"doc_id", "spans"}
     n_content = content.count()
     # resumable: a second run is a no-op, nothing double-appended —
-    # content rows included, they follow the lineage manifest too
+    # content rows included, they follow the stream's checkpoint too
     rc = main(["extract", "--input", inp, "--output", outp, "--metrics", met,
                "--content-output", cont, "--resume"])
     assert rc == 0

@@ -103,7 +103,7 @@ def test_lsh_topk_recall_vs_brute_force(spark, embeddings):
     queries = embeddings.where(F.col("vec_id") < 10)
     exact = similarity.brute_force_topk(embeddings, queries, k=5).collect()
     approx = similarity.lsh_topk(
-        embeddings, queries, k=5, r=4, tables=8, dim=64
+        embeddings, queries, k=5
     ).collect()
     exact_set = {(r.query_id, r.neighbor_id) for r in exact}
     approx_set = {(r.query_id, r.neighbor_id) for r in approx}
@@ -294,3 +294,37 @@ def test_ivfpq_probe_all_refine_all_equals_brute_force(spark, embeddings):
     assert {(r.query_id, r.neighbor_id, r.cos_sim) for r in full} == {
         (r.query_id, r.neighbor_id, r.cos_sim) for r in exact
     }
+
+
+def test_pq_and_ivfpq_search_a_persisted_index(spark, embeddings, tmp_path):
+    # build once, persist the codes table, search many: every query
+    # batch gets the one-shot topk's rows at the same parameters
+    def rows(df):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.rank, r.cos_sim) for r in df.collect()
+        )
+
+    pq = similarity.pq_index(embeddings, m=16, n_codes=32)
+    ivfpq = similarity.ivfpq_index(embeddings, n_centroids=16, m=16, n_codes=32)
+    for name, index in (("pq", pq), ("ivfpq", ivfpq)):
+        index.codes.write.parquet(str(tmp_path / name))
+        index.codes = spark.read.parquet(str(tmp_path / name))
+    for lo in (0, 5):
+        queries = embeddings.where(F.col("vec_id").between(lo, lo + 4))
+        got = rows(similarity.pq_search(pq, embeddings, queries, k=5, refine=8))
+        assert got and got == rows(
+            similarity.pq_topk(
+                embeddings, queries, k=5, m=16, n_codes=32, refine=8
+            )
+        )
+        got = rows(
+            similarity.ivfpq_search(
+                ivfpq, embeddings, queries, k=5, nprobe=2, refine=4
+            )
+        )
+        assert got and got == rows(
+            similarity.ivfpq_topk(
+                embeddings, queries, k=5, n_centroids=16, nprobe=2,
+                m=16, n_codes=32, refine=4,
+            )
+        )

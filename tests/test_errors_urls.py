@@ -102,20 +102,20 @@ def test_parse_error_stage(spark):
 
 
 def test_resumable_extract_writes_errors(spark, broken_docs, tmp_path):
-    from web_content_extractor_spark.sources.checkpoint import (
-        run_resumable_extract,
+    from web_content_extractor_spark.streaming.incremental import (
+        stream_extract,
     )
 
     inp, outp, errp = (str(tmp_path / d) for d in ("in", "out", "errs"))
     broken_docs.write.parquet(inp)
-    r = run_resumable_extract(spark, inp, outp, errors_path=errp)
+    r = stream_extract(spark, inp, outp, errors_path=errp)
     assert r["docs"] == 2
     errs = spark.read.parquet(errp)
     assert errs.count() == 2
     assert {x.run_id for x in errs.select("run_id").collect()} == {r["run_id"]}
     # resume no-op appends nothing to the errors table either
-    r2 = run_resumable_extract(spark, inp, outp, errors_path=errp)
-    assert r2["files_processed"] == 0
+    r2 = stream_extract(spark, inp, outp, errors_path=errp)
+    assert r2["docs"] == 0
     assert spark.read.parquet(errp).count() == 2
 
 

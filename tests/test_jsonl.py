@@ -153,19 +153,6 @@ def test_jobs_extract_from_jsonl(spark, tmp_path):
     ]
 
 
-def test_jobs_jsonl_resume_rejected(tmp_path):
-    from web_content_extractor_spark.jobs import main
-
-    rc = main([
-        "extract",
-        "--input", str(tmp_path / "x.jsonl"),
-        "--input-format", "jsonl",
-        "--output", str(tmp_path / "o"),
-        "--resume",
-    ])
-    assert rc == 2
-
-
 def test_jobs_corpus_build_from_jsonl(spark, tmp_path, capsys):
     """corpus --input-format jsonl: the corpus pipeline builds from
     JSONL shards, torn lines dropped."""
@@ -201,14 +188,14 @@ def test_jobs_corpus_build_from_jsonl(spark, tmp_path, capsys):
 
 
 def test_stream_extract_from_jsonl_landing_dir(spark, tmp_path):
-    """JSONL landing dir: exactly-once shard pickup across two
-    availableNow drains, torn lines dropped without killing the
+    """JSONL landing dir: a drained shard is not read again by the next
+    availableNow drain, torn lines dropped without killing the
     stream."""
     from web_content_extractor_spark.streaming.incremental import (
         stream_extract,
     )
 
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    inp, outp = (str(tmp_path / d) for d in ("in", "out"))
     import os
 
     os.makedirs(inp)
@@ -226,15 +213,13 @@ def test_stream_extract_from_jsonl_landing_dir(spark, tmp_path):
         })
 
     _write_lines(f"{inp}/shard0.jsonl", [doc(0), '{"torn', doc(1)])
-    q = stream_extract(spark, inp, outp, ckpt, fmt="jsonl")
-    q.awaitTermination(120)
+    assert stream_extract(spark, inp, outp, fmt="jsonl")["docs"] == 2
     assert spark.read.parquet(outp).count() == 2
 
     _write_lines(f"{inp}/shard1.jsonl", [doc(2)])
-    q = stream_extract(spark, inp, outp, ckpt, fmt="jsonl")
-    q.awaitTermination(120)
+    assert stream_extract(spark, inp, outp, fmt="jsonl")["docs"] == 1
     out = spark.read.parquet(outp)
-    assert out.count() == 3  # exactly-once: shard0 not reprocessed
+    assert out.count() == 3  # shard0 not reprocessed
     assert out.select("doc_id").distinct().count() == 3
     kinds = {r.doc_id: [s.kind for s in r.spans] for r in out.collect()}
     assert kinds["https://e.com/2"] == ["pdf"]

@@ -82,14 +82,14 @@ class TestWeightedSample:
 
 class TestStratifiedSample:
     def test_exact_count_per_stratum(self, spark):
-        got = stratified_sample(_docs(spark), k=10, seed=13).collect()
+        got = stratified_sample(_docs(spark), k=10).collect()
         per = {}
         for r in got:
             per[r.source] = per.get(r.source, 0) + 1
         assert per == {f"src{i}": 10 for i in range(5)}
 
     def test_small_stratum_returned_whole(self, spark):
-        got = stratified_sample(_docs(spark, n=12), k=10, seed=13).collect()
+        got = stratified_sample(_docs(spark, n=12), k=10).collect()
         per = {}
         for r in got:
             per[r.source] = per.get(r.source, 0) + 1
@@ -99,7 +99,7 @@ class TestStratifiedSample:
     def test_matches_python_reference(self, spark):
         got = {
             (r.doc_id, r.draw)
-            for r in stratified_sample(_docs(spark), k=4, seed=13).collect()
+            for r in stratified_sample(_docs(spark), k=4).collect()
         }
         ref = set()
         for s in range(5):
@@ -114,12 +114,12 @@ class TestStratifiedSample:
         # draw <= j of a k-sample equals the j-sample: prefixes nest.
         big = {
             (r.doc_id, r.draw)
-            for r in stratified_sample(_docs(spark), k=8, seed=13).collect()
+            for r in stratified_sample(_docs(spark), k=8).collect()
             if r.draw <= 3
         }
         small = {
             (r.doc_id, r.draw)
-            for r in stratified_sample(_docs(spark), k=3, seed=13).collect()
+            for r in stratified_sample(_docs(spark), k=3).collect()
         }
         assert big == small
 
@@ -151,7 +151,7 @@ class TestDsirWeights:
         got = {
             r.doc_id: (r.n_feats, r.dsir_logw)
             for r in dsir_weights(
-                d, F.col("grp") == "tgt", n_buckets=16, seed=17
+                d, F.col("grp") == "tgt", n_buckets=16
             ).collect()
         }
 

@@ -139,22 +139,20 @@ def test_video_id_variants(spark):
 
 def test_stream_extract_incremental(spark, tmp_path):
     """availableNow drain twice: second run processes ONLY new files."""
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    inp, outp = (str(tmp_path / d) for d in ("in", "out"))
     docs = fixture_docs(spark)
     batch1 = docs.where(F.col("doc_id").contains("test-page"))
     batch1.write.mode("append").parquet(inp)
-    q = stream_extract(spark, inp, outp, ckpt)
-    q.awaitTermination(120)
+    r1 = stream_extract(spark, inp, outp)
     n1 = spark.read.parquet(outp).count()
-    assert n1 == batch1.count()
+    assert n1 == batch1.count() == r1["docs"]
 
     batch2 = docs.where(F.col("doc_id") == "https://fixture09.example.org")
     batch2.write.mode("append").parquet(inp)
-    q = stream_extract(spark, inp, outp, ckpt)
-    q.awaitTermination(120)
+    assert stream_extract(spark, inp, outp)["docs"] == batch2.count()
     out = spark.read.parquet(outp)
     assert out.count() == batch1.count() + batch2.count()
-    # exactly-once: no doc extracted twice
+    # no doc extracted twice
     assert out.select("doc_id").distinct().count() == out.count()
     # span parity carries through the streaming path
     row = out.where(F.col("doc_id") == "https://fixture09.example.org").collect()[0]
@@ -178,7 +176,7 @@ def test_stateful_first_seen_dedup(spark, tmp_path):
         ).parquet(inp)
         stream = spark.readStream.schema(schema).parquet(inp)
         q = (
-            stateful_first_seen(stream, key="media_ref")
+            stateful_first_seen(stream)
             .writeStream.format("parquet")
             .option("path", outp)
             .option("checkpointLocation", ckpt)
@@ -290,7 +288,7 @@ def test_dedup_stream_within_watermark(spark, tmp_path):
     ).parquet(inp)
     stream = spark.readStream.schema(schema).parquet(inp)
     q = (
-        dedup_stream_within_watermark(stream, delay="10 minutes")
+        dedup_stream_within_watermark(stream)
         .writeStream.format("parquet")
         .option("path", outp)
         .option("checkpointLocation", ckpt)

@@ -39,7 +39,7 @@ def test_cross_doc_duplicate_span_found(spark):
             (3, "none of these words repeat anywhere at all ok"),
         ],
     )
-    got = _spans(duplicate_spans(docs, k=8, min_count=2))
+    got = _spans(duplicate_spans(docs, k=8))
     assert got == {(1, 1, 9, 8), (2, 0, 8, 8)}
 
 
@@ -48,7 +48,7 @@ def test_overlapping_windows_merge_to_maximal_span(spark):
     # (offset +1 on doc 1) must merge into ONE maximal 10-token span.
     shared = " ".join(f"s{i}" for i in range(10))
     docs = _docs(spark, [(1, f"x {shared}"), (2, f"{shared} y z")])
-    got = _spans(duplicate_spans(docs, k=8, min_count=2))
+    got = _spans(duplicate_spans(docs, k=8))
     assert got == {(1, 1, 11, 10), (2, 0, 10, 10)}
 
 
@@ -58,7 +58,7 @@ def test_adjacent_but_gapped_runs_stay_separate(spark):
     b = " ".join(f"b{i}" for i in range(8))
     gap = " ".join(f"g{i}" for i in range(9))  # 9 > k - overlap
     docs = _docs(spark, [(1, f"{a} {gap} {b}"), (2, f"{a} q {b}")])
-    got = _spans(duplicate_spans(docs, k=8, min_count=2))
+    got = _spans(duplicate_spans(docs, k=8))
     # doc 1: starts 0 and 17 (gap 17 > 0 + 8) -> two spans
     assert (1, 0, 8, 8) in got and (1, 17, 25, 8) in got
     # doc 2: starts 0 and 9; 9 > 0 + 8 -> also two spans, not merged
@@ -73,7 +73,7 @@ def test_within_doc_repeat_counts_as_duplicate(spark):
         spark,
         [(1, f"{g} mid1 mid2 mid3 mid4 mid5 mid6 mid7 mid8 mid9 {g}")]
     )
-    got = _spans(duplicate_spans(docs, k=8, min_count=2))
+    got = _spans(duplicate_spans(docs, k=8))
     assert got == {(1, 0, 8, 8), (1, 17, 25, 8)}
 
 
@@ -87,8 +87,8 @@ def test_hash_keys_mode_matches_string_mode(spark):
         for i in range(80)
     ]
     docs = _docs(spark, rows)
-    s1 = _spans(duplicate_spans(docs, k=3, min_count=2, hash_keys=False))
-    s2 = _spans(duplicate_spans(docs, k=3, min_count=2, hash_keys=True))
+    s1 = _spans(duplicate_spans(docs, k=3, hash_keys=False))
+    s2 = _spans(duplicate_spans(docs, k=3, hash_keys=True))
     assert s1 == s2 and len(s1) > 0
 
 
@@ -103,7 +103,7 @@ def test_stats_cover_every_doc_and_union_length(spark):
             (4, ""),
         ],
     )
-    stats = {r.doc_id: r for r in substring_dup_stats(docs, k=8).collect()}
+    stats = {r.doc_id: r for r in substring_dup_stats(docs).collect()}
     assert set(stats) == {1, 2, 3, 4}
     assert stats[1].n_tokens == 20 and stats[1].dup_tokens == 10
     assert abs(stats[1].dup_fraction - 0.5) < 1e-9
@@ -148,11 +148,11 @@ def test_remove_differential_vs_python_reference(spark):
     got = {
         r.doc_id: r
         for r in remove_duplicate_spans(
-            _docs(spark, rows), k=k, min_count=2, hash_keys=True
+            _docs(spark, rows), k=k
         ).collect()
     }
     spans = {}
-    for r in duplicate_spans(_docs(spark, rows), k=k, min_count=2).collect():
+    for r in duplicate_spans(_docs(spark, rows), k=k).collect():
         spans.setdefault(r.doc_id, []).append((r.span_start, r.span_end))
     for i, text in rows:
         ws = text.split()
@@ -208,6 +208,6 @@ def test_differential_vs_python_reference(spark):
         texts = dict(rows)
         k = rng.choice([2, 3, 4])
         got = _spans(
-            duplicate_spans(_docs(spark, rows), k=k, min_count=2)
+            duplicate_spans(_docs(spark, rows), k=k)
         )
         assert got == ref_spans(texts, k, 2), (trial, k)

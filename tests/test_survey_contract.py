@@ -106,22 +106,38 @@ CALLERS = (
 )
 
 
+def _literal(node):
+    """The AST dump of ``node`` if it is a literal, else None."""
+    try:
+        ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return None
+    return ast.dump(node)
+
+
 def test_every_option_is_set_by_some_caller():
     # every defaulted parameter of a public module-level package function
     # must be passed, by keyword or by position, by at least one call in
-    # CALLERS; one value in use is a constant, not an option.  Calls
-    # match by function name, following `import f as g` aliases; a call
-    # with *args or **kwargs passes every option; a function no call
-    # reaches is out of scope here
+    # CALLERS with a value other than its own default literal; one value
+    # in use is a constant, not an option.  Calls match by function
+    # name, following `import f as g` aliases; a call with *args or
+    # **kwargs passes every option; a function no call reaches is out
+    # of scope here
     defs = {}
     for path in glob.glob(os.path.join(ROOT, CALLERS[0]), recursive=True):
         for node in ast.parse(_read(path)).body:
             if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
                 a = node.args
                 pos = [p.arg for p in a.posonlyargs + a.args]
-                opts = pos[len(pos) - len(a.defaults):] + [
-                    p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
-                ]
+                # option -> its default's literal dump (None: not a literal)
+                opts = dict(
+                    zip(pos[len(pos) - len(a.defaults):], map(_literal, a.defaults))
+                )
+                opts.update(
+                    (p.arg, _literal(d))
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d
+                )
                 defs.setdefault(node.name, []).append(
                     (os.path.relpath(path, ROOT), pos, opts)
                 )
@@ -142,21 +158,26 @@ def test_every_option_is_set_by_some_caller():
                 f = call.func
                 name = getattr(f, "id", None) or getattr(f, "attr", None)
                 name = alias.get(name, name)
-                if name not in defs:
-                    continue
-                got = passed.setdefault(name, set())
-                if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                starred = any(isinstance(a, ast.Starred) for a in call.args) or any(
                     k.arg is None for k in call.keywords
-                ):
-                    got.add("*")
-                for _, pos, _ in defs[name]:
-                    got.update(pos[: len(call.args)])
-                got.update(k.arg for k in call.keywords)
+                )
+                for i, (_, pos, opts) in enumerate(defs.get(name, ())):
+                    got = passed.setdefault((name, i), set())
+                    if starred:
+                        got.add("*")
+                    given = list(zip(pos, call.args)) + [
+                        (k.arg, k.value) for k in call.keywords if k.arg
+                    ]
+                    got.update(
+                        p
+                        for p, value in given
+                        if _literal(value) is None or _literal(value) != opts.get(p)
+                    )
     unset = [
         f"{path}::{name}({opt})"
-        for name, got in passed.items()
+        for (name, i), got in passed.items()
         if "*" not in got
-        for path, _, opts in defs[name]
+        for path, _, opts in [defs[name][i]]
         for opt in opts
         if opt not in got and opt not in DEPLOYMENT_OPTIONS.get(name, ())
     ]

@@ -109,13 +109,13 @@ def test_winnow_fingerprints_guarantee(spark):
         ],
         "doc_id string, text string",
     )
-    fps = tq.winnow_fingerprints(df, k=5, window=4).collect()
+    fps = tq.winnow_fingerprints(df).collect()
     by_doc = {}
     for r in fps:
         by_doc.setdefault(r.doc_id, set()).add(r.fp_hash)
     assert len(by_doc["d1"] & by_doc["d2"]) >= 1
     # deterministic across runs
-    again = tq.winnow_fingerprints(df, k=5, window=4).collect()
+    again = tq.winnow_fingerprints(df).collect()
     assert {(r.doc_id, r.fp_pos, r.fp_hash) for r in again} == {
         (r.doc_id, r.fp_pos, r.fp_hash) for r in fps
     }
@@ -227,7 +227,7 @@ def test_image_features_real_path(spark):
         "payload binary, meta struct<width:int,height:int,duration_ms:int,n_bytes:bigint>",
     )
     rows = {r.media_id: r for r in multimodal.extract_image_features(
-        media, deterministic_fake=False
+        media
     ).collect()}
     real = rows["m1"]
     # real decode: green-dominant means, thumb capped at actual size
@@ -290,9 +290,7 @@ def test_video_y4m_real_decode_golden(spark):
           {"width": 4, "height": 2, "duration_ms": 200, "n_bytes": len(payload)})],
         schema=multimodal.MEDIA,
     )
-    rows = multimodal.sample_frames(
-        media, every_ms=100, deterministic_fake=False
-    ).collect()
+    rows = multimodal.sample_frames(media, every_ms=100).collect()
     # cadence 100 ms: first frame at-or-after 0 (ts 0) and 100 (ts 120)
     got = sorted((r.frame_ts_ms, r.frame_hash) for r in rows)
     want = [
@@ -311,9 +309,7 @@ def test_video_avi_real_decode_golden(spark):
           {"width": 2, "height": 2, "duration_ms": 80, "n_bytes": len(payload)})],
         schema=multimodal.MEDIA,
     )
-    rows = multimodal.sample_frames(
-        media, every_ms=40, deterministic_fake=False
-    ).collect()
+    rows = multimodal.sample_frames(media, every_ms=40).collect()
     got = sorted((r.frame_ts_ms, r.frame_hash) for r in rows)
     want = [(i * 40, hashlib.sha256(fr).hexdigest()) for i, fr in enumerate(frames)]
     assert got == want
@@ -321,13 +317,18 @@ def test_video_avi_real_decode_golden(spark):
 
 def test_video_unsupported_codec_falls_back(spark, media_df):
     # a compressed/unknown payload must fall back to the deterministic
-    # synthesis (drop-not-fail, like the image branch) — identical rows
-    # to the plumbing-only mode
+    # synthesis (drop-not-fail, like the image branch): one row per
+    # cadence point, hashed on (payload, ts)
+    import hashlib
+
     vid = media_df.where("media_type = 'video'")
-    real = multimodal.sample_frames(vid, deterministic_fake=False).collect()
-    fake = multimodal.sample_frames(vid, deterministic_fake=True).collect()
-    assert sorted(map(tuple, real)) == sorted(map(tuple, fake))
-    assert len(real) == 4  # 3500 ms at 1000 ms cadence
+    rows = multimodal.sample_frames(vid).collect()
+    want = [
+        ("m3", "d2", ts,
+         hashlib.sha256(b"fake-video" + ts.to_bytes(8, "little")).hexdigest())
+        for ts in (0, 1000, 2000, 3000)  # 3500 ms at 1000 ms cadence
+    ]
+    assert sorted(map(tuple, rows)) == want
 
 
 def test_y4m_decoder_robustness():
@@ -427,9 +428,9 @@ def test_pdf_real_decode_kernel(compress):
 
 
 def test_pdf_layout_real_path_end_to_end(spark):
-    # deterministic_fake=False drives the real kernel through the full
-    # Arrow/mapInPandas plumbing; non-PDF payloads fall back to the
-    # deterministic fake in the same batch
+    # the real kernel runs through the full Arrow/mapInPandas
+    # plumbing; non-PDF payloads fall back to the deterministic fake
+    # in the same batch
     from web_content_extractor_spark.operators.multimodal import parse_pdf_layout
 
     media = spark.createDataFrame(
@@ -442,7 +443,7 @@ def test_pdf_layout_real_path_end_to_end(spark):
         "media_id string, doc_id string, media_type string, mime string, "
         "payload binary, meta struct<width:int,height:int,duration_ms:int,n_bytes:bigint>",
     )
-    rows = parse_pdf_layout(media, deterministic_fake=False).collect()
+    rows = parse_pdf_layout(media).collect()
     real = sorted(
         [r for r in rows if r.media_id == "m1"], key=lambda r: r.block_idx
     )

@@ -62,7 +62,7 @@ def test_zorder_write_skips_on_both_dimensions(spark, tmp_path):
         (F.col("id") / 128).cast("int").alias("y"),
     )
     zpath = str(tmp_path / "zordered")
-    write_zordered(grid, "x", "y", zpath, n_files=16)
+    write_zordered(grid, "x", "y", zpath)
 
     # one-dimensional range layout on x for comparison
     lpath = str(tmp_path / "linear")

@@ -142,20 +142,23 @@ def fingerprint(text: Column) -> Column:
 # --- winnowing (rolling-hash fingerprints, Schleimer et al. 2003) --------
 
 WINNOW_B = 257  # polynomial base
+WINNOW_K = 5  # char k-gram length
+WINNOW_WINDOW = 4  # consecutive hashes per selection window
 WINNOW_M = 2147483647  # 2^31 - 1
 _POS_BITS = 20  # pos packed below the hash for deterministic arg-min
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 5, window: int = 4) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprints of ``docs.text``: (doc_id, fp_pos,
     fp_hash), distinct.
 
     The standard local document fingerprinting scheme: hash every char
-    k-gram with a polynomial hash, then from every ``window``
-    consecutive hashes select the minimal (hash, pos) pair — ties
-    broken by position via packing pos into the low bits, so selection
-    is fully deterministic and identical in the SQL oracle (the math
-    is exact int64 on both sides).  Guarantee: any shared substring of
+    k-gram (k = :data:`WINNOW_K`) with a polynomial hash, then from
+    every ``window`` (:data:`WINNOW_WINDOW`) consecutive hashes select
+    the minimal (hash, pos) pair — ties broken by position via packing
+    pos into the low bits, so selection is fully deterministic and
+    identical in the SQL oracle (the math is exact int64 on both
+    sides).  Guarantee: any shared substring of
     length >= window+k-1 yields at least one shared fingerprint, which
     is what makes the fingerprint set a plagiarism/near-dup index.
 
@@ -176,6 +179,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, window: int = 4) -> DataFra
         import numpy as np
         from numpy.lib.stride_tricks import sliding_window_view
 
+        k, window = WINNOW_K, WINNOW_WINDOW
         out: list = []
         for t in texts:
             if not t or len(t) - (k - 1) < window:

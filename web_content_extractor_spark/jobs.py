@@ -20,10 +20,12 @@ prints the dict as one JSON line.  A flag value the parser cannot reject
 on its own prints ``{"error": ...}`` and exits 2.
 
 One driver process builds one logical plan per stage; Catalyst/AQE do
-the physical planning.  ``extract --resume`` uses the file-lineage
-manifest (sources/checkpoint.py) so a crashed or re-submitted run
-processes exactly the unprocessed remainder; without it the job is a
-plain one-shot extract + append.
+the physical planning.  ``extract --resume`` drains only the input
+files no earlier ``--resume`` run has read, through the file-source
+checkpoint at ``<output>/_checkpoint``
+(streaming/incremental.py::stream_extract); delivery is at-least-once,
+so a crash between a batch's writes and its checkpoint commit replays
+that batch.  Without it the job is a plain one-shot extract + append.
 """
 
 from __future__ import annotations
@@ -37,16 +39,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from web_content_extractor_spark.session import get_spark
-from web_content_extractor_spark.sources.checkpoint import (
-    run_resumable_extract,
-    write_extract,
-)
-from web_content_extractor_spark.sources.docs import READ_FORMATS, read_docs
+from web_content_extractor_spark.sources.checkpoint import write_extract
+from web_content_extractor_spark.sources.docs import READ_FORMATS, _format, read_docs
 from web_content_extractor_spark.sources.urls import (
     UrlListError,
     read_url_list,
     url_batch,
 )
+from web_content_extractor_spark.streaming.incremental import stream_extract
 
 
 class UsageError(Exception):
@@ -54,13 +54,16 @@ class UsageError(Exception):
 
 
 def _check_extract(args) -> None:
-    if args.resume and (args.urls or args.input_format not in (None, "parquet")):
+    if args.resume and (
+        args.urls
+        or args.cdx_output
+        or _format(args.input, args.input_format, READ_FORMATS) == "iceberg"
+    ):
         raise UsageError(
-            "--resume tracks parquet file lineage: it needs parquet input "
-            "and no --urls (Iceberg inputs resume from table snapshots via "
-            "snapshot_diff/changed_docs; JSONL and WARC shards are "
-            "immutable, so re-run on the new files; --urls is a one-shot "
-            "work list)"
+            "--resume reads only newly landed input files: it takes no "
+            "--urls (a one-shot work list) and no --cdx-output (the index "
+            "reads raw WARC records), and Iceberg inputs resume from table "
+            "snapshots via snapshot_diff/changed_docs"
         )
     if args.cdx_output and args.input_format != "warc":
         raise UsageError(
@@ -78,7 +81,9 @@ def run_extract(spark, args) -> dict:
         balance=args.balance,
     )
     if args.resume:
-        result = run_resumable_extract(spark, args.input, args.output, **opts)
+        result = stream_extract(
+            spark, args.input, args.output, fmt=args.input_format, **opts
+        )
     else:
         if args.cdx_output:
             from web_content_extractor_spark.sources.warc import (
@@ -239,7 +244,6 @@ def run_corpus(spark, args) -> dict:
     packed = pack_token_stream(
         chunks.join(shards, "doc_id"),
         budget=args.pack_budget,
-        group_col="shard",
         order_cols=("shard_pos", "chunk_id"),
     )
     # trainable layout: one range-partitioned, in-order file family
@@ -479,7 +483,9 @@ def build_parser() -> argparse.ArgumentParser:
     x.add_argument("--variant", choices=("context", "regex"), default="context",
                    help="classifier rule set (CLI vs API parity)")
     x.add_argument("--resume", action="store_true",
-                   help="file-lineage resumable mode (skip processed files)")
+                   help="incremental mode: extract only the input files no "
+                        "earlier --resume run read (checkpoint at "
+                        "<output>/_checkpoint)")
     x.add_argument("--balance", action="store_const", const="rows",
                    default=False,
                    help="repartitionByRange(doc_id) before the tokenizer "

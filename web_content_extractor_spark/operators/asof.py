@@ -44,19 +44,18 @@ RIGHT_COLS = ("event_id", "value")
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "user_id",
-    ts: str = "ts",
     right_cols: tuple[str, ...] = RIGHT_COLS,
 ) -> DataFrame:
     """For each left row, the most recent right row with
-    ``right.ts <= left.ts`` on the same key (left join: unmatched
-    rows keep NULL match columns).
+    ``right.ts <= left.ts`` on the same ``user_id`` (left join:
+    unmatched rows keep NULL match columns).
 
     Returns the left columns plus ``matched_<col>`` for each of
     ``right_cols``, ``matched_ts``, and ``lag_us`` (microseconds since
     the matched right row; exact integer arithmetic — no float drift
     between engines).
     """
+    on, ts = "user_id", "ts"
     # deterministic tie handling: one right row per (key, ts)
     r = (
         right.groupBy(on, ts)
@@ -215,7 +214,6 @@ def asof_join_bucketed(
 def interval_join(
     events: DataFrame,
     intervals: DataFrame,
-    ts_col: str = "ts",
     bin_seconds: int = 3600,
     max_bins_per_interval: int = 100_000,
 ) -> DataFrame:
@@ -245,7 +243,7 @@ def interval_join(
     semantic_duplicates-style skew tripwire.
     """
     ev_bin = F.floor(
-        F.unix_timestamp(F.col(ts_col).cast("timestamp")) / bin_seconds
+        F.unix_timestamp(F.col("ts").cast("timestamp")) / bin_seconds
     ).cast("bigint")
     s_bin = F.floor(
         F.unix_timestamp(F.col("w_start").cast("timestamp")) / bin_seconds
@@ -282,8 +280,8 @@ def interval_join(
     return (
         ev.join(iv, "__bin")
         .where(
-            (F.col(ts_col) >= F.col("w_start"))
-            & (F.col(ts_col) <= F.col("w_end"))
+            (F.col("ts") >= F.col("w_start"))
+            & (F.col("ts") <= F.col("w_end"))
         )
         .drop("__bin")
     )

@@ -118,7 +118,6 @@ def mixture_sample(docs: DataFrame, rates: DataFrame, seed: int = 1) -> DataFram
 def pack_token_stream(
     chunks: DataFrame,
     budget: int = 1024,
-    group_col: str = "shard",
     order_cols: tuple[str, ...] = ("doc_id", "chunk_id"),
 ) -> DataFrame:
     """GPT-style token-stream packing: concatenate all chunks of a
@@ -137,7 +136,7 @@ def pack_token_stream(
     parallel across shards.
     """
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("shard")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -147,12 +146,11 @@ def pack_token_stream(
     ).withColumn("pack_offset", (before % budget).cast("bigint"))
 
 
-def pack_interleaved(
-    spans: DataFrame,
-    budget: int = 2048,
-    media_tokens: int = 64,
-    order_cols: tuple[str, ...] = ("doc_id", "span_idx"),
-) -> DataFrame:
+# tokens one media span costs in an interleaved pack
+MEDIA_TOKENS = 64
+
+
+def pack_interleaved(spans: DataFrame, budget: int = 2048) -> DataFrame:
     """Interleaved multimodal sequence packing: the modern
     vision-language pretraining step where a document is an ordered
     mix of text and media spans and every training sequence is cut to
@@ -160,7 +158,7 @@ def pack_interleaved(
     ('media' or text) and ``text``.
 
     Text spans cost their whitespace token count; media spans cost a
-    fixed ``media_tokens`` budget (the patch-token count the image
+    fixed :data:`MEDIA_TOKENS` budget (the patch-token count the image
     occupies after the vision encoder — the standard accounting, since
     the raw bytes never enter the token stream).  The kind-aware cost
     column then feeds :func:`pack_token_stream`'s per-shard cumulative
@@ -180,19 +178,20 @@ def pack_interleaved(
         F.size(F.split(F.trim(text), r"\s+"))
     )
     cost = (
-        F.when(F.col("kind") == "media", F.lit(media_tokens))
+        F.when(F.col("kind") == "media", F.lit(MEDIA_TOKENS))
         .otherwise(n_text)
         .cast("bigint")
     )
     return pack_token_stream(
-        spans.withColumn("n_tokens", cost), budget=budget, order_cols=order_cols
+        spans.withColumn("n_tokens", cost),
+        budget=budget,
+        order_cols=("doc_id", "span_idx"),
     )
 
 
 def token_budget_sample(
     docs: DataFrame,
     budgets: DataFrame,
-    seed: int = 2,
 ) -> DataFrame:
     """Per-source token-budget sampling: keep documents, in
     reproducible hash order, until each source's token budget is hit.
@@ -207,9 +206,8 @@ def token_budget_sample(
     (in portable-hash order, doc_id tie-break) is under the budget —
     so the boundary doc is included and a budget is overshot by at
     most one document, never undershot while docs remain.  The hash
-    order makes the selection a pure function of (doc_id, seed):
-    rerun-stable, layout-independent, and a new seed is a fresh epoch
-    resample.
+    order makes the selection a pure function of doc_id: rerun-stable
+    and layout-independent.
 
     Shuffle profile: ONE shuffle keyed by source for the per-source
     running sum.  Source cardinality is tiny but per-source volume is
@@ -218,7 +216,7 @@ def token_budget_sample(
     corpus, pre-bucket it into sub-sources and split its budget.
     Budgets join broadcast (one row per source).
     """
-    h = id_hash31(docs, "doc_id", seed)
+    h = id_hash31(docs, "doc_id", 2)
     w = (
         Window.partitionBy("source")
         .orderBy("__h", "doc_id")

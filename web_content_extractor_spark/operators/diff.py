@@ -4,7 +4,8 @@ The incremental-reprocessing primitive for a 10^12-doc table: given two
 snapshots of the docs table (Iceberg snapshot reads, or two parquet
 roots in the sandbox fallback), classify every doc_id so downstream
 extraction re-runs ONLY `added` + `changed` — the doc-granular
-complement to the file-lineage resume in sources/checkpoint.py.
+complement to the file-granular `extract --resume`
+(streaming/incremental.py::stream_extract).
 
 Scale shape: both sides reduce to (id, 16-byte fingerprint) in the
 scan projection, so the full-outer join shuffles fingerprints, never

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+DAMPING = 0.85  # PageRank damping factor d
+
 
 def normalize_edges(edges: DataFrame) -> DataFrame:
     """Dedup edges, drop self-loops, patch dangling nodes, attach degree.
@@ -68,7 +70,6 @@ def normalize_edges(edges: DataFrame) -> DataFrame:
 def host_pagerank(
     edges: DataFrame,
     iters: int = 5,
-    damping: float = 0.85,
     broadcast_ranks: bool = False,
     checkpoint_every: int = 0,
 ) -> DataFrame:
@@ -76,8 +77,8 @@ def host_pagerank(
 
     Returns (host, rank) for every node, after ``iters`` synchronous
     iterations of ``r' = (1-d)/n + d * sum_in(r_src / out_deg_src)``
-    from a uniform start.  With the dangling self-loop patch the total
-    mass stays 1 every iteration.
+    with ``d`` = :data:`DAMPING`, from a uniform start.  With the
+    dangling self-loop patch the total mass stays 1 every iteration.
 
     ``broadcast_ranks=True`` hints the per-iteration rank table (and
     the contribution table, same cardinality) for broadcast joins —
@@ -119,8 +120,8 @@ def host_pagerank(
             .select(
                 "host",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce("c", F.lit(0.0))
+                    F.lit((1.0 - DAMPING) / n)
+                    + F.lit(DAMPING) * F.coalesce("c", F.lit(0.0))
                 ).alias("rank"),
             )
         )

@@ -8,9 +8,9 @@ inflate + all five scanline filters -> pixel features), BMP
 (``_decode_bmp``), GIF (``_decode_gif``: real LZW), PDF layout
 (``_parse_pdf_real`` below), and RIFF/WAVE PCM16 audio
 (``_decode_wav``: chunk walker + int16 signal features, oracle-checked
-end to end).  Video frame decode is the one genuinely
-environment-blocked slot (needs ffmpeg) and is clearly stubbed with a
-deterministic fake.  Undecodable payloads fall back to the
+end to end).  Video frame decode reads the uncompressed containers
+(Y4M, BI_RGB AVI); compressed codecs need ffmpeg.  Every stage tries
+the real decoder first, and an undecodable payload falls back to a
 deterministic fake — drop-not-fail, mirroring the link pipeline.
 
 On a real cluster you swap PIL/torchvision/ffmpeg into the decode
@@ -445,13 +445,12 @@ def _fake_features(payload: bytes, n: int = 8) -> list[float]:
 THUMB = (32, 32)
 
 
-def extract_image_features(
-    media: DataFrame, deterministic_fake: bool = True
-) -> DataFrame:
+def extract_image_features(media: DataFrame) -> DataFrame:
     """Arrow-batched decode + feature stage over binary payloads.
 
-    One pass, no shuffle; the output schema is fixed (IMAGE_FEATURES)
-    regardless of the decode backend.
+    One pass, no shuffle; the output schema is fixed (IMAGE_FEATURES).
+    PNG, BMP and GIF payloads are really decoded; any other payload
+    gets the deterministic fake features and the full thumbnail bound.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -466,17 +465,15 @@ def extract_image_features(
             ):
                 payload = bytes(payload) if payload is not None else b""
                 tw, th = THUMB
-                feats = None
-                if not deterministic_fake:
-                    try:
-                        decoded = _real_image_features(payload)
-                    except Exception:
-                        decoded = None  # drop-not-fail: fake fallback
-                    if decoded is not None:
-                        w, h, feats = decoded
-                        tw, th = min(THUMB[0], w), min(THUMB[1], h)
-                if feats is None:  # fake backend or undecodable payload
+                try:
+                    decoded = _real_image_features(payload)
+                except Exception:
+                    decoded = None  # drop-not-fail: fake fallback
+                if decoded is None:
                     feats = _fake_features(payload)
+                else:
+                    w, h, feats = decoded
+                    tw, th = min(THUMB[0], w), min(THUMB[1], h)
                 out["media_id"].append(media_id)
                 out["doc_id"].append(doc_id)
                 out["n_bytes"].append(len(payload))
@@ -772,17 +769,16 @@ def _parse_pdf_real(payload: bytes) -> list[tuple] | None:
     return blocks or None
 
 
-def parse_pdf_layout(
-    media: DataFrame, deterministic_fake: bool = True
-) -> DataFrame:
+def parse_pdf_layout(media: DataFrame) -> DataFrame:
     """PDF/layout branch for media spans (north-star requirement).
 
     Arrow-batched layout parse of PDF payloads into ordered
     (page, block, kind, text, bbox) rows — the media-span counterpart
-    of the HTML block classifier (operators/content.py).  The decode
-    kernel is stubbed (deterministic blocks derived from the payload
-    hash) so the distributed plumbing — schema, batch shape, fan-out,
-    downstream joins back to docs — is real and oracle-checkable.
+    of the HTML block classifier (operators/content.py), decoded by
+    :func:`_parse_pdf_real`.  A payload it cannot parse gets two
+    deterministic blocks derived from the payload hash, so the
+    plumbing — schema, batch shape, fan-out, downstream joins back to
+    docs — stays oracle-checkable on any input.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -793,12 +789,10 @@ def parse_pdf_layout(
                 pdf["media_id"], pdf["doc_id"], pdf["payload"]
             ):
                 payload = bytes(payload) if payload is not None else b""
-                blocks = None
-                if not deterministic_fake:
-                    try:
-                        blocks = _parse_pdf_real(payload)
-                    except Exception:
-                        blocks = None  # drop-not-fail: fake fallback
+                try:
+                    blocks = _parse_pdf_real(payload)
+                except Exception:
+                    blocks = None  # drop-not-fail: fake fallback
                 if blocks is None:
                     digest = hashlib.sha256(payload).hexdigest()
                     p_digest = hashlib.sha256(payload + b"p").hexdigest()
@@ -812,22 +806,17 @@ def parse_pdf_layout(
     return media.mapInPandas(run, schema=PDF_LAYOUT)
 
 
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, deterministic_fake: bool = True
-) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling for video payloads: one row per sampled frame.
 
-    With ``deterministic_fake=False`` supported uncompressed containers
-    (Y4M, BI_RGB AVI) are REALLY decoded: ``frame_ts_ms`` is the true
-    frame timestamp from the container frame rate and ``frame_hash``
-    the sha256 of the raw decoded frame bytes; at each ``every_ms``
-    cadence point the first frame at-or-after it is emitted.  Payloads
-    no decoder handles (compressed codecs) fall back to the
-    deterministic synthesis below — drop-not-fail, mirroring the image
-    branch.  ``deterministic_fake=True`` (default) skips decode
-    entirely and keeps the pure plumbing behavior: one synthetic row
-    per cadence point over meta.duration_ms, hash keyed on
-    (payload, ts).
+    Supported uncompressed containers (Y4M, BI_RGB AVI) are REALLY
+    decoded: ``frame_ts_ms`` is the true frame timestamp from the
+    container frame rate and ``frame_hash`` the sha256 of the raw
+    decoded frame bytes; at each ``every_ms`` cadence point the first
+    frame at-or-after it is emitted.  Payloads no decoder handles
+    (compressed codecs) fall back to a deterministic synthesis —
+    drop-not-fail, mirroring the image branch: one row per cadence
+    point over meta.duration_ms, hash keyed on (payload, ts).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -838,7 +827,10 @@ def sample_frames(
                 pdf["media_id"], pdf["doc_id"], pdf["payload"], pdf["meta"]
             ):
                 payload = bytes(payload) if payload is not None else b""
-                decoded = None if deterministic_fake else _decode_video_real(payload)
+                try:
+                    decoded = _decode_video_real(payload)
+                except Exception:
+                    decoded = None  # drop-not-fail: fake fallback
                 if decoded is not None:
                     _w, _h, num, den, frames = decoded
                     due = 0

@@ -91,7 +91,7 @@ def weighted_sample(docs: DataFrame, k: int = 100, seed: int = 11) -> DataFrame:
     )
 
 
-def stratified_sample(docs: DataFrame, k: int = 10, seed: int = 13) -> DataFrame:
+def stratified_sample(docs: DataFrame, k: int = 10) -> DataFrame:
     """Exactly min(k, |stratum|) docs per ``source`` stratum, chosen in
     reproducible portable-hash order (a per-stratum simple random
     sample that reruns bit-identically).
@@ -100,7 +100,7 @@ def stratified_sample(docs: DataFrame, k: int = 10, seed: int = 13) -> DataFrame
     hash order (stable across reruns; useful for taking a prefix of a
     larger pre-drawn sample without resampling).
     """
-    h = _id_hash31(docs, "doc_id", seed)
+    h = _id_hash31(docs, "doc_id", 13)
     w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id"))
     return (
         docs.withColumn("draw", F.row_number().over(w))
@@ -112,7 +112,6 @@ def hashed_bigram_features(
     docs: DataFrame,
     is_target: Column,
     n_buckets: int = 256,
-    seed: int = 17,
 ) -> DataFrame:
     """(doc_id, __tgt, bucket): one row per ``text`` bigram occurrence,
     hashed into ``n_buckets`` buckets via portable vocab ids (the
@@ -160,7 +159,7 @@ def hashed_bigram_features(
                 (
                     F.col("t1") * F.lit(_MULT1)
                     + F.col("t2") * F.lit(_MULT2)
-                    + F.lit(seed)
+                    + F.lit(17)
                 )
                 % F.lit(M31)
             )
@@ -174,7 +173,6 @@ def dsir_weights(
     docs: DataFrame,
     is_target: Column,
     n_buckets: int = 256,
-    seed: int = 17,
 ) -> DataFrame:
     """DSIR hashed-bigram importance log-weights (Xie et al. 2023).
 
@@ -200,7 +198,7 @@ def dsir_weights(
 
     Output: (doc_id, n_feats, dsir_logw rounded to 6 dp).
     """
-    feats = hashed_bigram_features(docs, is_target, n_buckets=n_buckets, seed=seed)
+    feats = hashed_bigram_features(docs, is_target, n_buckets=n_buckets)
 
     counts = feats.groupBy("bucket").agg(
         F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("c_tgt"),

@@ -238,9 +238,9 @@ def exact_near_duplicates(
     )
 
 
-def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int = 16) -> list[list[float]]:
     """Deterministic random hyperplanes (public LSH construction)."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     return rng.randn(n_planes, dim).astype(float).tolist()
 
 
@@ -289,17 +289,16 @@ def lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    r: int = 4,
-    tables: int = 8,
-    dim: int = 64,
 ) -> DataFrame:
-    """Approximate top-k via multi-table hyperplane LSH.
+    """Approximate top-k via multi-table hyperplane LSH over the
+    64-dim ``embedding`` column, ``r`` = 4 planes per table.
 
     Candidates = union over tables of same-bucket rows (deduped), so the
     corpus-side cost is |tables| bucket probes instead of a full scan;
     tests measure recall vs brute force.
     """
-    planes = hyperplanes(dim, r * tables)
+    r, tables = 4, 8
+    planes = hyperplanes(64, r * tables)
     q_ids, Q = _collect_queries(queries)
     if not q_ids:
         return _empty_topk(embeddings)

@@ -3,7 +3,7 @@
 Training-corpus exact-substring dedup in the style of Lee et al.,
 "Deduplicating Training Data Makes Language Models Better" (ACL 2022):
 a position in a document is *duplicated* when the k-token gram starting
-there occurs >= ``min_count`` times corpus-wide (within-doc repeats
+there occurs at least twice corpus-wide (within-doc repeats
 count, as in the suffix-array formulation).  Runs of duplicated
 positions are merged into maximal spans — the substrings a curation
 pass would cut or down-weight.
@@ -63,14 +63,13 @@ def kgram_positions(docs: DataFrame, k: int = 8) -> DataFrame:
 def duplicate_spans(
     docs: DataFrame,
     k: int = 8,
-    min_count: int = 2,
     hash_keys: bool = False,
 ) -> DataFrame:
     """Maximal duplicated-substring spans per document (``docs.text``).
 
     Returns (doc_id, span_start, span_end, span_tokens) with
     ``span_end`` exclusive, in token positions: every k-gram starting
-    in [span_start, span_end - k] occurs >= ``min_count`` times in the
+    in [span_start, span_end - k] occurs at least twice in the
     corpus, and the spans are maximal (merging overlapping/adjacent
     duplicated k-gram windows — two starts s1 < s2 merge iff
     s2 <= s1 + k, i.e. their coverage overlaps or touches).
@@ -81,7 +80,7 @@ def duplicate_spans(
     cnt = F.count("*").over(Window.partitionBy("gram_key"))
     dup = (
         pos.withColumn("cnt", cnt)
-        .where(F.col("cnt") >= min_count)
+        .where(F.col("cnt") >= 2)
         .select("doc_id", "start")
     )
     prev = F.lag("start").over(Window.partitionBy("doc_id").orderBy("start"))
@@ -103,12 +102,7 @@ def duplicate_spans(
     ).drop("island")
 
 
-def remove_duplicate_spans(
-    docs: DataFrame,
-    k: int = 8,
-    min_count: int = 2,
-    hash_keys: bool = True,
-) -> DataFrame:
+def remove_duplicate_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """Cut the maximal duplicated substrings out of each document —
     the actual Lee et al. (ACL 2022) dedup *transform*, where
     :func:`duplicate_spans` is the detector.
@@ -125,7 +119,7 @@ def remove_duplicate_spans(
     typically 0-3), so the exists() probe per token is O(tokens *
     spans) with a small constant and never shuffles.
     """
-    spans = duplicate_spans(docs, k, min_count, hash_keys)
+    spans = duplicate_spans(docs, k, hash_keys=True)
     per_doc = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct("span_start", "span_end"))
@@ -155,12 +149,7 @@ def remove_duplicate_spans(
     )
 
 
-def substring_dup_stats(
-    docs: DataFrame,
-    k: int = 8,
-    min_count: int = 2,
-    hash_keys: bool = True,
-) -> DataFrame:
+def substring_dup_stats(docs: DataFrame) -> DataFrame:
     """Per-document duplicated-token coverage.
 
     Returns (doc_id, n_tokens, dup_tokens, dup_fraction) for EVERY
@@ -169,7 +158,7 @@ def substring_dup_stats(
     battery.  ``dup_tokens`` is the union length of the maximal spans
     (spans never overlap after merging, so a plain sum is the union).
     """
-    spans = duplicate_spans(docs, k, min_count, hash_keys)
+    spans = duplicate_spans(docs, hash_keys=True)
     per_doc = spans.groupBy("doc_id").agg(
         F.sum("span_tokens").alias("dup_tokens")
     )

@@ -22,12 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def resample_counts(events: DataFrame, unit: str = "hour") -> DataFrame:
-    """(event_type, bin_ts, n): events per truncated ``ts`` bin, with
+def resample_counts(events: DataFrame) -> DataFrame:
+    """(event_type, bin_ts, n): events per hour-truncated ``ts`` bin, with
     EVERY (event_type, bin) combination between the global min and max bin present
     — empty bins zero-filled.
-
-    ``unit`` is a date_trunc unit ('minute' | 'hour' | 'day').
 
     NULL keys are excluded up front: the gap-fill equi-join is
     null-unsafe, so a NULL-key series would silently report 0 for
@@ -38,7 +36,7 @@ def resample_counts(events: DataFrame, unit: str = "hour") -> DataFrame:
         F.col("event_type").isNotNull() & F.col("ts").isNotNull()
     ).select(
         "event_type",
-        F.date_trunc(unit, F.col("ts").cast("timestamp")).alias("bin_ts"),
+        F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("bin_ts"),
     )
     counts = binned.groupBy("event_type", "bin_ts").agg(F.count("*").alias("n"))
     bounds = binned.agg(
@@ -46,7 +44,7 @@ def resample_counts(events: DataFrame, unit: str = "hour") -> DataFrame:
     )
     grid = bounds.select(
         F.explode(
-            F.sequence("lo", "hi", F.expr(f"interval 1 {unit}"))
+            F.sequence("lo", "hi", F.expr("interval 1 hour"))
         ).alias("bin_ts")
     )
     spine = binned.select("event_type").distinct().crossJoin(grid)

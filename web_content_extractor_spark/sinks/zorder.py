@@ -53,9 +53,8 @@ def write_zordered(
     x_col: str,
     y_col: str,
     path: str,
-    n_files: int = 16,
 ) -> None:
-    """Write ``df`` as ``n_files`` z-clustered parquet files.
+    """Write ``df`` as 16 z-clustered parquet files.
 
     Each output file covers a contiguous, disjoint z-range
     (repartitionByRange), so parquet footer min/max on BOTH source
@@ -66,7 +65,7 @@ def write_zordered(
     z = interleave_bits(F.col(x_col), F.col(y_col))
     (
         df.withColumn("zval", z)
-        .repartitionByRange(n_files, "zval")
+        .repartitionByRange(16, "zval")
         .sortWithinPartitions("zval")
         .write.mode("overwrite")
         .parquet(path)

@@ -9,7 +9,8 @@ with the identical schema — the pipeline code is format-agnostic
 
 :func:`read_docs` also turns JSONL shards and WARC archives into DOCS
 rows, as a batch read or (``stream=True``) as a file-source stream,
-so the batch CLI and the streaming job share one dispatch.
+so the one-shot CLI extract and the incremental one (``--resume``,
+``stream_extract``) share one dispatch.
 """
 
 from __future__ import annotations
@@ -20,6 +21,17 @@ from web_content_extractor_spark.schemas import DOCS
 
 READ_FORMATS = ("parquet", "iceberg", "jsonl", "warc")
 WRITE_FORMATS = ("parquet", "iceberg")
+
+# A file-source stream skips, with no log line, any new file whose mtime
+# is more than maxFileAge (default 7 days) older than the newest file it
+# has seen; no landed file is too old to extract.
+MAX_FILE_AGE = "36500d"
+
+
+def _reader(spark: SparkSession, stream: bool):
+    """``spark.read``, or for ``stream`` a file-source stream reader that
+    never skips a file for its age."""
+    return spark.readStream.option("maxFileAge", MAX_FILE_AGE) if stream else spark.read
 
 
 def _format(location: str, fmt: str | None, accepted: tuple[str, ...]) -> str:
@@ -61,10 +73,13 @@ def read_docs(
       :func:`~web_content_extractor_spark.sources.warc.warc_docs`).
 
     ``stream=True`` returns the same rows as a file-source stream
-    (``spark.readStream``): each landed file is read exactly once.
+    (``spark.readStream``) for ``streaming/incremental.py::stream_extract``:
+    the stream's checkpoint lists each landed file once, whatever its
+    age, and a consumer that crashes before committing a batch reads
+    that batch's files again.
     """
     fmt = _format(location, fmt, READ_FORMATS)
-    reader = spark.readStream if stream else spark.read
+    reader = _reader(spark, stream)
     if fmt == "iceberg":
         return reader.format("iceberg").load(location)
     if fmt == "jsonl":

@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from web_content_extractor_spark.sources.docs import _reader
+
 _CRLF = "\r\n"
 
 # WARC header block: version line then Name: value lines, blank-line
@@ -334,17 +336,17 @@ def read_warc(spark, path: str, stream: bool = False) -> DataFrame:
     blob_id = a stable hash of the file path.
 
     ``stream=True`` reads the directory as a file-source stream (the
-    continuous-crawl landing shape: each archive is picked up exactly
-    once through the checkpointed file log) with the same record
+    continuous-crawl landing shape: the checkpointed file log lists
+    each archive once, whatever its age) with the same record
     walker.  The binaryFile schema is stated either way: a stream
     cannot infer it, and a batch read accepts it.  Only ``*.warc*``
     files are listed, so half-written ``.tmp`` sidecars and markers
     like ``_SUCCESS`` never enter the read (a stream that ingested a
     partial file would never re-read the finished rename).
     """
-    reader = spark.readStream if stream else spark.read
     files = (
-        reader.format("binaryFile")
+        _reader(spark, stream)
+        .format("binaryFile")
         .schema(
             "path string, modificationTime timestamp, "
             "length long, content binary"

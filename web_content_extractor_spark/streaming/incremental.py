@@ -3,30 +3,29 @@
 The reference has no streaming surface (SURVEY §2.9) — its
 incremental behaviors are skip-existing sinks (src/cli.py:396-398)
 and retry/resume (src/infrastructure/http_client.py:61-113).  The
-engine offers two distributed analogs:
-
-- ``sources/checkpoint.py``   — batch resume from a file-lineage
-  manifest (Iceberg-snapshot-shaped bookkeeping).
-- this module                 — the same pipeline as a Structured
-  Streaming job: the file source's own checkpoint gives exactly-once
-  incremental processing of newly-landed corpus files.
-  :func:`stream_extract` runs with the ``availableNow`` trigger: it
-  drains the backlog and stops, so a cron'd re-run is a resumable
-  batch job with zero custom bookkeeping.
+engine's one analog is :func:`stream_extract`, which also backs
+``jobs extract --resume``: the file source's own checkpoint
+(Armbrust et al., *Structured Streaming*, SIGMOD 2018) remembers
+which landed corpus files were read, an ``availableNow`` trigger
+drains the backlog and stops, and each micro-batch goes through the
+batch CLI's writer (``sources/checkpoint.py::write_extract``).  A
+cron'd re-run is a resumable batch job with no custom bookkeeping.
 
 The docs source and the extraction plan are IDENTICAL to the batch
-path (the same ``read_docs()`` and ``extract()`` calls — the file
-sources, mapInPandas and column algebra are all streaming-compatible,
-stateless transforms), so span parity carries over unchanged.
+path (the same ``read_docs()`` and ``extract()`` calls), so span parity
+carries over unchanged.  The rest of the module holds the stateful
+streaming operators.
 """
 
 from __future__ import annotations
 
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from web_content_extractor_spark.plans.pipeline import extract
+from web_content_extractor_spark.sources.checkpoint import write_extract
 from web_content_extractor_spark.sources.docs import read_docs
 
 
@@ -34,26 +33,58 @@ def stream_extract(
     spark: SparkSession,
     input_path: str,
     output_path: str,
-    checkpoint_path: str,
-    fmt: str = "parquet",
-) -> StreamingQuery:
-    """Incrementally extract newly-landed doc files; exactly-once sink.
+    fmt: str | None = None,
+    metrics_path: str | None = None,
+    errors_path: str | None = None,
+    content_path: str | None = None,
+    variant: str = "context",
+    balance: bool | str = False,
+) -> dict:
+    """Extract the doc files landed under ``input_path`` since the last
+    call; returns ``{"run_id", "docs"}`` like the one-shot extract.
 
-    Processes the current backlog and stops (``availableNow``: a
-    resumable batch).  ``fmt``: "parquet", "jsonl" or "warc" landing
-    files, read by :func:`~web_content_extractor_spark.sources.docs.read_docs`
-    exactly as the batch CLI reads them.
+    ``fmt``: "parquet", "jsonl" or "warc" landing files, read by
+    :func:`~web_content_extractor_spark.sources.docs.read_docs` exactly
+    as the batch CLI reads them.  Each micro-batch runs
+    :func:`~web_content_extractor_spark.sources.checkpoint.write_extract`
+    with the other arguments, under one ``run_id`` per call.  The file
+    source's checkpoint lives at ``<output_path>/_checkpoint``, which
+    parquet readers of the spans table skip (leading ``_``).  The call
+    drains the backlog (``availableNow``) and returns; ``docs == 0``
+    marks a run that found no new file.
+
+    Delivery is at-least-once: a crash after a batch's writes and
+    before Spark commits the batch replays it on the next call, so its
+    rows can appear twice.  (The spans-only streaming file sink this
+    replaced was exactly-once, but wrote no metrics, errors or content
+    table.)
     """
-    docs = read_docs(spark, input_path, fmt=fmt, stream=True)
-    return (
-        extract(docs)
-        .writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    run_id = uuid.uuid4().hex[:12]
+    counts = []
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        counts.append(
+            write_extract(
+                batch,
+                output_path,
+                run_id,
+                metrics_path=metrics_path,
+                errors_path=errors_path,
+                content_path=content_path,
+                variant=variant,
+                balance=balance,
+            )
+        )
+
+    (
+        read_docs(spark, input_path, fmt=fmt, stream=True)
+        .writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", os.path.join(output_path, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
+    return {"run_id": run_id, "docs": sum(counts)}
 
 
 FIRST_SEEN_OUTPUT = "url string, first_doc_id string, n_first_batch bigint"
@@ -105,7 +136,7 @@ def _first_seen(keyed: DataFrame, key: str, id_out: str, output: str) -> DataFra
     )
 
 
-def stateful_first_seen(spans_stream: DataFrame, key: str = "media_ref") -> DataFrame:
+def stateful_first_seen(spans_stream: DataFrame) -> DataFrame:
     """Custom stateful operator: streaming first-seen dedup.
 
     The continuously-running analog of the crawl visited-set (D1/D2,
@@ -116,12 +147,13 @@ def stateful_first_seen(spans_stream: DataFrame, key: str = "media_ref") -> Data
     batch's occurrence count.  Later occurrences only bump the state
     counter (:func:`_first_seen`).
     """
-    keyed = spans_stream.select(F.col(key).alias("url"), "doc_id")
+    keyed = spans_stream.select(F.col("media_ref").alias("url"), "doc_id")
     return _first_seen(keyed, "url", "first_doc_id", FIRST_SEEN_OUTPUT)
 
 
-def windowed_span_counts(stream: DataFrame, window: str = "10 minutes") -> DataFrame:
-    """Event-time windowed per-kind span counts with late-data bound.
+def windowed_span_counts(stream: DataFrame) -> DataFrame:
+    """Event-time 10-minute windowed per-kind span counts with late-data
+    bound.
 
     Takes an exploded span stream carrying an event-time ``ts`` column;
     a 30-minute watermark bounds state so the agg runs indefinitely at
@@ -129,7 +161,7 @@ def windowed_span_counts(stream: DataFrame, window: str = "10 minutes") -> DataF
     """
     return (
         stream.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", window).alias("w"), "kind")
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "kind")
         .agg(F.count("*").alias("n_spans"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -214,9 +246,7 @@ def sessionized_counts(stream: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream_within_watermark(
-    docs_stream: DataFrame, delay: str = "10 minutes"
-) -> DataFrame:
+def dedup_stream_within_watermark(docs_stream: DataFrame) -> DataFrame:
     """Watermark-bounded streaming exact dedup — the production
     complement of :func:`stateful_first_seen`.
 
@@ -226,7 +256,7 @@ def dedup_stream_within_watermark(
     (``functions.text_quality.fingerprint``, the same normalization as
     ``dedup_docs.exact_duplicates``) only within the watermark horizon
     via ``dropDuplicatesWithinWatermark``: duplicates whose
-    ``fetched_at`` lies within ``delay`` of the first copy are dropped,
+    ``fetched_at`` lies within 10 minutes of the first copy are dropped,
     and state for a fingerprint is evicted once the watermark passes it.  At 10^12
     docs/day this is the only dedup whose state is bounded by the
     duplication *window* rather than the corpus size — the standard
@@ -246,5 +276,5 @@ def dedup_stream_within_watermark(
             fingerprint(F.col("text")),
             F.concat(F.lit("__null_text__:"), F.col("doc_id").cast("string")),
         ),
-    ).withWatermark("fetched_at", delay)
+    ).withWatermark("fetched_at", "10 minutes")
     return fp.dropDuplicatesWithinWatermark(["fp"]).drop("fp")
