@@ -1998,8 +1998,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag documents containing any
     benchmark snippet (normalized substring).  Native broadcast
-    contains-join (the oracle path); the Aho-Corasick single-pass
-    variant is equivalence-pinned in tests/test_keywords_decontam.py."""
+    contains-join: one corpus scan, no shuffle."""
     d = _read(spark, sf_dir, "documents")
     return decontam.contaminated_pairs(d, decontam.benchmark_snippets(d))
 

@@ -250,7 +250,7 @@ def flagship(
     # plan once, execute repeatedly: a fresh DataFrame per pass would
     # re-run Catalyst analysis/optimization/codegen on the driver each
     # time (~1-2 s), which is job-submit overhead, not engine throughput
-    out_df = extract(docs)  # canonical nested output table (EXTRACTED shape)
+    out_df = extract(docs)  # canonical nested output table (doc_id, spans)
     _force(out_df)
     best = float("inf")
     for _ in range(3):

@@ -151,34 +151,33 @@ def test_clusters_shortcut_logarithmic_on_chain(spark):
     assert fast_rounds <= 12 < slow_rounds  # log2(64)+slack vs ~n rounds
 
 
-def test_asof_bucketed_equivalent_to_plain(spark):
-    """Bucketed (hot-key) as-of join must produce exactly the plain
-    result on a corpus whose matches cross empty and occupied buckets."""
+def test_asof_random_differential(spark):
+    """Seeded random events: the as-of join equals a brute-force
+    most-recent-prior scan (keys without right rows, left rows before
+    any right row, right keys no left row asks for)."""
     import random
 
-    from web_content_extractor_spark.operators.asof import asof_join_bucketed
-
     rng = random.Random(7)
-    # sparse right side forces carries across many empty minute-buckets
-    left = _events(
-        spark,
-        [(i, _ts(rng.uniform(0, 4 * 3600)), rng.randint(0, 3), 0.0)
-         for i in range(200)],
-    )
-    right = _events(
-        spark,
-        [(1000 + i, _ts(rng.uniform(0, 4 * 3600)), rng.randint(0, 4), float(i))
-         for i in range(60)],
-    )
-    plain = {
+    lrows = [(i, _ts(rng.uniform(0, 4 * 3600)), rng.randint(0, 3), 0.0)
+             for i in range(200)]
+    rrows = [(1000 + i, _ts(rng.uniform(0, 4 * 3600)), rng.randint(0, 4), float(i))
+             for i in range(60)]
+    expected = {}
+    for eid, ts, uid, _ in lrows:
+        prior = [r for r in rrows if r[2] == uid and r[1] <= ts]
+        # most recent wins; equal timestamps -> smallest event_id
+        m = max(prior, key=lambda r: (r[1], -r[0])) if prior else None
+        expected[eid] = (
+            (m[0], m[3], (ts - m[1]) // dt.timedelta(microseconds=1))
+            if m else (None, None, None)
+        )
+    got = {
         r.event_id: (r.matched_event_id, r.matched_value, r.lag_us)
-        for r in asof_join(left, right).collect()
+        for r in asof_join(_events(spark, lrows), _events(spark, rrows)).collect()
     }
-    bucketed = {
-        r.event_id: (r.matched_event_id, r.matched_value, r.lag_us)
-        for r in asof_join_bucketed(left, right, bucket="minute").collect()
-    }
-    assert plain == bucketed and len(plain) == 200
+    assert got == expected
+    assert sum(v[0] is None for v in expected.values()) > 0
+    assert sum(v[0] is not None for v in expected.values()) > 100
 
 
 def test_resample_excludes_null_keys_and_ts(spark):

@@ -37,13 +37,28 @@ def test_null_and_empty_spans(spark):
                            "media_ref": None, "offset": 0}]),
         ("https://e.org", [{"kind": "html", "text": "<a href='/x'>x</a>",
                            "media_ref": None, "offset": None}]),
+        # a null element must not take the doc's other spans down
+        ("https://f.org", [None, {"kind": "html", "media_ref": None,
+                                  "text": "<p>Some words here.</p>"
+                                          "<a href='/y'>y</a>",
+                                  "offset": 0}]),
     ]
-    out = {r.doc_id: r.spans for r in extract(_docs(spark, rows)).collect()}
+    from web_content_extractor_spark.operators.content import extract_content
+    from web_content_extractor_spark.operators.errors import doc_errors
+    from web_content_extractor_spark.plans.pipeline import tokenize
+
+    docs = _docs(spark, rows)
+    out = {r.doc_id: r.spans for r in extract(docs).collect()}
     assert out["https://a.org"] == []
     assert out["https://b.org"] == []
     assert out["https://c.org"] == []
     assert out["https://d.org"] == []
     assert out["https://e.org"][0].media_ref == "https://e.org/x"
+    assert [s.media_ref for s in out["https://f.org"]] == ["https://f.org/y"]
+    errs = [(r.doc_id, r.stage, r.reason, r.target)
+            for r in doc_errors(tokenize(docs)).collect()]
+    assert errs == [("https://f.org", "input", "null_span", "")]
+    assert {r.doc_id for r in extract_content(docs).collect()} == set(out)
 
 
 def test_garbage_and_binaryish_html(spark):
@@ -247,18 +262,19 @@ def test_normalize_idempotent(url):
 
 @settings(max_examples=100, deadline=None)
 @given(st.lists(
-    st.fixed_dictionaries({
+    st.one_of(st.none(), st.fixed_dictionaries({
         "kind": st.sampled_from(["html", "media", "text"]),
         "text": st.one_of(st.none(), st.text(max_size=80)),
         "media_ref": st.one_of(st.none(), st.text(min_size=1, max_size=30)),
         "offset": st.one_of(st.none(), st.integers(0, 100)),
-    }),
+    })),
     max_size=6,
 ))
 def test_tokenize_doc_total(spans):
     d = tokenize_doc("https://fuzz.org", spans)
     assert len(d["cand_urls"]) == len(d["cand_texts"]) == len(d["cand_tags"])
     assert d["parse_failures"] >= 0
+    assert d["err_reasons"].count("null_span") == spans.count(None)
 
 
 def test_malformed_escape_urls_never_crash_the_job(spark):

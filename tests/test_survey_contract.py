@@ -182,3 +182,41 @@ def test_every_option_is_set_by_some_caller():
         if opt not in got and opt not in DEPLOYMENT_OPTIONS.get(name, ())
     ]
     assert not unset, f"{len(unset)} options no caller sets: {unset}"
+
+
+def test_every_package_name_is_used():
+    # every module-level def, class or assigned name of the package must
+    # be loaded somewhere in CALLERS — as a name, an attribute or an
+    # imported name; one no code reads is dead weight.  Dunders
+    # (__all__, __version__) are read by the interpreter and packaging
+    defined = {}
+    for path in glob.glob(os.path.join(ROOT, CALLERS[0]), recursive=True):
+        for node in ast.parse(_read(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [
+                    n.id
+                    for t in node.targets
+                    for n in ast.walk(t)
+                    if isinstance(n, ast.Name)
+                ]
+            elif isinstance(node, ast.AnnAssign):
+                names = [node.target.id]
+            else:
+                continue
+            for name in names:
+                if not name.startswith("__"):
+                    defined.setdefault(name, os.path.relpath(path, ROOT))
+    used = set()
+    for pattern in CALLERS:
+        for path in glob.glob(os.path.join(ROOT, pattern), recursive=True):
+            for n in ast.walk(ast.parse(_read(path))):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                    used.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    used.add(n.attr)
+                elif isinstance(n, ast.alias):
+                    used.add(n.name)
+    unused = sorted(f"{p}::{name}" for name, p in defined.items() if name not in used)
+    assert not unused, f"package names nothing loads: {unused}"

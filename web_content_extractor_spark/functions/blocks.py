@@ -62,7 +62,7 @@ class _BlockTokenizer(HTMLParser):
             self._anchor_depth += 1
         if tag in BLOCK_TAGS:
             self._flush()
-            self._tag = tag if tag in _HEADINGS else tag
+            self._tag = tag
 
     def handle_startendtag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
         if tag in BLOCK_TAGS:
@@ -127,7 +127,7 @@ def segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             texts: list[str] = []
             words: list[int] = []
             aw: list[int] = []
-            span_list = list(spans) if spans is not None else []
+            span_list = [s for s in spans if s is not None] if spans is not None else []
             for span in sorted(span_list, key=lambda s: s["offset"] or 0):
                 if span.get("kind") != "html" or not span.get("text"):
                     continue

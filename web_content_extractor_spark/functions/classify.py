@@ -60,11 +60,6 @@ RGX_YT_URL_RE = (
 
 PDF, YOUTUBE, OTHER = "pdf", "youtube", "other"
 
-# output ordering: type rank pdf -> youtube -> other mirrors the
-# ExtractionResult assembly (service.py:80-88 + models.py:171-173)
-TYPE_RANK = {PDF: 0, YOUTUBE: 1, OTHER: 2}
-
-
 def _iframely_proxied_is_youtube(url: Column) -> Column:
     """iframe.ly proxy unwrap (context_classifier.py:56-63).
 

@@ -476,7 +476,15 @@ def tokenize_doc(
         err_reasons.append("null_doc_id")
         err_targets.append("")
     title: str | None = None
-    span_list = list(spans) if spans is not None else []
+    span_list = []
+    for span in spans if spans is not None else ():
+        if span is None:
+            # a null element of the spans array: skip it, keep the rest
+            err_stages.append("input")
+            err_reasons.append("null_span")
+            err_targets.append("")
+        else:
+            span_list.append(span)
     for span in sorted(span_list, key=lambda s: s["offset"] or 0):
         kind = span.get("kind")
         if kind == "html" and span.get("text"):

@@ -15,11 +15,9 @@ engine uses the canonical union + window formulation instead:
 4. keep left rows.
 
 Cost at 100 TB: one hash shuffle on the key + a sort — no row
-explosion, no Python.  Hot keys (one user with millions of events)
-sort within a single partition; AQE skew-split cannot break a window
-partition, so for pathological keys pre-bucket by time range and
-carry the last right row per bucket boundary forward (the same trick
-``operators/skew.py`` uses for salted aggregation).
+explosion, no Python.  A hot key (one user with millions of events)
+sorts within a single partition: AQE skew-split cannot break a window
+partition.
 
 Right rows are first reduced to one per (key, ts) — arg-min by the
 first of ``right_cols`` wins — so the match is deterministic even when
@@ -105,106 +103,6 @@ def asof_join(
         (
             # cast handles TIMESTAMP_NTZ inputs; the session timezone is
             # pinned to UTC (session.py), so the NTZ->LTZ reading is stable
-            F.unix_micros(F.col(ts).cast("timestamp"))
-            - F.unix_micros(F.col("_m.matched_ts").cast("timestamp"))
-        ).alias("lag_us"),
-    )
-
-
-def asof_join_bucketed(
-    left: DataFrame, right: DataFrame, bucket: str = "hour"
-) -> DataFrame:
-    """As-of join for HOT keys: identical semantics to ``asof_join`` on
-    ``user_id``/``ts`` carrying :data:`RIGHT_COLS`, but the per-key sort
-    is split across time buckets so one key with millions of events
-    parallelizes.
-
-    AQE skew-join cannot split a window partition, so a monster key
-    serializes the plain formulation.  Here the window partitions on
-    (key, bucket) — bounded work per task no matter how hot the key —
-    and matches that cross a bucket boundary are patched from a carry
-    table: the last right row per (key, bucket), rolled forward over
-    the bucket sequence.  The carry window is one row per bucket per
-    key (bounded by time range / bucket size, independent of row
-    count), which is the same compact-summary trick as the salted agg
-    in operators/skew.py.
-
-    Equivalence with ``asof_join`` is pinned in tests on corpora whose
-    matches cross empty and occupied buckets.
-    """
-    on, ts, right_cols = "user_id", "ts", RIGHT_COLS
-    r = (
-        right.groupBy(on, ts)
-        .agg(*[F.min_by(c, right_cols[0]).alias(c) for c in right_cols])
-        .select(
-            F.col(on),
-            F.col(ts).alias("_r_ts"),
-            F.struct(
-                F.col(ts).alias("matched_ts"),
-                *[F.col(c).alias(f"matched_{c}") for c in right_cols],
-            ).alias("_r"),
-            F.lit(1).alias("_tag"),
-        )
-    )
-    l_cols = left.columns
-    lhs = left.select(
-        *l_cols,
-        F.col(ts).alias("_r_ts"),
-        F.lit(None).cast(r.schema["_r"].dataType).alias("_r"),
-        F.lit(0).alias("_tag"),
-    )
-    rhs = r.select(
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            if c != on
-            else F.col(on)
-            for c in l_cols
-        ],
-        "_r_ts",
-        "_r",
-        "_tag",
-    )
-    u = lhs.unionByName(rhs).withColumn(
-        "_bkt", F.date_trunc(bucket, F.col("_r_ts").cast("timestamp"))
-    )
-
-    # within-bucket as-of: window partitioned by (key, bucket)
-    w = (
-        Window.partitionBy(on, "_bkt")
-        .orderBy(F.col("_r_ts").asc(), F.col("_tag").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = u.withColumn("_m", F.last("_r", ignorenulls=True).over(w))
-
-    # carry: last right row per (key, bucket), rolled forward so each
-    # bucket sees the most recent right row from any EARLIER bucket
-    per_bucket_last = (
-        u.where(F.col("_tag") == 1)
-        .groupBy(on, "_bkt")
-        .agg(F.max_by("_r", "_r_ts").alias("_last_r"))
-    )
-    spine = u.select(on, "_bkt").distinct()
-    wc = (
-        Window.partitionBy(on)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        spine.join(per_bucket_last, [on, "_bkt"], "left")
-        .withColumn("_carry", F.last("_last_r", ignorenulls=True).over(wc))
-        .select(on, "_bkt", "_carry")
-    )
-
-    out = (
-        matched.where(F.col("_tag") == 0)
-        .join(carry, [on, "_bkt"], "left")
-        .withColumn("_m", F.coalesce("_m", "_carry"))
-    )
-    return out.select(
-        *l_cols,
-        F.col("_m.matched_ts").alias("matched_ts"),
-        *[F.col(f"_m.matched_{c}").alias(f"matched_{c}") for c in right_cols],
-        (
             F.unix_micros(F.col(ts).cast("timestamp"))
             - F.unix_micros(F.col("_m.matched_ts").cast("timestamp"))
         ).alias("lag_us"),

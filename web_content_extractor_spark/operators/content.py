@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from web_content_extractor_spark.schemas import DOCS  # noqa: F401  (shape doc)
 from web_content_extractor_spark.functions.blocks import segment_batches
 
 _HEADINGS = ("h1", "h2", "h3", "h4", "h5", "h6")

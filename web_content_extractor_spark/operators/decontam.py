@@ -5,21 +5,12 @@ standard sweep (GPT-3 appx. C / Llama style) flags every document that
 contains any benchmark snippet as a substring after light
 normalization (lowercase + whitespace collapse).
 
-Two physical strategies, one semantics:
-
-- ``contaminated_pairs``     — native path: the snippet table is tiny
-  by definition (benchmarks are MBs; the corpus is TBs), so broadcast
-  it and evaluate ``contains`` JVM-side in a whole-stage-codegen'd
-  filter over a single corpus scan.  No shuffle at all; cost is
-  O(docs x snippets) substring searches, the right shape while the
-  snippet count is small.  This is the DuckDB-oracle-checked path.
-- ``contaminated_pairs_multi`` — scale path for LARGE snippet sets: an
-  Aho–Corasick automaton built once from the snippet list and shipped
-  to executors inside a ``mapInPandas`` kernel; each document is
-  scanned ONCE regardless of snippet count (O(len + hits) per doc vs
-  O(len x snippets)).  Still shuffle-free.  Pure-Python automaton (a
-  C automaton like pyahocorasick drops in where available); pytest
-  pins pair-set equality against the native path.
+``contaminated_pairs`` is the one physical strategy: the snippet
+table is tiny by definition (benchmarks are MBs; the corpus is TBs), so
+it is broadcast and ``contains`` runs JVM-side in a whole-stage-codegen'd
+filter over a single corpus scan.  No shuffle at all; cost is
+O(docs x snippets) substring searches.  This is the DuckDB-oracle-checked
+path.
 
 The reference has no decontamination (it is a single-site extractor);
 this is part of the engine-added LLM-pipeline battery, built in the
@@ -29,13 +20,10 @@ same drop-don't-fail spirit as its link filters
 
 from __future__ import annotations
 
-from collections import deque
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from web_content_extractor_spark.functions.text_quality import word_ngrams_all
 
 
 def _norm(text: Column) -> Column:
@@ -81,101 +69,12 @@ def contaminated_pairs(docs: DataFrame, snippets: DataFrame) -> DataFrame:
     one corpus scan, zero shuffles (the final distinct is keyed on the
     already-tiny hit set).
     """
-    # empty snippets match nothing (contains('') would flag EVERY doc;
-    # the Aho-Corasick path drops them too, so both paths agree)
+    # empty snippets match nothing (contains('') would flag EVERY doc)
     snips = snippets.where(F.length("snippet") > 0)
     return (
         docs.select("doc_id", _norm(F.col("text")).alias("t"))
         .join(F.broadcast(snips), F.col("t").contains(F.col("snippet")))
         .select("doc_id", "snippet_id")
-        .distinct()
-    )
-
-
-class AhoCorasick:
-    """Minimal Aho–Corasick multi-pattern matcher (set-of-ids output).
-
-    goto is a list of dicts (char -> state), fail the classic BFS
-    failure links, out the pattern-id sets merged through fail links.
-    """
-
-    def __init__(self, patterns: list[tuple[int, str]]):
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[set[int]] = [set()]
-        for pid, pat in patterns:
-            s = 0
-            for ch in pat:
-                nxt = self.goto[s].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append(set())
-                    nxt = len(self.goto) - 1
-                    self.goto[s][ch] = nxt
-                s = nxt
-            self.out[s].add(pid)
-        self.fail = [0] * len(self.goto)
-        q: deque[int] = deque(self.goto[0].values())
-        while q:
-            s = q.popleft()
-            for ch, t in self.goto[s].items():
-                q.append(t)
-                f = self.fail[s]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[t] = self.goto[f].get(ch, 0)
-                self.out[t] |= self.out[self.fail[t]]
-
-    def match_ids(self, text: str) -> set[int]:
-        s, hits = 0, set()
-        goto, fail, out = self.goto, self.fail, self.out
-        for ch in text:
-            while s and ch not in goto[s]:
-                s = fail[s]
-            s = goto[s].get(ch, 0)
-            if out[s]:
-                hits |= out[s]
-        return hits
-
-
-def contaminated_pairs_multi(docs: DataFrame, snippets: DataFrame) -> DataFrame:
-    """Aho–Corasick variant: one pass per document over ALL snippets.
-
-    The snippet list is collected driver-side (it is the broadcast-
-    small side by definition) and the automaton rides to executors in
-    the UDF closure — the Python analog of a broadcast hash join's
-    build side.
-    """
-    pats = [
-        (int(r.snippet_id), r.snippet)
-        for r in snippets.select("snippet_id", "snippet").collect()
-        if r.snippet
-    ]
-    ac = AhoCorasick(pats)
-
-    import re as _re
-
-    # ASCII-only \s and space-only strip: the JVM path's regexp_replace
-    # uses Java's ASCII \s and trim() strips spaces, so the Python
-    # kernel must NOT collapse Unicode whitespace (  etc.) that
-    # the native path leaves intact
-    _ws = _re.compile(r"\s+", _re.ASCII)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[int] = []
-            snip_ids: list[int] = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                if not txt:
-                    continue
-                norm = _ws.sub(" ", txt.strip(" ")).lower()
-                for pid in ac.match_ids(norm):
-                    doc_ids.append(did)
-                    snip_ids.append(pid)
-            yield pd.DataFrame({"doc_id": doc_ids, "snippet_id": snip_ids})
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(scan, "doc_id: bigint, snippet_id: bigint")
         .distinct()
     )
 
@@ -217,18 +116,17 @@ def contamination_scores(
     once: an earlier size(gs)+explode(gs) two-branch shape re-ran it
     per branch and was 3x slower at sf0.1.
     """
-    from web_content_extractor_spark.operators.dedup_docs import (
-        _word_ngrams,
-    )
+    def distinct_grams(text: Column) -> Column:
+        return F.array_distinct(word_ngrams_all(text, n))
 
     bench = (
-        snippets.select(F.explode(_word_ngrams(F.col("snippet"), n)).alias("g"))
+        snippets.select(F.explode(distinct_grams(F.col("snippet"))).alias("g"))
         .where(F.length("g") > 0)
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     g = docs.select(
-        "doc_id", F.explode_outer(_word_ngrams(F.col("text"), n)).alias("g")
+        "doc_id", F.explode_outer(distinct_grams(F.col("text"))).alias("g")
     )
     agg = (
         g.join(F.broadcast(bench), "g", "left")

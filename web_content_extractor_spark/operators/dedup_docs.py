@@ -33,12 +33,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from web_content_extractor_spark.functions.text_quality import fingerprint
+from web_content_extractor_spark.functions.text_quality import (
+    fingerprint,
+    word_ngrams_all,
+)
 
 import re as _re
 
 # ASCII-only whitespace split: Java's \s (used by the JVM-side
-# _word_ngrams tokenization that the exact-jaccard verifier runs on)
+# word_ngrams_all tokenization that the exact-jaccard verifier runs on)
 # does NOT match Unicode whitespace, so the Python kernels must not
 # either — else LSH candidates and exact verification would score
 # different shingle universes for NBSP-bearing docs.
@@ -76,21 +79,6 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     )
 
 
-def _word_ngrams(text: Column, n: int) -> Column:
-    """Distinct word n-grams as strings (native)."""
-    toks = F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda t: F.length(t) > 0)
-    k = F.size(toks) - (n - 1)
-    return F.array_distinct(
-        F.when(
-            k > 0,
-            F.transform(
-                F.sequence(F.lit(0), k - 1),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            ),
-        ).otherwise(F.array())
-    )
-
-
 def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod p."""
     import random
@@ -107,7 +95,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     minhashes over word NGRAM-grams.
 
     The whole shingle->hash->permute-min kernel runs in ONE Arrow
-    batch UDF: tokenization (identical to ``_word_ngrams``'s
+    batch UDF: tokenization (identical to ``word_ngrams_all``'s
     lower/\\s+/non-empty rule), per-token md5-8 (first 8 digest bytes
     big-endian, folded mod 2^31-1), vectorized polynomial n-gram
     hashing, per-doc distinct, then the (NUM_PERM x n_shingles)
@@ -300,9 +288,8 @@ def ngram_jaccard_pairs(
     # the exploded gram table feeds three consumers (doc sizes, the
     # document-frequency cap, and both self-join sides): persist +
     # materialize so the interpreted n-gram expression runs once
-    grams = docs.select(
-        "doc_id", F.explode(_word_ngrams(F.col("text"), NGRAM)).alias("g")
-    ).persist()
+    shingles = F.array_distinct(word_ngrams_all(F.col("text"), NGRAM))
+    grams = docs.select("doc_id", F.explode(shingles).alias("g")).persist()
     grams.count()
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     # Broadcast the HOT grams (df > max_df) and anti-join, never the kept

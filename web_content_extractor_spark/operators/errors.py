@@ -12,7 +12,9 @@ failure, and this module explodes them into an errors table
 
 so "why did 0.3% of docs lose links" is one filter away on a 100-TB
 run.  Stages: ``input`` (``null_doc_id``: the row has no doc_id, so no
-base URL; its absolute links still extract), ``parse`` (HTML tokenizer
+base URL; its absolute links still extract; ``null_span``: a null
+element of the row's spans array, skipped while its other spans still
+extract), ``parse`` (HTML tokenizer
 exception — reason carries the exception class), ``url_validation``
 (invalid resolved URL), ``text_selection`` (empty link text after the
 selection priority).

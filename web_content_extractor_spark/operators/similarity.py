@@ -2,16 +2,14 @@
 
 Two paths, per the standard ANN playbook:
 
-- brute-force cosine top-k — the correctness baseline: broadcast the
-  (small) query set, JVM-side dot products via zip_with/aggregate
-  (no Python), window top-k.  Cost O(|Q| * N); at 100 TB you only run
-  this for small query batches, which is exactly when the broadcast
-  join is free of shuffles on the corpus side.
+- brute-force cosine top-k — the correctness baseline: the (small)
+  query set rides in the kernel closure, each Arrow batch of the corpus
+  is scored by one numpy matmul, window top-k.  Cost O(|Q| * N); at
+  100 TB you only run this for small query batches.
 - LSH-bucketed (random hyperplanes) — the scale path: a deterministic
-  seeded set of H hyperplanes maps every vector to an H-bit bucket;
-  candidate search touches only matching buckets (equi-join on the
-  bucket key).  Bits are computed natively from literal hyperplane
-  arrays — again no Python in the hot path.
+  seeded set of H hyperplanes maps every vector to an H-bit bucket
+  (bit = dot >= 0); candidate search touches only matching buckets
+  (equi-join on the bucket key).
 
 Embedding-cosine near-duplicate detection reuses the same kernels.
 """
@@ -23,30 +21,6 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _dot(a: Column, b: Column) -> Column:
-    # accumulate in double precision (float32 dot products drift vs
-    # the DuckDB double-precision oracle).  Interpreted by Catalyst
-    # (no codegen for HOF lambdas) — fine for one-off scalar dots like
-    # lsh_bucket's literal planes, but NEVER the per-pair scorer in a
-    # candidate join: that path benched 10-30x slower than the numpy
-    # matmul kernels below, which all hot paths now use.
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _collect_queries(queries: DataFrame):
@@ -244,18 +218,6 @@ def hyperplanes(dim: int, n_planes: int = 16) -> list[list[float]]:
     return rng.randn(n_planes, dim).astype(float).tolist()
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """H-bit signature bucket id for a vector, computed natively."""
-    bits = [
-        F.when(_dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, 1).otherwise(0)
-        for p in planes
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out * 2 + b
-    return out.cast("bigint")
-
-
 def lsh_buckets(
     vec: Column, planes: list[list[float]], r: int, tables: int
 ) -> Column:
@@ -265,10 +227,10 @@ def lsh_buckets(
     random-hyperplane LSH (prob 1-(1-p^r)^L for per-plane agreement p).
 
     Computed by a vectorized numpy Pandas UDF: one (batch x dim) @
-    (dim x H) matmul + bit packing.  The pure-Column form (H nested
-    aggregate/zip_with dot products per row) is interpreted by Catalyst
-    and benched ~10x slower; :func:`lsh_bucket` keeps the native
-    single-table reference implementation.
+    (dim x H) matmul + bit packing, bit = (vec . plane >= 0), most
+    significant bit first within a table.  The pure-Column form (H
+    nested aggregate/zip_with dot products per row) is interpreted by
+    Catalyst and benched ~10x slower.
     """
     P = np.asarray(planes, dtype=np.float64)  # (H, dim), H = r*tables
     weights = (1 << np.arange(r - 1, -1, -1)).astype(np.int64)
@@ -278,7 +240,7 @@ def lsh_buckets(
         if len(vs) == 0:
             return pd.Series([], dtype=object)
         V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        bits = (V @ P.T) >= 0.0  # (n, H); sign rule matches lsh_bucket
+        bits = (V @ P.T) >= 0.0  # (n, H); bit = dot >= 0
         bm = bits.reshape(len(vs), -1, r).astype(np.int64) @ weights
         return pd.Series(list(bm))
 

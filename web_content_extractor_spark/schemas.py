@@ -78,13 +78,6 @@ TOKENIZED = T.StructType(
     ]
 )
 
-EXTRACTED = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), nullable=False),
-        T.StructField("spans", T.ArrayType(SPAN)),
-    ]
-)
-
 # Per-partition lineage + metrics (reference ExtractionMetadata,
 # src/core/models.py:93-131, lifted from per-document to per-partition
 # granularity as the north rule requires).
