@@ -19,9 +19,14 @@ its median beats the parent's by more than the parent's own q3 - q1),
 whether the change's median is within the metric's regression bound of
 the parent's, and whether the metric is unresolved (the parent's q3 - q1
 exceeds that bound and not every change run beats every parent run).
-A run that crashes, has ``correct`` false or ``failed > 0`` loses its
-pair for every metric.  ``--out FILE`` keeps every run's record as JSON
-lines.  Exit 0 = every pair had equal digests and no lost run.
+A pair whose two runs' median host steal differs by more than
+``STEAL_GAP`` is marked ``STEAL`` in its row: its faster run may only
+have had the quieter host.  Under each metric's verdict a second line
+gives the medians and win count over the unmarked pairs; the verdict
+itself stays on all pairs.  A run that crashes, has ``correct`` false
+or ``failed > 0`` loses its pair for every metric.  ``--out FILE``
+keeps every run's record as JSON lines.  Exit 0 = every pair had equal
+digests and no lost run.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ import sys
 
 CHECKS = re.compile(r"^checks fixtures (\S+) planted (\S+) digest (\S+)$")
 STEAL = re.compile(r"\bsteal_median (\S+)")
+STEAL_GAP = 0.05  # a pair whose runs' median steal differs by more is marked
 
 
 def run_tree(tree: str, workload: str, seed: int, seconds: float) -> dict:
@@ -76,6 +82,14 @@ def wins(p: dict, c: dict, name: str, higher: bool) -> bool:
         return False
     a, b = p["metrics"][name], c["metrics"][name]
     return b > a if higher else b < a
+
+
+def steal_gap(p: dict, c: dict) -> bool:
+    """True when the pair's two runs saw median host steal differing by
+    more than ``STEAL_GAP`` (unknown steal marks nothing)."""
+    if p["steal"] is None or c["steal"] is None:
+        return False
+    return abs(p["steal"] - c["steal"]) > STEAL_GAP
 
 
 def summarize(pairs: list[tuple[dict, dict]], metrics: list[dict]) -> list[dict]:
@@ -140,12 +154,14 @@ def main(argv: list[str] | None = None) -> int:
             cells.append(f"{pv:>11.4g} {cv:>11.4g} {mark}")
         same = p["digest"] is not None and p["digest"] == c["digest"]
         lost = "" if p["ok"] and c["ok"] else "  LOST (run not ok)"
+        gap = "  STEAL" if steal_gap(p, c) else ""
         print(f"{seed:<5} {order[0]:<7} " + "  ".join(cells)
-              + f"  {'equal' if same else 'DIFFER'}  {p['steal']}/{c['steal']}{lost}",
+              + f"  {'equal' if same else 'DIFFER'}  {p['steal']}/{c['steal']}{gap}{lost}",
               flush=True)
 
     print()
-    for r in summarize(pairs, metrics):
+    calm = [(p, c) for p, c in pairs if not steal_gap(p, c)]
+    for r, q in zip(summarize(pairs, metrics), summarize(calm, metrics)):
         if "parent" not in r:
             print(f"{r['metric']}: no pair with two good runs")
             continue
@@ -156,6 +172,11 @@ def main(argv: list[str] | None = None) -> int:
               f"parent IQR {r['parent_iqr']:.4g}  claim rule holds: {r['holds']}  "
               f"within regression bound: {r['within_bound']}  "
               f"unresolved: {r['unresolved']}")
+        if "parent" in q:
+            print(f"  {len(calm)} pairs without STEAL: parent {q['parent'][1]:.4g}  "
+                  f"change {q['change'][1]:.4g}  wins {q['wins']}/{q['pairs']}")
+        else:
+            print(f"  {len(calm)} pairs without STEAL: none with two good runs")
     equal = all(p["digest"] is not None and p["digest"] == c["digest"] for p, c in pairs)
     clean = all(p["ok"] and c["ok"] for p, c in pairs)
     print(f"digests equal in every pair: {equal}  every run ok: {clean}")

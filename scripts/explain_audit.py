@@ -4,7 +4,8 @@
 Writes PLANS.md with the `explain("formatted")` output of the engine's
 headline plans plus automated assertions:
 
-- extraction pipeline: shuffle-free (no Exchange), column-pruned scan
+- extraction pipeline: shuffle-free (no Exchange), one MapInArrow
+  Python stage, span ordering inside it (no sort_array/transform)
 - join_agg: BroadcastHashJoin on the dim tables, no BNLJ
 - agg_counts: partial aggregation (HashAggregate x2) + pushed scan
 - filter pushdown: PushedFilters reaches the parquet scan
@@ -39,6 +40,17 @@ def _final_tree(plan: str) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
+_PYTHON_NODE = re.compile(
+    r"\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython)\b"
+)
+
+
+def python_nodes(plan: str) -> int:
+    """Python stages in a formatted plan: the detail entries "(n) Kind"
+    of every node kind that runs Python code."""
+    return len(_PYTHON_NODE.findall(plan))
+
+
 def formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
@@ -71,15 +83,17 @@ def main() -> int:
         ex,
         [
             ("shuffle-free (no Exchange in plan)", "Exchange" not in p),
-            ("single Python stage (one MapInPandas node)",
-             p.count("MapInPandas") == 2),  # formatted mode renders tree + detail
+            ("single Python stage, and it is one MapInArrow node",
+             python_nodes(p) == 1 and "MapInArrow" in p),
+            ("span ordering is in the kernel (no sort_array/transform)",
+             "sort_array" not in p and "transform(" not in p),
         ],
     )
 
     # 1b. byte-balanced extraction — exactly ONE range exchange
     # (weighted boundaries -> interleave classes), the bucket kernel is
     # an Arrow stage (numpy searchsorted, never an interpreted HOF
-    # filter over the boundary array), tokenizer still one MapInPandas
+    # filter over the boundary array), tokenizer still one MapInArrow
     exb = extract(docs, balance="bytes", partitions=32)
     p = formatted(exb)
     audit(
@@ -105,8 +119,10 @@ def main() -> int:
             ("bucket assignment is an Arrow kernel, not an interpreted"
              " HOF boundary scan",
              "ArrowEvalPython" in p and "size(filter(" not in p.lower()),
-            ("tokenizer still a single MapInPandas stage",
-             p.count("MapInPandas") == 2),  # tree + detail render
+            ("two Python stages: the bucket kernel and the tokenizer's "
+             "one MapInArrow",
+             python_nodes(p) == 2
+             and len(re.findall(r"\(\d+\) MapInArrow", p)) == 1),
         ],
     )
 
@@ -305,7 +321,7 @@ def main() -> int:
         [
             ("shuffle-free (no Exchange in plan)", "Exchange" not in p),
             ("no Python stage (native sequence/explode/slice)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p),
+             python_nodes(p) == 0),
             ("column-pruned scan (text+doc_id only)",
              "lang" not in p.split("ReadSchema")[-1]),
         ],
@@ -347,7 +363,7 @@ def main() -> int:
              p.count("hashpartitioning(") == 1
              and "hashpartitioning(source" in p),
             ("no Python stage (portable hash is Column algebra)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p),
+             python_nodes(p) == 0),
         ],
     )
 
@@ -363,8 +379,7 @@ def main() -> int:
             ("exactly one key shuffle (hashpartitioning on shard)",
              p.count("hashpartitioning(") == 1
              and "hashpartitioning(shard" in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "BatchEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
             ("column-pruned scan (doc_id only)",
              "text" not in p.split("ReadSchema")[-1]),
         ],
@@ -382,8 +397,7 @@ def main() -> int:
              set(re.findall(r"hashpartitioning\((\w+)", p))
              == {"gram_key", "doc_id"}),
             ("no Python stage (gram algebra is native)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("column-pruned scan (doc_id + text only)",
              "struct<doc_id:bigint,text:string>"
              in p.split("ReadSchema")[-1]
@@ -405,8 +419,7 @@ def main() -> int:
              set(re.findall(r"hashpartitioning\((\w+)", p))
              == {"gram_key", "doc_id"}),
             ("no Python stage (span cut is native Column algebra)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("per-doc span arrays join back via broadcast",
              "BroadcastHashJoin" in p),
             ("no cartesian/BNL join", "CartesianProduct" not in p
@@ -424,9 +437,7 @@ def main() -> int:
         [
             ("no key shuffle (per-row rewrite)",
              "hashpartitioning(" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
             ("column-pruned scan (doc_id only)",
              "struct<doc_id:bigint>" in p),
         ],
@@ -451,8 +462,7 @@ def main() -> int:
              not set(re.findall(r"hashpartitioning\((\w+)", p))
              & {"doc_id", "url"}),
             ("no Python stage (parse + evaluation are native)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("no cartesian/BNL join", "CartesianProduct" not in p
              and "BroadcastNestedLoopJoin" not in p),
             # wildcard-REP cost guard: literal rules (the overwhelming
@@ -488,8 +498,7 @@ def main() -> int:
             ("stats table broadcast back onto the corpus (never a "
              "corpus-sized broadcast)", "BroadcastHashJoin" in p),
             ("no Python stage (quality score + verdict are native)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
         ],
     )
 
@@ -504,8 +513,7 @@ def main() -> int:
             ("only key shuffle is the shard window",
              set(re.findall(r"hashpartitioning\((\w+)", p)) == {"shard"}),
             ("no Python stage (cost model is Column algebra)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("no cartesian/BNL join", "CartesianProduct" not in p
              and "BroadcastNestedLoopJoin" not in p),
         ],
@@ -529,8 +537,7 @@ def main() -> int:
              "BroadcastHashJoin" in p
              or ("SortMergeJoin" in p and "__dkey" in p)),
             ("no Python stage (parse + schedule are native windows)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("no cartesian/BNL join", "CartesianProduct" not in p
              and "BroadcastNestedLoopJoin" not in p),
         ],
@@ -548,8 +555,7 @@ def main() -> int:
              "CartesianProduct" not in p
              and "BroadcastNestedLoopJoin" not in p),
             ("popcount filter is native (no Python stage)",
-             "MapInPandas" not in p and "BatchEvalPython" not in p
-             and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("no shuffle carries document text",
              not any(
                  "text" in m
@@ -587,7 +593,8 @@ def main() -> int:
             ("no key shuffle (map-only decode)",
              "hashpartitioning(" not in p),
             ("one Arrow decode stage",
-             _final_tree(p).count("MapInPandas") >= 1),
+             python_nodes(_final_tree(p)) == 1
+             and "MapInPandas" in _final_tree(p)),
             ("column-pruned scan (doc_id + text only)",
              "struct<doc_id:bigint,text:string>" in p),
         ],
@@ -607,8 +614,7 @@ def main() -> int:
              ) is not None),
             ("final per-target join is broadcast (post-agg sides are "
              "small)", "BroadcastHashJoin" in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -639,7 +645,7 @@ def main() -> int:
         [
             ("no key shuffle", "hashpartitioning(" not in p),
             ("exactly one Arrow stage (the NFC kernel)",
-             len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 1),
+             python_nodes(p) == 1 and "ArrowEvalPython" in p),
             ("regex stages stay in codegen (present as native "
              "regexp_replace, not Python)", "regexp_replace" in p),
         ],
@@ -655,8 +661,7 @@ def main() -> int:
             ("budgets joined via broadcast", "BroadcastHashJoin" in p),
             ("corpus shuffles once, on source (window cumsum)",
              set(re.findall(r"hashpartitioning\((\w+)", p)) == {"source"}),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -671,7 +676,7 @@ def main() -> int:
              set(re.findall(r"hashpartitioning\((\w+)", p))
              == {"user_id"}),
             ("session-window aggregate is native (no Python)",
-             "MapInPandas" not in p and "ArrowEvalPython" not in p),
+             python_nodes(p) == 0),
             ("partial aggregation present",
              _final_tree(p).count("HashAggregate") >= 2
              or "SessionWindow" in p),
@@ -693,8 +698,7 @@ def main() -> int:
              _final_tree(p).count("HashAggregate") >= 4),
             ("pair explode (Generate) present above the word agg",
              "Generate" in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
             ("top-k cut is a global TakeOrdered, not a sort",
              "TakeOrderedAndProject" in p),
         ],
@@ -711,8 +715,7 @@ def main() -> int:
             ("no keyed shuffle (only _read's test-scale round-robin "
              "fan-out)",
              "hashpartitioning(" not in p and "rangepartitioning(" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
             ("whole-stage codegen (final AQE plan)", "codegen id" in p),
         ],
     )
@@ -728,8 +731,7 @@ def main() -> int:
             ("pure projection: no keyed shuffle, no join, no agg",
              "Join" not in p and "HashAggregate" not in p
              and "hashpartitioning(" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
             ("whole-stage codegen (final AQE plan)", "codegen id" in p),
         ],
     )
@@ -749,8 +751,7 @@ def main() -> int:
              "totals are vocab-sized)",
              set(re.findall(r"hashpartitioning\((\w+)", p))
              <= {"bg", "w1", "doc_id", "_groupingexpression"}),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -767,8 +768,7 @@ def main() -> int:
              set(re.findall(r"hashpartitioning\((\w+)", p))
              == {"blob_id"}),
             ("exactly one Arrow Python stage (the record walker)",
-             len(re.findall(r"\(\d+\) MapInPandas", _final_tree(p))) == 1
-             and "ArrowEvalPython" not in p),
+             python_nodes(_final_tree(p)) == 1),
         ],
     )
 
@@ -784,8 +784,7 @@ def main() -> int:
              "input's distinct)",
              set(re.findall(r"hashpartitioning\((\w+)", p))
              <= {"host", "group_id", "hid"}),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -803,8 +802,7 @@ def main() -> int:
              "hid is the synthetic input's distinct)",
              set(re.findall(r"hashpartitioning\((\w+)", p))
              <= {"host", "group_id", "hid"}),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -820,8 +818,7 @@ def main() -> int:
              and "BroadcastExchange" in p),
             ("no keyed shuffle on the corpus side",
              "hashpartitioning(" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -839,8 +836,7 @@ def main() -> int:
              and "Expand" in p),
             ("partial aggregation present",
              _final_tree(p).count("HashAggregate") >= 2),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -859,8 +855,7 @@ def main() -> int:
              set(re.findall(r"hashpartitioning\((\w+)", p)) <= {"fp"}),
             ("corpus side pre-aggregates to distinct fingerprints",
              _final_tree(p).count("HashAggregate") >= 2),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -878,8 +873,7 @@ def main() -> int:
              <= {"source"}),
             ("rates broadcast onto the corpus (no corpus-side sort)",
              "BroadcastExchange" in p and "rangepartitioning(" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -898,8 +892,7 @@ def main() -> int:
             ("no keyed shuffle, no global sort",
              "hashpartitioning(" not in p
              and "rangepartitioning(" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -913,8 +906,7 @@ def main() -> int:
         [
             ("single shuffle keyed by source only",
              set(re.findall(r"hashpartitioning\((\w+)", p)) == {"source"}),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -932,8 +924,7 @@ def main() -> int:
              <= {"w1", "w2", "tok", "bucket", "doc_id"}),
             ("log-ratio table broadcasts onto the feature side",
              "BroadcastExchange" in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -952,8 +943,7 @@ def main() -> int:
             ("the broadcast input is the df > max_df aggregate "
              "(hot set), not the kept vocabulary",
              bool(re.search(r"Condition : \(df#\d+L? > 1000", p))),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 
@@ -996,8 +986,7 @@ def main() -> int:
             ("no cartesian/BNL theta join",
              "BroadcastNestedLoopJoin" not in p
              and "CartesianProduct" not in p),
-            ("no Python stage", "MapInPandas" not in p
-             and "ArrowEvalPython" not in p),
+            ("no Python stage", python_nodes(p) == 0),
         ],
     )
 

@@ -7,7 +7,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
-from ab_layerbench import summarize  # noqa: E402
+from ab_layerbench import steal_gap, summarize  # noqa: E402
 
 METRICS = [
     {"name": "docs_per_s", "better": "higher", "bound": 0.25},
@@ -15,8 +15,9 @@ METRICS = [
 ]
 
 
-def rec(docs, cpu, ok=True):
-    return {"ok": ok, "metrics": {"docs_per_s": docs, "cpu_s_per_kdoc": cpu}}
+def rec(docs, cpu, ok=True, steal=0.0):
+    return {"ok": ok, "steal": steal,
+            "metrics": {"docs_per_s": docs, "cpu_s_per_kdoc": cpu}}
 
 
 def test_claim_rule_counts_lost_pairs_and_needs_nine_tenths():
@@ -59,3 +60,20 @@ def test_wide_parent_spread_is_unresolved_unless_the_runs_separate():
     # every change run above every parent run settles it
     pairs = [(rec(p, 1.0), rec(200 + p, 1.0)) for p in parent]
     assert not summarize(pairs, METRICS)[0]["unresolved"]
+
+
+def test_steal_gap_marks_pairs_and_the_verdict_stays_on_all_pairs():
+    # the change wins 8 calm pairs; in 2 more its run saw 0.27 and 0.14
+    # steal against the parent's ~0 and lost
+    pairs = [(rec(100, 1.0, steal=0.01), rec(120, 0.9, steal=0.02)) for _ in range(8)]
+    pairs += [(rec(100, 1.0, steal=0.0), rec(70, 1.3, steal=0.27)),
+              (rec(100, 1.0, steal=0.01), rec(80, 1.2, steal=0.14))]
+    assert [steal_gap(p, c) for p, c in pairs] == [False] * 8 + [True, True]
+    # a gap of exactly STEAL_GAP, or an unknown steal, marks nothing
+    assert not steal_gap(rec(1, 1, steal=0.0), rec(1, 1, steal=0.05))
+    assert not steal_gap(rec(1, 1, steal=None), rec(1, 1, steal=0.9))
+
+    docs, _ = summarize(pairs, METRICS)
+    assert (docs["wins"], docs["holds"]) == (8, False)  # 8/10 < 9/10
+    calm, _ = summarize([(p, c) for p, c in pairs if not steal_gap(p, c)], METRICS)
+    assert (calm["wins"], calm["pairs"], calm["change"][1]) == (8, 8, 120)

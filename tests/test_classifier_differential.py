@@ -10,6 +10,7 @@ import random
 import re
 from urllib.parse import parse_qs, unquote, urlsplit
 
+import pytest
 from pyspark.sql import functions as F
 
 from web_content_extractor_spark.functions.classify import classify_kind
@@ -134,27 +135,87 @@ def test_rank_context_py_matches_native_chain(spark):
     assert not bad, bad[:5]
 
 
-def test_assemble_with_ranks_equals_native_assembly(spark):
-    """extract() (ranks path) must emit byte-identical spans to the
-    native classify path on the fixture corpus."""
+def _random_docs(n: int, seed: int) -> list[tuple]:
+    """Interleaved docs for the fold differential: pdf/youtube/other
+    anchors (by URL and by text), iframes, empty anchor bodies (href
+    fallback), invalid and relative hrefs, media spans (empty text ->
+    url fallback), docs whose candidates all share one rank, docs with
+    no candidate at all, and null doc_ids / spans."""
+    rng = random.Random(seed)
+    links = {
+        0: ["https://f.org/a.pdf", "/doc.PDF?x=1", "https://f.org/pdf/download"],
+        1: ["https://youtube.com/watch?v=q", "https://youtu.be/z",
+            "https://cdn.iframe.ly/abc"],
+        2: ["https://o.org/", "/p", "../up", "https://o.org/x?y=1"],
+    }
+    texts = ["", "click", "watch this", "3 MB pdf", "Home", "x"]
+
+    def anchor(rank: int) -> str:
+        href = rng.choice(links[rank])
+        text = rng.choice(texts) if rank == 2 else rng.choice(["", "go"])
+        return f'<a href="{href}">{text}</a>'
+
+    def html(ranks: list[int]) -> str:
+        parts = [anchor(r) for r in ranks]
+        if rng.random() < 0.3:
+            parts.append('<iframe src="https://youtube.com/embed/e"></iframe>')
+        if rng.random() < 0.3:
+            parts.append('<a href="http://[bad">bad</a><a href="#top">top</a>')
+        rng.shuffle(parts)
+        return "<p>" + " ".join(parts) + "</p>"
+
+    docs = []
+    for k in range(n):
+        doc_id = None if k % 17 == 5 else f"https://d{k}.example.org/dir/"
+        shape = k % 6
+        if shape == 0:      # no candidates at all
+            spans = rng.choice([None, [], [("text", "just words", None, 0)],
+                                [("html", "<p>no links</p>", None, 0)]])
+        elif shape == 1:    # every candidate shares one rank
+            r = rng.randrange(3)
+            spans = [("html", html([r] * rng.randint(1, 6)), None, 0)]
+        else:
+            spans = []
+            for off in range(rng.randint(1, 4)):
+                kind = rng.choice(["html", "html", "media", "text"])
+                if kind == "html":
+                    ranks = [rng.randrange(3) for _ in range(rng.randint(0, 8))]
+                    spans.append(("html", html(ranks), None, off))
+                elif kind == "media":
+                    spans.append(("media", None, f"s3://m/{k}/{off}.png", off))
+                else:
+                    spans.append(("text", "plain text", None, off))
+            rng.shuffle(spans)  # the tokenizer orders spans by offset
+        docs.append((doc_id, spans))
+    return docs
+
+
+@pytest.mark.parametrize("corpus", ["fixtures", "random"])
+def test_extract_fold_equals_column_assembly(spark, corpus):
+    """extract()'s Arrow-kernel fold, and tokenize()'s ``spans`` column,
+    must equal the Column chain assembly of tokenize()'s candidates."""
     from web_content_extractor_spark.datagen import fixture_docs
     from web_content_extractor_spark.operators.assemble import assemble_spans
-    from web_content_extractor_spark.plans.pipeline import tokenize
+    from web_content_extractor_spark.plans.pipeline import extract, tokenize
 
-    tok = tokenize(fixture_docs(spark))
-    with_ranks = tok.select(
-        "doc_id",
-        assemble_spans(
-            F.col("cand_urls"), F.col("cand_texts"), F.col("cand_tags"),
-            "context", ranks=F.col("cand_ranks"),
-        ).alias("spans"),
-    )
-    native = tok.select(
+    if corpus == "fixtures":
+        docs = fixture_docs(spark)
+    else:
+        docs = spark.createDataFrame(
+            _random_docs(300, seed=20261019),
+            "doc_id string, spans array<struct"
+            "<kind:string,text:string,media_ref:string,offset:int>>",
+        )
+    tok = tokenize(docs)
+    column = tok.select(
         "doc_id",
         assemble_spans(
             F.col("cand_urls"), F.col("cand_texts"), F.col("cand_tags"),
             "context",
         ).alias("spans"),
     )
-    assert with_ranks.exceptAll(native).count() == 0
-    assert native.exceptAll(with_ranks).count() == 0
+    assert column.where(F.size("spans") > 0).count() > 0
+    for folded in (extract(docs), tok.select("doc_id", "spans")):
+        assert folded.count() == column.count()
+        assert folded.exceptAll(column).count() == 0
+        assert column.exceptAll(folded).count() == 0

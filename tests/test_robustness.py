@@ -84,7 +84,8 @@ def test_garbage_and_binaryish_html(spark):
 
 
 def test_large_document_arrow_batching(spark):
-    # >100 KB doc exercises Arrow batch sizing (session caps batch rows)
+    # >100 KB doc exercises Arrow batch sizing (session.py caps batch
+    # records, Spark's maxBytesPerBatch caps batch bytes)
     big = ("<p>" + "lorem ipsum dolor sit amet " * 200 + "</p>"
            + '<a href="/big.pdf">big</a>') * 20   # ~110 KB, 20 links
     rows = [("https://big.org", [{"kind": "html", "text": big,
@@ -143,6 +144,47 @@ def test_large_document_roundtrip(spark):
     assert all(s.kind == "pdf" for s in spans)
     assert spans[0].media_ref == "https://big.example.org/f0.pdf"
     assert [s.offset for s in spans] == list(range(500))
+
+
+def test_arrow_byte_cap_splits_heavy_batches(spark):
+    """Spark's ``arrow.maxBytesPerBatch`` (64 MiB by default) caps the
+    bytes of every Arrow batch the kernels see, on top of session.py's
+    record cap: at a 1 MiB cap eight ~600 KB docs in one partition
+    arrive in several batches, and extract's output is unchanged."""
+    import pyarrow as pa
+
+    links = "".join(
+        f'<a href="/r{i}.pdf">r{i}</a><a href="https://youtu.be/v{i}">v</a>'
+        f'<a href="/p{i}">p</a>'
+        for i in range(40)
+    )
+    pad = "<p>" + "lorem ipsum " * 50_000 + "</p>"
+    rows = [(f"https://heavy{k}.example.org/",
+             [{"kind": "html", "text": pad + links, "media_ref": None,
+               "offset": 0}]) for k in range(8)]
+    docs = _docs(spark, rows).coalesce(1)
+
+    def batch_rows(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"n": [b.num_rows]})
+
+    def probe():
+        return [r.n for r in docs.mapInArrow(batch_rows, "n long").collect()]
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    assert probe() == [8]
+    default = sorted(extract(docs, with_stats=True).drop("proc_us").collect())
+    spark.conf.set(key, str(1 << 20))
+    try:
+        sizes = probe()
+        capped = sorted(
+            extract(docs, with_stats=True).drop("proc_us").collect()
+        )
+    finally:
+        spark.conf.unset(key)
+    assert len(sizes) > 1 and sum(sizes) == 8
+    assert capped == default
+    assert [len(r.spans) for r in default] == [120] * 8
 
 
 _HREF_SEG = st.sampled_from(

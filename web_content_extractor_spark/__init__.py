@@ -5,15 +5,15 @@ github:david3xu/web-content-extractor (reference snapshot at
 /root/reference) as a distributed, declarative Spark pipeline:
 
     scan(docs: doc_id, spans[])  --   parquet / Iceberg
-      -> mapInPandas(tokenize)   --   Arrow-batched HTML tokenizer; also
-                                      ranks each candidate
-                                      (rank_context_py) for the default
-                                      variant
-      -> native assemble         --   sort_array + transform (no shuffle)
+      -> mapInArrow(tokenize)    --   Arrow-batched HTML tokenizer; ranks
+                                      each candidate (rank_context_py)
+                                      and orders it into the output
+                                      spans in the same kernel, shipping
+                                      only the columns the caller asked for
       -> write spans + metrics
 
-The when/rlike Column classifier chain (Catalyst) ranks candidates
-only for ``--variant regex`` and callers without tokenizer ranks.
+The when/rlike Column classifier chain (Catalyst) classifies and
+orders candidates only for ``variant="regex"`` (operators/assemble.py).
 Everything downstream of the tokenizer is pure Column algebra so the
 whole per-document pipeline is shuffle-free and embarrassingly
 parallel: throughput scales linearly with executors.

@@ -19,13 +19,14 @@ flag for API-parity.
 Both are pure ``when``/``rlike`` chains: JVM-side, codegen-friendly,
 usable either on exploded columns or inside ``transform()`` lambdas
 over the nested candidates array.  These Column chains are the
-oracle-checked semantics (q_classifier_context / q_classifier_regex)
-and the path for exploded-column queries, where whole-stage codegen
-applies.  Inside the ASSEMBLY's transform() HOF, however, expressions
-are interpreted (HOFs never codegen), so the extraction pipeline
-carries a rank precomputed by :func:`rank_context_py` — an
-exact-parity Python twin evaluated in the tokenizer's Arrow kernel
-(randomized differential pins the two paths equal).
+oracle-checked semantics (q_classifier_context / q_classifier_regex),
+the path for exploded-column queries (where whole-stage codegen
+applies) and the ``variant="regex"`` span assembly.  The default
+"context" extraction ranks each candidate with
+:func:`rank_context_py` — an exact-parity Python twin evaluated in
+the tokenizer's Arrow kernel, which also orders the spans
+(randomized differentials pin both the rank and the ordered spans to
+the Column chain).
 """
 
 from __future__ import annotations
@@ -127,11 +128,11 @@ def type_rank(kind: Column) -> Column:
 
 # ---------------------------------------------------------------------------
 # Pure-Python parity twin of classify_context -> type rank, for the
-# tokenizer's Arrow kernel.  The interpreted when/rlike chain inside
-# the assembly's transform() HOF never enters whole-stage codegen and
-# measured ~0.8 s of the sf0.1 flagship; computing the rank in the
-# (already per-candidate) Python stage costs ~1 us/candidate and lets
-# the native assembly carry a precomputed int.  EXACT parity with the
+# tokenizer's Arrow kernel, which already touches every candidate
+# (~1 us/candidate) and orders the spans on this rank.  The
+# interpreted when/rlike chain inside a transform() HOF never enters
+# whole-stage codegen and measured ~0.8 s of the sf0.1 flagship when
+# the JVM assembly still classified.  EXACT parity with the
 # Column chain is pinned by a randomized differential
 # (tests/test_classifier_differential.py) — Java-regex details
 # mirrored deliberately: \d -> [0-9], \s -> Java's [ \t\n\x0b\f\r],
@@ -297,8 +298,8 @@ def rank_context_py(url: str, text: str) -> int:
 
 
 def rank_kind(rank: Column) -> Column:
-    """Inverse of :func:`type_rank` — lets the assembly carry a cheap
-    int through the sort and classify each candidate exactly once."""
+    """Inverse of :func:`type_rank` — lets the Column assembly carry a
+    cheap int through the sort and classify each candidate once."""
     return (
         F.when(rank == 0, F.lit(PDF))
         .when(rank == 1, F.lit(YOUTUBE))

@@ -1,6 +1,11 @@
 """From-scratch HTML link tokenizer (stdlib ``html.parser``).
 
-This is the engine's single Python stage.  It re-implements, from the
+This is the engine's extraction Python stage, with two batch bodies
+over one per-document function (:func:`tokenize_doc`) and one span
+ordering (:func:`fold_spans`): :func:`arrow_batches` is the
+``mapInArrow`` kernel of ``extract``, shipping only the columns its
+caller returns, and :func:`tokenize_batches` the ``mapInPandas`` body
+of ``tokenize`` with every TOKENIZED column.  It re-implements, from the
 observable behavior only, the candidate-link extraction of the
 reference parser (src/infrastructure/html_parser.py:47-148) as an
 event-driven tokenizer — no DOM materialization, one pass per
@@ -36,14 +41,21 @@ from __future__ import annotations
 
 import re
 import time
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from html.parser import HTMLParser
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql import types as T
 
 from web_content_extractor_spark.functions import urlnorm
-from web_content_extractor_spark.functions.classify import rank_context_py
+from web_content_extractor_spark.functions.classify import (
+    OTHER,
+    PDF,
+    YOUTUBE,
+    rank_context_py,
+)
 from web_content_extractor_spark.schemas import TOKENIZED
 
 _PDF_SUFFIX_RUN = re.compile(r"(\.pdf)+$", re.IGNORECASE)
@@ -349,8 +361,9 @@ def tokenize_html(
     Returns (candidates, page_title, errors) where candidates is the
     ordered list of (url, text, tag, type_rank) — the reference's
     list[tuple[url, text]] IR (src/core/interfaces.py:24) with URLs
-    already urljoin-resolved, plus the source tag and the precomputed
-    golden-classifier rank (see schemas.TOKENIZED cand_ranks).  ``errors`` records each dropped candidate as
+    already urljoin-resolved, plus the source tag and the
+    golden-classifier rank that :func:`fold_spans` orders on.
+    ``errors`` records each dropped candidate as
     (stage, reason, target): the queryable analog of the reference's
     ContextualExtractionError context (src/core/exceptions.py:46-67,
     service.py:126-140) — drop-not-fail semantics preserved, but every
@@ -415,9 +428,7 @@ def tokenize_html(
         if not text:
             errors.append(("text_selection", "empty_text", url))
             return
-        # golden-classifier rank computed here (~1 us) so the native
-        # assembly sorts on a precomputed int instead of re-running
-        # the interpreted rlike chain inside its transform() HOF
+        # golden-classifier rank (~1 us): fold_spans orders on it
         out.append((url, text, tag, rank_context_py(url, text)))
 
     for href, download, inner in tok.anchors:
@@ -451,14 +462,14 @@ def tokenize_doc(
 ) -> dict[str, Any]:
     """Tokenize one interleaved document row -> TOKENIZED-shaped dict.
 
-    Candidates come back as flat parallel lists (urls/texts/tags) —
-    document parse order is the list index.  Flat ``list<string>``
-    columns cross the Arrow boundary an order of magnitude faster than
-    ``list<struct>`` (no per-candidate Python dict/struct conversion);
-    the downstream assembly zips them natively (arrays_zip).
-    ``tag='media'`` marks pass-through media spans; invalid URLs are
-    already dropped here (drop-not-fail, link_classifier.py:50-53) and
-    only counted in ``parse_failures``.
+    Candidates come back as flat parallel lists (``cand_urls``,
+    ``cand_texts``, ``cand_tags`` and their golden-classifier type
+    ``ranks``) — document parse order is the list index; every
+    TOKENIZED column but ``spans`` is a key, and :func:`fold_spans`
+    turns the candidates into the output spans.  ``tag='media'`` marks
+    pass-through media spans; invalid URLs are already dropped here
+    (drop-not-fail, link_classifier.py:50-53) and only counted in
+    ``parse_failures``.
     """
     t0 = time.perf_counter()
     base_url = doc_id  # fixture convention: doc_id IS the base URL
@@ -517,13 +528,36 @@ def tokenize_doc(
         "cand_urls": urls,
         "cand_texts": texts,
         "cand_tags": tags,
-        "cand_ranks": ranks,
+        "ranks": ranks,
         "parse_failures": len(err_stages),
         "err_stages": err_stages,
         "err_reasons": err_reasons,
         "err_targets": err_targets,
         "proc_us": int((time.perf_counter() - t0) * 1e6),
     }
+
+
+_KIND_OF_RANK = (PDF, YOUTUBE, OTHER)
+
+
+def fold_spans(
+    urls: list[str], texts: list[str], ranks: list[int]
+) -> tuple[list[str], list[str], list[str]]:
+    """One document's candidates -> its output spans' (kinds, texts,
+    media_refs), in span order; a span's ``offset`` is its list index.
+
+    Spans are ordered by (type rank, document parse order) — the
+    ExtractionResult invariant: pdf list, then youtube list, then other
+    list, each in parse order (service.py:80-88, models.py:171-173) —
+    by a stable sort on the rank.  An empty text falls back to the url
+    (media spans, FIXTURES.md F14), and ``media_ref`` is the url.
+    """
+    order = sorted(range(len(ranks)), key=ranks.__getitem__)
+    return (
+        [_KIND_OF_RANK[ranks[i]] for i in order],
+        [texts[i] or urls[i] for i in order],
+        [urls[i] for i in order],
+    )
 
 
 _COLS = tuple(TOKENIZED.fieldNames())
@@ -542,6 +576,71 @@ def tokenize_batches(
         cols: dict[str, list[Any]] = {c: [] for c in _COLS}
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
             d = tokenize_doc(doc_id, spans)
+            kinds, texts, refs = fold_spans(
+                d["cand_urls"], d["cand_texts"], d["ranks"]
+            )
+            d["spans"] = list(zip(kinds, texts, refs, range(len(kinds))))
             for c in _COLS:
                 cols[c].append(d[c])
         yield pd.DataFrame(cols, columns=list(_COLS))
+
+
+def arrow_batches(
+    columns: tuple[str, ...],
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """mapInArrow body: DOCS batches in, batches of the TOKENIZED
+    ``columns`` out (``doc_id`` and ``spans`` first, in that order).
+
+    Only the named columns cross back to the JVM.  ``doc_id`` is the
+    input array itself, and ``spans`` is assembled from flat per-field
+    lists into one ``list<struct>`` array without a Python object per
+    span.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    extra = columns[2:]
+
+    def extract_batches(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        schema = to_arrow_schema(T.StructType([TOKENIZED[c] for c in columns]))
+        span_list = schema.field("spans").type
+        span_fields = list(span_list.value_type)
+        for batch in batches:
+            doc_ids = batch.column("doc_id")
+            kinds: list[str] = []
+            texts: list[str] = []
+            refs: list[str] = []
+            offsets: list[int] = []
+            starts = [0]
+            cols: dict[str, list[Any]] = {c: [] for c in extra}
+            for doc_id, spans in zip(
+                doc_ids.to_pylist(), batch.column("spans").to_pylist()
+            ):
+                d = tokenize_doc(doc_id, spans)
+                k, t, r = fold_spans(d["cand_urls"], d["cand_texts"], d["ranks"])
+                kinds += k
+                texts += t
+                refs += r
+                offsets += range(len(k))
+                starts.append(len(kinds))
+                for c in extra:
+                    cols[c].append(d[c])
+            items = pa.StructArray.from_arrays(
+                [
+                    pa.array(kinds, pa.string()),
+                    pa.array(texts, pa.string()),
+                    pa.array(refs, pa.string()),
+                    pa.array(offsets, pa.int32()),
+                ],
+                fields=span_fields,
+            )
+            arrays = [
+                doc_ids,
+                pa.ListArray.from_arrays(
+                    pa.array(starts, pa.int32()), items, type=span_list
+                ),
+            ] + [pa.array(cols[c], schema.field(c).type) for c in extra]
+            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return extract_batches

@@ -1,8 +1,11 @@
-"""Span assembly: classify + order candidates into the output array.
+"""Span assembly in Column algebra: classify + order candidates into
+the output array, JVM-side with NO shuffle.
 
-Pure Column algebra over the tokenizer's flat parallel candidate
-arrays — the whole zip/classify/partition/sort/offset step runs
-JVM-side with NO shuffle:
+This is the ``variant="regex"`` path of ``plans/pipeline.py::extract``
+(the default "context" variant orders its spans in the tokenizer's
+Arrow kernel, functions/tokenizer.py::fold_spans) and, with
+``variant="context"``, the Column oracle that tests hold that kernel
+to:
 
 1. zip (cand_urls, cand_texts, cand_tags) with ``arrays_zip`` — the
    array index IS the document parse order (invalid candidates were
@@ -29,52 +32,24 @@ from web_content_extractor_spark.functions import classify
 
 
 def assemble_spans(
-    urls: Column,
-    texts: Column,
-    tags: Column,
-    variant: str = "context",
-    ranks: Column | None = None,
+    urls: Column, texts: Column, tags: Column, variant: str
 ) -> Column:
-    """Flat (urls, texts, tags) candidate arrays -> ordered spans array.
-
-    ``ranks`` (the tokenizer's precomputed golden-classifier ranks,
-    TOKENIZED.cand_ranks) short-circuits the classification step for
-    the default "context" variant: the interpreted when/rlike chain
-    inside transform() never enters whole-stage codegen and measured
-    ~0.8 s of the sf0.1 flagship, while the rank costs ~1 us/candidate
-    in the Arrow kernel that already touches every candidate (exact
-    parity pinned by tests/test_classifier_differential.py).  The
-    native chain remains the path for the "regex" variant and for
-    callers without tokenizer ranks."""
-    def entry(rank: Column, x: Column, i: Column) -> Column:
-        return F.struct(
-            rank.alias("rank"),
+    """Flat (urls, texts, tags) candidate arrays -> ordered spans array,
+    classified by the ``variant`` Column chain."""
+    zipped = F.arrays_zip(urls.alias("u"), texts.alias("t"), tags.alias("g"))
+    ranked = F.transform(
+        zipped,
+        lambda x, i: F.struct(
+            classify.type_rank(
+                F.when(x["g"] == "media", F.lit(classify.OTHER)).otherwise(
+                    classify.classify_kind(x["u"], x["t"], variant)
+                )
+            ).alias("rank"),
             i.alias("pos"),
             F.when(F.length(x["t"]) == 0, x["u"]).otherwise(x["t"]).alias("text"),
             x["u"].alias("media_ref"),
-        )
-
-    if ranks is not None and variant == "context":
-        zipped = F.arrays_zip(
-            urls.alias("u"), texts.alias("t"), ranks.alias("r")
-        )
-        ranked = F.transform(zipped, lambda x, i: entry(x["r"], x, i))
-    else:
-        zipped = F.arrays_zip(
-            urls.alias("u"), texts.alias("t"), tags.alias("g")
-        )
-        ranked = F.transform(
-            zipped,
-            lambda x, i: entry(
-                classify.type_rank(
-                    F.when(x["g"] == "media", F.lit(classify.OTHER)).otherwise(
-                        classify.classify_kind(x["u"], x["t"], variant)
-                    )
-                ),
-                x,
-                i,
-            ),
-        )
+        ),
+    )
     # struct sort is lexicographic over (rank, pos, ...); pos is unique
     ordered = F.sort_array(ranked)
     return F.transform(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from web_content_extractor_spark.operators.metrics import kind_count
-from web_content_extractor_spark.plans.pipeline import tokenize, tokenized_spans
+from web_content_extractor_spark.plans.pipeline import tokenize
 
 # same-host nav exclusion list (html_parser.py:207-209)
 _NAV_EXCLUDE_RE = r"\.(pdf|zip|tar\.gz|docx|xlsx|pptx)$"
@@ -141,7 +141,7 @@ def crawl(
             tok.select(
                 "doc_id",
                 rank_map[F.col("doc_id")].alias("crawl_rank"),
-                tokenized_spans(),
+                "spans",
                 "parse_failures",
                 "proc_us",
             ).localCheckpoint(eager=True)

@@ -1,7 +1,13 @@
 """The end-to-end extraction plan.
 
     docs(doc_id, spans[]) --(optional repartitionByRange)--
-      mapInPandas(tokenize) -> assemble_spans (native) -> spans + stats
+      mapInArrow(tokenize + fold) -> doc_id, spans[, stats][, errors]
+
+The default ("context") variant is one Python stage: the Arrow kernel
+tokenizes, ranks and orders each document's candidates and ships only
+the columns the caller asked for.  ``variant="regex"`` runs
+:func:`tokenize` and classifies with the native Column chain
+(operators/assemble.py).
 
 Scale notes (the plan you'd want on 1000 executors over 100 TB):
 
@@ -19,16 +25,20 @@ Scale notes (the plan you'd want on 1000 executors over 100 TB):
   the same single exchange.
 - Column pruning reaches the parquet/Iceberg scan: the tokenizer only
   consumes (doc_id, spans), nothing else is read.
-- Arrow batch size is bounded (session.py) so a batch of padded
-  ~100 KB documents stays within executor memory.
+- Arrow batches are capped at 2,048 records and 64 MiB (session.py),
+  so a batch of giant documents stays within executor memory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from web_content_extractor_spark.functions.tokenizer import tokenize_batches
+from web_content_extractor_spark.functions.tokenizer import (
+    arrow_batches,
+    tokenize_batches,
+)
 from web_content_extractor_spark.operators.assemble import assemble_spans
 from web_content_extractor_spark.schemas import TOKENIZED
 
@@ -48,12 +58,12 @@ def span_bytes():
     )
 
 
-def tokenize(
+def _balanced(
     docs: DataFrame,
     balance: bool | str = False,
     partitions: int | None = None,
 ) -> DataFrame:
-    """DOCS -> TOKENIZED (the engine's single Python/Arrow stage).
+    """(doc_id, spans) of ``docs``, laid out for the tokenizer stage.
 
     ``balance``: False = keep input layout (shuffle-free); "rows" =
     ``repartitionByRange(doc_id)``, ~equal rows per
@@ -70,35 +80,37 @@ def tokenize(
             byte_balanced,
         )
 
-        df = byte_balanced(
+        return byte_balanced(
             df,
             "doc_id",
             span_bytes(),
             partitions or df.sparkSession.sparkContext.defaultParallelism,
         ).select("doc_id", "spans")
-    elif balance == "rows":
-        df = (
+    if balance == "rows":
+        return (
             df.repartitionByRange(partitions, "doc_id")
             if partitions
             else df.repartitionByRange("doc_id")
         )
-    elif balance:
+    if balance:
         raise ValueError(
             f"balance must be False, 'rows' or 'bytes'; got {balance!r}"
         )
-    return df.mapInPandas(tokenize_batches, schema=TOKENIZED)
+    return df
 
 
-def tokenized_spans(variant: str = "context"):
-    """The ``spans`` column of a TOKENIZED frame: its candidates
-    classified and ordered by the native assembly."""
-    return assemble_spans(
-        F.col("cand_urls"),
-        F.col("cand_texts"),
-        F.col("cand_tags"),
-        variant,
-        ranks=F.col("cand_ranks"),
-    ).alias("spans")
+def tokenize(
+    docs: DataFrame,
+    balance: bool | str = False,
+    partitions: int | None = None,
+) -> DataFrame:
+    """DOCS -> TOKENIZED: every column, for callers that need the
+    candidate arrays (crawl, navigation links, the errors table, the
+    regex variant).  ``balance``/``partitions``: see :func:`_balanced`.
+    """
+    return _balanced(docs, balance, partitions).mapInPandas(
+        tokenize_batches, schema=TOKENIZED
+    )
 
 
 def extract(
@@ -113,22 +125,23 @@ def extract(
 
     Output spans satisfy the per-row invariant: sequence equality of
     (kind, text, media_ref, order) against the reference extractor.
-    ``balance``/``partitions`` pass through to :func:`tokenize`.
+    ``balance``/``partitions`` pass through to :func:`_balanced`.
+    ``with_errors`` carries the per-drop error records through
+    (operators/errors.py explodes them into the errors table).
     """
-    tok = tokenize(docs, balance=balance, partitions=partitions)
-    cols = [F.col("doc_id"), tokenized_spans(variant)]
+    cols = ["doc_id", "spans"]
     if with_stats:
-        cols += [
-            F.col("page_title"),
-            F.col("parse_failures"),
-            F.col("proc_us"),
-        ]
+        cols += ["page_title", "parse_failures", "proc_us"]
     if with_errors:
-        # carry the per-drop error records through (operators/errors.py
-        # explodes them into the errors table); empty for healthy docs
-        cols += [
-            F.col("err_stages"),
-            F.col("err_reasons"),
-            F.col("err_targets"),
-        ]
-    return tok.select(*cols)
+        cols += ["err_stages", "err_reasons", "err_targets"]
+    if variant == "context":
+        return _balanced(docs, balance, partitions).mapInArrow(
+            arrow_batches(tuple(cols)),
+            schema=T.StructType([TOKENIZED[c] for c in cols]),
+        )
+    spans = assemble_spans(
+        F.col("cand_urls"), F.col("cand_texts"), F.col("cand_tags"), variant
+    )
+    return tokenize(docs, balance, partitions).select(
+        *[spans.alias(c) if c == "spans" else c for c in cols]
+    )

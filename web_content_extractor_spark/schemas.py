@@ -34,23 +34,21 @@ DOCS = T.StructType(
     ]
 )
 
-# Intermediate candidate-link IR produced by the tokenizer stage.
-# Mirrors the reference's list[tuple[url, text]] between parser and
-# classifier (src/core/interfaces.py:24), encoded as FLAT PARALLEL
-# ARRAYS (document parse order = array index; reference order
-# html_parser.py:56-62):
+# Tokenizer output: one row per document.  The candidate-link IR mirrors
+# the reference's list[tuple[url, text]] between parser and classifier
+# (src/core/interfaces.py:24) as FLAT PARALLEL ARRAYS (document parse
+# order = array index; reference order html_parser.py:56-62):
 #   cand_urls  — absolute URLs after urljoin + HttpUrl-style
 #                normalization; invalid URLs already dropped in the
 #                tokenizer (drop semantics, link_classifier.py:50-53)
-#   cand_texts — selected link text (may be '' -> url fallback applies
-#                downstream)
+#   cand_texts — selected link text ('' for media spans)
 #   cand_tags  — source element ('a'/'iframe'/'object'/'embed'/'media');
 #                navigation discovery follows only anchors
 #                (html_parser.py:193-213)
-# Flat list<string> columns cross the Arrow boundary ~10x faster than
-# list<struct> (no per-candidate struct conversion); the assembly step
-# re-zips them natively with arrays_zip — still one row per document,
-# still shuffle-free.
+# ``spans`` is the same candidates classified by the golden rules and
+# ordered into the output span array, folded in the Python kernel
+# (functions/tokenizer.py::fold_spans).  ``extract`` asks the kernel for
+# only the columns it returns.
 TOKENIZED = T.StructType(
     [
         # nullable: a null doc_id becomes a null_doc_id error row
@@ -59,17 +57,10 @@ TOKENIZED = T.StructType(
         T.StructField("cand_urls", T.ArrayType(T.StringType())),
         T.StructField("cand_texts", T.ArrayType(T.StringType())),
         T.StructField("cand_tags", T.ArrayType(T.StringType())),
-        # precomputed golden-classifier type rank per candidate
-        # (pdf=0/youtube=1/other=2, media always 2): the interpreted
-        # when/rlike chain inside the assembly's transform() never
-        # codegens, so the rank rides the (already per-candidate)
-        # Arrow kernel instead — exact parity pinned by a randomized
-        # differential vs classify_context
-        T.StructField("cand_ranks", T.ArrayType(T.IntegerType())),
+        T.StructField("spans", T.ArrayType(SPAN)),
         T.StructField("parse_failures", T.IntegerType()),
-        # per-drop error records (flat parallel arrays, same Arrow
-        # rationale as the candidate arrays): the queryable analog of
-        # the reference's ContextualExtractionError context
+        # per-drop error records (flat parallel arrays): the queryable
+        # analog of the reference's ContextualExtractionError context
         # (src/core/exceptions.py:46-67, service.py:126-140)
         T.StructField("err_stages", T.ArrayType(T.StringType())),
         T.StructField("err_reasons", T.ArrayType(T.StringType())),

@@ -5,8 +5,12 @@ knob is the one you would set on a 1000-executor cluster:
 
 - AQE on (runtime shuffle coalescing + skew-join splitting),
 - shuffle partitions ~ cores locally (on a cluster: 2-3x total cores),
-- Arrow transport for pandas UDFs with a bounded batch size so one
-  batch of ~100 KB HTML documents stays in the tens of MB,
+- Arrow transport for the Python stages, each batch capped twice: at
+  ``DEFAULT_ARROW_BATCH`` records (``arrow.maxRecordsPerBatch``) and
+  at 64 MiB by Spark's own ``spark.sql.execution.arrow.maxBytesPerBatch``
+  default, which splits ``mapInArrow`` and ``mapInPandas`` input alike,
+  so a batch of giant documents never exceeds 64 MiB of Arrow data
+  (tests/test_robustness.py::test_arrow_byte_cap_splits_heavy_batches),
 - UTC session timezone so results compare bit-for-bit with DuckDB.
 """
 
