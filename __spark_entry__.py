@@ -323,10 +323,11 @@ def q_extract_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate, with deterministic correlation ids (exceptions.py:46-67
     analog, drop-not-fail preserved)."""
     from web_content_extractor_spark.operators.errors import doc_errors
-    from web_content_extractor_spark.plans.pipeline import tokenize
+    from web_content_extractor_spark.plans.pipeline import extract
 
     docs = _synth_error_docs(_read(spark, sf_dir, "documents"))
-    return doc_errors(tokenize(docs), run_id="r2errors").select(
+    errors = extract(docs, with_errors=True)
+    return doc_errors(errors, run_id="r2errors").select(
         "doc_id", "stage", "reason", "target", "err_idx", "correlation_id"
     )
 

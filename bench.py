@@ -55,7 +55,7 @@ HEADLINE = [
     "pdf_layout",         # PDF/layout media branch
     "crawl_merge",        # iterative BFS crawl rounds
     # round-2 additions
-    "extract_errors",     # per-doc error table (tokenize -> explode)
+    "extract_errors",     # per-doc error table (extract -> explode)
     "url_batch",          # URL-list broadcast semi-join work list
     "quality_filters",    # C4/Gopher filter battery (keep/drop verdict)
     "curation_manifest",  # composed curation: quality + dedup + decontam
@@ -139,7 +139,7 @@ def replicated_docs(
     # the sf parquet is a single tiny file -> 1 input split; rebalance
     # BEFORE the (heavy) HTML synthesis so every core gets a lane.  On a
     # real corpus the scan itself provides the splits and this shuffle
-    # disappears (see pipeline.tokenize(balance=...)).
+    # disappears (see pipeline.extract(balance=...)).
     n_parts = rep.sparkSession.sparkContext.defaultParallelism * 4
     rep = rep.repartition(n_parts, "doc_id")
 
@@ -225,8 +225,8 @@ def flagship(
     """Time the extraction job over the materialized corpus.
 
     Measures exactly the production plan: parquet scan (many splits) ->
-    mapInPandas tokenizer -> native classify/assemble -> explode ->
-    noop sink.  Shuffle-free; corpus write + scan warmup excluded.
+    mapInArrow tokenizer kernel (which also orders the spans) -> noop
+    sink.  Shuffle-free; corpus write + scan warmup excluded.
     """
     path = materialize_corpus(spark, sf_dir, replication)
     # size input splits to the corpus: the default 128 MB maxPartitionBytes

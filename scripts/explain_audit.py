@@ -5,7 +5,8 @@ Writes PLANS.md with the `explain("formatted")` output of the engine's
 headline plans plus automated assertions:
 
 - extraction pipeline: shuffle-free (no Exchange), one MapInArrow
-  Python stage, span ordering inside it (no sort_array/transform)
+  Python stage, span ordering inside it (no sort_array/transform);
+  the regex variant, nav_links and extract_errors run the same kernel
 - join_agg: BroadcastHashJoin on the dim tables, no BNLJ
 - agg_counts: partial aggregation (HashAggregate x2) + pushed scan
 - filter pushdown: PushedFilters reaches the parquet scan
@@ -125,6 +126,27 @@ def main() -> int:
              and len(re.findall(r"\(\d+\) MapInArrow", p)) == 1),
         ],
     )
+
+    # 1c. every other extraction plan runs the same one Arrow kernel
+    # (pipeline._kernel): no pandas tokenizer body anywhere
+    for name, df in (
+        ("extract variant='regex' (Column-chain assembly)",
+         extract(docs, variant="regex")),
+        ("nav_links (navigation links over tokenize)",
+         contract.q_nav_links(spark, SF_DIR)),
+        ("extract_errors (errors table over extract)",
+         contract.q_extract_errors(spark, SF_DIR)),
+    ):
+        p = formatted(df)
+        audit(
+            name,
+            df,
+            [
+                ("one MapInArrow (the tokenizer kernel)",
+                 len(re.findall(r"\(\d+\) MapInArrow", p)) == 1),
+                ("no MapInPandas", "MapInPandas" not in p),
+            ],
+        )
 
     # 2. filter + projection pushdown into the parquet scan
     li = (
@@ -965,8 +987,10 @@ def main() -> int:
             ("no shuffle carries an embedding vector (id-only band "
              "join + pair dedup; vectors re-attach by id)",
              all("vec" not in e and "embedding" not in e for e in shuffles)),
-            ("exactly one Arrow scoring kernel",
-             len(re.findall(r"\(\d+\) MapInPandas", p)) == 1),
+            ("three Python stages: the one scoring MapInPandas and "
+             "one lsh_buckets ArrowEvalPython per union side",
+             python_nodes(p) == 3
+             and len(re.findall(r"\(\d+\) MapInPandas", p)) == 1),
             ("no interpreted HOF cosine (aggregate/zip_with)",
              "zip_with" not in p and "aggregate(" not in p),
         ],

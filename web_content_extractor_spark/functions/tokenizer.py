@@ -1,11 +1,11 @@
 """From-scratch HTML link tokenizer (stdlib ``html.parser``).
 
-This is the engine's extraction Python stage, with two batch bodies
-over one per-document function (:func:`tokenize_doc`) and one span
-ordering (:func:`fold_spans`): :func:`arrow_batches` is the
-``mapInArrow`` kernel of ``extract``, shipping only the columns its
-caller returns, and :func:`tokenize_batches` the ``mapInPandas`` body
-of ``tokenize`` with every TOKENIZED column.  It re-implements, from the
+This is the engine's extraction Python stage: one ``mapInArrow``
+kernel, :func:`arrow_batches`, over one per-document function
+(:func:`tokenize_doc`) and one span ordering (:func:`fold_spans`).
+``extract`` and ``tokenize`` both run it, each asking for the TOKENIZED
+columns it returns; :func:`tokenize_batches` is a pandas adapter over
+the same kernel for the benchmark trace only.  It re-implements, from the
 observable behavior only, the candidate-link extraction of the
 reference parser (src/infrastructure/html_parser.py:47-148) as an
 event-driven tokenizer — no DOM materialization, one pass per
@@ -45,9 +45,7 @@ from collections.abc import Callable, Iterable, Iterator
 from html.parser import HTMLParser
 from typing import Any
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import types as T
 
 from web_content_extractor_spark.functions import urlnorm
 from web_content_extractor_spark.functions.classify import (
@@ -56,7 +54,7 @@ from web_content_extractor_spark.functions.classify import (
     YOUTUBE,
     rank_context_py,
 )
-from web_content_extractor_spark.schemas import TOKENIZED
+from web_content_extractor_spark.schemas import DOCS, TOKENIZED
 
 _PDF_SUFFIX_RUN = re.compile(r"(\.pdf)+$", re.IGNORECASE)
 _VIDEO_HINTS = ("youtube", "youtu.be", "embed", "iframe.ly")
@@ -560,51 +558,28 @@ def fold_spans(
     )
 
 
-_COLS = tuple(TOKENIZED.fieldNames())
-
-
-def tokenize_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: DOCS batches in, TOKENIZED batches out.
-
-    Output is built column-wise (dict of lists) — constructing pandas
-    frames from per-row dicts re-infers every cell and dominated the
-    profile at scale.
-    """
-    for pdf in batches:
-        cols: dict[str, list[Any]] = {c: [] for c in _COLS}
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            d = tokenize_doc(doc_id, spans)
-            kinds, texts, refs = fold_spans(
-                d["cand_urls"], d["cand_texts"], d["ranks"]
-            )
-            d["spans"] = list(zip(kinds, texts, refs, range(len(kinds))))
-            for c in _COLS:
-                cols[c].append(d[c])
-        yield pd.DataFrame(cols, columns=list(_COLS))
-
-
 def arrow_batches(
     columns: tuple[str, ...],
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """mapInArrow body: DOCS batches in, batches of the TOKENIZED
-    ``columns`` out (``doc_id`` and ``spans`` first, in that order).
+    ``columns`` out, in the order given.
 
     Only the named columns cross back to the JVM.  ``doc_id`` is the
     input array itself, and ``spans`` is assembled from flat per-field
     lists into one ``list<struct>`` array without a Python object per
-    span.
+    span.  The input ``spans`` decode through numpy, one dict per span
+    (an ``offset`` is a float in a batch that holds a null one).
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    extra = columns[2:]
+    extra = [c for c in columns if c not in ("doc_id", "spans")]
 
     def extract_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        schema = to_arrow_schema(T.StructType([TOKENIZED[c] for c in columns]))
-        span_list = schema.field("spans").type
+        full = to_arrow_schema(TOKENIZED)
+        schema = pa.schema([full.field(c) for c in columns])
+        span_list = full.field("spans").type
         span_fields = list(span_list.value_type)
         for batch in batches:
             doc_ids = batch.column("doc_id")
@@ -615,7 +590,8 @@ def arrow_batches(
             starts = [0]
             cols: dict[str, list[Any]] = {c: [] for c in extra}
             for doc_id, spans in zip(
-                doc_ids.to_pylist(), batch.column("spans").to_pylist()
+                doc_ids.to_pylist(),
+                batch.column("spans").to_numpy(zero_copy_only=False),
             ):
                 d = tokenize_doc(doc_id, spans)
                 k, t, r = fold_spans(d["cand_urls"], d["cand_texts"], d["ranks"])
@@ -635,12 +611,27 @@ def arrow_batches(
                 ],
                 fields=span_fields,
             )
-            arrays = [
-                doc_ids,
-                pa.ListArray.from_arrays(
+            built = {
+                "doc_id": doc_ids,
+                "spans": pa.ListArray.from_arrays(
                     pa.array(starts, pa.int32()), items, type=span_list
                 ),
-            ] + [pa.array(cols[c], schema.field(c).type) for c in extra]
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+            }
+            for c in extra:
+                built[c] = pa.array(cols[c], schema.field(c).type)
+            yield pa.RecordBatch.from_arrays(
+                [built[c] for c in columns], schema=schema
+            )
 
     return extract_batches
+
+
+def tokenize_batches(frames: Iterator[Any]) -> Iterator[Any]:
+    """Trace-only pandas adapter over the one kernel: DOCS frames in,
+    TOKENIZED frames out, for layerbench until it has a kernel seam."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    docs = to_arrow_schema(DOCS)
+    kernel = arrow_batches(tuple(TOKENIZED.fieldNames()))
+    batches = (pa.RecordBatch.from_pandas(f, schema=docs) for f in frames)
+    return (b.to_pandas() for b in kernel(batches))

@@ -3,11 +3,13 @@
     docs(doc_id, spans[]) --(optional repartitionByRange)--
       mapInArrow(tokenize + fold) -> doc_id, spans[, stats][, errors]
 
-The default ("context") variant is one Python stage: the Arrow kernel
-tokenizes, ranks and orders each document's candidates and ships only
-the columns the caller asked for.  ``variant="regex"`` runs
-:func:`tokenize` and classifies with the native Column chain
-(operators/assemble.py).
+Every extraction plan has one Python stage, the Arrow kernel
+(functions/tokenizer.py::arrow_batches): it tokenizes, ranks and orders
+each document's candidates and ships only the TOKENIZED columns its
+caller asks for.  :func:`extract` asks for the spans and the stats or
+errors it returns, :func:`tokenize` for every column.  ``variant="regex"``
+asks for the candidate arrays and classifies them with the native
+Column chain (operators/assemble.py).
 
 Scale notes (the plan you'd want on 1000 executors over 100 TB):
 
@@ -35,10 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from web_content_extractor_spark.functions.tokenizer import (
-    arrow_batches,
-    tokenize_batches,
-)
+from web_content_extractor_spark.functions.tokenizer import arrow_batches
 from web_content_extractor_spark.operators.assemble import assemble_spans
 from web_content_extractor_spark.schemas import TOKENIZED
 
@@ -99,18 +98,23 @@ def _balanced(
     return df
 
 
-def tokenize(
+def _kernel(
     docs: DataFrame,
-    balance: bool | str = False,
-    partitions: int | None = None,
+    columns: list[str],
+    balance: bool | str,
+    partitions: int | None,
 ) -> DataFrame:
-    """DOCS -> TOKENIZED: every column, for callers that need the
-    candidate arrays (crawl, navigation links, the errors table, the
-    regex variant).  ``balance``/``partitions``: see :func:`_balanced`.
-    """
-    return _balanced(docs, balance, partitions).mapInPandas(
-        tokenize_batches, schema=TOKENIZED
+    """The one Arrow kernel over ``docs``: TOKENIZED ``columns`` out."""
+    return _balanced(docs, balance, partitions).mapInArrow(
+        arrow_batches(tuple(columns)),
+        schema=T.StructType([TOKENIZED[c] for c in columns]),
     )
+
+
+def tokenize(docs: DataFrame) -> DataFrame:
+    """DOCS -> TOKENIZED: every column, for callers that need the
+    candidate arrays (crawl, navigation links), in the input layout."""
+    return _kernel(docs, TOKENIZED.fieldNames(), False, None)
 
 
 def extract(
@@ -135,13 +139,9 @@ def extract(
     if with_errors:
         cols += ["err_stages", "err_reasons", "err_targets"]
     if variant == "context":
-        return _balanced(docs, balance, partitions).mapInArrow(
-            arrow_batches(tuple(cols)),
-            schema=T.StructType([TOKENIZED[c] for c in cols]),
-        )
-    spans = assemble_spans(
-        F.col("cand_urls"), F.col("cand_texts"), F.col("cand_tags"), variant
-    )
-    return tokenize(docs, balance, partitions).select(
-        *[spans.alias(c) if c == "spans" else c for c in cols]
-    )
+        return _kernel(docs, cols, balance, partitions)
+    cands = ["cand_urls", "cand_texts", "cand_tags"]
+    spans = assemble_spans(*map(F.col, cands), variant)
+    return _kernel(
+        docs, [c for c in cols if c != "spans"] + cands, balance, partitions
+    ).select(*[spans.alias(c) if c == "spans" else c for c in cols])

@@ -47,8 +47,9 @@ DOCS = T.StructType(
 #                (html_parser.py:193-213)
 # ``spans`` is the same candidates classified by the golden rules and
 # ordered into the output span array, folded in the Python kernel
-# (functions/tokenizer.py::fold_spans).  ``extract`` asks the kernel for
-# only the columns it returns.
+# (functions/tokenizer.py::fold_spans).  One Arrow kernel
+# (functions/tokenizer.py::arrow_batches) produces this table: ``tokenize``
+# asks it for every column, ``extract`` for only the columns it returns.
 TOKENIZED = T.StructType(
     [
         # nullable: a null doc_id becomes a null_doc_id error row
